@@ -87,14 +87,38 @@ object Bench {
       // expression-id hash iteration — which distinct column gets which
       // gid varies run-to-run with an identical plan
       .replaceAll("(gid|spark_grouping_id)# = \\d+", "$1# = G")
-    // hashpartitioning key order comes from the same attribute-set
-    // iteration (equivalent clustering either way) — sort the keys
-    val hp = "hashpartitioning\\(([^()]*)\\)".r
-    val t2 = hp.replaceAllIn(t, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        "hashpartitioning(" +
-          splitTop(m.group(1)).map(_.trim).sorted.mkString(",") + ")"))
-    sortBrackets(t2).replaceAll("\\s+", " ")
+    sortBrackets(normalizePartitionings(t)).replaceAll("\\s+", " ")
+  }
+
+  /** Partitionings with their partition count printed as N: it follows
+    * the core count (`RoundRobinPartitioning(8)` from a parallelism
+    * restore) or `spark.sql.shuffle.partitions` (`hashpartitioning(k#,
+    * 200)`, `rangepartitioning(k# ASC, 200)`), not the plan, and left in
+    * it gave identical code different fingerprints at 4, 8 and 32 cores.
+    * hashpartitioning keys are sorted too: their order comes from
+    * attribute-set iteration (equivalent clustering either way). The
+    * arguments are split at balanced parens, so keys may nest calls. */
+  private def normalizePartitionings(s: String): String = {
+    val out = new StringBuilder
+    var from = 0
+    for (m <- "(hashpartitioning|rangepartitioning|RoundRobinPartitioning)\\(".r
+        .findAllMatchIn(s) if m.start >= from) {
+      var depth = 1
+      var j = m.end
+      while (j < s.length && depth > 0) {
+        if (s(j) == '(') depth += 1 else if (s(j) == ')') depth -= 1
+        j += 1
+      }
+      if (depth == 0) {
+        val args = splitTop(s.substring(m.end, j - 1)).map(_.trim)
+        val n = if (args.last.nonEmpty && args.last.forall(_.isDigit)) "N" else args.last
+        val keys = if (m.group(1) == "hashpartitioning") args.init.sorted else args.init
+        out ++= s.substring(from, m.start) ++= m.group(1) ++= (keys :+ n).mkString("(", ", ", ")")
+        from = j
+      }
+    }
+    out ++= s.substring(from)
+    out.toString
   }
 
   /** Short fingerprint of a query's PHYSICAL plan, stable across runs:

@@ -5,7 +5,12 @@ import graft.functions.ShingleFunctions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable.ArrayBuilder
+import scala.reflect.ClassTag
 
 /** Deduplication operator family for corpus-scale pipelines —
   * generalizes the reference's keyed last-wins dedup
@@ -41,8 +46,17 @@ object Dedup {
     * cores (one small parquet file → one partition) would hash on a
     * single thread. Round-robin repartition of the raw docs is cheap
     * relative to hashing and restores full parallelism. No-op when the
-    * input already has enough splits (the 100 TB case). */
-  private[operators] def ensureParallelism(df: DataFrame): DataFrame = {
+    * input already has enough splits (the 100 TB case; pinned by
+    * DedupSpec). Filters and column pruning push through the
+    * Repartition, so scan pushdown is unchanged.
+    *
+    * r19: the fixture tables arrive as ONE small parquet file (584 KB
+    * documents at sf0.1 → a single scan split), so every scan-fused
+    * heavy projection (md5 sketches, shingling, phash, tokenize+agg)
+    * ran on one core — StageProbe measured e.g. a 3.8 s 1-task stage
+    * carrying 77% of x88; spreading `docs()` restores the fan-out for
+    * a few ms of exchange. */
+  private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
@@ -427,34 +441,75 @@ object Dedup {
     * chain a~b~c must land in one cluster even when a~c misses the
     * threshold).
     *
-    * Min-label propagation: every node starts labeled with itself;
-    * each round takes the min of its own and its neighbors' labels;
-    * fixpoint = component minimum. The driver loop is control plane
-    * only (one `count()` per round for convergence); per-round work is
-    * a key-partitioned join+agg. Rounds = component diameter — near-dup
-    * clusters are shallow (dups of a common source), so this converges
-    * in 2-4 rounds; for adversarial long-chain graphs the large-star/
-    * small-star variant would cut rounds to O(log n), not needed here.
-    * `localCheckpoint` per round truncates the growing lineage (the
-    * classic iterative-algorithm OOM trap).
+    * Hybrid: the distributed rounds run only while the graph is too
+    * large for one place (the REPOSE split — distributed work while it
+    * must be, then a local finish).
+    *  - The directed edges (both directions of every pair, distinct)
+    *    are lazily checkpointed, and ONE job materializes, counts and —
+    *    when at most [[LocalFinishMaxEdges]] — reads them to the driver.
+    *  - Small graphs ([[localFinish]]): a min-representative union-find
+    *    over the read edges gives the labels the loop converges to, as a
+    *    local frame. With the job that shuffles the distinct edges that
+    *    is two jobs per call, whatever the diameter.
+    *  - Large graphs, and key types other than integral or string
+    *    ([[labelLoop]]): min-label propagation, one job per round.
+    *    Every node starts labeled with itself; each round takes the min
+    *    of its own and its neighbors' labels; the fixpoint is the
+    *    component minimum. Rounds = component diameter, which is not
+    *    small on real near-dup graphs (x84's mutual-kNN graph takes
+    *    7–8 rounds at sf0.01 and 16 at sf0.1). The loop stays above the
+    *    bound because its state is spread over the cluster; the driver
+    *    holds only the round's changed-label count.
     *
-    * Output: (doc_id, cluster_id = min doc id of the component), one
-    * row per node that appears in ≥ 1 pair. */
+    * Large-star/small-star contraction (Kiveris et al., SoCC 2014)
+    * would cut the loop to O(log n) rounds on long chains. `maxIter`
+    * bounds the loop only: an exit with labels still moving fails
+    * loudly, while the local finish has no rounds to bound.
+    *
+    * Output: (doc_id, cluster_id = min doc id of the component in the
+    * key type's Spark ordering), one row per node that appears in ≥ 1
+    * pair; a null id is an isolated node labeled null. */
   def connectedComponents(pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIter: Int = 25): DataFrame = {
     // r19: both edge directions come from ONE pass over `pairs` via a
     // 2-way explode — the union form referenced the (often expensive,
-    // un-checkpointed) pair subtree twice in one plan.
-    val edges = materialize(
-      pairs.select(explode(array(
-          struct(col(aCol).as("src"), col(bCol).as("dst")),
-          struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct())
-    var labels = materialize(
-      edges.select(col("src").as("node")).distinct()
+    // un-checkpointed) pair subtree twice in one plan. LAZY checkpoint:
+    // its first job (localFinish's read, or the loop's label
+    // materialization) is its sole consumer and computes every
+    // partition, so the blocks exist before any fan-out.
+    val edges = withJobDescription(pairs, "Dedup.connectedComponents: edges") {
+      directedEdges(pairs, aCol, bCol).localCheckpoint(false)
+    }
+    localFinish(edges, LocalFinishMaxEdges).getOrElse(labelLoop(edges, maxIter))
+  }
+
+  /** Both directions of every pair, distinct: (src, dst). */
+  private[operators] def directedEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    pairs.select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+      .distinct()
+
+  /** Directed edges up to which [[connectedComponents]] finishes on the
+    * driver. Driver memory: 2²⁰ directed edges read as primitive long
+    * ids are 16 MB (two 8-byte ids per edge), and the union-find adds
+    * one int per endpoint and per node — small next to any driver heap
+    * and far under `spark.driver.maxResultSize` (1 GB by default), which
+    * caps what the read job ships. String ids cost their UTF-8 bytes
+    * plus a ~16-byte header each. Above the bound a round's own work
+    * outweighs its ~35–50 ms per-stage driver floor (SCALE.md §31.3),
+    * so the loop costs little more and keeps the state distributed. */
+  private[operators] val LocalFinishMaxEdges: Int = 1 << 20
+
+  /** The min-label propagation loop over directed `edges` (src, dst):
+    * one lazy-checkpoint job per round until no label moves. */
+  private[operators] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
+    var labels = withJobDescription(edges, "Dedup.connectedComponents: labels") {
+      materialize(edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")))
+    }
     // the materialized frame behind `labels`, released once the next
     // round's checkpoint exists — otherwise executor storage grows
     // O(rounds × |V|) across the iteration
@@ -471,7 +526,7 @@ object Dedup {
     // frame is referenced up to 4× by step 2's plan, so each batch
     // re-derived it repeatedly and benched SLOWER (x84 3.9 → 5.3 s).
     // The 1-job-per-round lazy-checkpoint loop below remains the
-    // measured optimum.
+    // measured optimum above the local-finish bound.
     while (changed > 0 && i < maxIter) {
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("label").as("nbr")), "dst")
@@ -483,18 +538,21 @@ object Dedup {
       // one case because the count is the sole consumer until the
       // blocks exist — unlike the fan-out sketches `materialize`
       // serves, where two join branches would race to recompute.
-      val updated = labels
-        .join(nbrMin.select(col("src").as("node"), col("nbr_min")), Seq("node"), "left")
-        .select(col("node"), col("label"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next"))
-        .localCheckpoint(false)
-      changed = updated.filter(col("next") =!= col("label")).count()
-      // RDD-layer release: Dataset.unpersist is a CacheManager no-op
-      // for checkpoint-backed frames and would leave one label
-      // snapshot per round pinned until the ContextCleaner runs
-      org.apache.spark.sql.graftbridge.unpersistCheckpoint(labelsMat)
-      labelsMat = updated
-      labels = updated.select(col("node"), col("next").as("label"))
+      changed = withJobDescription(edges, s"Dedup.connectedComponents: round ${i + 1}") {
+        val updated = labels
+          .join(nbrMin.select(col("src").as("node"), col("nbr_min")), Seq("node"), "left")
+          .select(col("node"), col("label"),
+            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next"))
+          .localCheckpoint(false)
+        val moved = updated.filter(col("next") =!= col("label")).count()
+        // RDD-layer release: Dataset.unpersist is a CacheManager no-op
+        // for checkpoint-backed frames and would leave one label
+        // snapshot per round pinned until the ContextCleaner runs
+        org.apache.spark.sql.graftbridge.unpersistCheckpoint(labelsMat)
+        labelsMat = updated
+        labels = updated.select(col("node"), col("next").as("label"))
+        moved
+      }
       i += 1
     }
     // A maxIter exit with labels still moving would silently return
@@ -504,9 +562,139 @@ object Dedup {
       s"connectedComponents did not converge in $maxIter rounds " +
         s"($changed labels still changing) — raise maxIter or use a " +
         "large-star/small-star contraction for long-chain graphs")
-    if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-      println(s"[cc] converged in $i rounds")
+    logger.info(s"connectedComponents: label loop converged in $i rounds")
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** The labels of [[labelLoop]] computed on the driver, when `edges`
+    * (src, dst) holds at most `maxEdges` rows of an integral or string
+    * key type; None otherwise. ONE job computes and counts every
+    * partition of `edges`; a partition within its share of `maxEdges`
+    * also ships its endpoints, so what reaches the driver stays within
+    * `maxEdges` at any partition count (a second job reads the few
+    * partitions over their share when the total still fits).
+    *
+    * Union-find: nodes are ranked in the key type's Spark ordering
+    * (strings by UTF-8 bytes, not Java's UTF-16 order) and every union
+    * links the larger root under the smaller, so each root is its
+    * component's minimum. An edge with a null `dst` is read as a
+    * self-loop on its `src`; a null `src` is the null node, which the
+    * loop leaves isolated and labeled null. */
+  private[operators] def localFinish(edges: DataFrame, maxEdges: Int): Option[DataFrame] = {
+    val keyType = edges.schema("src").dataType
+    keyCodec(keyType) match {
+      case None =>
+        logger.info(s"connectedComponents: $keyType keys, label loop")
+        None
+      case Some(codec) => unionFind(edges, maxEdges, codec)
+    }
+  }
+
+  private def unionFind[K](edges: DataFrame, maxEdges: Int,
+      codec: KeyCodec[K]): Option[DataFrame] = {
+    import codec.{ord, tag}
+    val rdd = edges.queryExecution.toRdd
+    val read = codec.read
+    val share = math.max(1L, maxEdges.toLong / math.max(1, rdd.getNumPartitions))
+    val parts = withJobDescription(edges, "Dedup.connectedComponents: edges") {
+      rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => readEdges(read, share, it))
+    }
+    val n = parts.iterator.map(_.n).sum
+    if (n > maxEdges) {
+      logger.info(s"connectedComponents: $n directed edges > $maxEdges, label loop")
+      return None
+    }
+    val over = parts.indices.filter(parts(_).ends == null)
+    val rest = if (over.isEmpty) Array.empty[EdgePart[K]]
+      else withJobDescription(edges, "Dedup.connectedComponents: local finish") {
+        rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => readEdges(read, maxEdges, it), over)
+      }
+    val blocks = parts.filter(_.ends != null) ++ rest
+    val ends = Array.concat(blocks.map(_.ends).toSeq: _*)
+    // nodes in Spark's ordering: a node's rank is its index here
+    val sorted = ends.clone()
+    scala.util.Sorting.quickSort(sorted)
+    var m = 0
+    for (k <- sorted) if (m == 0 || ord.compare(sorted(m - 1), k) != 0) { sorted(m) = k; m += 1 }
+    val nodes = sorted.take(m)
+    val parent = Array.range(0, nodes.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val a = find(nodes.search(ends(e)).insertionPoint)
+      val b = find(nodes.search(ends(e + 1)).insertionPoint)
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 2
+    }
+    val rows = nodes.indices.map(i =>
+      InternalRow(codec.write(nodes(i)), codec.write(nodes(find(i))))) ++
+      (if (blocks.exists(_.nullNode)) Seq(InternalRow(null, null)) else Nil)
+    val nullable = edges.schema("src").nullable
+    logger.info(s"connectedComponents: $n directed edges ≤ $maxEdges, " +
+      s"local finish over ${nodes.length} nodes")
+    Some(org.apache.spark.sql.graftbridge.localFrame(edges.sparkSession,
+      StructType(Seq(StructField("doc_id", edges.schema("src").dataType, nullable),
+        StructField("cluster_id", edges.schema("src").dataType, nullable))),
+      rows))
+  }
+
+  /** One partition of a directed edge frame (src, dst) as [[readEdges]]
+    * reads it: its row count `n` and, when that is at most the read's
+    * limit, its endpoints two per edge (`ends`, else null) and whether
+    * it holds the null node. */
+  private final case class EdgePart[K](n: Long, ends: Array[K], nullNode: Boolean)
+
+  private def readEdges[K: ClassTag](read: (InternalRow, Int) => K, limit: Long,
+      it: Iterator[InternalRow]): EdgePart[K] = {
+    val ends = ArrayBuilder.make[K]
+    var n = 0L
+    var nullNode = false
+    while (it.hasNext) {
+      val r = it.next()
+      n += 1
+      if (n == limit + 1) ends.clear()
+      else if (n <= limit) {
+        if (r.isNullAt(0)) nullNode = true
+        else {
+          val s = read(r, 0)
+          ends += s
+          ends += (if (r.isNullAt(1)) s else read(r, 1))
+        }
+      }
+    }
+    EdgePart(n, if (n <= limit) ends.result() else null, nullNode)
+  }
+
+  /** How [[localFinish]] carries one key type: read an endpoint off an
+    * edge row, order it as Spark orders the column, and write it back
+    * as the column's internal value. Integral keys travel as primitive
+    * longs; strings as copied UTF8Strings in byte order. */
+  private final class KeyCodec[K](val read: (InternalRow, Int) => K,
+      val write: K => Any)(implicit val tag: ClassTag[K], val ord: Ordering[K])
+    extends Serializable
+
+  private def keyCodec(dt: DataType): Option[KeyCodec[_]] = dt match {
+    case LongType => Some(new KeyCodec[Long](_.getLong(_), identity))
+    case IntegerType => Some(new KeyCodec[Long](_.getInt(_).toLong, _.toInt))
+    case ShortType => Some(new KeyCodec[Long](_.getShort(_).toLong, _.toShort))
+    case ByteType => Some(new KeyCodec[Long](_.getByte(_).toLong, _.toByte))
+    case s: StringType if s.collationId == StringType.collationId => // UTF8_BINARY
+      Some(new KeyCodec[UTF8String](_.getUTF8String(_).clone(), identity)(
+        implicitly, Ordering.fromLessThan(_.binaryCompare(_) < 0)))
+    case _ => None
+  }
+
+  /** Run `body` with `what` as the Spark job description, so its jobs
+    * and stages carry the operator step's name. */
+  private def withJobDescription[T](df: DataFrame, what: String)(body: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Cluster canonicalization — the ACTION step after near-dup

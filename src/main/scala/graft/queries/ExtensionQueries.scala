@@ -22,23 +22,10 @@ import org.apache.spark.sql.functions._
   */
 object ExtensionQueries {
 
-  /** r19: the fixture tables arrive as ONE small parquet file (584 KB
-    * documents at sf0.1 → a single scan split), so every scan-FUSED
-    * heavy projection (md5 sketches, shingling, phash, tokenize+agg)
-    * ran on one core — StageProbe measured e.g. a 3.8 s 1-task stage
-    * carrying 77% of x88 and two ~0.9 s 1-task stages carrying x11.
-    * Round-robin spreading restores the fan-out for a few ms of
-    * exchange on the sub-MB fixture scan; it is scale-adaptive (a
-    * no-op once the input arrives in ≥ defaultParallelism splits —
-    * the 100 TB case), per guide §2.5's "one huge unsplittable file —
-    * repartition immediately after the read". Filters and column
-    * pruning push through Repartition, so scan pushdown is unchanged. */
-  private def spread(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-  }
+  /** The documents table, spread over the cores when it arrives in
+    * fewer splits than that ([[Dedup.ensureParallelism]]). */
   private def docs(s: SparkSession, dir: String) =
-    spread(Tables.load(s, dir, "documents"))
+    Dedup.ensureParallelism(Tables.load(s, dir, "documents"))
   // embeddings stay UNSPREAD (measured, r19): the table is vector-
   // count-scale (2k rows at sf0.1) and its consumers are multi-stage/
   // iterative (power iteration, kNN+CC, PQ) — spreading it to 32

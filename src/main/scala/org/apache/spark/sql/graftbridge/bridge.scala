@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   *
@@ -10,7 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * expressions (as this one does for vector math and hashing — see
   * `graft.functions`) conventionally expose it from a package stub
   * inside `org.apache.spark.sql`; this object is that stub and the
-  * only file in the repo living outside the `graft` namespace.
+  * only program file living outside the `graft` namespace (the tests
+  * add a listener-bus accessor beside it).
   */
 package object graftbridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -30,4 +35,11 @@ package object graftbridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** A frame over rows already in Catalyst's internal form: the local
+    * relation `createDataFrame` builds, without the round trip through
+    * external rows (which re-encodes strings via java.lang.String). */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

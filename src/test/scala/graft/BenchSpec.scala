@@ -1,11 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-function coverage for the bench harness's normalizer and the
   * contamination sentinel's artifact parser — the pieces whose silent
   * breakage would invalidate cross-round performance adjudication. */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   test("flatMapOf: extracts queries/plans maps from the one-line artifact; " +
       "tolerates empty maps and missing keys") {
@@ -44,6 +43,38 @@ class BenchSpec extends AnyFunSuite {
     val litA = Bench.normalizeText("Filter (col#1 = @abcdef123456)")
     val litB = Bench.normalizeText("Filter (col#1 = @fedcba654321)")
     assert(litA != litB)
+  }
+
+  test("normalizeText: partition counts print as N, hash keys sort, " +
+      "nested key calls parse") {
+    val at4 = "Exchange hashpartitioning(coalesce(b#1, 0), a#2, 4), ENSURE_REQUIREMENTS " +
+      "+- Exchange rangepartitioning(c#3 DESC NULLS LAST, 4) " +
+      "+- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM"
+    val at32 = "Exchange hashpartitioning(a#2, coalesce(b#1, 0), 32), ENSURE_REQUIREMENTS " +
+      "+- Exchange rangepartitioning(c#3 DESC NULLS LAST, 32) " +
+      "+- Exchange RoundRobinPartitioning(32), REPARTITION_BY_NUM"
+    assert(Bench.normalizeText(at4) == Bench.normalizeText(at32))
+    assert(Bench.normalizeText(at4).contains("hashpartitioning(a#, coalesce(b#, 0), N)"))
+    // a key change still moves the text
+    assert(Bench.normalizeText(at4) != Bench.normalizeText(at4.replace("a#2", "d#2")))
+  }
+
+  test("planFingerprint: one query planned at shuffle.partitions 4 and 32 " +
+      "gives one fingerprint") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def planned(n: Int): (String, String) = {
+      spark.conf.set(key, n.toString)
+      val df = graft.queries.RelationalQueries.q04(spark, sf001)
+      (df.queryExecution.executedPlan.toString, Bench.planFingerprint(df))
+    }
+    try {
+      val (plan4, fp4) = planned(4)
+      val (plan32, fp32) = planned(32)
+      assert(plan4.contains("hashpartitioning") && plan4.contains("rangepartitioning"), plan4)
+      assert(plan4 != plan32)
+      assert(fp4 == fp32, s"$plan4\n$plan32")
+    } finally spark.conf.set(key, prev)
   }
 
   test("query ledger: round-trips ok and error records (incl. control chars " +

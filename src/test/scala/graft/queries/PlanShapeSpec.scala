@@ -139,6 +139,8 @@ class PlanShapeSpec extends SparkSpec {
 
   private def hashExchanges(plan: String): Int =
     "Exchange hashpartitioning".r.findAllIn(plan).length
+  private def rangeExchanges(plan: String): Int =
+    "Exchange rangepartitioning".r.findAllIn(plan).length
 
   test("q22: both windows and the final groupBy share ONE hash exchange on user_id") {
     val plan = physical(RelationalQueries.q22(spark, sf001))
@@ -448,8 +450,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q41: unpivot is a narrow expand — no shuffle besides the final sort") {
     val plan = physical(RelationalQueries.q41(spark, sf001))
-    val exchanges = "Exchange ".r.findAllIn(plan).length
-    assert(exchanges <= 1, s"expected only the sort exchange:\n$plan")
+    assert(hashExchanges(plan) == 0, plan)
+    assert(rangeExchanges(plan) <= 1, s"expected only the sort exchange:\n$plan")
   }
 
   test("q45: array lambdas stay a narrow codegen projection — no UDF, no shuffle " +
@@ -457,8 +459,8 @@ class PlanShapeSpec extends SparkSpec {
     val df = RelationalQueries.q45(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
-    val exchanges = "Exchange ".r.findAllIn(plan).length
-    assert(exchanges <= 1, s"expected only the sort exchange:\n$plan")
+    assert(hashExchanges(plan) == 0, plan)
+    assert(rangeExchanges(plan) <= 1, s"expected only the sort exchange:\n$plan")
     // column pruning: only p_partkey + p_name are read
     assert(plan.contains("ReadSchema: struct<p_partkey"), plan)
     assert(!plan.contains("p_retailprice"), plan)
@@ -477,11 +479,12 @@ class PlanShapeSpec extends SparkSpec {
     val plan = physical(ExtensionQueries.x70(spark, sf001))
     // percentile is an object agg — partial on the mapper, final after
     // the single group-by exchange; the hash-gate filter adds no
-    // exchange of its own and there is no join anywhere
+    // exchange of its own and there is no join anywhere. The docs()
+    // RoundRobinPartitioning spread is intended and not counted.
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
     assert(!plan.contains("Join"), plan)
-    val exchanges = "Exchange ".r.findAllIn(plan).length
-    assert(exchanges <= 2, s"expected group-by + sort exchanges only:\n$plan")
+    assert(hashExchanges(plan) == 1, s"expected the group-by exchange only:\n$plan")
+    assert(rangeExchanges(plan) <= 1, s"expected the sort exchange only:\n$plan")
   }
 
   test("x71: two-phase prefix sum — no window over a whole language, " +
@@ -1080,7 +1083,10 @@ class PlanShapeSpec extends SparkSpec {
   test("x211: the cluster-size spectrum is hash aggregations over the " +
     "checkpointed CC labels — no window, no cartesian") {
     val plan = physical(ExtensionQueries.x211(spark, sf001))
-    assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed CC labels
+    // materialized CC labels: a checkpoint scan from the label loop, or
+    // the local relation of the local finish (small graphs, as here) —
+    // never the pair pipeline recomputed
+    assert(plan.contains("Scan ExistingRDD") || plan.contains("LocalTableScan"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
