@@ -28,38 +28,7 @@ import scala.reflect.ClassTag
   *    should pre-filter degenerate docs; AQE skew-join handles the rest.
   */
 object Dedup {
-
-  /** Eagerly materialize a sketch frame that fans out to multiple join
-    * branches. Without the eager pass, the branches' scan stages race:
-    * each starts before any cache is populated and recomputes the full
-    * sketch. `localCheckpoint(eager)` rather than `cache()+count()`:
-    * same one-pass materialization, but lineage is truncated (branches
-    * can't fall back to recompute) and the blocks are auto-released by
-    * the ContextCleaner when the frame becomes unreachable — repeated
-    * operator calls don't accumulate pinned cache entries. Trade-off:
-    * truncated lineage means an executor loss during the job fails it
-    * instead of recomputing; at cluster scale a reliable checkpoint /
-    * written sketch table is the durable variant. */
-  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** Sketching is CPU-bound; a corpus arriving in fewer splits than
-    * cores (one small parquet file → one partition) would hash on a
-    * single thread. Round-robin repartition of the raw docs is cheap
-    * relative to hashing and restores full parallelism. No-op when the
-    * input already has enough splits (the 100 TB case; pinned by
-    * DedupSpec). Filters and column pruning push through the
-    * Repartition, so scan pushdown is unchanged.
-    *
-    * r19: the fixture tables arrive as ONE small parquet file (584 KB
-    * documents at sf0.1 → a single scan split), so every scan-fused
-    * heavy projection (md5 sketches, shingling, phash, tokenize+agg)
-    * ran on one core — StageProbe measured e.g. a 3.8 s 1-task stage
-    * carrying 77% of x88; spreading `docs()` restores the fan-out for
-    * a few ms of exchange. */
-  private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-  }
+  import Materialize.ensureParallelism
 
   /** Exact content dedup: one surviving row (min id) per distinct value
     * of `contentCol`. Hash-groupBy on a uniform key → no skew. */
@@ -91,7 +60,8 @@ object Dedup {
         val keys = keyCols.map(col)
         val hot = bucketed.groupBy(keys: _*).agg(count(lit(1)).as("__bn"))
           .filter(col("__bn") > cap)
-          .localCheckpoint(true) // consumed by the count AND the anti-join
+          // consumed by the count AND the anti-join
+          .transform(Materialize(_, "Dedup.guardBuckets: hot"))
         val dropped = hot.agg(count(lit(1)), sum(col("__bn")))
           .head()
         val nHot = dropped.getLong(0)
@@ -135,9 +105,9 @@ object Dedup {
     // sides of the estimate join — 3 consumers that would otherwise
     // re-shingle and re-hash the full corpus. At scale this is the
     // standard materialize-the-sketch-table step (~1 KB/doc ≪ corpus).
-    val sigs = materialize(
+    val sigs = Materialize(
       minhashSignatures(ensureParallelism(docs), idCol, textCol, shingleLen, k)
-        .filter(col("sig").isNotNull))
+        .filter(col("sig").isNotNull), "Dedup.minhashNearDup: sigs")
 
     // one row per (doc, band): band id + hash of that signature slice
     val banded = sigs.select(
@@ -165,14 +135,15 @@ object Dedup {
       // are a vanishing fraction of the corpus, so this is far cheaper
       // than materializing every doc's full hash array alongside the
       // signatures (the sketch stays ~1 KB/doc either way).
-      val cand = materialize(candidates)
+      val cand = Materialize(candidates, "Dedup.minhashNearDup: cand")
       val candIds = cand.select(col("doc_a").as("__cid"))
         .union(cand.select(col("doc_b").as("__cid"))).distinct()
-      val candHashes = materialize(docs
+      val candHashes = Materialize(docs
         .join(broadcast(candIds), col(idCol) === col("__cid"))
         .select(col(idCol).as("doc_id"),
           array_sort(array_distinct(
-            shingle_hashes(normText(col(textCol)), shingleLen))).as("hashes")))
+            shingle_hashes(normText(col(textCol)), shingleLen))).as("hashes")),
+        "Dedup.minhashNearDup: candHashes")
       cand
         .join(candHashes.select(col("doc_id").as("doc_a"), col("hashes").as("h_a")), "doc_a")
         .join(candHashes.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")), "doc_b")
@@ -210,10 +181,11 @@ object Dedup {
     val bitsPerChunk = bits / chunks
     val skCol = if (portableMd5) md5_simhash(words(col(textCol)))
                 else simhash(words(col(textCol)))
-    val sk = materialize(ensureParallelism(docs).select(
+    // feeds both sides of the chunk-bucket self-join
+    val sk = Materialize(ensureParallelism(docs).select(
         col(idCol).as("doc_id"),
         skCol.as("sk"))
-      .filter(col("sk").isNotNull)) // feeds both sides of the chunk-bucket self-join
+      .filter(col("sk").isNotNull), "Dedup.simhashNearDup: sketch")
     val chunked = sk.select(
       col("doc_id"), col("sk"),
       posexplode(array((0 until chunks).map(c =>
@@ -254,11 +226,11 @@ object Dedup {
     * consumer). */
   def ngramSketch(df: DataFrame, idCol: String, textCol: String,
       ngram: Int): DataFrame =
-    materialize(ensureParallelism(df).select(
+    Materialize(ensureParallelism(df).select(
         col(idCol).as("doc_id"),
         array_sort(array_distinct(
           ngram_hashes(words(col(textCol)), ngram))).as("hashes"))
-      .filter(size(col("hashes")) > 0))
+      .filter(size(col("hashes")) > 0), "Dedup.ngramSketch: sketch")
 
   /** Word-n-gram Jaccard near-dup with prefix filtering: candidates
     * must share one of the `prefixK` smallest shingle hashes (a
@@ -313,11 +285,11 @@ object Dedup {
     * combine — the sketch behind oracle-checked banding audits. */
   private[operators] def md5NgramSketch(df: DataFrame, idCol: String,
       textCol: String, ngram: Int): DataFrame =
-    materialize(ensureParallelism(df).select(
+    Materialize(ensureParallelism(df).select(
         col(idCol).as("doc_id"),
         array_sort(array_distinct(
           md5_ngram_hashes(words(col(textCol)), ngram))).as("hashes"))
-      .filter(size(col("hashes")) > 0))
+      .filter(size(col("hashes")) > 0), "Dedup.md5NgramSketch: sketch")
 
   /** Candidate-generator PRECISION audit — what the prefix filter's
     * fan-out actually buys: of all candidate pairs the bottom-prefixK
@@ -353,7 +325,8 @@ object Dedup {
     val scored = scoredCandidates(
         md5NgramSketch(docs, idCol, textCol, ngram), prefixK, maxBucketSize)
       .select(expr("CAST(round(jaccard * 1000000.0D) AS BIGINT)").as("__jm"))
-      .localCheckpoint(true) // one candidate pass feeds every threshold
+      // one candidate pass feeds every threshold
+      .transform(Materialize(_, "Dedup.candidatePrecision: scored"))
     val tot = scored.agg(count(lit(1)).cast("bigint").as("__nc"))
     val tArr = array(thresholdsMicro.sorted.map(lit): _*)
     scored
@@ -478,9 +451,8 @@ object Dedup {
     // its first job (localFinish's read, or the loop's label
     // materialization) is its sole consumer and computes every
     // partition, so the blocks exist before any fan-out.
-    val edges = withJobDescription(pairs, "Dedup.connectedComponents: edges") {
-      directedEdges(pairs, aCol, bCol).localCheckpoint(false)
-    }
+    val edges = Materialize(directedEdges(pairs, aCol, bCol),
+      "Dedup.connectedComponents: edges", eager = false)
     localFinish(edges, LocalFinishMaxEdges).getOrElse(labelLoop(edges, maxIter))
   }
 
@@ -506,10 +478,8 @@ object Dedup {
   /** The min-label propagation loop over directed `edges` (src, dst):
     * one lazy-checkpoint job per round until no label moves. */
   private[operators] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
-    var labels = withJobDescription(edges, "Dedup.connectedComponents: labels") {
-      materialize(edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")))
-    }
+    var labels = Materialize(edges.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")), "Dedup.connectedComponents: labels")
     // the materialized frame behind `labels`, released once the next
     // round's checkpoint exists — otherwise executor storage grows
     // O(rounds × |V|) across the iteration
@@ -536,19 +506,21 @@ object Dedup {
       // joins). An eager checkpoint here would cost a second full pass
       // per round just to learn `changed`. Lazy is race-free in this
       // one case because the count is the sole consumer until the
-      // blocks exist — unlike the fan-out sketches `materialize`
-      // serves, where two join branches would race to recompute.
-      changed = withJobDescription(edges, s"Dedup.connectedComponents: round ${i + 1}") {
+      // blocks exist — unlike the fan-out sketches the eager
+      // checkpoints serve, where two join branches would race to
+      // recompute.
+      val step = s"Dedup.connectedComponents: round ${i + 1}"
+      changed = Materialize.named(edges.sparkSession, step) {
         val updated = labels
           .join(nbrMin.select(col("src").as("node"), col("nbr_min")), Seq("node"), "left")
           .select(col("node"), col("label"),
             least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next"))
-          .localCheckpoint(false)
+          .transform(Materialize(_, step, eager = false))
         val moved = updated.filter(col("next") =!= col("label")).count()
-        // RDD-layer release: Dataset.unpersist is a CacheManager no-op
-        // for checkpoint-backed frames and would leave one label
-        // snapshot per round pinned until the ContextCleaner runs
-        org.apache.spark.sql.graftbridge.unpersistCheckpoint(labelsMat)
+        // Dataset.unpersist is a CacheManager no-op for checkpoint-
+        // backed frames and would leave one label snapshot per round
+        // pinned until the ContextCleaner runs
+        Materialize.release(labelsMat)
         labelsMat = updated
         labels = updated.select(col("node"), col("next").as("label"))
         moved
@@ -596,7 +568,7 @@ object Dedup {
     val rdd = edges.queryExecution.toRdd
     val read = codec.read
     val share = math.max(1L, maxEdges.toLong / math.max(1, rdd.getNumPartitions))
-    val parts = withJobDescription(edges, "Dedup.connectedComponents: edges") {
+    val parts = Materialize.named(edges.sparkSession, "Dedup.connectedComponents: edges") {
       rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => readEdges(read, share, it))
     }
     val n = parts.iterator.map(_.n).sum
@@ -606,7 +578,7 @@ object Dedup {
     }
     val over = parts.indices.filter(parts(_).ends == null)
     val rest = if (over.isEmpty) Array.empty[EdgePart[K]]
-      else withJobDescription(edges, "Dedup.connectedComponents: local finish") {
+      else Materialize.named(edges.sparkSession, "Dedup.connectedComponents: local finish") {
         rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => readEdges(read, maxEdges, it), over)
       }
     val blocks = parts.filter(_.ends != null) ++ rest
@@ -688,15 +660,6 @@ object Dedup {
     case _ => None
   }
 
-  /** Run `body` with `what` as the Spark job description, so its jobs
-    * and stages carry the operator step's name. */
-  private def withJobDescription[T](df: DataFrame, what: String)(body: => T): T = {
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setJobDescription(prev)
-  }
-
   /** Cluster canonicalization — the ACTION step after near-dup
     * detection: per duplicate cluster keep exactly ONE representative
     * (longest by `lenCol`, id-ascending tie-break) and mark the rest
@@ -769,10 +732,10 @@ object Dedup {
     // the executed one, so the check is reliable; the round-robin
     // exchange moves only the compact (id, vec, bucket) frame and is a
     // no-op once the frame arrives already parallel (the 100 TB case).
-    val bucketed = ensureParallelism(materialize(emb.select(
+    val bucketed = ensureParallelism(Materialize(emb.select(
         col(idCol).as("doc_id"), col(vecCol).as("vec"),
         Similarity.hyperplaneBucket(col(vecCol), nPlanes, dim).as("bucket"))
-      .filter(size(col("vec")) === dim)))
+      .filter(size(col("vec")) === dim), "Dedup.embeddingNearDup: bucketed"))
     val a = bucketed.as("a"); val b = bucketed.as("b")
     a.join(b,
         col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
@@ -850,13 +813,13 @@ object Dedup {
     val cents = Similarity.fixedCentroids(nLists, dim)
     // degenerate vectors (wrong length / zero norm) have no defined
     // cosine — excluded from assignment, as ivfAssignFixed requires
-    val assigned = materialize(
+    val assigned = Materialize(
       Similarity.ivfAssignFixed(
         ensureParallelism(emb)
           .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
           .filter(size(col("vec")) === dim &&
             dot_product(col("vec"), col("vec")) > 0),
-        cents, "vec"))
+        cents, "vec"), "Dedup.semanticDedup: assigned")
     val a = assigned.as("a"); val b = assigned.as("b")
     a.join(b,
         col("a.list_id") === col("b.list_id") &&
@@ -888,10 +851,10 @@ object Dedup {
       minEst: Double = 0.5): DataFrame = {
     import graft.functions.ShingleFunctions.{md5_ngram_minhash, minhash_agreement}
     val k = bands * rowsPerBand
-    val sigs = materialize(ensureParallelism(docs).select(
+    val sigs = Materialize(ensureParallelism(docs).select(
         col(idCol).as("doc_id"),
         md5_ngram_minhash(words(col(textCol)), ngram, k).as("sig"))
-      .filter(col("sig").isNotNull))
+      .filter(col("sig").isNotNull), "Dedup.md5MinhashNearDup: sigs")
     val banded = sigs.select(
       col("doc_id"),
       posexplode(transform(
@@ -977,7 +940,8 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(ngram_strings(words(col(textCol)), ngram)))
           .as("gram"))
-      .localCheckpoint(true) // feeds df, per-doc totals, and the rescore
+      // feeds df, per-doc totals, and the rescore
+      .transform(Materialize(_, "Dedup.weightedJaccardRescore: grams"))
     val nDocs = docs.select(col(idCol)).agg(count(lit(1)).as("__n"))
     val idf = grams.groupBy(col("gram")).agg(count(lit(1)).as("__df"))
       .join(broadcast(nDocs))
@@ -987,7 +951,7 @@ object Dedup {
           .as("__idf"))
     val gw = grams.join(idf, "gram")
       .select(col("doc_id"), col("gram"), col("__idf"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Dedup.weightedJaccardRescore: weighted grams"))
     val docTot = gw.groupBy(col("doc_id"))
       .agg(sum(col("__idf")).cast("bigint").as("__tot"))
     val pairs = ngramJaccardNearDup(docs, idCol, textCol, ngram, prefixK,
@@ -1038,7 +1002,8 @@ object Dedup {
   def pairContainment(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", ngram: Int = 3, prefixK: Int = 8,
       minJaccard: Double = 0.2): DataFrame = {
-    val sh = ngramSketch(docs, idCol, textCol, ngram).localCheckpoint(true)
+    val sh = Materialize(ngramSketch(docs, idCol, textCol, ngram),
+      "Dedup.pairContainment: sketch")
     val pairs = ngramJaccardNearDupSketched(sh, prefixK, minJaccard)
     pairs
       .join(sh.toDF("doc_a", "__sa"), "doc_a")
@@ -1089,7 +1054,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         least(expr("CAST(round(jaccard * 1000000.0D) AS BIGINT) div 100000L"),
           lit(9L)).as("dec"))
-      .localCheckpoint(true) // feeds the pair and the doc histogram
+      // feeds the pair and the doc histogram
+      .transform(Materialize(_, "Dedup.thresholdSweep: pairs"))
     val pairHist = pairs.groupBy(col("dec")).agg(count(lit(1)).as("np"))
     val docBest = pairs
       .select(col("doc_a").as("d"), col("dec"))
@@ -1140,7 +1106,8 @@ object Dedup {
     val tagged = stages.zipWithIndex.map { case ((_, df), i) =>
       df.select(col(idCol).as("id")).distinct()
         .withColumn("__r", lit(i + 1))
-    }.reduce(_ unionAll _).localCheckpoint(true) // feeds both counts
+    // feeds both counts
+    }.reduce(_ unionAll _).transform(Materialize(_, "Dedup.cascadeAttribution: tagged"))
     val flagged = tagged.groupBy(col("__r"))
       .agg(count(lit(1)).cast("bigint").as("n_flagged"))
     val firsts = tagged.groupBy(col("id"))
@@ -1190,7 +1157,7 @@ object Dedup {
       .groupBy(least(col("__sa"), col("__sb")).as("src_a"),
         greatest(col("__sa"), col("__sb")).as("src_b"))
       .agg(count(lit(1)).cast("bigint").as("n_pairs"))
-      .localCheckpoint(true) // feeds the total AND the output
+      .transform(Materialize(_, "Dedup.dupFlowMatrix: cells")) // feeds the total AND the output
     cells
       .join(broadcast(cells.agg(sum(col("n_pairs")).cast("bigint").as("__t"))))
       .select(col("src_a"), col("src_b"), col("n_pairs"),
@@ -1231,7 +1198,8 @@ object Dedup {
     val toks = docs.select(col(idCol).as("d"),
         size(graft.functions.TextFunctions.words(col(textCol))).cast("long")
           .as("t"))
-      .localCheckpoint(true) // feeds the corpus total AND the join
+      // feeds the corpus total AND the join
+      .transform(Materialize(_, "Dedup.thresholdTokenSavings: toks"))
     val best = pairs.select(col("doc_a").as("d"), col("dec"))
       .union(pairs.select(col("doc_b").as("d"), col("dec")))
       .groupBy(col("d")).agg(max(col("dec")).as("dec"))
@@ -1311,7 +1279,8 @@ object Dedup {
     val pairs = ngramJaccardNearDup(docs, idCol, textCol, ngram, prefixK,
         minJaccard)
       .select(col("jaccard"))
-      .localCheckpoint(true) // one pair pass serves every grid row
+      // one pair pass serves every grid row
+      .transform(Materialize(_, "Dedup.lshParameterPlan: pairs"))
     grid.map { case (b, r) =>
       val p = collisionProbExpr("jaccard", b, r, "1.0D")
       pairs
@@ -1402,11 +1371,11 @@ object Dedup {
     require(chunks >= 1 && bits % chunks == 0,
       s"idfSimhashNearDup: chunks must divide $bits, got $chunks")
     val bitsPerChunk = bits / chunks
-    val wc = materialize(ensureParallelism(docs)
+    val wc = Materialize(ensureParallelism(docs)
       .select(col(idCol).as("doc_id"), explode(
         graft.functions.TextFunctions.words(col(textCol))).as("w"))
       .groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).cast("bigint").as("c")))
+      .agg(count(lit(1)).cast("bigint").as("c")), "Dedup.idfSimhashNearDup: word counts")
     val nDocs = docs.agg(count(lit(1)).cast("bigint").as("__n"))
     val idf = wc.groupBy(col("w"))
       .agg(count(lit(1)).cast("bigint").as("__df"))
@@ -1422,7 +1391,7 @@ object Dedup {
         (col("c") * col("__idf")).as("wt"))
     // per-bit weighted votes -> sign -> 60-bit signature; zero votes
     // (all-weight-cancelling bits) go to 0, matching the CASE > 0 rule
-    val sk = materialize(hv
+    val sk = Materialize(hv
       .select(col("doc_id"), col("hv"), col("wt"),
         explode(expr("sequence(0, 59)")).as("b"))
       .groupBy(col("doc_id"), col("b"))
@@ -1431,7 +1400,7 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(expr("CAST(sum(CASE WHEN v > 0 THEN " +
         "shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT) END) " +
-        "AS BIGINT)").as("sk")))
+        "AS BIGINT)").as("sk")), "Dedup.idfSimhashNearDup: sketch")
     val chunked = sk.select(
       col("doc_id"), col("sk"),
       posexplode(array((0 until chunks).map(ci =>
@@ -1482,7 +1451,7 @@ object Dedup {
       .agg(count(lit(1)).cast("bigint").as("n_toks"),
         expr("md5(CAST(concat_ws(' ', transform(array_sort(" +
           "collect_list(struct(p, w))), x -> x.w)) AS BINARY))").as("h"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Dedup.cdcChunks: chunks"))
   }
 
   /** Sub-document train/test leakage via content-defined chunks — the
@@ -1559,7 +1528,8 @@ object Dedup {
           .as("__g"))
       .groupBy(col("__g")).agg(count(lit(1)).cast("bigint").as("__df"))
       .groupBy(col("__df")).agg(count(lit(1)).cast("bigint").as("__m"))
-      .localCheckpoint(true) // gram-cardinality frame feeds every cap
+      // gram-cardinality frame feeds every cap
+      .transform(Materialize(_, "Dedup.dfCapAdvisor: hist"))
     val tot = hist.agg(
       coalesce(sum(col("__m")), lit(0L)).cast("bigint").as("__tg"),
       coalesce(sum(col("__df").cast(dec) * col("__m").cast(dec)),
@@ -1793,7 +1763,7 @@ object Dedup {
     require(topN >= 1 && topN <= 1000,
       s"templateSlots: topN must be in [1, 1000], got $topN")
     import graft.functions.TextFunctions.words
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+    val p = Materialize(pairs.select(col("doc_a"), col("doc_b")), "Dedup.templateSlots: pairs")
     val ends = p.select(col("doc_a").as("__doc"))
       .union(p.select(col("doc_b").as("__doc"))).distinct()
     // endpoint cut FIRST: the explode+distinct only ever runs over
@@ -1803,7 +1773,8 @@ object Dedup {
       .join(ends, Seq("__doc"), "left_semi")
       .select(col("__doc"), explode(words(col("__txt"))).as("term"))
       .distinct()
-      .localCheckpoint(true) // both endpoint joins read it
+      // both endpoint joins read it
+      .transform(Materialize(_, "Dedup.templateSlots: pairedTerms"))
     val pa = p.join(pairedTerms.withColumnRenamed("__doc", "doc_a"),
         Seq("doc_a"))
       .select(col("doc_a"), col("doc_b"), col("term"))
@@ -1852,7 +1823,8 @@ object Dedup {
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.ShingleFunctions.ngram_strings(col("__w"), ngram)))
         .as("gram"))
-      .localCheckpoint(true) // feeds the df agg AND both pair joins
+      // feeds the df agg AND both pair joins
+      .transform(Materialize(_, "Dedup.pairEvidence: grams"))
     val df = grams.groupBy(col("gram"))
       .agg(count(lit(1)).cast("bigint").as("df"))
     val p = pairs.select(col("doc_a"), col("doc_b"))
@@ -1975,7 +1947,8 @@ object Dedup {
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
     val cc = connectedComponents(canon, maxIter = maxIter)
-      .localCheckpoint(true) // feeds sizes AND the edge mapping
+      // feeds sizes AND the edge mapping
+      .transform(Materialize(_, "Dedup.clusterDensity: clusters"))
     val sizes = cc.groupBy(col("cluster_id"))
       .agg(count(lit(1)).cast("bigint").as("size"))
     val edges = canon
@@ -2023,7 +1996,7 @@ object Dedup {
       idCol: String = "doc_id", clusterCol: String = "cluster_id"): DataFrame = {
     val ja = a.select(col(idCol).as("id"), col(clusterCol).as("__ca"))
     val jb = b.select(col(idCol).as("id"), col(clusterCol).as("__cb"))
-    val j = ja.join(jb, Seq("id")).localCheckpoint(true)
+    val j = Materialize(ja.join(jb, Seq("id")), "Dedup.clusteringAgreement: joined labels")
     val c2 = "CAST(__c * (__c - 1L) div 2 AS DECIMAL(38,0))"
     val cells = j.groupBy(col("__ca"), col("__cb"))
       .agg(count(lit(1)).as("__c"))

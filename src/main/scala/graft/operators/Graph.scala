@@ -41,7 +41,7 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
     var labels = seeds
       .select(col("id"), col("label"), lit(0).as("round"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Graph.labelPropagate: labels"))
     var labelsMat = labels
     for (r <- 1 to rounds) {
       val adopted = e
@@ -52,8 +52,8 @@ object Graph {
         .agg(max_by(col("label"), struct(col("c"), -col("label"))).as("label"))
         .select(col("src").as("id"), col("label"), lit(r).as("round"))
         .join(labels.select("id"), Seq("id"), "left_anti")
-      val next = labels.union(adopted).localCheckpoint(true)
-      org.apache.spark.sql.graftbridge.unpersistCheckpoint(labelsMat)
+      val next = Materialize(labels.union(adopted), "Graph.labelPropagate: round")
+      Materialize.release(labelsMat)
       labelsMat = next
       labels = next
     }
@@ -87,11 +87,11 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Graph.pageRank: nodes"))
     val eDeg = e.join(
         e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src")
-      .localCheckpoint(true) // feeds every iteration; compute once
-    var pr = nodes.withColumn("pr", lit(1000000L)).localCheckpoint(true)
+      .transform(Materialize(_, "Graph.pageRank: edge degrees")) // feeds every iteration; compute once
+    var pr = Materialize(nodes.withColumn("pr", lit(1000000L)), "Graph.pageRank: pr")
     var prMat = pr
     for (_ <- 1 to iters) {
       val inMass = eDeg
@@ -102,8 +102,8 @@ object Graph {
       val next = nodes.join(inMass, Seq("id"), "left")
         .select(col("id"),
           (lit(150000L) + coalesce(col("m"), lit(0L))).as("pr"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graftbridge.unpersistCheckpoint(prMat)
+        .transform(Materialize(_, "Graph.pageRank: round"))
+      Materialize.release(prMat)
       prMat = next
       pr = next
     }
@@ -142,7 +142,8 @@ object Graph {
     * Output: (id, deg, tri, cc_micro), one row per node with ≥ 1
     * mutual edge. */
   def triangleProfile(und: DataFrame): DataFrame = {
-    val e = und.select(col("u"), col("v")).localCheckpoint(true) // 4 uses
+    // 4 uses
+    val e = Materialize(und.select(col("u"), col("v")), "Graph.triangleProfile: edges")
     val tri = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u"))
       .select(col("e1.u").as("a"), col("e1.v").as("b"), col("e2.v").as("c"))
       .join(e.select(col("u").as("a"), col("v").as("c")), Seq("a", "c"))
@@ -186,10 +187,10 @@ object Graph {
     * Output: (a, b, common, jaccard_micro) with a < b, non-adjacent
     * pairs only. */
   def linkPrediction(und: DataFrame, minCommon: Int = 1): DataFrame = {
-    val e = und.select(col("u"), col("v")).localCheckpoint(true)
+    val e = Materialize(und.select(col("u"), col("v")), "Graph.linkPrediction: edges")
     val adj = e.select(col("u").as("x"), col("v").as("n"))
       .union(e.select(col("v").as("x"), col("u").as("n")))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Graph.linkPrediction: adj"))
     val candidates = adj.select(col("n"), col("x").as("a"))
       .join(adj.select(col("n"), col("x").as("b")), "n")
       .filter(col("a") < col("b"))
@@ -280,7 +281,8 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("bigint").as("deg"))
-      .localCheckpoint(true) // feeds both endpoint joins + node count
+      // feeds both endpoint joins + node count
+      .transform(Materialize(_, "Graph.degreeAssortativity: deg"))
     val nodes = deg.agg(count(lit(1)).cast("bigint").as("n_nodes"))
     e.join(deg.select(col("id").as("src"), col("deg").as("__du")), "src")
       .join(deg.select(col("id").as("dst"), col("deg").as("__dv")), "dst")
@@ -336,7 +338,7 @@ object Graph {
     * q_total_micro), ordered by label — q_total repeated (a property
     * of the partition). */
   def partitionModularity(und: DataFrame, labels: DataFrame): DataFrame = {
-    val e = und.select(col("u"), col("v")).localCheckpoint(true)
+    val e = Materialize(und.select(col("u"), col("v")), "Graph.partitionModularity: edges")
     val m = e.agg(count(lit(1)).cast("bigint").as("__m"))
     val lab = labels.select(col("id"), col("label"))
     val within = e
@@ -363,7 +365,8 @@ object Graph {
         expr("""CAST(round((coalesce(e_within, 0) / CAST(__m AS DOUBLE) -
             (deg_sum / (2.0D * __m)) * (deg_sum / (2.0D * __m))) * 1000000)
           AS BIGINT)""").as("q_term_micro"))
-      .localCheckpoint(true) // feeds the total AND the output
+      // feeds the total AND the output
+      .transform(Materialize(_, "Graph.partitionModularity: terms"))
     terms
       .join(broadcast(terms.agg(
         sum(col("q_term_micro")).cast("bigint").as("q_total_micro"))))
@@ -438,22 +441,20 @@ object Graph {
     // both orientations: degree = row count per u
     val e = und.select(col("u"), col("v"))
       .union(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true) // reused every round + the final degree
+      .transform(Materialize(_, "Graph.kCore: edges")) // reused every round + the final degree
     var alive = e.select(col("u").as("node")).distinct()
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val next = e
         .join(alive.withColumnRenamed("node", "u"), "u")
         .join(alive.withColumnRenamed("node", "v"), "v")
         .groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("u").as("node"))
-        .localCheckpoint(true) // eager: materialized before the release below
-      // release the PREVIOUS round's snapshot only — round 1's `alive`
-      // is not checkpoint-backed and its plan contains `e`'s
-      // LogicalRDD, so walking it would release the shared edge
-      // checkpoint out from under the remaining rounds
-      if (r > 1)
-        org.apache.spark.sql.graftbridge.unpersistCheckpoint(alive)
+        // eager: materialized before the release below
+        .transform(Materialize(_, "Graph.kCore: round"))
+      // release the PREVIOUS round's snapshot (a no-op for round 1's
+      // `alive`, which only reads the shared edge checkpoint)
+      Materialize.release(alive)
       alive = next
     }
     val core = e

@@ -334,7 +334,8 @@ object Layout {
             lit(" rows — past the BIGINT output envelope (9.2e18)")))
             .cast("bigint"))
           .otherwise(col("__cd").cast("bigint")).as("contrib"))
-      .localCheckpoint(true) // feeds the total AND the top-N cut
+      // feeds the total AND the top-N cut
+      .transform(Materialize(_, "Layout.joinSizeAdvisor: contrib"))
     val tot = contrib.agg(
       coalesce(sum(col("__cd")), lit(0).cast("decimal(38,0)")).as("__td"))
       .select(
@@ -418,7 +419,8 @@ object Layout {
         coalesce(col("na"), lit(0).cast(dec)).as("na"),
         coalesce(col("nb"), lit(0).cast(dec)).as("nb"),
         coalesce(col("nc"), lit(0).cast(dec)).as("nc"))
-      .localCheckpoint(true) // one histogram frame feeds all four sums
+      // one histogram frame feeds all four sums
+      .transform(Materialize(_, "Layout.joinOrderAdvisor: histogram"))
     val sums = h.agg(
       coalesce(sum(col("na") * col("nb")), lit(0).cast(dec)).as("__ab"),
       coalesce(sum(col("na") * col("nc")), lit(0).cast(dec)).as("__ac"),
@@ -474,7 +476,8 @@ object Layout {
     * still picks each join's strategy/build side. */
   def advisedThreeWayJoin(a: DataFrame, b: DataFrame, c: DataFrame,
       keyCol: String): (DataFrame, DataFrame) = {
-    val advice = joinOrderAdvisor(a, b, c, keyCol).localCheckpoint(true)
+    val advice = Materialize(joinOrderAdvisor(a, b, c, keyCol),
+      "Layout.advisedThreeWayJoin: advice")
     val best = advice.filter(col("best"))
       .select(col("join_order")).collect()(0).getString(0)
     val joined = best match {
@@ -540,7 +543,8 @@ object Layout {
       .filter(col("n_tokens") > 0)
       .select(col("source"), col("n_tokens"),
         expr("(__v * 1000000L) div n_tokens").as("quality_micro"))
-      .localCheckpoint(true) // tiny; feeds grid, budget, and output
+      // tiny; feeds grid, budget, and output
+      .transform(Materialize(_, "Layout.epochAllocationAdvisor: src"))
     // integer decay powers, the same truncating sequence as the oracle
     val pows = Iterator.iterate(1000000L)(p => p * decayMicro / 1000000L)
       .take(maxEpochs).toSeq
@@ -564,7 +568,8 @@ object Layout {
       .withColumn("__cum", sum(col("n_tokens").cast(dec)).over(w))
       .crossJoin(broadcast(budget))
       .filter(col("__cum") <= col("__budget"))
-      .localCheckpoint(true) // feeds the per-source rollup AND the total
+      // feeds the per-source rollup AND the total
+      .transform(Materialize(_, "Layout.epochAllocationAdvisor: kept"))
     val totAlloc = kept.agg(sum(col("n_tokens")).cast(dec).as("__ta"))
     kept.groupBy(col("source"), col("n_tokens"), col("quality_micro"))
       .agg(count(lit(1)).cast("bigint").as("epochs_allocated"))
@@ -614,7 +619,8 @@ object Layout {
         sum(col("__w")).cast("bigint").as("n_tokens"),
         max(col("__sc")).as("score_hi_micro"),
         min(col("__sc")).as("score_lo_micro"))
-      .localCheckpoint(true) // the x152 rule: the total must not re-run the tiling
+      // the x152 rule: the total must not re-run the tiling
+      .transform(Materialize(_, "Layout.curriculumPlan: agg"))
     val tot = agg.agg(coalesce(sum(col("n_tokens")), lit(0L))
       .cast("decimal(38,0)").as("__tt"))
     agg.crossJoin(broadcast(tot))

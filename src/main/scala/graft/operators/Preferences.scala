@@ -63,7 +63,8 @@ object Preferences {
         greatest(col("__w"), col("__l")).as("__j"))
       .groupBy(col("__i"), col("__j"))
       .agg(count(lit(1)).cast("bigint").as("__n"))
-      .localCheckpoint(true) // feeds the item set AND every round
+      // feeds the item set AND every round
+      .transform(Materialize(_, "Preferences.bradleyTerry: und"))
     val edges = und
       .select(col("__i").as("item"), col("__j").as("__o"), col("__n"))
       .union(und.select(col("__j").as("item"), col("__i").as("__o"),
@@ -73,9 +74,9 @@ object Preferences {
       .join(wins, Seq("item"), "left")
       .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"),
         col("n_comparisons"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Preferences.bradleyTerry: items"))
     var s = items.select(col("item"), lit(1000000L).as("__s"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Preferences.bradleyTerry: scores"))
     for (_ <- 1 to rounds) {
       val denom = edges
         .join(broadcast(s.select(col("item"), col("__s").as("__si"))), "item")
@@ -99,7 +100,7 @@ object Preferences {
           greatest(expr(
             "(__r * CAST(1000000 AS DECIMAL(38,0))) div __mx"), lit(1L))
             .as("__s"))
-        .localCheckpoint(true)
+        .transform(Materialize(_, "Preferences.bradleyTerry: round"))
     }
     items.join(s, "item")
       .select(col("item"), col("n_wins"), col("n_comparisons"),
@@ -151,7 +152,8 @@ object Preferences {
           .as("src"),
         when(col("__wi") > col("__wj"), col("__j")).otherwise(col("__i"))
           .as("dst"))
-      .localCheckpoint(true) // feeds edges count, triads, and cycles
+      // feeds edges count, triads, and cycles
+      .transform(Materialize(_, "Preferences.majorityTransitivity: maj"))
     val nItems = comps.select(col("__w").as("item"))
       .union(comps.select(col("__l")))
       .agg(countDistinct(col("item")).cast("bigint").as("n_items"))

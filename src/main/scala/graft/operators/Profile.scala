@@ -106,7 +106,8 @@ object Profile {
         col(hashCol).cast("string"))))
     val hashes = df.select(col(groupCol).as("grp"), checked.as("h"))
       .distinct()
-      .localCheckpoint(true) // feeds the sketch AND the exact count
+      // feeds the sketch AND the exact count
+      .transform(Materialize(_, "Profile.kmvDistinctSketch: hashes"))
     // round 12: the bottom-k is a bounded-heap aggregate (BottomKLongs
     // — k longs per group per partition through the shuffle) instead
     // of a per-group row_number window that sorted every group's full
@@ -157,7 +158,8 @@ object Profile {
       .select(col(groupCol).as("grp"),
         graft.functions.TextFunctions.md5Bucket60(col(itemCol)).as("h"))
       .distinct()
-      .localCheckpoint(true) // feeds the sketch AND the exact pair join
+      // feeds the sketch AND the exact pair join
+      .transform(Materialize(_, "Profile.kmvPairSimilarity: hashes"))
     val sk = hv.groupBy(col("grp"))
       .agg(slice(sort_array(collect_list(col("h"))), 1, k).as("sk"))
     val est = sk.as("a").join(sk.as("b"), col("a.grp") < col("b.grp"))
@@ -244,7 +246,8 @@ object Profile {
   def mixDrift(df: DataFrame, groupCol: String, catCol: String): DataFrame = {
     val gc = df.groupBy(col(groupCol).as("grp"), col(catCol).as("cat"))
       .agg(count(lit(1)).as("n_gc"))
-      .localCheckpoint(true) // feeds both margins and the grid join
+      // feeds both margins and the grid join
+      .transform(Materialize(_, "Profile.mixDrift: group counts"))
     val g = gc.groupBy(col("grp")).agg(sum(col("n_gc")).cast("bigint").as("n_g"))
     val c = gc.groupBy(col("cat")).agg(sum(col("n_gc")).cast("bigint").as("n_c"))
     val tot = gc.agg(sum(col("n_gc")).cast("bigint").as("n"))
@@ -571,7 +574,8 @@ object Profile {
   def pmiProfile(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df.groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
       .agg(count(lit(1)).as("n_ab"))
-      .localCheckpoint(true) // feeds both margins and the final join
+      // feeds both margins and the final join
+      .transform(Materialize(_, "Profile.pmiProfile: cells"))
     val ma = cells.groupBy(col("__a")).agg(sum(col("n_ab")).cast("bigint").as("n_a"))
     val mb = cells.groupBy(col("__b")).agg(sum(col("n_ab")).cast("bigint").as("n_b"))
     val tot = cells.agg(sum(col("n_ab")).cast("bigint").as("__n"))
@@ -717,7 +721,8 @@ object Profile {
     val gv = df.select(col(groupCol).as("grp"),
         col(valueCol).cast("long").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("n_gv"))
-      .localCheckpoint(true) // feeds the support, the corpus hist, the grid
+      // feeds the support, the corpus hist, the grid
+      .transform(Materialize(_, "Profile.distributionEmd: group values"))
     val support = gv.groupBy(col("v")).agg(sum(col("n_gv")).as("n_v"))
       .withColumn("cum_c", sum(col("n_v")).over(
         Window.orderBy(col("v")).rowsBetween(Window.unboundedPreceding, 0)))
@@ -831,7 +836,8 @@ object Profile {
   def designEffect(df: DataFrame, strataCol: String): DataFrame = {
     val strata = df.groupBy(col(strataCol).as("grp"))
       .agg(count(lit(1)).as("n_rows"))
-      .localCheckpoint(true) // feeds totals and the weighted sums
+      // feeds totals and the weighted sums
+      .transform(Materialize(_, "Profile.designEffect: strata"))
     val tot = strata.agg(sum(col("n_rows")).cast("bigint").as("__n"),
       count(lit(1)).as("__k"))
     val weighted = strata.join(broadcast(tot))
@@ -974,7 +980,8 @@ object Profile {
         countDistinct(when(col(a).isNotNull, struct(col(a), col(b))))
           .as(s"__ab$i"))
     }
-    val wide = df.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val wide = Materialize(df.agg(aggs.head, aggs.tail: _*),
+      "Profile.functionalDependencyAudit: wide")
     pairs.zipWithIndex.map { case ((a, b), i) =>
       wide.select(lit(a).as("det"), lit(b).as("dep"),
         col(s"__a$i").cast("long").as("n_det"),
@@ -1055,7 +1062,8 @@ object Profile {
       .select(col("grp"),
         round(log(col("__v").cast("double")) * lit(100.0)).cast("long")
           .as("__x"))
-      .localCheckpoint(true) // feeds the mean AND the moment pass
+      // feeds the mean AND the moment pass
+      .transform(Materialize(_, "Profile.lognormalityCheck: values"))
     val mu = x.groupBy(col("grp"))
       .agg(expr("sum(__x) div count(1)").as("__mu"))
     x.join(mu, "grp")
@@ -1186,7 +1194,7 @@ object Profile {
     val gv = df.select(col(groupCol).as("grp"),
         col(valueCol).cast("long").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("n_gv"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Profile.ksAgainstCorpus: group values"))
     val support = gv.groupBy(col("v")).agg(sum(col("n_gv")).as("n_v"))
       .withColumn("cum_c", sum(col("n_v")).over(
         Window.orderBy(col("v")).rowsBetween(Window.unboundedPreceding, 0)))
@@ -1249,7 +1257,8 @@ object Profile {
       .filter(col("__x") > 0)
       .orderBy(col("__x").desc, col("__id"))
       .limit(k + 1)
-      .localCheckpoint(true) // feeds the reference AND the retained set
+      // feeds the reference AND the retained set
+      .transform(Materialize(_, "Profile.hillTailIndex: top"))
     val ref = top.agg(min(col("__x")).as("__ref"))
     top.join(broadcast(ref))
       // drop ONE row holding the reference value (the (k+1)-th order
@@ -1316,7 +1325,7 @@ object Profile {
         when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("pos"))
       .groupBy(col("grp"), col("v"))
       .agg(count(lit(1)).as("n_v"), sum(col("pos")).cast("bigint").as("p_v"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Profile.rankAuc: hist"))
     // one-row broadcast guard threaded through the HISTOGRAM rows
     // (pre-window), not the emitted rows: an input whose groups are
     // all single-label produces zero output rows after the
@@ -1427,7 +1436,8 @@ object Profile {
       .select(col(groupCol).as("grp"), col(valueCol).cast("long").as("v"))
       .groupBy(col("grp"), col("v"))
       .agg(count(lit(1)).cast("bigint").as("n_v"))
-      .localCheckpoint(true) // feeds the guard, totals, and the window
+      // feeds the guard, totals, and the window
+      .transform(Materialize(_, "Profile.exactQuantilesByGroup: hist"))
     val guard = hist.agg(count(lit(1)).cast("long").as("__qq_card"))
       .select(
         when(col("__qq_card") > maxDistinct,
@@ -1486,7 +1496,8 @@ object Profile {
       .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__d"))
       .groupBy(col("__u"), col("__d"))
       .agg(count(lit(1)).cast("bigint").as("__c"))
-      .localCheckpoint(true) // feeds the total AND every cap row
+      // feeds the total AND every cap row
+      .transform(Materialize(_, "Profile.contributionCapping: units"))
     val tot = units.agg(coalesce(sum(col("__c")), lit(0L))
       .cast("bigint").as("__tot"))
     val capArr = array(caps.sorted.map(k => lit(k.toLong)): _*)
@@ -1539,7 +1550,7 @@ object Profile {
       .groupBy(col("__k")).agg(sum(col("__v")).cast("bigint").as("__kv"))
     val hist0 = perKey.groupBy(col("__kv"))
       .agg(count(lit(1)).cast("bigint").as("__c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Profile.valuePareto: hist"))
     // the descending cumulative is a SINGLE-PARTITION window over the
     // distinct per-key totals — enforce the histogram-collapse
     // envelope pre-window (the rankAuc lesson), refusing loudly
@@ -1617,7 +1628,7 @@ object Profile {
       .select(col(groupCol).as("grp"), col(valueCol).cast("long").as("v"))
       .groupBy(col("grp"), col("v"))
       .agg(count(lit(1)).cast("bigint").as("n_v"))
-      .localCheckpoint(true) // feeds the guard and the window
+      .transform(Materialize(_, "Profile.giniByGroup: hist")) // feeds the guard and the window
     val guard = hist
       .agg(count(lit(1)).cast("long").as("__gc_card"),
         min(col("v")).as("__gc_min"))
@@ -1727,11 +1738,13 @@ object Profile {
       .withColumn("__n", sum(col("__c")).over(Window.partitionBy(col("__g"))))
       .filter(expr("__cum >= (__n + 1) div 2"))
       .groupBy(col("__g")).agg(min(col("__y")).as("__med"))
-      .localCheckpoint(true) // feeds both halves' residuals
+      // feeds both halves' residuals
+      .transform(Materialize(_, "Profile.conformalCoverage: med"))
     val calR = cal.join(med, Seq("__g"))
       .select(abs(col("__y") - col("__med")).as("__r"))
     val rc0 = calR.groupBy(col("__r")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // feeds the guard AND the spine
+      // feeds the guard AND the spine
+      .transform(Materialize(_, "Profile.conformalCoverage: rc0"))
     // the global residual cumulative is a SINGLE-PARTITION window over
     // DISTINCT residuals — enforce the histogram-collapse envelope
     // pre-window (the valuePareto/rankAuc discipline)
@@ -1748,7 +1761,8 @@ object Profile {
       .select(col("__r"), (col("__c") + col("__cc_guard")).as("__c"))
       .withColumn("__cum", sum(col("__c")).over(Window.orderBy(col("__r"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint(true) // spine feeds n_cal and every pct's rank
+      // spine feeds n_cal and every pct's rank
+      .transform(Materialize(_, "Profile.conformalCoverage: rcum"))
     val nCal = rcum.agg(coalesce(max(col("__cum")), lit(0L))
       .cast("bigint").as("n_cal"))
     val grid = nCal.select(col("n_cal"), explode(array(pcts.map(p =>
@@ -1758,7 +1772,8 @@ object Profile {
     val thr = grid.join(rcum, col("__cum") >= col("__k"), "left")
       .groupBy(col("pct"), col("n_cal"))
       .agg(min(col("__r")).as("threshold"))
-      .localCheckpoint(true) // tiny; broadcast against the eval histogram
+      // tiny; broadcast against the eval histogram
+      .transform(Materialize(_, "Profile.conformalCoverage: thr"))
     val ehist = base.filter(!col("__cal"))
       .join(med, Seq("__g"))
       .select(abs(col("__y") - col("__med")).as("__r"))
@@ -1818,7 +1833,8 @@ object Profile {
       .filter(col("__r").isNotNull && col("__c").isNotNull)
       .groupBy(col("__r"), col("__c"))
       .agg(count(lit(1)).cast("bigint").as("__n"))
-      .localCheckpoint(true) // feeds the targets and every iteration
+      // feeds the targets and every iteration
+      .transform(Materialize(_, "Profile.rakingWeights: cells"))
     val targets = cells.agg(
         sum(col("__n")).cast(dec).as("__tot"),
         count_distinct(col("__r")).cast(dec).as("__nr"),
@@ -1828,7 +1844,7 @@ object Profile {
           .as("__tr"),
         expr("(__tot * CAST(1000000 AS DECIMAL(38,0))) div __nc")
           .as("__tc"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Profile.rakingWeights: targets"))
     var w = cells.select(col("__r"), col("__c"), col("__n"),
       lit(1000000L).cast(dec).as("__w"))
     for (_ <- 1 to iterations) {
@@ -1854,7 +1870,7 @@ object Profile {
         .select(col("__r"), col("__c"), col("__n"),
           greatest(expr("(__w * __sc) div 1000000"), lit(1).cast(dec))
             .as("__w"))
-        .localCheckpoint(true)
+        .transform(Materialize(_, "Profile.rakingWeights: round"))
     }
     val totMass = w.agg(sum(col("__n").cast(dec) * col("__w")).as("__tm"))
     w.crossJoin(broadcast(totMass))
@@ -1905,7 +1921,8 @@ object Profile {
         col(labelCol).cast("string").as("__lb"))
       .filter(col("__s").isNotNull && col("__rt").isNotNull &&
         col("__lb").isNotNull)
-      .localCheckpoint(true) // feeds m, completeness, and the cells
+      // feeds m, completeness, and the cells
+      .transform(Materialize(_, "Profile.fleissKappa: base"))
     val m = base.agg(count_distinct(col("__rt")).cast("bigint").as("__m"))
     // complete subjects: rated once by EVERY rater
     val perSubject = base.groupBy(col("__s"))
@@ -1921,7 +1938,8 @@ object Profile {
     val cells = base.join(complete, Seq("__s"), "left_semi")
       .groupBy(col("__s"), col("__lb"))
       .agg(count(lit(1)).cast("bigint").as("__nij"))
-      .localCheckpoint(true) // feeds S1, the margins, and the counts
+      // feeds S1, the margins, and the counts
+      .transform(Materialize(_, "Profile.fleissKappa: cells"))
     val stats = cells.agg(
       count_distinct(col("__s")).cast("bigint").as("__n"),
       count_distinct(col("__lb")).cast("bigint").as("__k"),
@@ -1987,13 +2005,15 @@ object Profile {
         col(labelCol).cast("string").as("__lb"))
       .filter(col("__s").isNotNull && col("__rt").isNotNull &&
         col("__lb").isNotNull)
-      .localCheckpoint(true) // feeds votes, accuracies, and the re-vote
+      // feeds votes, accuracies, and the re-vote
+      .transform(Materialize(_, "Profile.raterQuality: base"))
     val votes = base.groupBy(col("__s"), col("__lb"))
       .agg(count(lit(1)).cast("long").as("__c"))
     val maj = votes.groupBy(col("__s"))
       .agg(min(struct((-col("__c")).as("nc"), col("__lb").as("lb"))).as("__m"))
       .select(col("__s"), col("__m.lb").as("__maj"))
-      .localCheckpoint(true) // feeds accuracies AND the flip audit
+      // feeds accuracies AND the flip audit
+      .transform(Materialize(_, "Profile.raterQuality: maj"))
     val perRater = base.join(maj, Seq("__s"))
       .groupBy(col("__rt"))
       .agg(count(lit(1)).cast("bigint").as("n_ratings"),
@@ -2007,7 +2027,8 @@ object Profile {
             ((col("n_ratings") - col("n_agree_majority")).cast("double") +
               lit(1.0))), 6) * lit(1000000.0)).cast("long")
           .as("weight_micro"))
-      .localCheckpoint(true) // feeds the re-vote broadcast and the output
+      // feeds the re-vote broadcast and the output
+      .transform(Materialize(_, "Profile.raterQuality: perRater"))
     val scores = base
       .join(broadcast(perRater.select(col("__rt"), col("weight_micro"))),
         Seq("__rt"))

@@ -81,7 +81,8 @@ object Rank {
     if (tiles == 1) return rows0.withColumn(out, lit(1))
     val v = col(valueCol)
     val id = col(idCol)
-    val rows = rows0.localCheckpoint(true) // feeds hist, boundary groups, output
+    // feeds hist, boundary groups, output
+    val rows = Materialize(rows0, "Rank.withExactNtile: rows")
     val hist = rows.groupBy(v.as("__nt_v")).agg(count(lit(1)).as("__nt_cnt"))
     val wv = Window.orderBy(col("__nt_v"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -197,7 +198,8 @@ object Rank {
     val g = col(groupCol)
     val v = col(valueCol)
     val id = col(idCol)
-    val rows = rows0.localCheckpoint(true) // feeds hist, boundary groups, output
+    // feeds hist, boundary groups, output
+    val rows = Materialize(rows0, "Rank.withExactNtileBy: rows")
     val hist = rows.groupBy(g.as("__nt_g"), v.as("__nt_v"))
       .agg(count(lit(1)).as("__nt_cnt"))
     val wv = Window.partitionBy(col("__nt_g")).orderBy(col("__nt_v"))
@@ -216,7 +218,7 @@ object Rank {
       .agg(sum(col("__nt_cnt")).cast("long").as("__nt_n0"),
         count(lit(1)).cast("long").as("__nt_vals"),
         max(col("__nt_v").isNull.cast("int")).as("__nt_vnull"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Rank.withExactNtileBy: gcounts"))
     val guard = gcounts
       .agg(coalesce(sum(col("__nt_vals")), lit(0L)).as("__nt_card"),
         coalesce(max(col("__nt_vnull")), lit(0)).as("__nt_hasnull"),
@@ -363,7 +365,8 @@ object Rank {
       .repartitionByRange(p, (g +: orderCols): _*)
       .sortWithinPartitions((g +: orderCols): _*)
       .withColumn("__pp_pid", spark_partition_id())
-      .localCheckpoint(true) // ONE frozen partition assignment, both passes
+      // ONE frozen partition assignment, both passes
+      .transform(Materialize(_, "Rank.withGroupedPrefixSums: ranged"))
     // pass 1: per-(partition, group) totals → per-group running offsets
     // over the tiny P×groups frame (window ordered by pid, agg below)
     val totals = ranged.groupBy(col("__pp_pid"), g.as("__pp_g"))

@@ -271,7 +271,8 @@ object Sequences {
       .select(to_date(date_trunc("week", col(tsCol))).as("wk"),
         col(userCol).as("u"))
       .distinct()
-      .localCheckpoint(true) // feeds firsts, self-joins, and totals
+      // feeds firsts, self-joins, and totals
+      .transform(Materialize(_, "Sequences.growthAccounting: weekly users"))
     val firsts = wu.groupBy(col("u")).agg(min(col("wk")).as("__first"))
     val prev = wu.select(expr("date_add(wk, 7)").as("wk"), col("u"),
       lit(1).as("__was_prev"))
@@ -327,7 +328,8 @@ object Sequences {
     val cells = events
       .select(to_date(col(tsCol)).as("day"), hour(col(tsCol)).as("hr"))
       .groupBy(col("day"), col("hr")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // feeds baselines, the day count, and output
+      // feeds baselines, the day count, and output
+      .transform(Materialize(_, "Sequences.hourlyBaselineDeviation: cells"))
     val days = cells.select(col("day")).distinct()
       .agg(count(lit(1)).as("n_days"))
     val base = cells.groupBy(col("hr"))
@@ -367,7 +369,8 @@ object Sequences {
       .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__d"),
         col(typeCol).as("__t"))
       .distinct()
-      .localCheckpoint(true) // feeds singles, pairs, and the N count
+      // feeds singles, pairs, and the N count
+      .transform(Materialize(_, "Sequences.basketPairs: items"))
     val n = items.select(col("__u"), col("__d")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val singles = items.groupBy(col("__t")).agg(count(lit(1)).as("__n1"))
@@ -524,7 +527,8 @@ object Sequences {
     val wk = events.select(col(typeCol).as("t"),
         date_trunc("week", col(tsCol)).cast("date").as("w"))
       .groupBy(col("t"), col("w")).agg(count(lit(1)).as("__y"))
-      .localCheckpoint(true) // feeds the bounds, the type list, and the grid
+      // feeds the bounds, the type list, and the grid
+      .transform(Materialize(_, "Sequences.weeklyTrend: weeks"))
     val bounds = wk.agg(min(col("w")).as("__lo"), max(col("w")).as("__hi"))
     val spine = bounds.select(
       explode(expr("sequence(__lo, __hi, interval 7 day)")).as("w"), col("__lo"))
@@ -987,7 +991,7 @@ object Sequences {
           .otherwise(0).as("__h")) // 0 = straddles the midpoint: dropped
     val train = trans.filter(col("__h") === 1)
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Sequences.heldOutTransitionNll: train"))
     val ctxTot = train.groupBy(col("__a"))
       .agg(sum(col("__c")).cast("bigint").as("__ca"))
     val vocab = train.select(col("__a")).union(train.select(col("__b")))
@@ -1104,7 +1108,8 @@ object Sequences {
         explode(expr("sequence(__lo, __hi, interval 1 day)")).as("__day"))
       .join(daily, Seq("__t", "__day"), "left")
       .select(col("__t"), col("__day"), coalesce(col("__x"), lit(0L)).as("__x"))
-      .localCheckpoint(true) // feeds the pair join, the tie groups, n
+      // feeds the pair join, the tie groups, n
+      .transform(Materialize(_, "Sequences.mannKendall: dense"))
     val s = dense.as("a").join(dense.as("b"),
         col("a.__t") === col("b.__t") && col("a.__day") < col("b.__day"))
       .groupBy(col("a.__t").as("__t"))
@@ -1309,7 +1314,8 @@ object Sequences {
       .groupBy(col("__a").as("a"), col("__b").as("b"),
         col(typeCol).as("c"))
       .agg(count(lit(1)).cast("bigint").as("n"))
-      .localCheckpoint(true) // feeds the total AND the output
+      // feeds the total AND the output
+      .transform(Materialize(_, "Sequences.eventPathMining: tri"))
     tri.join(broadcast(tri.agg(sum(col("n")).cast("bigint").as("__tot"))))
       .filter(col("n") >= minSupport)
       .select(col("a"), col("b"), col("c"), col("n"),
@@ -1352,12 +1358,14 @@ object Sequences {
     val pairs = touch.join(conv, Seq("__u"))
       .filter(col("__tts") < col("__cts") &&
         col("__tts") >= col("__cts") - expr(s"INTERVAL $windowDays DAYS"))
-      .localCheckpoint(true) // feeds per-conv totals, per-type, last-touch
+      // feeds per-conv totals, per-type, last-touch
+      .transform(Materialize(_, "Sequences.multiTouchAttribution: pairs"))
     val per = pairs.groupBy(col("__cid"))
       .agg(count(lit(1)).cast("bigint").as("__nt"),
         max(struct(col("__tts").as("ts"), col("__tid").as("id"),
           col("__tk").as("t"))).as("__last"))
-      .localCheckpoint(true) // feeds the linear join AND the last-touch agg
+      // feeds the linear join AND the last-touch agg
+      .transform(Materialize(_, "Sequences.multiTouchAttribution: per"))
     val byType = pairs.groupBy(col("__cid"), col("__tk"))
       .agg(count(lit(1)).cast("bigint").as("__cnt"))
     val linear = byType.join(per.select(col("__cid"), col("__nt")), "__cid")
@@ -1471,12 +1479,12 @@ object Sequences {
       .agg(count(lit(1)).cast("bigint").as("n"))
     val totals = trans.groupBy(col("src"))
       .agg(sum(col("n")).cast("bigint").as("tot"))
-    val edges = trans.join(totals, "src").localCheckpoint(true)
+    val edges = Materialize(trans.join(totals, "src"), "Sequences.markovStationary: edges")
     val states = edges.select(col("src").as("state"))
       .union(edges.select(col("dst").as("state"))).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Sequences.markovStationary: states"))
     var pi = states.withColumn("pi_micro", lit(1000000L))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Sequences.markovStationary: pi"))
     for (_ <- 1 to iters) {
       val stepped = edges.join(pi, edges("src") === pi("state"))
         .select(col("dst").as("state"),
@@ -1486,7 +1494,7 @@ object Sequences {
       pi = states.join(stepped, Seq("state"), "left")
         .select(col("state"),
           coalesce(col("__pi2"), lit(0L)).as("pi_micro"))
-        .localCheckpoint(true)
+        .transform(Materialize(_, "Sequences.markovStationary: round"))
     }
     pi.select(col("state").as("event_type"), col("pi_micro"))
       .orderBy(col("event_type"))
@@ -1540,7 +1548,8 @@ object Sequences {
       .select(col("__t"), col("__day"), col("__n"),
         (col("__n").cast(dec) * col("__x").cast(dec) -
           col("__tt").cast(dec)).as("__d"))
-      .localCheckpoint(true) // one spine frame feeds every lag
+      // one spine frame feeds every lag
+      .transform(Materialize(_, "Sequences.dailyAutocorrelation: dev"))
     val w = Window.partitionBy(col("__t")).orderBy(col("__day"))
     val lagged = dev.select(
       (col("__t") +: col("__n") +: col("__d") +:
@@ -1662,13 +1671,14 @@ object Sequences {
       .withColumn("__n", sum(col("__c")).over(Window.partitionBy()))
       .filter(expr(s"__cum >= (__n * $trainPct + 99) div 100"))
       .agg(min(col("__d")).as("__cutoff"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Sequences.temporalSplitAudit: cut"))
     val flagged = base.crossJoin(broadcast(cut))
       .select(col("__u"), (col("__d") <= col("__cutoff")).as("__train"),
         col("__cutoff"))
-      .localCheckpoint(true) // feeds counts, user sets, and semi joins
+      // feeds counts, user sets, and semi joins
+      .transform(Materialize(_, "Sequences.temporalSplitAudit: flagged"))
     val trainUsers = flagged.filter(col("__train")).select(col("__u"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize(_, "Sequences.temporalSplitAudit: trainUsers"))
     val counts = flagged.agg(first(col("__cutoff")).as("cutoff_day"),
       sum(when(col("__train"), 1L).otherwise(0L)).cast("bigint")
         .as("n_train"),
@@ -1677,7 +1687,7 @@ object Sequences {
     val uTrain = trainUsers.agg(count(lit(1)).cast("bigint")
       .as("n_users_train"))
     val testUsers = flagged.filter(!col("__train")).select(col("__u"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize(_, "Sequences.temporalSplitAudit: testUsers"))
     val uTest = testUsers.agg(count(lit(1)).cast("bigint")
       .as("n_users_test"))
     val uBoth = testUsers.join(trainUsers, Seq("__u"), "left_semi")
@@ -1744,7 +1754,8 @@ object Sequences {
         col("__i").isNotNull && col("__t").isNotNull)
     val sz = base.groupBy(col("__u"), col("__d"))
       .agg(count(lit(1)).cast("long").as("__c"))
-      .localCheckpoint(true) // feeds the fence AND the drop count
+      // feeds the fence AND the drop count
+      .transform(Materialize(_, "Sequences.behaviorBoilerplate: sizes"))
     val dropped = sz.filter(col("__c") > maxLen)
       .agg(count(lit(1)).cast("bigint").as("n_dropped_long"))
     val keep = sz.filter(col("__c") <= maxLen).select(col("__u"), col("__d"))

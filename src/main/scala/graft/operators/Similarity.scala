@@ -371,7 +371,7 @@ object Similarity {
         dot_product(col(vecCol), col(vecCol)) > 0)
       .select(col(idCol).as("src"), col(vecCol).as("vec"),
         hyperplaneBucket(col(vecCol), nPlanes, dim).as("bucket"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Similarity.knnGraph: bucketed"))
     val scored = bucketed.as("a").join(bucketed.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.src") =!= col("b.src"))
       .select(col("a.src").as("src"), col("b.src").as("dst"),
@@ -457,7 +457,7 @@ object Similarity {
         dot_product(col(vecCol), col(vecCol)) > 0)
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
         pmod(md5Bucket60(col(idCol)), lit(pairBuckets.toLong)).as("grp"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Similarity.pairCosineHistogram: valid"))
     val pairs = valid.as("a").join(valid.as("b"),
         col("a.grp") === col("b.grp") && col("a.id") < col("b.id"))
       .select(least(floor(round(
@@ -467,7 +467,7 @@ object Similarity {
     // the totals branch, and an unmaterialized plan would run the
     // whole pair join twice
     val binned = pairs.groupBy(col("bin")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Similarity.pairCosineHistogram: binned"))
     binned.join(broadcast(binned.agg(sum(col("n")).cast("bigint").as("__t"))))
       .select(col("bin"), col("n"),
         expr("n * 1000000L div __t").as("share_micro"))
@@ -509,7 +509,8 @@ object Similarity {
         round(col("v").cast("double") * lit(1000000.0)).cast("long").as("m"))
       .join(clusters.select(col(idCol).as("id"),
         col(clusterCol).as("grp")), "id")
-      .localCheckpoint(true) // feeds the centroid AND the member side
+      // feeds the centroid AND the member side
+      .transform(Materialize(_, "Similarity.clusterExemplars: cells"))
     val cent = cells.groupBy(col("grp"), col("d"))
       .agg(sum(col("m")).cast("bigint").as("s"), count(lit(1)).as("c"))
       .select(col("grp"), col("d"), expr("s div c").as("q"))
@@ -572,7 +573,8 @@ object Similarity {
         round(col("v").cast("double") * lit(1000000.0)).cast("long").as("m"))
     val byGrpDim = cells.groupBy(col("grp"), col("d"))
       .agg(sum(col("m")).cast("bigint").as("s"), count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the corpus roll-up AND the join
+      // feeds the corpus roll-up AND the join
+      .transform(Materialize(_, "Similarity.centroidDrift: byGrpDim"))
     val grpCent = byGrpDim
       .select(col("grp"), col("d"), expr("s div c").as("g"),
         col("c").as("n"))
@@ -630,7 +632,8 @@ object Similarity {
         hyperplaneBucket(col(vecCol), nPlanes, dim).as("bucket"),
         (pmod(graft.functions.TextFunctions.md5Bucket60(col(idCol)),
           lit(100L)) < testPct).as("__t"))
-      .localCheckpoint(true) // feeds both split sides
+      // feeds both split sides
+      .transform(Materialize(_, "Similarity.splitLeakageBySimilarity: bucketed"))
     val scored = bucketed.filter(col("__t")).as("a")
       .join(bucketed.filter(!col("__t")).as("b"),
         col("a.bucket") === col("b.bucket"))
@@ -1224,7 +1227,8 @@ object Similarity {
         .filter(col(vecCol).isNotNull)
         .select(col(idCol).as("__id"), posexplode(qv).as(Seq("__i", "__q")))
         .select(col("__id"), col("__i").cast("long").as("__i"), col("__q"))
-        .localCheckpoint(true)) // feeds the projection AND trace passes
+        // feeds the projection AND trace passes
+        .transform(Materialize(_, "Similarity.covariancePowerParts: elements")))
     // ids with >= 1 exploded element — identical to the old
     // countDistinct over the exploded frame, without needing it
     val nF = emb
@@ -1238,7 +1242,7 @@ object Similarity {
               "shard the corpus")))
             .cast("bigint"))
           .otherwise(col("__nv")).as("__nv"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "Similarity.covariancePowerParts: vector count"))
     val n = BigInt(nF.head().getLong(0)) // evaluates the envelope guard
     // LONG accumulators throughout (a DECIMAL(38,0) sum measured 4×
     // slower — one BigDecimal op per cell): Σq ≤ 1e6·n and the split
@@ -1513,7 +1517,8 @@ object Similarity {
       .agg(sum(col("m")).cast("bigint").as("s"),
         count(lit(1)).cast("bigint").as("c"))
       .select(col("__src"), col("d"), expr("s div c").as("g"), col("c"))
-      .localCheckpoint(true) // both sides of the pair join
+      // both sides of the pair join
+      .transform(Materialize(_, "Similarity.sourceAffinity: cent"))
     val a = cent.select(col("__src").as("source_a"), col("d"),
       col("g").as("__ga"), col("c").as("__na"))
     val b = cent.select(col("__src").as("source_b"), col("d"),

@@ -55,7 +55,8 @@ object TextAnalysis {
     val conf = labeled
       .groupBy(col(truthCol).as("t"), col(predCol).as("p"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // feeds tp, row/col margins, class list
+      // feeds tp, row/col margins, class list
+      .transform(Materialize(_, "TextAnalysis.classifierPrf: conf"))
     val classes = conf.select(col("t").as("class"))
       .union(conf.select(col("p").as("class"))).distinct()
     val tp = conf.filter(col("t") === col("p"))
@@ -134,7 +135,8 @@ object TextAnalysis {
     val bg = benchmark
       .select(col(idCol).as("bench_id"),
         explode(array_distinct(wordShingles(col(textCol), ngram))).as("gram"))
-      .localCheckpoint(true) // feeds the per-item sizes AND the probe join
+      // feeds the per-item sizes AND the probe join
+      .transform(Materialize(_, "TextAnalysis.contaminationOverlap: benchmark grams"))
     val sizes = bg.groupBy(col("bench_id")).agg(count(lit(1)).as("__bsz"))
     corpus
       .select(col(idCol).as("doc_id"),
@@ -453,7 +455,8 @@ object TextAnalysis {
             tokenCount(col(textCol)).as("n_tokens"))
           .filter(col("n_tokens").isNotNull),
         strataCol, Seq(col(idCol)), Seq("n_tokens" -> "__cum"))
-      .localCheckpoint(true) // feeds one aggregation branch per budget
+      // feeds one aggregation branch per budget
+      .transform(Materialize(_, "TextAnalysis.packingSweep: cum"))
     budgets.map { l =>
       cum.groupBy(col(strataCol))
         .agg(count(lit(1)).cast("bigint").as("n_docs"),
@@ -524,7 +527,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(array_distinct(graft.functions.ShingleFunctions.ngram_strings(
           col("__w"), ngram))).as("gram"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.boilerplateScreenFromTokens: grams"))
     // grams are distinct per doc, so rows-per-gram IS document frequency
     val dfreq = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     grams.join(dfreq, "gram")
@@ -577,7 +580,8 @@ object TextAnalysis {
     val counts = docs
       .select(explode(words(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // feeds both the total and the top-k cut
+      // feeds both the total and the top-k cut
+      .transform(Materialize(_, "TextAnalysis.vocabStats: counts"))
     val total = counts.agg(sum(col("cnt")).cast("bigint").as("__tot"))
     val top = counts.orderBy(col("cnt").desc, col("token")).limit(topK)
     val wRank = Window.orderBy(col("cnt").desc, col("token"))
@@ -857,7 +861,8 @@ object TextAnalysis {
         col("col").as("fp"))
     val hist = grams.groupBy(col("fp"))
       .agg(count(lit(1)).as("__df"))
-      .localCheckpoint(true) // feeds the prune AND the capped count
+      // feeds the prune AND the capped count
+      .transform(Materialize(_, "TextAnalysis.exactDuplicatedSubstrings: hist"))
     val capped = hist.filter(col("__df") > dfCap)
       .agg(count(lit(1)).cast("bigint").as("n_capped_fps"))
     val pruned = grams
@@ -956,7 +961,7 @@ object TextAnalysis {
     // either corpus fans the join out — one histogram guards both
     val hist = cg.select(col("fp")).unionAll(bg.select(col("fp")))
       .groupBy(col("fp")).agg(count(lit(1)).as("__df"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.contaminationRuns: hist"))
     val capped = hist.filter(col("__df") > dfCap)
       .agg(count(lit(1)).cast("bigint").as("n_capped_fps"))
     val keep = hist.filter(col("__df") <= dfCap).select(col("fp"))
@@ -1074,7 +1079,8 @@ object TextAnalysis {
   def mixtureReweight(docs: DataFrame, sourceCol: String = "source",
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val m = crossSourcePerplexity(docs, sourceCol, idCol, textCol)
-      .localCheckpoint(true) // one matrix feeds diag, cross, and output
+      // one matrix feeds diag, cross, and output
+      .transform(Materialize(_, "TextAnalysis.mixtureReweight: matrix"))
     val avg = m.select(col("src_eval"), col("src_train"),
       expr("sum_logp_micro div n_transitions").as("avg_micro"))
     val own = avg.filter(col("src_eval") === col("src_train"))
@@ -1088,7 +1094,8 @@ object TextAnalysis {
         (col("own_avg_micro") -
           coalesce(col("cross_avg_micro"), col("own_avg_micro")))
           .as("excess_micro"))
-      .localCheckpoint(true) // feeds the min, the sum, and the output
+      // feeds the min, the sum, and the output
+      .transform(Materialize(_, "TextAnalysis.mixtureReweight: excess"))
     val mn = ex.agg(min(col("excess_micro")).as("__mn"))
     val tot = ex.crossJoin(broadcast(mn))
       .agg(sum(col("excess_micro") - col("__mn") + lit(1000000L)).as("__tot"),
@@ -1217,7 +1224,8 @@ object TextAnalysis {
       .orderBy(col("run_chars").desc, col("doc_a"), col("doc_b"),
         col("run_start_a"))
       .limit(topN)
-      .localCheckpoint(true) // ≤ topN rows, feeds the id cut AND the output
+      // ≤ topN rows, feeds the id cut AND the output
+      .transform(Materialize(_, "TextAnalysis.duplicatedSubstringCatalog: top"))
     val texts = norm
       .join(broadcast(top.select(col("doc_a")).distinct()),
         col("doc_id") === col("doc_a"))
@@ -1259,9 +1267,10 @@ object TextAnalysis {
     val toks = docs
       .select(col("doc_id"), posexplode(words(col(textCol))))
       .toDF("doc_id", "pos", "tok")
-      .localCheckpoint(true) // both pair sides + the margins
+      // both pair sides + the margins
+      .transform(Materialize(_, "TextAnalysis.skipgramPmi: toks"))
     val margins = toks.groupBy(col("tok")).agg(count(lit(1)).as("n_w"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.skipgramPmi: margins"))
     val totalToks = margins.agg(sum(col("n_w")).cast("bigint").as("__nn"))
     val shifted = toks
       .withColumn("__d", explode(sequence(lit(1), lit(window))))
@@ -1275,7 +1284,8 @@ object TextAnalysis {
       .groupBy(col("tok_a"), col("tok_b"))
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minCount)
-      .localCheckpoint(true) // feeds the total AND the scored join
+      // feeds the total AND the scored join
+      .transform(Materialize(_, "TextAnalysis.skipgramPmi: pairCounts"))
     val totalPairs = pairCounts.agg(sum(col("n_pair")).cast("bigint").as("__tp"))
     pairCounts
       .join(margins.select(col("tok").as("tok_a"), col("n_w").as("n_a")), "tok_a")
@@ -1309,7 +1319,8 @@ object TextAnalysis {
       // docs shorter than the shingle length all sketch to [] — without
       // this filter every pair of them would verify as a "dup"
       .filter(size(col("fp")) > 0)
-      .localCheckpoint(true) // both sides of the self-join
+      // both sides of the self-join
+      .transform(Materialize(_, "TextAnalysis.fingerprintDup: fps"))
     val a = fps.as("a"); val b = fps.as("b")
     a.join(b,
         col("a.fp_hash") === col("b.fp_hash") &&
@@ -1346,7 +1357,8 @@ object TextAnalysis {
         explode(array_distinct(
           md5_ngram_hashes(words(col(textCol)), ngram))).as("h"))
       .distinct()
-      .localCheckpoint(true) // feeds the sizes agg and both join sides
+      // feeds the sizes agg and both join sides
+      .transform(Materialize(_, "TextAnalysis.crossGroupOverlap: grams"))
     val sizes = g.groupBy(col("grp")).agg(count(lit(1)).as("sz"))
     val shared = g.toDF("src_a", "h").as("a")
       .join(g.toDF("src_b", "h2").as("b"),
@@ -1540,7 +1552,7 @@ object TextAnalysis {
     val toks = docs
       .select(col(idCol).as("doc_id"), col(lenCol).as("__len"),
         words(col(textCol)).as("__w"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.filterAttribution: toks"))
     val rep = repetitionRatioFromTokens(toks.select(col("doc_id"), col("__w")), 2)
     val boil = boilerplateScreenFromTokens(
         toks.select(col("doc_id"), col("__w")), 2, 5)
@@ -1642,7 +1654,8 @@ object TextAnalysis {
             slice(col("__w"), i * spanWords + 1, lit(spanWords)), " "))))
       .toDF("doc_id", "span_id", "span")
       .withColumn("h", md5(col("span")))
-      .localCheckpoint(true) // feeds the df agg AND the join back
+      // feeds the df agg AND the join back
+      .transform(Materialize(_, "TextAnalysis.spanDedup: spans"))
     val dfreq = spans.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("df"))
     val report = spans.join(dfreq, "h")
@@ -1844,7 +1857,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(col("__w")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.oovRate: tf"))
     val vocab = tf.groupBy(col("term")).agg(sum(col("tf")).cast("bigint").as("ctf"))
       .orderBy(col("ctf").desc, col("term")).limit(vocabSize)
       .select(col("term"), lit(1).as("__v"))
@@ -1957,7 +1970,8 @@ object TextAnalysis {
       .select(col(sourceCol).as("source"),
         explode(graft.functions.TextFunctions.words(col(textCol))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // feeds both df and the score join
+      // feeds both df and the score join
+      .transform(Materialize(_, "TextAnalysis.distinctiveTerms: source terms"))
     val dfreq = st.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nSrc = docs.agg(count_distinct(col(sourceCol)).as("__s"))
     val scored = st.join(dfreq, "term").join(broadcast(nSrc))
@@ -2011,7 +2025,8 @@ object TextAnalysis {
         .select(col("doc_id"), col("__p.w1"), col("__p.w2"))
     val refPairs = pairFrame(ref)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("__c12"))
-      .localCheckpoint(true) // feeds left-context counts, V, and scoring
+      // feeds left-context counts, V, and scoring
+      .transform(Materialize(_, "TextAnalysis.bigramLogProb: refPairs"))
     val refLeft = refPairs.groupBy(col("w1"))
       .agg(sum(col("__c12")).cast("bigint").as("__c1"))
     val stats = refPairs.agg(count_distinct(col("w2")).as("__v"))
@@ -2081,7 +2096,8 @@ object TextAnalysis {
     val refTris = tripleFrame(ref)
       .groupBy(col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("__c123"))
-      .localCheckpoint(true) // feeds context counts, V, and scoring
+      // feeds context counts, V, and scoring
+      .transform(Materialize(_, "TextAnalysis.trigramLogProb: refTris"))
     val refCtx = refTris.groupBy(col("w1"), col("w2"))
       .agg(sum(col("__c123")).cast("bigint").as("__c12"))
     val stats = refTris.agg(count_distinct(col("w3")).as("__v"))
@@ -2171,13 +2187,13 @@ object TextAnalysis {
     val cells = tri
       .groupBy(col("__src"), col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).cast("bigint").as("__c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.crossSourcePerplexity: cells"))
     val ctx = cells.groupBy(col("__src"), col("w1"), col("w2"))
       .agg(sum(col("__c")).cast("bigint").as("__c12"))
     val vs = cells.groupBy(col("__src"))
       .agg(count_distinct(col("w3")).cast("bigint").as("__v"))
     val srcs = cells.select(col("__src").as("src_train")).distinct()
-    val grid = Dedup.ensureParallelism(cells)
+    val grid = Materialize.ensureParallelism(cells)
       .select(col("__src").as("src_eval"), col("w1"), col("w2"), col("w3"),
         col("__c").as("__tf"))
       .crossJoin(broadcast(srcs))
@@ -2311,7 +2327,8 @@ object TextAnalysis {
         .select(col("doc_id"), col("__p.w1"), col("__p.w2"))
     val refPairs = pairFrame(ref)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("__c12"))
-      .localCheckpoint(true) // feeds context stats, continuation, B, scoring
+      // feeds context stats, continuation, B, scoring
+      .transform(Materialize(_, "TextAnalysis.kneserNeyLogProb: refPairs"))
     // per-context: total count and distinct right types (refPairs is
     // already one row per (w1, w2), so count(*) IS the type count)
     val ctx = refPairs.groupBy(col("w1"))
@@ -2508,7 +2525,8 @@ object TextAnalysis {
     val refTf = tokFrame(ref, idCol, textCol)
       .select(explode(col("__w")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // feeds the stats AND the scoring join
+      // feeds the stats AND the scoring join
+      .transform(Materialize(_, "TextAnalysis.positionalSurprisal: refTf"))
     val stats = refTf.agg(
       sum(col("__c")).cast("bigint").as("__t"), count(lit(1)).as("__v"))
     def lpMicro(c: Column): Column =
@@ -2628,7 +2646,7 @@ object TextAnalysis {
         // codegen kernel split (identical codepoint semantics to the
         // old transform/substring lambda, one O(len) pass — r18)
         graft.functions.ShingleFunctions.char_syms(col("wid")).as("syms"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.bpeInductionWithVocab: vocab"))
     val merges = (1 to rounds).map { r =>
       val (best, next) = bpeMergeRound(vocab, r)
       vocab = next
@@ -2688,14 +2706,15 @@ object TextAnalysis {
         col("r").as("r"), col("cnt").as("cnt"))).as("b"))
       .select(col("b.l").as("l"), col("b.r").as("r"), col("b.cnt").as("cnt"))
       .filter(col("l").isNotNull) // empty pair space → empty best
-      .localCheckpoint(true) // 1 row; feeds the merge AND the output
+      // 1 row; feeds the merge AND the output
+      .transform(Materialize(_, "TextAnalysis.bpeMergeRound: best"))
     // r18: the merge application is a zero-shuffle kernel projection
     // now, so round k+1 re-deriving round k's vocab is a chain of ≤ k
     // broadcast-join projections over the CHECKPOINTED initial vocab —
     // cheaper than the per-round eager checkpoint it replaces (which
     // was a full materialization job per round when the application
     // was a 3-exchange window plan)
-    val next = applyBestPair(vocab, best, checkpoint = false)
+    val next = applyBestPair(vocab, best)
     (best.select(lit(round.toLong).as("round"), col("l").as("left_sym"),
       col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
       col("cnt").as("pair_count")), next)
@@ -2706,11 +2725,10 @@ object TextAnalysis {
     * documents. `best` must be ≤ 1 row with columns (l, r); an EMPTY
     * best passes every word through unchanged (LEFT join on true:
     * null l/r hit the `when` pass-through arm, so nothing merges).
-    * Returns the merged (wid, c, syms) frame; `checkpoint = true`
-    * eagerly materializes it (no caller needs that since the kernel
-    * rewrite — the induction leaves rounds lazy, as a re-derivation is
-    * now a chain of ≤ rounds broadcast-join projections over the
-    * checkpointed initial vocab).
+    * Returns the merged (wid, c, syms) frame, lazy: the induction
+    * leaves rounds unmaterialized, as a re-derivation is a chain of
+    * ≤ rounds broadcast-join projections over the checkpointed initial
+    * vocab.
     *
     * r18 optimization (guide §2.4 + §1.2 step 2): the merge used to
     * run as posexplode → two wid-partitioned window passes →
@@ -2721,17 +2739,13 @@ object TextAnalysis {
     * broadcast-join projection. Equivalence is pinned by
     * TextAnalysisSpec's kernel-vs-window property test plus the
     * hand-traced corpora. */
-  private[graft] def applyBestPair(vocab: DataFrame, best: DataFrame,
-      checkpoint: Boolean = true): DataFrame = {
+  private[graft] def applyBestPair(vocab: DataFrame, best: DataFrame): DataFrame = {
     import graft.functions.ShingleFunctions.bpe_apply_merge
-    val merged = vocab.join(broadcast(best.select(col("l"), col("r"))),
-        lit(true), "left")
+    vocab.join(broadcast(best.select(col("l"), col("r"))), lit(true), "left")
       .select(col("wid"), col("c"),
         when(col("l").isNull || col("r").isNull, col("syms"))
           .otherwise(bpe_apply_merge(col("syms"), col("l"), col("r")))
           .as("syms"))
-    // round k+1 must never re-run round k
-    if (checkpoint) merged.localCheckpoint(true) else merged
   }
 
   /** The pre-r18 window-plan form of [[applyBestPair]] — retained
@@ -2841,7 +2855,7 @@ object TextAnalysis {
       // it against a fresh corpus explode; x276 reads it twice) starts
       // from the materialized vocab instead of re-running the agg —
       // ONE checkpoint job total, where the round-replay form cost 7
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.bpeEncodeFromWordCounts: encode"))
   }
 
   /** Two tokenizer versions encoded in ONE vocab pass (r19, VERDICT
@@ -2867,7 +2881,7 @@ object TextAnalysis {
           .as("syms_a"),
         bpe_apply_merges(char_syms(col("w")), col("__ls_b"), col("__rs_b"))
           .as("syms_b"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.bpeEncodeDualFromWordCounts: encode"))
   }
 
   /** Per-document curation scorecard — the explainable decision
@@ -2895,7 +2909,7 @@ object TextAnalysis {
     import graft.functions.ShingleFunctions.ngram_strings
     val toks = docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("__w"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "TextAnalysis.curationScorecard: toks"))
     val rep = repetitionRatioFromTokens(toks.select(col("doc_id"), col("__w")), 2)
     val grams = toks.select(col("doc_id"),
       explode(array_distinct(ngram_strings(col("__w"), 3))).as("gram"))
@@ -2945,10 +2959,11 @@ object TextAnalysis {
     import graft.functions.ShingleFunctions.ngram_strings
     val grams = docs.select(col(idCol).as("doc_id"),
         explode(array_distinct(ngram_strings(words(col(textCol)), n))).as("gram"))
-      .localCheckpoint(true) // feeds df, sizes AND both join sides
+      // feeds df, sizes AND both join sides
+      .transform(Materialize(_, "TextAnalysis.containmentScreen: grams"))
     val kept = grams.groupBy(col("gram")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select(col("gram"))
-    val gk = grams.join(kept, "gram").localCheckpoint(true)
+    val gk = Materialize(grams.join(kept, "gram"), "TextAnalysis.containmentScreen: kept grams")
     val sz = gk.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val ip = gk.as("a").join(gk.as("b"),
         col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
@@ -3246,7 +3261,8 @@ object TextAnalysis {
     val st = docs.select(col(sourceCol).as("source"),
         explode(words(col(textCol))).as("term"))
       .distinct()
-      .localCheckpoint(true) // feeds the df counts and the share join
+      // feeds the df counts and the share join
+      .transform(Materialize(_, "TextAnalysis.exclusiveVocabShare: source terms"))
     val df = st.groupBy(col("term")).agg(count(lit(1)).as("__sc"))
     st.join(df, "term")
       .groupBy(col("source"))
@@ -3299,7 +3315,8 @@ object TextAnalysis {
     // 1-row checkpoint: the 4-point unpivot selects this frame once per
     // percentile — without it every union branch re-ran the full
     // tokenize+aggregate (measured: 8 FileScans, zero ReusedExchange)
-    val wide = toks.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val wide = Materialize(toks.agg(aggs.head, aggs.tail: _*),
+      "TextAnalysis.heapsLawGrowth: wide")
     val long = pcts.map { p =>
       wide.select(lit(p).as("pct"), col(s"__d$p").as("n_docs"),
         col(s"__n$p").as("n_tokens"), col(s"__v$p").as("vocab"))
@@ -3750,7 +3767,8 @@ object TextAnalysis {
         explode(words(col(textCol))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("__cs"))
-      .localCheckpoint(true) // feeds corpus counts AND the scoring join
+      // feeds corpus counts AND the scoring join
+      .transform(Materialize(_, "TextAnalysis.sourceVocabKL: source terms"))
     val ct = st.groupBy(col("term")).agg(sum(col("__cs")).cast("bigint").as("__ct"))
     val ts = st.groupBy(col("source")).agg(sum(col("__cs")).cast("bigint").as("__ts"))
     val tt = ct.agg(sum(col("__ct")).cast("bigint").as("__tt"))
@@ -3838,7 +3856,8 @@ object TextAnalysis {
         size(words(col(textCol))).cast("long").as("__t"),
         round(qualityScore(col(textCol)) * lit(1000000.0)).cast("long")
           .as("__q"))
-      .localCheckpoint(true) // feeds the stats AND the pair source tags
+      // feeds the stats AND the pair source tags
+      .transform(Materialize(_, "TextAnalysis.sourceAblation: per"))
     val st = per.groupBy(col("source"))
       .agg(count(lit(1)).cast("bigint").as("n_docs"),
         sum(col("__t")).cast("bigint").as("tokens"),
@@ -3903,7 +3922,7 @@ object TextAnalysis {
     // 1-row checkpoint: the per-candidate unpivot selects this frame
     // once per candidate — without it each branch re-runs the corpus
     // aggregation (ReuseExchange does not always cover union branches)
-    val wide = t.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val wide = Materialize(t.agg(aggs.head, aggs.tail: _*), "TextAnalysis.truncationPlan: wide")
     maxLens.sorted.map { l =>
       wide.select(lit(l).as("max_len"), col("__n").as("n_docs"),
         col(s"__over$l").as("n_clipped"),
@@ -3951,7 +3970,8 @@ object TextAnalysis {
     val cnt = docs
       .select(explode(words(col(textCol))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the totals AND the head
+      // feeds the totals AND the head
+      .transform(Materialize(_, "TextAnalysis.zipfHeadSlope: cnt"))
     val totals = cnt.agg(count(lit(1)).cast("bigint").as("vocab"),
       sum(col("c")).cast("bigint").as("total_tokens"))
     val head = cnt.orderBy(col("c").desc, col("term")).limit(topK)
@@ -4006,7 +4026,8 @@ object TextAnalysis {
         .adjacent_pairs(col("__w"))).as("__p"))
       .groupBy(col("grp"), col("__p.w1").as("w1"), col("__p.w2").as("w2"))
       .agg(count(lit(1)).cast("bigint").as("c12"))
-      .localCheckpoint(true) // feeds the left-context counts AND the cells
+      // feeds the left-context counts AND the cells
+      .transform(Materialize(_, "TextAnalysis.bigramConditionalEntropy: pairs"))
     val left = pairs.groupBy(col("grp"), col("w1"))
       .agg(sum(col("c12")).cast("bigint").as("c1"))
     pairs.join(left, Seq("grp", "w1"))
@@ -4168,7 +4189,8 @@ object TextAnalysis {
         col("col").as("fp"))
     val cells = grams.groupBy(col("doc_id"), col("fp"))
       .agg(count(lit(1)).as("__m"))
-      .localCheckpoint(true) // feeds the prune AND the capped count
+      // feeds the prune AND the capped count
+      .transform(Materialize(_, "TextAnalysis.intraDocRepeats: cells"))
     val capped = cells.filter(col("__m") > occCap)
       .agg(count(lit(1)).cast("bigint").as("n_capped_cells"))
     // only cells with 2..occCap occurrences can self-pair (the >= 2
@@ -4305,7 +4327,8 @@ object TextAnalysis {
       .select(col("__p.w1"), col("__p.w2"))
     val pc = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).cast("bigint").as("n_pair"))
-      .localCheckpoint(true) // feeds margins, N, and the PMI join
+      // feeds margins, N, and the PMI join
+      .transform(Materialize(_, "TextAnalysis.pmiCollocations: pair counts"))
     val left = pc.groupBy(col("w1"))
       .agg(sum(col("n_pair")).cast("bigint").as("n_left"))
     val right = pc.groupBy(col("w2"))
@@ -4357,7 +4380,8 @@ object TextAnalysis {
         graft.functions.ShingleFunctions.ngram_strings(col("__w"), n))
         .as("__g"))
       .distinct()
-      .localCheckpoint(true) // feeds sizes AND the intersection join
+      // feeds sizes AND the intersection join
+      .transform(Materialize(_, "TextAnalysis.sourceGramOverlap: source grams"))
     val sizes = sg.groupBy(col("__src"))
       .agg(count(lit(1)).cast("bigint").as("n_grams"))
     val a = sg.as("a"); val b = sg.as("b")
@@ -4409,7 +4433,8 @@ object TextAnalysis {
       .select(col("source"), col("n_tokens"),
         expr("CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)")
           .as("temp_weight"))
-      .localCheckpoint(true) // feeds the totals AND the output
+      // feeds the totals AND the output
+      .transform(Materialize(_, "TextAnalysis.sqrtTemperatureAllocation: perSource"))
     val totals = perSource.agg(
       sum(col("n_tokens")).cast("bigint").as("__tot"),
       sum(col("temp_weight")).cast("bigint").as("__wsum"))
@@ -4469,7 +4494,8 @@ object TextAnalysis {
     val classes = docs
       .agg(sum(labelExpr.cast("long")).cast("bigint").as("__n1"),
         sum((!labelExpr).cast("long")).cast("bigint").as("__n0"))
-      .localCheckpoint(true) // feeds every weight row AND the bias
+      // feeds every weight row AND the bias
+      .transform(Materialize(_, "TextAnalysis.nbTrain: classes"))
     def lnMicro(num: Column, den: Column): Column =
       round(log(num.cast("double") / den.cast("double")) * lit(1000000.0))
         .cast("long")
@@ -4509,7 +4535,7 @@ object TextAnalysis {
     * (≤ 2^18 + 1 rows by construction). */
   def nbScores(docs: DataFrame, weights: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = weights.localCheckpoint(true) // snapshot-read or derived
+    val w = Materialize(weights, "TextAnalysis.nbScores: weights") // snapshot-read or derived
     val bias = w.filter(col("feature") === -1L)
       .select(col("weight_micro").as("__bias"))
     val sums = docs.select(col(idCol).as("__id"),

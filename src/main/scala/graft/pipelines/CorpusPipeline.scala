@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** End-to-end training-corpus cleaning — the composition the extension
   * operators exist for (SURVEY north star: the LLM-data-pipeline
@@ -117,7 +117,8 @@ object CorpusPipeline {
   def cleanAndBalance(docs: DataFrame, strataCol: String,
       cfg: Config = Config()): (DataFrame, Report) = {
     val (cleaned, report) = clean(docs, cfg)
-    val cleanedM = cleaned.localCheckpoint(true) // reads the still-warm cache
+    // reads the still-warm cache
+    val cleanedM = Materialize(cleaned, "CorpusPipeline.cleanAndBalance: cleaned")
     cleaned.unpersist()
     val balanced =
       graft.operators.TextAnalysis.mixtureUpsample(cleanedM, cfg.idCol, strataCol)

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
 import graft.sources.{GtfsCsv, Http, ZipFunctions}
 import graft.transform.{CatalogTransforms, StopsTransforms}
 
@@ -51,7 +52,8 @@ object CatalogPipeline {
       // Eager materialization: the per-agency revision protocol is a
       // side-effecting stage, so it must run EXACTLY once — inside this
       // call — not once per downstream action on the returned frame.
-      val changelog = doRun(spark, ep, makePublic, parallelism).localCheckpoint(true)
+      val changelog = Materialize(doRun(spark, ep, makePublic, parallelism),
+        "CatalogPipeline.run: changelog")
       val summary = changelog.collect()
         .map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(" ")
       Http.appendLogRow(ep.logUrl, java.time.LocalDate.now().toString,
@@ -237,7 +239,7 @@ object StopsPipeline {
     // (thousands of rows, MB-sized zips), so holding them on the
     // executors is cheap relative to refetching.
     val fetched = Http.fetchUrls(feeds.filter(col("url_ok")).drop("url_ok"), "url")
-      .localCheckpoint(true)
+      .transform(Materialize(_, "StopsPipeline.run: fetch"))
     // control-plane collects: one row per feed, never per stop
     val deadUrlFeeds = feeds.filter(!col("url_ok"))
       .select("feed_id").as[String].collect().sorted

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Joins, Layout, Multimodal, Profile, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Joins, Layout, Materialize, Multimodal, Profile, Similarity,
+  TextAnalysis}
 import graft.transform.CatalogTransforms
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,9 +24,9 @@ import org.apache.spark.sql.functions._
 object ExtensionQueries {
 
   /** The documents table, spread over the cores when it arrives in
-    * fewer splits than that ([[Dedup.ensureParallelism]]). */
+    * fewer splits than that ([[Materialize.ensureParallelism]]). */
   private def docs(s: SparkSession, dir: String) =
-    Dedup.ensureParallelism(Tables.load(s, dir, "documents"))
+    Materialize.ensureParallelism(Tables.load(s, dir, "documents"))
   // embeddings stay UNSPREAD (measured, r19): the table is vector-
   // count-scale (2k rows at sf0.1) and its consumers are multi-stage/
   // iterative (power iteration, kNN+CC, PQ) — spreading it to 32
@@ -446,7 +447,7 @@ object ExtensionQueries {
         explode(graft.functions.TextFunctions.words(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "ExtensionQueries.x32: tf"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     tf.join(dfreq, "token")
       .join(broadcast(nDocs))
@@ -553,7 +554,8 @@ object ExtensionQueries {
     val sigs = d
       .select(col("doc_id"), md5_ngram_minhash(words(col("text")), 3, 16).as("sig"))
       .filter(col("sig").isNotNull)
-      .localCheckpoint(true) // feeds both sides of the pair join
+      // feeds both sides of the pair join
+      .transform(Materialize(_, "ExtensionQueries.x42: sigs"))
     pairs
       .join(sigs.toDF("doc_a", "sig_a"), "doc_a")
       .join(sigs.toDF("doc_b", "sig_b"), "doc_b")
@@ -855,7 +857,7 @@ object ExtensionQueries {
     // would otherwise each re-scan and re-distinct the pre-cut events
     val seen = ev.filter(to_date(col("ts")) < cut)
       .select(col("user_id")).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_, "ExtensionQueries.bloomPrescreen: seen"))
     // SIZE FROM THE DATA, not a constant: a fixed numBits would blow
     // past its fp bound as the seen-set grows with sf (at ~50k keys a
     // 65536-bit filter saturates to fp≈1 and the pinned fp_ok flag
@@ -1247,18 +1249,20 @@ object ExtensionQueries {
       count_distinct(col("source")).as("n_sources"),
       count_distinct(col("lang")).as("n_langs"),
       sum(col("n_chars")).cast("bigint").as("total_chars"))
-    val toks = d.select(words(col("text")).as("__w")).localCheckpoint(true)
+    val toks = Materialize(d.select(words(col("text")).as("__w")), "ExtensionQueries.x91: toks")
     val tok = toks.agg(sum(size(col("__w"))).cast("bigint").as("total_tokens"))
     val dw = toks.select(explode(col("__w")).as("word"))
       .agg(count_distinct(col("word")).as("distinct_words"))
     val pairs = Dedup.ngramJaccardNearDup(d, "doc_id", "text",
-      ngram = 3, prefixK = 8, minJaccard = 0.2).localCheckpoint(true)
+      ngram = 3, prefixK = 8, minJaccard = 0.2)
+      .transform(Materialize(_, "ExtensionQueries.x91: pairs"))
     val dup = pairs.agg(count(lit(1)).as("dup_pairs"))
     val dd = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("x"))
       .agg(count_distinct(col("x")).as("dup_docs"))
     val clusters = Dedup.canonicalizeClusters(
       Dedup.connectedComponents(pairs), d)
-    val sc = TextAnalysis.curationScorecard(d, clusters).localCheckpoint(true)
+    val sc = Materialize(TextAnalysis.curationScorecard(d, clusters),
+      "ExtensionQueries.x91: scorecard")
     val kept = sc.filter(col("verdict") === "kept")
       .agg(count(lit(1)).as("kept_docs"))
     val novm = sc.filter(col("novelty").isNotNull)
@@ -3127,7 +3131,7 @@ object ExtensionQueries {
     // re-scored the whole corpus per threshold.
     val pairs = Dedup.ngramJaccardNearDup(
       d, "doc_id", "text", ngram = 3, prefixK = 8, minJaccard = 0.2)
-      .localCheckpoint(true)
+      .transform(Materialize(_, "ExtensionQueries.x265: pairs"))
     def assign(p: DataFrame): DataFrame =
       d.select(col("doc_id")).join(
         Dedup.connectedComponents(p),
@@ -3351,11 +3355,11 @@ object ExtensionQueries {
         .words(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_, "ExtensionQueries.x276: word counts"))
     val srcWords = d.select(col("source"),
         explode(graft.functions.TextFunctions.words(col("text"))).as("__w"))
       .filter(length(col("__w")) >= 2)
-      .localCheckpoint(true)
+      .transform(Materialize(_, "ExtensionQueries.x276: srcWords"))
     // r19 (VERDICT r18 item 6, step 2): BOTH version encodes come out
     // of one kernel projection over the shared distinct-word frame
     // (bpeEncodeDualFromWordCounts), so the corpus (source, word)

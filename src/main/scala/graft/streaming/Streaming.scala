@@ -152,7 +152,7 @@ object Streaming {
         require(!batch.columns.contains(SketchColumn),
           s"ingestDedupSink reserves column $SketchColumn for the persisted sketch")
         // the batch fans out (pair mining + two anti-joins) — pin it
-        val b = batch.localCheckpoint(true)
+        val b = graft.operators.Materialize(batch, "Streaming.ingestDedupSink: batch")
         // sketched ONCE per batch; shared by the within-batch pair
         // mining, the cross-corpus screen, and the persisted column
         val bSketch = graft.operators.Dedup.ngramSketch(b, idCol, textCol, ngram)

@@ -2,30 +2,27 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: dump `.explain("formatted")` for a set of declared queries
-  * to files — the before/after plan evidence the optimization rounds
+/** Dump `.explain("formatted")` for a set of declared queries to
+  * files — the before/after plan evidence the optimization rounds
   * commit under plans/rNN/. Usage:
   * `sbt "runMain graft.tools.ExplainDump <outDir> <suffix> <regex-or-substring>"`
   * (e.g. `runMain graft.tools.ExplainDump plans/r18 before 'x209.*|x212.*'`).
   * SPARK_GRAFT_SF_DIR picks the data dir (default sf0.1 — plan shapes,
   * not timings, so a busy machine is fine).
   *
-  * r19 (VERDICT r18 item 7): with `SPARK_GRAFT_DUMP_CONSTRUCTION=1`
-  * the dump is SELF-CONTAINED for checkpoint-terminated queries —
-  * a QueryExecutionListener captures the plan of every action that
-  * runs while the query is being BUILT (each eager localCheckpoint,
-  * head, collect fires one), and they are appended to the same file
-  * under `== Construction plan N ==` headers. The final plan of such
-  * queries is just a checkpoint scan; the construction section is
-  * where the actual shape (exchanges, joins, kernels) lives. */
+  * The dump is self-contained for checkpoint-terminated queries: a
+  * QueryExecutionListener captures the plan of every action that runs
+  * while the query is being BUILT (each eager checkpoint, head and
+  * collect fires one), and they are appended to the same file under
+  * `== Construction plan N ==` headers. The final plan of such a query
+  * is just a checkpoint scan; the construction section is where the
+  * actual shape (exchanges, joins, kernels) lives. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r18")
     val suffix = if (args.length > 1) args(1) else "before"
     val only = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val withConstruction =
-      sys.env.get("SPARK_GRAFT_DUMP_CONSTRUCTION").contains("1")
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
@@ -34,19 +31,18 @@ object ExplainDump {
     spark.sparkContext.setLogLevel("ERROR")
     val captured =
       scala.collection.mutable.Buffer.empty[(String, String)]
-    if (withConstruction)
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = captured.synchronized {
-            captured += ((funcName, qe.explainString(
-              org.apache.spark.sql.execution.FormattedMode)))
-          }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
+    spark.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = captured.synchronized {
+          captured += ((funcName, qe.explainString(
+            org.apache.spark.sql.execution.FormattedMode)))
+        }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      })
     def matches(n: String): Boolean = only.forall(o =>
       scala.util.Try(n.matches(o)).getOrElse(false) || n.contains(o))
     val dir = java.nio.file.Paths.get(outDir)
@@ -60,11 +56,11 @@ object ExplainDump {
           // the listener fires asynchronously (ExecutionListenerBus);
           // give it a beat to drain before reading — a dev tool, so a
           // bounded sleep beats reaching into private[spark] APIs
-          if (withConstruction) Thread.sleep(500)
+          Thread.sleep(500)
           val sb = new StringBuilder
           sb ++= df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          if (withConstruction) captured.synchronized {
+          captured.synchronized {
             captured.zipWithIndex.foreach { case ((fnName, plan), idx) =>
               sb ++= s"\n\n== Construction plan ${idx + 1} ($fnName) ==\n"
               sb ++= plan

@@ -25,13 +25,14 @@ package object graftbridge {
     *
     * `Dataset.unpersist` only uncaches CacheManager entries; a local
     * checkpoint's persistence lives at the RDD layer (the `LogicalRDD`
-    * the checkpointed plan wraps), which the public API cannot reach —
+    * the checkpointed plan is), which the public API cannot reach —
     * without this, blocks are freed only when the ContextCleaner
     * eventually GCs the dropped RDD, which is too lazy for iterative
-    * algorithms holding one snapshot per round. No-op for frames that
-    * are not checkpoint-backed. */
+    * algorithms holding one snapshot per round. No-op unless the
+    * frame's analyzed plan IS the checkpoint: a frame derived from one
+    * only reads it, and must not free what other frames still read. */
   def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+    df.queryExecution.analyzed match {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }

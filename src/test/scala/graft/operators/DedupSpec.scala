@@ -137,22 +137,6 @@ class DedupSpec extends SparkSpec {
     assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
-  test("ensureParallelism is a no-op on an input with defaultParallelism splits " +
-    "and spreads a single-split one") {
-    val want = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft-splits").toString
-    try {
-      spark.range(0, 400, 1, want).toDF("doc_id").write.mode("overwrite").parquet(dir)
-      val wide = spark.read.parquet(dir)
-      assert(wide.rdd.getNumPartitions >= want)
-      assert(Dedup.ensureParallelism(wide) eq wide)
-      val narrow = wide.coalesce(1)
-      val spread = Dedup.ensureParallelism(narrow)
-      assert(spread.rdd.getNumPartitions == want)
-      assert(spread.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning"))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("ngram jaccard verifies with exact similarity") {
     val pairs = Dedup.ngramJaccardNearDup(corpus, "doc_id", "text",
         ngram = 3, prefixK = 4, minJaccard = 0.3)

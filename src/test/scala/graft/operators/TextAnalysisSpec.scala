@@ -488,8 +488,7 @@ class TextAnalysisSpec extends SparkSpec {
       ("zz", "zz")) // last one matches nothing
     pairs.foreach { case (l, r) =>
       val best = Seq((l, r)).toDF("l", "r")
-      val viaKernel = TextAnalysis.applyBestPair(vocab, best,
-          checkpoint = false)
+      val viaKernel = TextAnalysis.applyBestPair(vocab, best)
         .as[(String, Long, Seq[String])].collect().sortBy(_._1)
       val viaWindows = TextAnalysis.applyBestPairViaWindows(vocab, best)
         .as[(String, Long, Seq[String])].collect().sortBy(_._1)
@@ -497,8 +496,7 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // empty best frame (exhausted round): pass-through in both forms
     val empty = Seq.empty[(String, String)].toDF("l", "r")
-    val viaKernel = TextAnalysis.applyBestPair(vocab, empty,
-        checkpoint = false)
+    val viaKernel = TextAnalysis.applyBestPair(vocab, empty)
       .as[(String, Long, Seq[String])].collect().sortBy(_._1)
     assert(viaKernel.toSeq == vocabRows.sortBy(_._1))
   }

@@ -1063,8 +1063,7 @@ class PlanShapeSpec extends SparkSpec {
     val vocab = Seq(("ab", 1L, Seq("a", "b"))).toDF("wid", "c", "syms")
     val slice = Seq(("a", "b")).toDF("l", "r")
     val plan = physical(
-      graft.operators.TextAnalysis.applyBestPair(vocab, slice,
-        checkpoint = false))
+      graft.operators.TextAnalysis.applyBestPair(vocab, slice))
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CollectLimit"), plan)
