@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{ExtensionQueries, OracleSql, ReferenceQueries, RelationalQueries}
+import graft.queries.{ExtensionQueries, ReferenceQueries, RelationalQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator surfaces here as a named query over the
-  * `/root/testdata/sf*` fixture tables; where the semantics are
-  * SQL-expressible the matching DuckDB oracle lives in [[OracleSql]].
+  * fixture tables, declared once together with its DuckDB oracle in one
+  * of the three query families.
   */
 object SparkEntry {
 
@@ -16,9 +16,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q04(spark, "/root/testdata/sf0.001")
 
+  private def declared = RelationalQueries.all ++ ReferenceQueries.all ++ ExtensionQueries.all
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.all ++ ExtensionQueries.all ++ ReferenceQueries.all).toMap
+    declared.map(q => q.name -> q).toMap
 
   /** Bench-only timing probes (scale-path variants of declared queries,
     * e.g. x20 without its exact calibration siblings). Reported by Bench
@@ -26,13 +28,10 @@ object SparkEntry {
   def benchProbes: Map[String, (SparkSession, String) => DataFrame] =
     ExtensionQueries.benchProbes.toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    * dynamicOracles entries embed Spark-computed constants (x22's
-    * trained centroids) and exist only after the owning query ran in
-    * this JVM — which is Verify's call order. */
+  /** For each key in queries, equivalent SQL runnable by DuckDB on the
+    * same parquet tables. x22, x270 and x277 embed constants their own
+    * run trains (the IVF centroids), so their entries exist only after
+    * those queries ran in this JVM — which is Verify's call order. */
   def oracleSql: Map[String, String] =
-    OracleSql.all ++ ExtensionQueries.oracles ++
-      ExtensionQueries.snapshotServedOracles ++
-      ExtensionQueries.dynamicOracles ++ ReferenceQueries.oracles
+    declared.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

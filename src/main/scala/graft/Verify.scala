@@ -108,8 +108,7 @@ object Verify {
     // query's planning/IO with another's compute. Pool size caps the
     // concurrent memory footprint (heaviest queries hold checkpoint
     // blocks); 6 measured best on local[16] at sf0.01.
-    val poolSize = sys.env.getOrElse("SPARK_GRAFT_VERIFY_POOL", "6").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     import scala.jdk.CollectionConverters._
     val tasks = selected.toSeq.map { case (name, fn) =>
       new java.util.concurrent.Callable[Unit] {

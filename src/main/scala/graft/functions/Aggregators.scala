@@ -121,14 +121,10 @@ object RunCountsAgg extends Aggregator[String, RunCounts, RunCounts] {
   * that materialized n·dim² intermediate rows (VERDICT r11 item 2).
   *
   * Quantization matches `CAST(round(cast(v AS double) * 1000.0) AS
-  * long)` under non-ANSI semantics bit-for-bit: BigDecimal.valueOf +
-  * HALF_UP is the Round expression's double path for finite values,
-  * and non-finite components take the non-ANSI double→long cast's
-  * total behavior (NaN→0, ±Inf saturates to Long.Min/MaxValue — the
-  * same guard OodMonitorProcessor.quantize uses; BigDecimal.valueOf
-  * alone would throw NumberFormatException and abort the whole
-  * query on one Inf component). Hash-identical to the exploded form
-  * (unit-pinned on .5-boundary adversaries). Only the
+  * long)` under non-ANSI semantics bit-for-bit
+  * ([[VectorKernels.roundHalfUp]], total on non-finite components, so
+  * one Inf component cannot abort the whole query). Hash-identical to
+  * the exploded form (unit-pinned on .5-boundary adversaries). Only the
   * upper triangle accumulates (P is symmetric); finish() mirrors.
   * Overflow envelope: |q| ≤ ~2e3 milli for unit-scale embeddings, so
   * P_ij grows ~4e6·n — exact in Long to n ≈ 2e12 rows, the same
@@ -136,22 +132,12 @@ object RunCountsAgg extends Aggregator[String, RunCounts, RunCounts] {
 class ScatterMoments(dim: Int) extends Aggregator[Array[Float], Array[Long], Array[Long]] {
   require(dim >= 1, s"ScatterMoments: dim must be positive, got $dim")
 
-  // total on any float — see the class doc's non-finite contract
-  private def quantize(v: Float): Long = {
-    val d = v.toDouble * 1000.0
-    if (d.isNaN) 0L
-    else if (d >= Long.MaxValue.toDouble) Long.MaxValue
-    else if (d <= Long.MinValue.toDouble) Long.MinValue
-    else java.math.BigDecimal.valueOf(d)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-  }
-
   override def zero: Array[Long] = new Array[Long](1 + dim + dim * dim)
 
   override def reduce(buf: Array[Long], vec: Array[Float]): Array[Long] = {
     val q = new Array[Long](dim)
     var i = 0
-    while (i < dim) { q(i) = quantize(vec(i)); i += 1 }
+    while (i < dim) { q(i) = VectorKernels.roundHalfUp(vec(i), 1000.0); i += 1 }
     buf(0) += 1L
     i = 0
     while (i < dim) {

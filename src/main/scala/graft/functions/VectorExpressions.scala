@@ -118,6 +118,22 @@ case class DotProduct(left: Expression, right: Expression)
   * call it as a static forwarder inside whole-stage spans. */
 object VectorKernels {
 
+  /** round(v · scale) HALF_UP as a Long, total on any float: NaN → 0,
+    * ±Inf and overflow saturate to Long.Min/MaxValue (the non-ANSI
+    * double→long cast's behavior; BigDecimal.valueOf alone would throw
+    * on a non-finite value), and finite values take BigDecimal.valueOf +
+    * HALF_UP — the Round expression's double path. So the result
+    * equals `CAST(round(CAST(v AS DOUBLE) * scale) AS BIGINT)` under
+    * non-ANSI semantics bit-for-bit. */
+  private[graft] def roundHalfUp(v: Float, scale: Double): Long = {
+    val d = v.toDouble * scale
+    if (d.isNaN) 0L
+    else if (d >= Long.MaxValue.toDouble) Long.MaxValue
+    else if (d <= Long.MinValue.toDouble) Long.MinValue
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+  }
+
   /** Symmetric per-vector int8 quantization — the standard storage
     * format for embeddings at scale (4× smaller than float32, SIMD-
     * friendly distance kernels): q_i = floor(x_i · 127/max|x| + 0.5)
@@ -150,12 +166,9 @@ object VectorKernels {
   }
 
   /** Micro-quantization of a float vector: q_i = CAST(round(CAST(v AS
-    * DOUBLE) · 1e6, 0) AS BIGINT), bit-for-bit — BigDecimal.valueOf +
-    * HALF_UP is the Round expression's double path for finite values,
-    * and non-finite components take the non-ANSI double→long cast's
-    * total behavior (NaN→0, ±Inf saturates), the exact
+    * DOUBLE) · 1e6, 0) AS BIGINT), bit-for-bit ([[roundHalfUp]], the
     * [[graft.functions.ScatterMoments]] quantize contract at micro
-    * scale. Null ELEMENTS stay null (the SQL tree propagated them into
+    * scale). Null ELEMENTS stay null (the SQL tree propagated them into
     * null products that the covariance sums skip). r18: evaluating the
     * SQL round per (i, j) CELL of the covariance fan-out cost one
     * BigDecimal allocation per cell (16M per 2 000×64 corpus — ~6 s of
@@ -165,15 +178,7 @@ object VectorKernels {
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
-      if (!x.isNullAt(i)) {
-        val d = x.getFloat(i).toDouble * 1000000.0
-        out(i) =
-          if (d.isNaN) 0L
-          else if (d >= Long.MaxValue.toDouble) Long.MaxValue
-          else if (d <= Long.MinValue.toDouble) Long.MinValue
-          else java.math.BigDecimal.valueOf(d)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-      }
+      if (!x.isNullAt(i)) out(i) = roundHalfUp(x.getFloat(i), 1000000.0)
       i += 1
     }
     new GenericArrayData(out)

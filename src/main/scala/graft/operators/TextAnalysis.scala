@@ -183,13 +183,6 @@ object TextAnalysis {
     docs.select(col(idCol).as("doc_id"), words(col(textCol)).as("__w"))
   }
 
-  /** The portable hash bucket, hoisted to
-    * [[graft.functions.TextFunctions.md5Bucket60]] so every consumer
-    * (splits, samples, thresholds, Profile's sampling gates) shares
-    * ONE rendering of the oracle contract. */
-  private def md5Bucket60(key: Column): Column =
-    graft.functions.TextFunctions.md5Bucket60(key)
-
   /** Discrete-percentile bounds of `lenCol` as a 1-row (__lo, __hi)
     * frame — the x39-proven engine-exact threshold construction,
     * shared by [[lengthTrim]] and [[filterAttribution]]. */

@@ -775,19 +775,6 @@ object Streaming {
       st = getHandle.getValueState[OodStats]("ood",
         org.apache.spark.sql.Encoders.product[OodStats], TTLConfig.NONE)
 
-    // total on any float: a monitor must never die on the corrupt
-    // inputs it exists to flag. NaN quantizes to 0 and ±Inf/overflow
-    // saturates (the non-ANSI double→long cast behavior); the parity
-    // pin covers finite components, where this is exactly the batch
-    // audit's HALF_UP quantization
-    private def quantize(v: Float): Long = {
-      val d = v.toDouble * 1000.0
-      if (d.isNaN) 0L
-      else if (d >= Long.MaxValue.toDouble) Long.MaxValue
-      else if (d <= Long.MinValue.toDouble) Long.MinValue
-      else BigDecimal(d).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    }
-
     override def handleInputRows(key: Int, rows: Iterator[OodEvent],
         tv: TimerValues): Iterator[OodBatchStat] = {
       val batch = rows.filter(_.embedding.length == dim).toArray
@@ -797,7 +784,11 @@ object Streaming {
       val s1 = prev.s1.toArray
       val s2 = prev.s2.toArray
       var n = prev.n
-      val qs = batch.map(_.embedding.map(quantize))
+      // total on any float: a monitor must never die on the corrupt
+      // inputs it exists to flag; the parity pin covers finite
+      // components, where this is exactly the batch audit's HALF_UP
+      // quantization
+      val qs = batch.map(_.embedding.map(graft.functions.VectorKernels.roundHalfUp(_, 1000.0)))
       qs.foreach { q =>
         var d = 0
         while (d < dim) { s1(d) += q(d); s2(d) += q(d) * q(d); d += 1 }

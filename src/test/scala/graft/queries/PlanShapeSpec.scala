@@ -61,8 +61,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x189/x190/x192/x194: recall/mining rankings ride the bounded-heap " +
       "aggregator (zero WindowExec) with the query side broadcast") {
-    Seq(ExtensionQueries.x189 _, ExtensionQueries.x190 _,
-        ExtensionQueries.x192 _, ExtensionQueries.x194 _).foreach { q =>
+    Seq(ExtensionQueries.x189, ExtensionQueries.x190,
+        ExtensionQueries.x192, ExtensionQueries.x194).foreach { q =>
       val plan = physical(q(spark, sf001))
       // long corpus ids take the TopKScored path: a WindowExec here
       // would mean the whole scored corpus shuffles into one partition
@@ -247,7 +247,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q47-q49: generate/array/regex queries stay narrow — no join, no agg shuffle") {
-    Seq(RelationalQueries.q47 _, RelationalQueries.q48 _, RelationalQueries.q49 _)
+    Seq(RelationalQueries.q47, RelationalQueries.q48, RelationalQueries.q49)
       .foreach { q =>
         val plan = physical(q(spark, sf001))
         assert(!plan.contains("Join"), plan)
@@ -718,8 +718,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x108-x111: the compact-frame analytics stay window-free with " +
     "partial+final aggregation") {
-    for (q <- Seq(ExtensionQueries.x108 _, ExtensionQueries.x109 _,
-        ExtensionQueries.x110 _, ExtensionQueries.x111 _)) {
+    for (q <- Seq(ExtensionQueries.x108, ExtensionQueries.x109,
+        ExtensionQueries.x110, ExtensionQueries.x111)) {
       val plan = physical(q(spark, sf001))
       // each collapses the data volume in ONE partial+final hash
       // aggregation; everything after runs on day/week/class-
@@ -771,8 +771,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x114/x116/x117: aggregation-first analytics — partial+final combine, " +
     "tiny frames broadcast, no cartesian") {
-    for (q <- Seq(ExtensionQueries.x114 _, ExtensionQueries.x116 _,
-        ExtensionQueries.x117 _)) {
+    for (q <- Seq(ExtensionQueries.x114, ExtensionQueries.x116,
+        ExtensionQueries.x117)) {
       val plan = physical(q(spark, sf001))
       assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
       assert(!plan.contains("CartesianProduct"), plan)
@@ -783,7 +783,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x115/x121: the group/canonical relation joins back by broadcast — " +
     "the corpus side never shuffles for it") {
-    for (q <- Seq(ExtensionQueries.x115 _, ExtensionQueries.x121 _)) {
+    for (q <- Seq(ExtensionQueries.x115, ExtensionQueries.x121)) {
       val plan = physical(q(spark, sf001))
       assert(plan.contains("BroadcastHashJoin"), plan)
       assert(!plan.contains("CartesianProduct"), plan)
@@ -1944,14 +1944,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x233-x248: no tranche-39-44 query compiles to a CartesianProduct") {
-    Seq(ExtensionQueries.x233 _, ExtensionQueries.x234 _,
-        ExtensionQueries.x235 _, ExtensionQueries.x236 _,
-        ExtensionQueries.x237 _, ExtensionQueries.x238 _,
-        ExtensionQueries.x239 _, ExtensionQueries.x240 _,
-        ExtensionQueries.x241 _, ExtensionQueries.x242 _,
-        ExtensionQueries.x243 _, ExtensionQueries.x244 _,
-        ExtensionQueries.x245 _, ExtensionQueries.x246 _,
-        ExtensionQueries.x247 _, ExtensionQueries.x248 _)
+    Seq(ExtensionQueries.x233, ExtensionQueries.x234,
+        ExtensionQueries.x235, ExtensionQueries.x236,
+        ExtensionQueries.x237, ExtensionQueries.x238,
+        ExtensionQueries.x239, ExtensionQueries.x240,
+        ExtensionQueries.x241, ExtensionQueries.x242,
+        ExtensionQueries.x243, ExtensionQueries.x244,
+        ExtensionQueries.x245, ExtensionQueries.x246,
+        ExtensionQueries.x247, ExtensionQueries.x248)
       .foreach { q =>
         val plan = physical(q(spark, sf001))
         assert(!plan.contains("CartesianProduct"), plan.take(4000))
@@ -1976,10 +1976,10 @@ class PlanShapeSpec extends SparkSpec {
   test("x249-x252: no new-tranche query compiles to a CartesianProduct; " +
       "x251 is one narrow projection (no join, no hash exchange); x250's " +
       "stitch window partitions by (pair, diag)") {
-    Seq(ExtensionQueries.x249 _, ExtensionQueries.x250 _,
-        ExtensionQueries.x251 _, ExtensionQueries.x252 _,
-        ExtensionQueries.x253 _, ExtensionQueries.x254 _,
-        ExtensionQueries.x255 _, ExtensionQueries.x256 _).foreach { q =>
+    Seq(ExtensionQueries.x249, ExtensionQueries.x250,
+        ExtensionQueries.x251, ExtensionQueries.x252,
+        ExtensionQueries.x253, ExtensionQueries.x254,
+        ExtensionQueries.x255, ExtensionQueries.x256).foreach { q =>
       val plan = physical(q(spark, sf001))
       assert(!plan.contains("CartesianProduct"), plan.take(4000))
     }
@@ -2253,7 +2253,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x275/x281: snapshot-served sketch probes keep the equi-join on " +
       "the prefix hash — no cartesian, no corpus-global window; the " +
       "served index arrives as a parquet scan, not a re-hash") {
-    Seq(ExtensionQueries.x275 _, ExtensionQueries.x281 _).foreach { q =>
+    Seq(ExtensionQueries.x275, ExtensionQueries.x281).foreach { q =>
       val df = q(spark, sf001)
       val plan = physical(df)
       assert(!plan.contains("CartesianProduct"), plan.take(3000))

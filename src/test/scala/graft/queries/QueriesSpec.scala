@@ -19,9 +19,34 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys are a subset of query keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("340 queries, no name shadowed across the three families") {
+    val declared = Seq(RelationalQueries, ReferenceQueries, ExtensionQueries).map(_.all.size).sum
+    val distinct = SparkEntry.queries.size
+    assert(distinct == 340)
+    assert(distinct == declared, "a name is declared more than once")
+  }
+
+  test("every query carries an oracle once x22 and x277 have run") {
+    ExtensionQueries.x22(spark, sf001).count()
+    ExtensionQueries.x277(spark, sf001).count()
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    val withoutOracle = queries -- oracles
+    val withoutQuery = oracles -- queries
+    assert(withoutOracle.isEmpty)
+    assert(withoutQuery.isEmpty)
+  }
+
+  test("each query-name literal is written once in the query sources") {
+    val root = new java.io.File("src/main/scala/graft/queries")
+    assert(root.isDirectory, root.getAbsolutePath)
+    val literal = "\"[qrx][0-9]+_[A-Za-z0-9_]*\"".r
+    val counts = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .flatMap(f => literal.findAllIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+      .groupBy(identity).map { case (l, ls) => l -> ls.size }
+    assert(SparkEntry.queries.keySet.forall(n => counts.contains("\"" + n + "\"")))
+    val repeated = counts.filter(_._2 > 1)
+    assert(repeated.isEmpty, s"written more than once: $repeated")
   }
 
   test("pinned row counts at sf0.001") {

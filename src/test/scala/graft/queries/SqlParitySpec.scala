@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec, Tables}
+import graft.{SparkSpec, Tables}
 
 /** Engine-internal double-entry check: the declared relational queries
   * (SURVEY §2.9) are portable SQL that runs verbatim on Spark too, so
@@ -10,14 +10,32 @@ import graft.{SparkEntry, SparkSpec, Tables}
   * (Extension oracles are DuckDB-dialect and excluded.) */
 class SqlParitySpec extends SparkSpec {
 
+  /** Oracles written in DuckDB-only dialect (list lambdas / unnest /
+    * list(DISTINCT)) — correct for the DuckDB gate but not runnable
+    * verbatim on Spark, so the double-entry check skips them (their
+    * Spark-side semantics are covered by the DuckDB oracle itself plus
+    * the per-operator unit specs). Every other relational oracle must
+    * stay engine-portable. */
+  private val duckOnlyDialect: Set[String] = Set("q29_token_explode", "q32_string_agg",
+    // 3-arg date_diff / date+int / strpos are DuckDB spellings
+    "q36_date_functions", "q37_string_functions", "q39_range_frame",
+    // DATE + int / arg_min / bool_or are DuckDB spellings
+    "q40_date_spine_gapfill", "q42_map_functions",
+    // list_* lambda spellings are DuckDB-only (Spark: transform/filter/
+    // aggregate — exercised natively by RelationalQueries.q45)
+    "q45_array_lambdas",
+    // index lambda / {} struct / list_* / l[i] indexing are DuckDB
+    // spellings (Spark: posexplode / array_* / get — exercised
+    // natively by RelationalQueries.q47-q49)
+    "q47_posexplode", "q48_array_setops", "q49_regexp_extract_all")
+
   test("DataFrame implementations match spark.sql for the portable q-set") {
     Tables.registerAll(spark, sf001)
-    val failures = OracleSql.all.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => OracleSql.duckOnlyDialect(name) }
-      .flatMap { case (name, sql) =>
-      val viaApi = SparkEntry.queries(name)(spark, sf001).collect()
+    val failures = RelationalQueries.all.filterNot(q => duckOnlyDialect(q.name)).flatMap { q =>
+      val name = q.name
+      val viaApi = q(spark, sf001).collect()
         .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString))
-      val viaSql = spark.sql(sql).collect()
+      val viaSql = spark.sql(q.oracle.get).collect()
         .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString))
       if (viaApi.toSeq == viaSql.toSeq) None
       else Some(s"$name: api ${viaApi.length} rows vs sql ${viaSql.length}; " +
