@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. The headline "value" is the total for the
   * declared §2.9 relational set (q01–q26) — the workload BASELINE.md
@@ -265,14 +263,7 @@ object Bench {
           scala.util.Try(v.toDouble).toOption.map(k -> _) },
           flatMapOf(txt, "plans"))
       }.toOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet-footer caches outside any query's
     // timing (the first timed query otherwise absorbs ~4 s of session
@@ -306,14 +297,8 @@ object Bench {
     // a noisy median is VISIBLY noisy.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    // same ergonomics as Verify's knob: full-match regex OR plain
-    // substring (a non-regex value degrades to the substring branch
-    // instead of throwing) — a scoped scaling run needs to select a
-    // sparse set like x11[2-9].*|x12[01].* in one JVM
-    def matches(n: String): Boolean = only.forall(o =>
-      scala.util.Try(n.matches(o)).getOrElse(false) || n.contains(o))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => matches(n) }
+      .filter { case (n, _) => SparkEntry.selects(only, n) }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2)
@@ -422,7 +407,7 @@ object Bench {
     // has its attributable scale cost right next to it. Excluded from
     // the headline and the compact line.
     val probes = SparkEntry.benchProbes.toSeq.sortBy(_._1)
-      .filter { case (n, _) => matches(n) }
+      .filter { case (n, _) => SparkEntry.selects(only, n) }
       .map { case (name, fn) =>
         var times = Vector.empty[Double]
         for (_ <- 1 to repeat) {

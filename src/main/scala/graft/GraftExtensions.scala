@@ -21,7 +21,8 @@ import graft.sources.ZipEntries
   *  - builder time: `.withExtensions(new GraftExtensions)` — survives
   *    into every derived session;
   *  - post hoc: `GraftExtensions.register(spark)` for an existing
-  *    session (what Verify/Bench use).
+  *    session (what GraftExtensionsSpec uses; Verify and Bench build
+  *    their queries through the Column API and register neither).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

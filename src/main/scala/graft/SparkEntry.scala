@@ -34,4 +34,26 @@ object SparkEntry {
     * those queries ran in this JVM — which is Verify's call order. */
   def oracleSql: Map[String, String] =
     declared.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The one local session the tools (Verify, Bench, ExplainDump) run
+    * on: `local[cpus]` with one shuffle partition per core, UTC session
+    * time, adaptive execution on and no UI — so a plan one tool prints
+    * is the plan another times. */
+  private[graft] def localSession(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** The tools' query selector (`SPARK_GRAFT_ONLY`, ExplainDump's third
+    * argument): `name` is selected when `only` is unset, full-matches it
+    * as a regex, or contains it as a substring — so a sparse set like
+    * `x11[2-9].*|x12[01].*` selects in one JVM, and a value that is not
+    * valid regex (e.g. "x26(") degrades to the substring branch instead
+    * of throwing PatternSyntaxException. */
+  private[graft] def selects(only: Option[String], name: String): Boolean =
+    only.forall(o => scala.util.Try(name.matches(o)).getOrElse(false) || name.contains(o))
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.sources.Http.jsonStr
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,41 +21,22 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev knob (unset in driver runs): SPARK_GRAFT_ONLY=<regex|substr>
     // dumps only matching queries — iteration on one query shouldn't
-    // re-dump all of them. Accepts a full-match regex OR a plain
-    // substring (same ergonomics as Bench), and refuses an empty
-    // selection instead of silently dumping nothing.
+    // re-dump all of them. Same selector as Bench, and an empty
+    // selection is refused instead of silently dumping nothing.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    // Try: a value that is not valid regex (e.g. "x26(") must degrade to
-    // the substring branch, not throw PatternSyntaxException
     val selected = SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(o =>
-          scala.util.Try(name.matches(o)).getOrElse(false) || name.contains(o)) }
+      .filter { case (name, _) => SparkEntry.selects(only, name) }
     require(selected.nonEmpty,
       s"SPARK_GRAFT_ONLY=${only.getOrElse("")} matches no queries")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape (jsonStr): backslash, quote, and ALL control
+    // chars (<0x20) — a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness.
     // oracle set FIRST — a partial run must still be comparable — and
     // AGAIN after the dumps: dynamic oracles (x22 embeds its trained
     // centroids) only exist once their query ran in this JVM, so the
@@ -63,7 +44,7 @@ object Verify {
     // cannot contain yet
     def writeOracles(): Unit = {
       val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
     writeOracles()
@@ -85,7 +66,7 @@ object Verify {
     def flushErrors(): Unit = synchronized {
       import scala.jdk.CollectionConverters._
       val errJson = errors.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
       val tmp = Paths.get(s"$outDir/_errors.json.tmp")
       Files.writeString(tmp, errJson)
       Files.move(tmp, Paths.get(s"$outDir/_errors.json"),
@@ -100,7 +81,7 @@ object Verify {
       synchronized {
         val secStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(sec))
         Files.writeString(progress,
-          s"""{"q": ${q(name)}, "status": ${q(status)}, "sec": $secStr}""" + "\n",
+          s"""{"q": ${jsonStr(name)}, "status": ${jsonStr(status)}, "sec": $secStr}""" + "\n",
           StandardOpenOption.APPEND)
       }
     // Dump in parallel: each query is an independent job; the local

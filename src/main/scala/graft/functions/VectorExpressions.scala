@@ -118,15 +118,16 @@ case class DotProduct(left: Expression, right: Expression)
   * call it as a static forwarder inside whole-stage spans. */
 object VectorKernels {
 
-  /** round(v · scale) HALF_UP as a Long, total on any float: NaN → 0,
+  /** round(v · scale) HALF_UP as a Long, total on any double: NaN → 0,
     * ±Inf and overflow saturate to Long.Min/MaxValue (the non-ANSI
     * double→long cast's behavior; BigDecimal.valueOf alone would throw
     * on a non-finite value), and finite values take BigDecimal.valueOf +
-    * HALF_UP — the Round expression's double path. So the result
-    * equals `CAST(round(CAST(v AS DOUBLE) * scale) AS BIGINT)` under
-    * non-ANSI semantics bit-for-bit. */
-  private[graft] def roundHalfUp(v: Float, scale: Double): Long = {
-    val d = v.toDouble * scale
+    * HALF_UP — the Round expression's double path, NOT Math.round,
+    * whose half-case rounds toward +∞. So the result equals
+    * `CAST(round(CAST(v AS DOUBLE) * scale) AS BIGINT)` under non-ANSI
+    * semantics bit-for-bit. Float callers widen exactly. */
+  private[graft] def roundHalfUp(v: Double, scale: Double): Long = {
+    val d = v * scale
     if (d.isNaN) 0L
     else if (d >= Long.MaxValue.toDouble) Long.MaxValue
     else if (d <= Long.MinValue.toDouble) Long.MinValue

@@ -29,32 +29,9 @@ object Joins {
   def asOfBackward(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      rightTieBreak: Seq[String] = Nil): DataFrame = {
-    val rightPayload = right.columns.filter(c => c != rightKey && c != rightTs).toSeq
-    val l = left.select(
-      col(leftKey).as("__k"), col(leftTs).as("__ts"), lit(1).as("__is_left"),
-      struct(left.columns.map(col).toIndexedSeq: _*).as("__l"),
-      lit(null).cast(right.select(rightPayload.map(col): _*).schema).as("__r"))
-    val r = right.select(
-      col(rightKey).as("__k"), col(rightTs).as("__ts"), lit(0).as("__is_left"),
-      lit(null).cast(left.schema).as("__l"),
-      struct(rightPayload.map(col): _*).as("__r"))
-    // right rows sort before left rows at equal ts (__is_left 0 < 1) →
-    // a right row AT the left timestamp is visible (inclusive as-of).
-    // rightTieBreak columns make the pick among equal-ts right rows
-    // deterministic (the LAST by the tie-break ordering wins); left
-    // rows all carry null __r, so their relative order is immaterial.
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts") +: col("__is_left") +:
-        rightTieBreak.map(c => col(s"__r.$c")): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched = l.unionByName(r)
-      .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__is_left") === 1)
-    val leftCols = left.columns.map(c => col(s"__l.$c").as(c)).toSeq
-    val rightCols = rightPayload.map(c => col(s"__match.$c").as(c))
-    matched.select(leftCols ++ rightCols: _*)
-  }
+      rightTieBreak: Seq[String] = Nil): DataFrame =
+    asOf(left, right, leftKey, rightKey, leftTs, rightTs, rightTieBreak,
+      forward = false)
 
   /** Forward as-of join — the mirror of [[asOfBackward]]: for each
     * left row, the single EARLIEST right row with `rightTs` ≥ `leftTs`
@@ -72,7 +49,17 @@ object Joins {
   def asOfForward(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      rightTieBreak: Seq[String] = Nil): DataFrame = {
+      rightTieBreak: Seq[String] = Nil): DataFrame =
+    asOf(left, right, leftKey, rightKey, leftTs, rightTs, rightTieBreak,
+      forward = true)
+
+  /** The one as-of builder behind [[asOfBackward]] and [[asOfForward]];
+    * they differ only in the traversal direction of `__ts` and of the
+    * tie-break columns. */
+  private def asOf(left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String,
+      leftTs: String, rightTs: String,
+      rightTieBreak: Seq[String], forward: Boolean): DataFrame = {
     val rightPayload = right.columns.filter(c => c != rightKey && c != rightTs).toSeq
     val l = left.select(
       col(leftKey).as("__k"), col(leftTs).as("__ts"), lit(1).as("__is_left"),
@@ -82,15 +69,22 @@ object Joins {
       col(rightKey).as("__k"), col(rightTs).as("__ts"), lit(0).as("__is_left"),
       lit(null).cast(left.schema).as("__l"),
       struct(rightPayload.map(col): _*).as("__r"))
-    // DESC time traversal: later rows first, so the running
-    // last(ignoreNulls) at a left row is the EARLIEST right row at or
-    // after it. Right rows still sort before left at equal __ts
-    // (__is_left 0 < 1 → inclusive), and equal-ts right rows traverse
-    // in DESCENDING tie-break order so the last seen — the winner —
-    // is the smallest tie-break value.
+    // Backward: right rows sort before left rows at equal ts (__is_left
+    // 0 < 1) → a right row AT the left timestamp is visible (inclusive
+    // as-of). rightTieBreak columns make the pick among equal-ts right
+    // rows deterministic (the LAST by the tie-break ordering wins); left
+    // rows all carry null __r, so their relative order is immaterial.
+    //
+    // Forward: DESC time traversal, so later rows come first and the
+    // running last(ignoreNulls) at a left row is the EARLIEST right row
+    // at or after it. Right rows still sort before left at equal __ts
+    // (→ inclusive), and equal-ts right rows traverse in DESCENDING
+    // tie-break order so the last seen — the winner — is the smallest
+    // tie-break value.
+    def dir(c: Column): Column = if (forward) c.desc else c
     val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts").desc +: col("__is_left") +:
-        rightTieBreak.map(c => col(s"__r.$c").desc): _*)
+      .orderBy(dir(col("__ts")) +: col("__is_left") +:
+        rightTieBreak.map(c => dir(col(s"__r.$c"))): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val matched = l.unionByName(r)
       .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))

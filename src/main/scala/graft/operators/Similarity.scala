@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Scored, TopKScored}
+import graft.functions.{Scored, TopKScored, VectorKernels}
 import graft.functions.VectorFunctions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -960,8 +960,8 @@ object Similarity {
     * r = 1..k — quantized once here so the Spark plan and the DuckDB
     * oracle share identical integer constants. */
   private[graft] def discountMicro(k: Int): Array[Long] =
-    (1 to k).map(r => BigDecimal(1e6 / (math.log(r + 1.0) / math.log(2.0)))
-      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact).toArray
+    (1 to k).map(r =>
+      VectorKernels.roundHalfUp(1e6 / (math.log(r + 1.0) / math.log(2.0)), 1.0)).toArray
 
   /** Shared recall-vs-full-ranking harness behind [[truncationRecall]]
     * and [[compressionRecall]]: rank the transformed vectors with the

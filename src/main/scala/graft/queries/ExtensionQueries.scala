@@ -9441,7 +9441,7 @@ object ExtensionQueries extends QueryFamily {
   }
 
   /** x269 per-source unicode rollup — the ORACLED batch grain of the
-    * streaming [[graft.streaming.Streaming.UnicodeMonitorProcessor]]:
+    * streaming [[graft.streaming.Streaming.unicodeMonitorWithState]]:
     * x261's per-doc counts (same planted tails) aggregated per
     * source — (n_docs, n_dirty_docs, four counter sums). */
   val x269 = query("x269_source_unicode_rollup",

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
@@ -343,6 +343,55 @@ object Streaming {
       }
   }
 
+  /** The one keyed fold behind the single-state twins below (every
+    * `…WithState` twin except the MapState/timer ones): the continuous
+    * form of a batch audit, folding each micro-batch's rows into ONE
+    * per-key state value — the previous round's state is the next
+    * round's starting point, nothing is recomputed. `init` opens one
+    * `ValueState` slot; each call reads it (`zero` for a key never
+    * written), runs the pure `step`, and writes the state `step`
+    * returns — `None` leaves the store untouched, so a call writes
+    * exactly when its twin's contract says it does.
+    *
+    * The slot name and encoder ARE the checkpoint's state schema: a
+    * twin must never change either, or a restarted query cannot read
+    * the state its earlier run wrote. The processor, and with it
+    * `step`'s closure, is serialized to the executors, so a step
+    * captures only serializable values (Maps, numbers, the
+    * [[graft.functions.BottomKLongs]] aggregator); the encoder is
+    * built in `init`, on the executor, because an ExpressionEncoder
+    * (the KMV twin's `longArray`) does not survive serialization. */
+  private final class KeyedFold[K, I, S, O](slot: String, enc: () => Encoder[S],
+      zero: S, step: (K, S, Iterator[I]) => (Option[S], Iterator[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](slot, enc(), TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+        tv: TimerValues): Iterator[O] = {
+      val (next, out) = step(key, if (st.exists()) st.get() else zero, rows)
+      next.foreach(st.update)
+      out
+    }
+  }
+
+  /** The one `transformWithState` wiring: `ds` grouped by `key`, run
+    * through `p` in Append mode. The v2 state API behind it REQUIRES
+    * `spark.sql.streaming.stateStore.providerClass` =
+    * RocksDBStateStoreProvider (it rejects the default HDFS-backed
+    * provider by design). */
+  private def keyed[I, K: Encoder, O: Encoder](ds: Dataset[I])(key: I => K,
+      p: StatefulProcessor[K, I, O], time: TimeMode = TimeMode.None()): Dataset[O] =
+    ds.groupByKey(key).transformWithState(p, time, OutputMode.Append())
+
+  /** A [[KeyedFold]] over `ds` keyed by `key`, wired by [[keyed]]. */
+  private def keyedFold[I, K: Encoder, S, O: Encoder](ds: Dataset[I])(
+      key: I => K, slot: String, enc: () => Encoder[S], zero: S)(
+      step: (K, S, Iterator[I]) => (Option[S], Iterator[O])): Dataset[O] =
+    keyed(ds)(key, new KeyedFold(slot, enc, zero, step))
+
   final case class SessionEvent(user_id: Long, event_id: Long, ts: Long)
   final case class SessionOut(user_id: Long, session_id: Long, n_events: Long,
     start_ts: Long, end_ts: Long, closed: Boolean)
@@ -375,20 +424,20 @@ object Streaming {
     * Emission is Append-clean: a session row is emitted exactly once,
     * when a LATER event closes it; the open tail lives only in state.
     * A far-future sentinel event per user flushes tails when a job
-    * needs them (the spec's drain trick). */
-  final class SessionProcessor(gapSec: Long)
-      extends StatefulProcessor[Long, SessionEvent, SessionOut] {
-    @transient private var sess: ValueState[SessionOut] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[SessionOut]("session",
-        org.apache.spark.sql.Encoders.product[SessionOut], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[SessionEvent],
-        tv: TimerValues): Iterator[SessionOut] = {
+    * needs them (the spec's drain trick).
+    *
+    * Requires `spark.sql.streaming.stateStore.providerClass` =
+    * RocksDBStateStoreProvider (the v2 state API rejects the default
+    * HDFS-backed provider by design). */
+  def sessionizeWithState(events: Dataset[SessionEvent],
+      gapSec: Long): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    // zero null: a user with no open session yet
+    keyedFold(events)(_.user_id, "session", () => Encoders.product[SessionOut],
+        null: SessionOut) { (key, open, rows) =>
       val sorted = rows.toArray.sortBy(e => (e.ts, e.event_id))
       val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-      var cur = if (sess.exists()) Option(sess.get()) else None
+      var cur = Option(open)
       sorted.foreach { e =>
         cur match {
           case Some(s) if e.ts - s.end_ts <= gapSec =>
@@ -401,21 +450,8 @@ object Streaming {
             cur = Some(SessionOut(key, 1L, 1L, e.ts, e.ts, closed = false))
         }
       }
-      cur.foreach(sess.update)
-      out.iterator
+      (cur, out.iterator)
     }
-  }
-
-  /** [[SessionProcessor]] wired onto a keyed event stream. Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (the v2 state API rejects the default
-    * HDFS-backed provider by design). */
-  def sessionizeWithState(events: Dataset[SessionEvent],
-      gapSec: Long): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapSec),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class TranscriptEvent(user_id: Long, event_id: Long, ts: Long,
@@ -423,7 +459,7 @@ object Streaming {
   final case class TranscriptOut(user_id: Long, session_id: Long, n: Long,
     path: String, v_cents: Long, end_ts: Long, closed: Boolean)
 
-  /** Transcript-assembling twin of [[SessionProcessor]] — the
+  /** Transcript-assembling twin of [[sessionizeWithState]] — the
     * streaming form of [[graft.operators.Sequences.sessionTranscripts]]:
     * besides counting, each open session accumulates its "→"-joined
     * event-type path and an exact integer-cents value sum in state,
@@ -436,20 +472,16 @@ object Streaming {
     * sequence — the batch operator's gap bound is the same contract).
     * Values ride integer cents, not doubles: state that is folded one
     * event at a time must not accumulate float error relative to the
-    * batch twin's decimal sum. */
-  final class TranscriptProcessor(gapSec: Long, maxPathEvents: Int)
-      extends StatefulProcessor[Long, TranscriptEvent, TranscriptOut] {
-    @transient private var sess: ValueState[TranscriptOut] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[TranscriptOut]("transcript",
-        org.apache.spark.sql.Encoders.product[TranscriptOut], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[TranscriptEvent],
-        tv: TimerValues): Iterator[TranscriptOut] = {
+    * batch twin's decimal sum. Same RocksDB provider requirement as
+    * [[sessionizeWithState]]. */
+  def transcriptsWithState(events: Dataset[TranscriptEvent], gapSec: Long,
+      maxPathEvents: Int = 10000): Dataset[TranscriptOut] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.user_id, "transcript", () => Encoders.product[TranscriptOut],
+        null: TranscriptOut) { (key, open, rows) =>
       val sorted = rows.toArray.sortBy(e => (e.ts, e.event_id))
       val out = scala.collection.mutable.ArrayBuffer.empty[TranscriptOut]
-      var cur = if (sess.exists()) Option(sess.get()) else None
+      var cur = Option(open)
       sorted.foreach { e =>
         cur match {
           case Some(s) if e.ts - s.end_ts <= gapSec =>
@@ -467,25 +499,14 @@ object Streaming {
               e.event_type, e.v_cents, e.ts, closed = false))
         }
       }
-      cur.foreach(sess.update)
-      out.iterator
+      (cur, out.iterator)
     }
-  }
-
-  /** [[TranscriptProcessor]] wired onto a keyed event stream; same
-    * RocksDB provider requirement as [[sessionizeWithState]]. */
-  def transcriptsWithState(events: Dataset[TranscriptEvent], gapSec: Long,
-      maxPathEvents: Int = 10000): Dataset[TranscriptOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TranscriptProcessor(gapSec, maxPathEvents),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class PathEvent(user_id: Long, event_id: Long, ts: Long,
     event_type: String)
   final case class PathEmit(user_id: Long, a: String, b: String, c: String)
-  /** Last two event types per user for [[PathMiningProcessor]] —
+  /** Last two event types per user for [[pathMiningWithState]] —
     * empty strings mean "not yet seen" (event types are non-empty by
     * fixture contract, enforced at fold time). */
   final case class PathState(prev2: String, prev1: String)
@@ -503,47 +524,32 @@ object Streaming {
     * equals the batch operator's lag-window trigrams exactly — within
     * a batch, rows sort by (ts, event_id) before folding (the
     * transcripts discipline); across batches the per-key order
-    * assumption is the same append-log contract every processor here
+    * assumption is the same append-log contract every twin here
     * states: an out-of-order arrival across a batch boundary would
     * splice the path at the boundary, which is the honest streaming
-    * semantics for an unwatermarked keyed fold. */
-  final class PathMiningProcessor
-      extends StatefulProcessor[Long, PathEvent, PathEmit] {
-    @transient private var last: ValueState[PathState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[PathState]("last2",
-        org.apache.spark.sql.Encoders.product[PathState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[PathEvent],
-        tv: TimerValues): Iterator[PathEmit] = {
+    * semantics for an unwatermarked keyed fold. Same RocksDB provider
+    * requirement as [[sessionizeWithState]]. */
+  def pathMiningWithState(events: Dataset[PathEvent]): Dataset[PathEmit] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.user_id, "last2", () => Encoders.product[PathState],
+        PathState("", "")) { (key, last, rows) =>
       val sorted = rows.toArray.sortBy(e => (e.ts, e.event_id))
-      var st = if (last.exists()) last.get() else PathState("", "")
+      var st = last
       val out = scala.collection.mutable.ArrayBuffer.empty[PathEmit]
       sorted.foreach { e =>
         require(e.event_type.nonEmpty,
-          "PathMiningProcessor: empty event_type is the state sentinel")
+          "pathMiningWithState: empty event_type is the state sentinel")
         if (st.prev2.nonEmpty && st.prev1.nonEmpty)
           out += PathEmit(key, st.prev2, st.prev1, e.event_type)
         st = PathState(st.prev1, e.event_type)
       }
-      last.update(st)
-      out.iterator
+      (Some(st), out.iterator)
     }
-  }
-
-  /** [[PathMiningProcessor]] wired onto a keyed event stream; same
-    * RocksDB provider requirement as [[sessionizeWithState]]. */
-  def pathMiningWithState(events: Dataset[PathEvent]): Dataset[PathEmit] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new PathMiningProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class MonoViolation(user_id: Long, event_id: Long, ts: Long,
     prev_ts: Long)
-  /** Last (event_id, ts) per user for [[MonotonicityMonitorProcessor]];
+  /** Last (event_id, ts) per user for [[monotonicityMonitorWithState]];
     * event_id −1 means "nothing seen yet". */
   final case class MonoState(last_id: Long, last_ts: Long)
 
@@ -556,40 +562,25 @@ object Streaming {
     *
     * Parity contract (test-pinned): with events arriving in per-user
     * event_id order (rows sort by id within each batch — the same
-    * append-log contract as [[PathMiningProcessor]]), the emitted
+    * append-log contract as [[pathMiningWithState]]), the emitted
     * violation count per user equals the batch audit's adjacent
-    * inversion count exactly. */
-  final class MonotonicityMonitorProcessor
-      extends StatefulProcessor[Long, PathEvent, MonoViolation] {
-    @transient private var last: ValueState[MonoState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[MonoState]("mono",
-        org.apache.spark.sql.Encoders.product[MonoState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[PathEvent],
-        tv: TimerValues): Iterator[MonoViolation] = {
+    * inversion count exactly. Same RocksDB provider requirement as
+    * [[sessionizeWithState]]. */
+  def monotonicityMonitorWithState(
+      events: Dataset[PathEvent]): Dataset[MonoViolation] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.user_id, "mono", () => Encoders.product[MonoState],
+        MonoState(-1L, Long.MinValue)) { (key, last, rows) =>
       val sorted = rows.toArray.sortBy(_.event_id)
-      var st = if (last.exists()) last.get() else MonoState(-1L, Long.MinValue)
+      var st = last
       val out = scala.collection.mutable.ArrayBuffer.empty[MonoViolation]
       sorted.foreach { e =>
         if (st.last_id >= 0 && st.last_ts > e.ts)
           out += MonoViolation(key, e.event_id, e.ts, st.last_ts)
         st = MonoState(e.event_id, e.ts)
       }
-      last.update(st)
-      out.iterator
+      (Some(st), out.iterator)
     }
-  }
-
-  /** [[MonotonicityMonitorProcessor]] wired onto a keyed event stream;
-    * same RocksDB provider requirement as [[sessionizeWithState]]. */
-  def monotonicityMonitorWithState(
-      events: Dataset[PathEvent]): Dataset[MonoViolation] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new MonotonicityMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class FdEvent(det: String, dep: String)
@@ -661,9 +652,7 @@ object Streaming {
   def fdMonitorWithState(events: Dataset[FdEvent],
       maxDeps: Int = 1024): Dataset[FdViolation] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.det)
-      .transformWithState(new FdMonitorProcessor(maxDeps),
-        TimeMode.None(), OutputMode.Append())
+    keyed(events)(_.det, new FdMonitorProcessor(maxDeps))
   }
 
   final case class RiEvent(kind: String, key: Long, row_id: Long)
@@ -696,19 +685,15 @@ object Streaming {
     * separately as n_null_fk, same separation.
     *
     * Scale: state is two scalars per DISTINCT key; alerts are
-    * per-dirty-row, not per-row. */
-  final class RiMonitorProcessor
-      extends StatefulProcessor[Long, RiEvent, RiAlert] {
-    @transient private var st: ValueState[RiState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RiState]("ri",
-        org.apache.spark.sql.Encoders.product[RiState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[RiEvent],
-        tv: TimerValues): Iterator[RiAlert] = {
+    * per-dirty-row, not per-row. Same RocksDB provider requirement as
+    * [[sessionizeWithState]]. Callers route NULL child keys to their
+    * own n_null_fk accounting (the batch audit's separation). */
+  def riMonitorWithState(events: Dataset[RiEvent]): Dataset[RiAlert] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.key, "ri", () => Encoders.product[RiState],
+        RiState(parent_seen = false, 0L)) { (key, prev, rows) =>
       val batch = rows.toArray
-      var s = if (st.exists()) st.get() else RiState(parent_seen = false, 0L)
+      var s = prev
       val out = scala.collection.mutable.ArrayBuffer.empty[RiAlert]
       val parents = batch.filter(_.kind == "parent")
       if (parents.nonEmpty && !s.parent_seen) {
@@ -722,20 +707,8 @@ object Streaming {
           out += RiAlert(key, c.row_id, "orphan_candidate", s.pending)
         }
       }
-      st.update(s)
-      out.iterator
+      (Some(s), out.iterator)
     }
-  }
-
-  /** [[RiMonitorProcessor]] wired onto a mixed parent/child FK-edge
-    * stream; same RocksDB provider requirement as
-    * [[sessionizeWithState]]. Callers route NULL child keys to their
-    * own n_null_fk accounting (the batch audit's separation). */
-  def riMonitorWithState(events: Dataset[RiEvent]): Dataset[RiAlert] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new RiMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class OodEvent(label: Int, vec_id: Long, embedding: Array[Float])
@@ -762,72 +735,59 @@ object Streaming {
     * flag counts per label (the cumulative stats then ARE the batch
     * stats). Across multiple batches the read changes meaning the way
     * a live monitor should: each batch scores against history-to-date.
-    * Wrong-dim vectors drop (the batch audit's len filter).
+    * Wrong-dim vectors drop (the batch audit's len filter); a call
+    * whose rows all drop emits nothing and leaves the state untouched.
     *
     * Scale: state is 2·dim + 1 longs per label; output is one row per
     * (label, batch). Same long envelope as the batch audit (s2·n fits
-    * a long at ≲3e6-row labels with unit-scale components). */
-  final class OodMonitorProcessor(dim: Int, factorMilli: Long)
-      extends StatefulProcessor[Int, OodEvent, OodBatchStat] {
-    @transient private var st: ValueState[OodStats] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OodStats]("ood",
-        org.apache.spark.sql.Encoders.product[OodStats], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[OodEvent],
-        tv: TimerValues): Iterator[OodBatchStat] = {
-      val batch = rows.filter(_.embedding.length == dim).toArray
-      if (batch.isEmpty) return Iterator.empty
-      val prev = if (st.exists()) st.get()
-        else OodStats(0L, Seq.fill(dim)(0L), Seq.fill(dim)(0L))
-      val s1 = prev.s1.toArray
-      val s2 = prev.s2.toArray
-      var n = prev.n
-      // total on any float: a monitor must never die on the corrupt
-      // inputs it exists to flag; the parity pin covers finite
-      // components, where this is exactly the batch audit's HALF_UP
-      // quantization
-      val qs = batch.map(_.embedding.map(graft.functions.VectorKernels.roundHalfUp(_, 1000.0)))
-      qs.foreach { q =>
-        var d = 0
-        while (d < dim) { s1(d) += q(d); s2(d) += q(d) * q(d); d += 1 }
-        n += 1
-      }
-      st.update(OodStats(n, s1.toSeq, s2.toSeq))
-      // score the batch against the absorbed (cumulative) moments —
-      // identical per-dim algebra to the batch audit
-      val scores = qs.map { q =>
-        var sum = 0L
-        var any = false
-        var d = 0
-        while (d < dim) {
-          val den = s2(d) * n - s1(d) * s1(d)
-          if (den > 0) {
-            val diff = (q(d) * n - s1(d)).toDouble
-            sum += math.round(diff * diff * 1000.0 / den.toDouble)
-            any = true
-          }
-          d += 1
-        }
-        if (any) Some(sum) else None
-      }
-      val defined = scores.flatten
-      Iterator.single(OodBatchStat(key, batch.length.toLong, n,
-        if (defined.isEmpty) None else Some(defined.sum),
-        if (defined.isEmpty) None else Some(defined.max),
-        scores.count(_.exists(_ > factorMilli * dim)).toLong))
-    }
-  }
-
-  /** [[OodMonitorProcessor]] wired onto a labeled embedding stream;
-    * same RocksDB provider requirement as [[sessionizeWithState]]. */
+    * a long at ≲3e6-row labels with unit-scale components). Same
+    * RocksDB provider requirement as [[sessionizeWithState]]. */
   def oodMonitorWithState(events: Dataset[OodEvent], dim: Int = 64,
       factorMilli: Long = 1500L): Dataset[OodBatchStat] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.label)
-      .transformWithState(new OodMonitorProcessor(dim, factorMilli),
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(events)(_.label, "ood", () => Encoders.product[OodStats],
+        OodStats(0L, Seq.fill(dim)(0L), Seq.fill(dim)(0L))) { (key, prev, rows) =>
+      val batch = rows.filter(_.embedding.length == dim).toArray
+      if (batch.isEmpty) (None, Iterator.empty)
+      else {
+        val s1 = prev.s1.toArray
+        val s2 = prev.s2.toArray
+        var n = prev.n
+        // total on any float: a monitor must never die on the corrupt
+        // inputs it exists to flag; the parity pin covers finite
+        // components, where this is exactly the batch audit's HALF_UP
+        // quantization
+        val qs = batch.map(_.embedding.map(graft.functions.VectorKernels.roundHalfUp(_, 1000.0)))
+        qs.foreach { q =>
+          var d = 0
+          while (d < dim) { s1(d) += q(d); s2(d) += q(d) * q(d); d += 1 }
+          n += 1
+        }
+        val next = OodStats(n, s1.toSeq, s2.toSeq)
+        // score the batch against the absorbed (cumulative) moments —
+        // identical per-dim algebra to the batch audit
+        val scores = qs.map { q =>
+          var sum = 0L
+          var any = false
+          var d = 0
+          while (d < dim) {
+            val den = s2(d) * n - s1(d) * s1(d)
+            if (den > 0) {
+              val diff = (q(d) * n - s1(d)).toDouble
+              sum += math.round(diff * diff * 1000.0 / den.toDouble)
+              any = true
+            }
+            d += 1
+          }
+          if (any) Some(sum) else None
+        }
+        val defined = scores.flatten
+        (Some(next), Iterator.single(OodBatchStat(key, batch.length.toLong, n,
+          if (defined.isEmpty) None else Some(defined.sum),
+          if (defined.isEmpty) None else Some(defined.max),
+          scores.count(_.exists(_ > factorMilli * dim)).toLong)))
+      }
+    }
   }
 
   final case class VecIngest(vec_id: Long, embedding: Array[Float])
@@ -891,7 +851,8 @@ object Streaming {
     * batch top-k-agreement gate against a REFERENCE ranking (the
     * full-dim/full-precision top-k per query, computed batch-side —
     * [[graft.operators.Similarity.bruteForceTopK]] — and shipped in
-    * the processor closure, the broadcast-small-side discipline).
+    * the step's closure as per-query id sets, built once here: the
+    * broadcast-small-side discipline).
     * Keyed by (query, dim): state is the bounded variant top-k heap
     * (≤ k (cos_micro, vec_id) entries under the batch tie order
     * (score desc, id asc), duplicate ingests keep the best score);
@@ -899,7 +860,8 @@ object Streaming {
     * agreement |variant top-k ∩ reference| and recall_micro =
     * hits·10⁶ div |reference list| — so a degrading index variant
     * (over-truncated dims, lossy compression) surfaces per batch as
-    * ingestion proceeds.
+    * ingestion proceeds. An empty call reports nothing and writes no
+    * state.
     *
     * Parity contract (test-pinned): the bounded-heap merge is a
     * selection, so ANY batch split converges to the same final top-k —
@@ -909,44 +871,32 @@ object Streaming {
     * list (recall_micro 0) rather than failing — monitor totality.
     *
     * Scale: state is ≤ k entries per (query, dim) — queries·dims·k
-    * longs total; output one row per (query, dim, batch). */
-  final class RecallMonitorProcessor(k: Int, reference: Map[Long, Seq[Long]])
-      extends StatefulProcessor[(Long, Int), RecallCand, RecallStat] {
-    @transient private var st: ValueState[RecallTopKState] = _
-    @transient private lazy val refSets: Map[Long, Set[Long]] =
-      reference.map { case (q, ids) => q -> ids.toSet }
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RecallTopKState]("topk",
-        org.apache.spark.sql.Encoders.product[RecallTopKState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, Int), rows: Iterator[RecallCand],
-        tv: TimerValues): Iterator[RecallStat] = {
-      val batch = rows.toArray
-      if (batch.isEmpty) return Iterator.empty
-      val prev = if (st.exists()) st.get() else RecallTopKState(0L, Seq.empty)
-      val merged = (prev.entries ++
-          batch.map(c => RecallEntry(c.cos_micro, c.vec_id)))
-        .groupBy(_.vec_id).valuesIterator.map(_.maxBy(_.cos_micro)).toSeq
-        .sortBy(e => (-e.cos_micro, e.vec_id)).take(k)
-      val n = prev.n_seen + batch.length
-      st.update(RecallTopKState(n, merged))
-      val ref = refSets.getOrElse(key._1, Set.empty)
-      val hits = merged.count(e => ref.contains(e.vec_id)).toLong
-      val rm = if (ref.isEmpty) 0L else hits * 1000000L / ref.size
-      Iterator.single(RecallStat(key._1, key._2, batch.length.toLong, n,
-        hits, rm))
-    }
-  }
-
-  /** [[RecallMonitorProcessor]] wired onto a candidate stream; same
-    * RocksDB provider requirement as [[sessionizeWithState]]. */
+    * longs total; output one row per (query, dim, batch). Same RocksDB
+    * provider requirement as [[sessionizeWithState]]. */
   def recallMonitorWithState(cands: Dataset[RecallCand], k: Int,
       reference: Map[Long, Seq[Long]]): Dataset[RecallStat] = {
     import cands.sparkSession.implicits._
-    cands.groupByKey(c => (c.query_id, c.dim))
-      .transformWithState(new RecallMonitorProcessor(k, reference),
-        TimeMode.None(), OutputMode.Append())
+    val refSets: Map[Long, Set[Long]] =
+      reference.map { case (q, ids) => q -> ids.toSet }
+    keyedFold(cands)(c => (c.query_id, c.dim), "topk",
+        () => Encoders.product[RecallTopKState], RecallTopKState(0L, Seq.empty)) {
+      (key, prev, rows) =>
+        val batch = rows.toArray
+        if (batch.isEmpty) (None, Iterator.empty)
+        else {
+          val merged = (prev.entries ++
+              batch.map(c => RecallEntry(c.cos_micro, c.vec_id)))
+            .groupBy(_.vec_id).valuesIterator.map(_.maxBy(_.cos_micro)).toSeq
+            .sortBy(e => (-e.cos_micro, e.vec_id)).take(k)
+          val n = prev.n_seen + batch.length
+          val ref = refSets.getOrElse(key._1, Set.empty)
+          val hits = merged.count(e => ref.contains(e.vec_id)).toLong
+          val rm = if (ref.isEmpty) 0L else hits * 1000000L / ref.size
+          (Some(RecallTopKState(n, merged)),
+            Iterator.single(RecallStat(key._1, key._2, batch.length.toLong, n,
+              hits, rm)))
+        }
+    }
   }
 
   final case class TokenEvent(shard: Int, token: String)
@@ -1021,9 +971,7 @@ object Streaming {
   def heavyHittersWithState(tokens: Dataset[TokenEvent],
       k: Int): Dataset[HeavyHitter] = {
     import tokens.sparkSession.implicits._
-    tokens.groupByKey(_.shard)
-      .transformWithState(new MisraGriesProcessor(k),
-        TimeMode.None(), OutputMode.Append())
+    keyed(tokens)(_.shard, new MisraGriesProcessor(k))
   }
 
   final case class SampleEvent(stratum: String, id: Long)
@@ -1047,24 +995,19 @@ object Streaming {
     * Emission: run-ledger — each batch re-emits the updated stratum's
     * CURRENT sample (≤ k rows); consumers keep the last set per
     * stratum. State is O(k) per stratum regardless of stream size;
-    * the per-row cost is one md5 + one bounded insert. */
-  final class StratifiedSampleProcessor(k: Int)
-      extends StatefulProcessor[String, SampleEvent, SampleRow] {
-    @transient private var st: ValueState[SampleState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[SampleState]("sample",
-        org.apache.spark.sql.Encoders.product[SampleState], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[SampleEvent],
-        tv: TimerValues): Iterator[SampleRow] = {
+    * the per-row cost is one md5 + one bounded insert. Same RocksDB
+    * provider requirement as [[sessionizeWithState]]. */
+  def stratifiedSampleWithState(events: Dataset[SampleEvent],
+      k: Int): Dataset[SampleRow] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.stratum, "sample", () => Encoders.product[SampleState],
+        SampleState(Vector.empty)) { (key, prev, rows) =>
       // bounded insert into the sorted sample: memory stays O(k) even
       // within a batch. Duplicate ids need no extra tracking — the
       // rank is a pure function of the id, so re-inserting an id
       // either finds its (h, id) already in the sample (skip) or
       // fails the cut exactly as it did before (idempotent).
-      var top = if (st.exists()) st.get().entries.toVector else Vector.empty
+      var top = prev.entries.toVector
       val md = java.security.MessageDigest.getInstance("MD5")
       rows.foreach { ev =>
         val b = ev.id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -1082,21 +1025,10 @@ object Streaming {
           }
         }
       }
-      st.update(SampleState(top))
-      top.iterator.zipWithIndex.map { case (e, i) =>
+      (Some(SampleState(top)), top.iterator.zipWithIndex.map { case (e, i) =>
         SampleRow(key, (i + 1).toLong, e.id, e.h)
-      }
+      })
     }
-  }
-
-  /** [[StratifiedSampleProcessor]] wired onto a keyed id stream; same
-    * RocksDB provider requirement as [[sessionizeWithState]]. */
-  def stratifiedSampleWithState(events: Dataset[SampleEvent],
-      k: Int): Dataset[SampleRow] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.stratum)
-      .transformWithState(new StratifiedSampleProcessor(k),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class WeightedEvent(stratum: String, id: Long, w: Long)
@@ -1107,7 +1039,7 @@ object Streaming {
 
   /** Bounded-memory streaming WEIGHTED sampler — the live twin of the
     * batch [[graft.operators.Profile.weightedSample]] (x272), the way
-    * [[StratifiedSampleProcessor]] twins the uniform one: per
+    * [[stratifiedSampleWithState]] twins the uniform one: per
     * stratum, the k LARGEST Efraimidis–Spirakis keys seen so far.
     * Because the key is a pure function of (id, w) — hash-uniform u
     * from the id's md5-60 upper 52 bits, the one ln quantized to
@@ -1116,31 +1048,24 @@ object Streaming {
     * operator's output over the same rows; a weighted reservoir
     * (A-Res with RNG) could not make that promise. Rows with w ≤ 0
     * are dropped, matching the batch exclusion. An id re-arriving
-    * with a DIFFERENT weight is a data error upstream; the processor
+    * with a DIFFERENT weight is a data error upstream; the twin
     * keeps whichever (key, id) entry wins, exactly as the batch side
     * would see the duplicated row.
     *
+    * Both roundings are Spark's Round(double, 0) — BigDecimal HALF_UP
+    * ([[graft.functions.VectorKernels.roundHalfUp]]), NOT Math.round,
+    * whose half-case rounds toward +∞ and would drift one ulp from the
+    * batch rendering on negative keys.
+    *
     * State is O(k) per stratum; emission is the run-ledger
-    * convention (each batch re-emits the stratum's current sample). */
-  final class WeightedSampleProcessor(k: Int)
-      extends StatefulProcessor[String, WeightedEvent, WeightedRow] {
-    @transient private var st: ValueState[WeightedState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[WeightedState]("wsample",
-        org.apache.spark.sql.Encoders.product[WeightedState], TTLConfig.NONE)
-    }
-
-    /** Spark's Round(double, 0): BigDecimal HALF_UP — NOT
-      * Math.round, whose half-case rounds toward +∞ and would drift
-      * one ulp from the batch rendering on negative keys. */
-    private def roundHalfUp(d: Double): Long =
-      java.math.BigDecimal.valueOf(d)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toLong
-
-    override def handleInputRows(key: String, rows: Iterator[WeightedEvent],
-        tv: TimerValues): Iterator[WeightedRow] = {
-      var top = if (st.exists()) st.get().entries.toVector else Vector.empty
+    * convention (each batch re-emits the stratum's current sample).
+    * Same RocksDB provider requirement as [[sessionizeWithState]]. */
+  def weightedSampleWithState(events: Dataset[WeightedEvent],
+      k: Int): Dataset[WeightedRow] = {
+    import events.sparkSession.implicits._
+    keyedFold(events)(_.stratum, "wsample", () => Encoders.product[WeightedState],
+        WeightedState(Vector.empty)) { (key, prev, rows) =>
+      var top = prev.entries.toVector
       val md = java.security.MessageDigest.getInstance("MD5")
       rows.foreach { ev =>
         if (ev.w > 0L) {
@@ -1149,8 +1074,8 @@ object Streaming {
           val h = graft.functions.ShingleKernels
             .md5Hash60(b, 0, b.length, md) / 256L
           // the batch chain verbatim: one quantized ln, IEEE division
-          val lnu = roundHalfUp(
-            Math.log((h.toDouble + 1.0) / 4503599627370496.0) * 1000000.0)
+          val lnu = graft.functions.VectorKernels.roundHalfUp(
+            Math.log((h.toDouble + 1.0) / 4503599627370496.0), 1000000.0)
           val e = WeightedEntry(lnu.toDouble / ev.w.toDouble, ev.id)
           // keep k LARGEST keys, ties id asc
           val worse = (x: WeightedEntry) =>
@@ -1164,23 +1089,11 @@ object Streaming {
           }
         }
       }
-      st.update(WeightedState(top))
-      top.iterator.zipWithIndex.map { case (e, i) =>
+      (Some(WeightedState(top)), top.iterator.zipWithIndex.map { case (e, i) =>
         WeightedRow(key, (i + 1).toLong, e.id,
-          roundHalfUp(e.key * 1000000.0))
-      }
+          graft.functions.VectorKernels.roundHalfUp(e.key, 1000000.0))
+      })
     }
-  }
-
-  /** [[WeightedSampleProcessor]] wired onto a keyed (id, weight)
-    * stream; same RocksDB provider requirement as
-    * [[sessionizeWithState]]. */
-  def weightedSampleWithState(events: Dataset[WeightedEvent],
-      k: Int): Dataset[WeightedRow] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.stratum)
-      .transformWithState(new WeightedSampleProcessor(k),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class UnicodeDoc(source: String, doc_id: Long, text: String)
@@ -1189,6 +1102,14 @@ object Streaming {
   final case class UnicodeAlert(source: String, n_docs: Long,
     n_dirty_docs: Long, n_zero_width: Long, n_bidi: Long,
     n_replacement: Long, n_ctrl: Long)
+
+  // the identical classes the batch operator's regexp_extract_all
+  // compiles (TextAnalysis.unicodeAnomalies), compiled once
+  private val ZeroWidthPat = java.util.regex.Pattern.compile("[\\u200B\\u200C\\u200D\\uFEFF]")
+  private val BidiPat = java.util.regex.Pattern.compile("[\\u202A-\\u202E\\u2066-\\u2069]")
+  private val ReplacementPat = java.util.regex.Pattern.compile("\\uFFFD")
+  private val CtrlPat = java.util.regex.Pattern.compile(
+    "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]")
 
   /** Live unicode-anomaly monitor — the streaming twin of the batch
     * [[graft.operators.TextAnalysis.unicodeAnomalies]] (x261): per
@@ -1202,59 +1123,24 @@ object Streaming {
     *
     * Emission: run-ledger — each batch re-emits the updated source's
     * cumulative row; consumers keep the last per source. State is six
-    * longs per source. */
-  final class UnicodeMonitorProcessor
-      extends StatefulProcessor[String, UnicodeDoc, UnicodeAlert] {
-    @transient private var st: ValueState[UnicodeCounters] = _
-    @transient private var zw: java.util.regex.Pattern = _
-    @transient private var bidi: java.util.regex.Pattern = _
-    @transient private var rep: java.util.regex.Pattern = _
-    @transient private var ctrl: java.util.regex.Pattern = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[UnicodeCounters]("uni",
-        org.apache.spark.sql.Encoders.product[UnicodeCounters], TTLConfig.NONE)
-      // the identical classes the batch operator's regexp_extract_all
-      // compiles (TextAnalysis.unicodeAnomalies)
-      zw = java.util.regex.Pattern.compile("[\\u200B\\u200C\\u200D\\uFEFF]")
-      bidi = java.util.regex.Pattern.compile("[\\u202A-\\u202E\\u2066-\\u2069]")
-      rep = java.util.regex.Pattern.compile("\\uFFFD")
-      ctrl = java.util.regex.Pattern.compile(
-        "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]")
-    }
-
-    private def countOf(p: java.util.regex.Pattern, s: String): Long = {
-      val m = p.matcher(s)
-      var n = 0L
-      while (m.find()) n += 1
-      n
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[UnicodeDoc],
-        tv: TimerValues): Iterator[UnicodeAlert] = {
-      var c = if (st.exists()) st.get()
-        else UnicodeCounters(0L, 0L, 0L, 0L, 0L, 0L)
+    * longs per source. Same RocksDB provider requirement as
+    * [[sessionizeWithState]]. */
+  def unicodeMonitorWithState(docs: Dataset[UnicodeDoc]): Dataset[UnicodeAlert] = {
+    import docs.sparkSession.implicits._
+    keyedFold(docs)(_.source, "uni", () => Encoders.product[UnicodeCounters],
+        UnicodeCounters(0L, 0L, 0L, 0L, 0L, 0L)) { (key, prev, rows) =>
+      var c = prev
       rows.foreach { d =>
         val t = Option(d.text).getOrElse("")
-        val (a, b, r, k) =
-          (countOf(zw, t), countOf(bidi, t), countOf(rep, t), countOf(ctrl, t))
+        val (a, b, r, k) = (countMatches(ZeroWidthPat, t), countMatches(BidiPat, t),
+          countMatches(ReplacementPat, t), countMatches(CtrlPat, t))
         c = UnicodeCounters(c.n_docs + 1,
           c.n_dirty_docs + (if (a + b + r + k > 0) 1L else 0L),
           c.n_zero_width + a, c.n_bidi + b, c.n_replacement + r, c.n_ctrl + k)
       }
-      st.update(c)
-      Iterator.single(UnicodeAlert(key, c.n_docs, c.n_dirty_docs,
-        c.n_zero_width, c.n_bidi, c.n_replacement, c.n_ctrl))
+      (Some(c), Iterator.single(UnicodeAlert(key, c.n_docs, c.n_dirty_docs,
+        c.n_zero_width, c.n_bidi, c.n_replacement, c.n_ctrl)))
     }
-  }
-
-  /** [[UnicodeMonitorProcessor]] wired onto a keyed document stream;
-    * same RocksDB provider requirement as [[sessionizeWithState]]. */
-  def unicodeMonitorWithState(docs: Dataset[UnicodeDoc]): Dataset[UnicodeAlert] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new UnicodeMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class NbDoc(source: String, doc_id: Long, y: Boolean,
@@ -1281,65 +1167,53 @@ object Streaming {
     * bits, identical to the SQL hex-prefix parse), per-doc DISTINCT
     * presence, unseen features 0, zero-token docs scoring the bias
     * alone, and the average the same truncate-toward-zero division.
-    * State is four longs per source; the weight map rides the
-    * processor closure (≤ 2^18 entries ≈ 4 MB by the hashing-trick
-    * cap — the same bound that makes the batch join broadcastable). */
-  final class NbMonitorProcessor(weights: Map[Long, Long], bias: Long)
-      extends StatefulProcessor[String, NbDoc, NbReport] {
-    @transient private var st: ValueState[NbCounters] = _
-    @transient private var md: java.security.MessageDigest = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[NbCounters]("nb",
-        org.apache.spark.sql.Encoders.product[NbCounters], TTLConfig.NONE)
-      md = java.security.MessageDigest.getInstance("MD5")
-    }
-
-    private def score(text: String): Long = {
-      val toks = graft.functions.ShingleKernels.wordTokens(
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(Option(text).getOrElse("")))
-      val seen = new java.util.HashSet[Long]()
-      var s = bias
-      var i = 0
-      while (i < toks.numElements()) {
-        val bytes = toks.getUTF8String(i).getBytes
-        val f = graft.functions.ShingleKernels
-          .md5Hash60(bytes, 0, bytes.length, md) % 262144L
-        if (seen.add(f)) s += weights.getOrElse(f, 0L)
-        i += 1
-      }
-      s
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[NbDoc],
-        tv: TimerValues): Iterator[NbReport] = {
-      var c = if (st.exists()) st.get() else NbCounters(0L, 0L, 0L, 0L)
-      rows.foreach { d =>
-        val s = score(d.text)
-        val pos = s > 0L
-        c = NbCounters(c.n_docs + 1,
-          c.n_pred_pos + (if (pos) 1L else 0L),
-          c.n_correct + (if (pos == d.y) 1L else 0L),
-          c.sum_score + s)
-      }
-      st.update(c)
-      // Long `/` truncates toward zero — the batch `div` contract
-      Iterator.single(NbReport(key, c.n_docs, c.n_pred_pos, c.n_correct,
-        c.sum_score / c.n_docs))
-    }
-  }
-
-  /** [[NbMonitorProcessor]] wired onto a keyed labeled-doc stream;
+    * State is four longs per source; the weight map rides the step's
+    * closure (≤ 2^18 entries ≈ 4 MB by the hashing-trick cap — the
+    * same bound that makes the batch join broadcastable).
+    *
     * `weights` is the [[graft.operators.TextAnalysis.nbTrain]] table
     * collected to a map (bias = the feature −1 row). Same RocksDB
     * provider requirement as [[sessionizeWithState]]. */
   def nbMonitorWithState(docs: Dataset[NbDoc],
       weights: Map[Long, Long], bias: Long): Dataset[NbReport] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new NbMonitorProcessor(weights, bias),
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(docs)(_.source, "nb", () => Encoders.product[NbCounters],
+        NbCounters(0L, 0L, 0L, 0L)) { (key, prev, rows) =>
+      // one digest per call: MessageDigest is stateful, not shareable
+      val md = java.security.MessageDigest.getInstance("MD5")
+      var c = prev
+      rows.foreach { d =>
+        val s = nbScore(d.text, weights, bias, md)
+        val pos = s > 0L
+        c = NbCounters(c.n_docs + 1,
+          c.n_pred_pos + (if (pos) 1L else 0L),
+          c.n_correct + (if (pos == d.y) 1L else 0L),
+          c.sum_score + s)
+      }
+      // Long `/` truncates toward zero — the batch `div` contract
+      (Some(c), Iterator.single(NbReport(key, c.n_docs, c.n_pred_pos, c.n_correct,
+        c.sum_score / c.n_docs)))
+    }
+  }
+
+  /** One document's score under [[nbMonitorWithState]]'s frozen
+    * weights: the bias plus the weight of each DISTINCT hashed token. */
+  private def nbScore(text: String, weights: Map[Long, Long], bias: Long,
+      md: java.security.MessageDigest): Long = {
+    val toks = graft.functions.ShingleKernels.wordTokens(
+      org.apache.spark.unsafe.types.UTF8String
+        .fromString(Option(text).getOrElse("")))
+    val seen = new java.util.HashSet[Long]()
+    var s = bias
+    var i = 0
+    while (i < toks.numElements()) {
+      val bytes = toks.getUTF8String(i).getBytes
+      val f = graft.functions.ShingleKernels
+        .md5Hash60(bytes, 0, bytes.length, md) % 262144L
+      if (seen.add(f)) s += weights.getOrElse(f, 0L)
+      i += 1
+    }
+    s
   }
 
   final case class ActiveEvent(day: String, user_hash: Long)
@@ -1368,31 +1242,27 @@ object Streaming {
     *
     * Emission: each batch re-emits the refreshed estimate per touched
     * day (Append-friendly run-ledger pattern — consumers keep the last
-    * row per day). Input hashes must already sit in [0, 2⁶⁰) (the
-    * md5-60 domain); out-of-range input fails loudly, matching the
-    * batch operator's raise_error contract. */
-  final class KmvActivesProcessor(k: Int)
-      extends StatefulProcessor[String, ActiveEvent, ActiveEstimate] {
-    require(k > 1, s"KmvActivesProcessor: k must be > 1, got $k")
-    private val space = 1152921504606846976L // 2^60
-    private val sketch = new graft.functions.BottomKLongs(k)
-    @transient private var mins: ValueState[Array[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      mins = getHandle.getValueState[Array[Long]]("kmv",
-        graft.functions.ExpressionEncoders.longArray, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[ActiveEvent],
-        tv: TimerValues): Iterator[ActiveEstimate] = {
-      var buf = if (mins.exists()) mins.get() else Array.empty[Long]
+    * row per day); the state is written even by a call that emits
+    * nothing. Input hashes must already sit in [0, 2⁶⁰) (the md5-60
+    * domain); out-of-range input fails loudly, matching the batch
+    * operator's raise_error contract. Same RocksDB provider
+    * requirement as [[sessionizeWithState]]. */
+  def kmvActivesWithState(events: Dataset[ActiveEvent],
+      k: Int): Dataset[ActiveEstimate] = {
+    import events.sparkSession.implicits._
+    require(k > 1, s"kmvActivesWithState: k must be > 1, got $k")
+    val space = 1152921504606846976L // 2^60
+    val sketch = new graft.functions.BottomKLongs(k)
+    keyedFold(events)(_.day, "kmv", () => graft.functions.ExpressionEncoders.longArray,
+        Array.empty[Long]) { (key, prev, rows) =>
+      var buf = prev
       rows.foreach { ev =>
         if (ev.user_hash < 0 || ev.user_hash >= space)
           throw new IllegalArgumentException(
-            s"KmvActivesProcessor: user_hash outside [0, 2^60): ${ev.user_hash}")
+            s"kmvActivesWithState: user_hash outside [0, 2^60): ${ev.user_hash}")
         buf = sketch.reduce(buf, ev.user_hash)
       }
-      mins.update(buf)
-      if (buf.isEmpty) Iterator.empty // a keyed call with no new hashes
+      if (buf.isEmpty) (Some(buf), Iterator.empty) // a keyed call with no new hashes
       else {
         val nMin = buf.length.toLong
         // identical arithmetic to the batch sketch: exact (k-1)·2⁶⁰
@@ -1401,26 +1271,16 @@ object Streaming {
           if (nMin < k) nMin
           else math.floor((k - 1).toDouble * space.toDouble /
             buf.last.toDouble).toLong
-        Iterator.single(ActiveEstimate(key, nMin, buf.last, est))
+        (Some(buf), Iterator.single(ActiveEstimate(key, nMin, buf.last, est)))
       }
     }
-  }
-
-  /** [[KmvActivesProcessor]] wired onto a keyed hash stream; same
-    * RocksDB provider requirement as [[sessionizeWithState]]. */
-  def kmvActivesWithState(events: Dataset[ActiveEvent],
-      k: Int): Dataset[ActiveEstimate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.day)
-      .transformWithState(new KmvActivesProcessor(k),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class AsOfEvent(key: String, ts: Long, isProbe: Boolean,
     value: String)
   final case class AsOfJoined(key: String, probe_ts: Long,
     ref_ts: Option[Long], ref_value: Option[String])
-  /** Bounded version history per key for [[AsOfProcessor]]: parallel
+  /** Bounded version history per key for [[asOfWithState]]: parallel
     * sorted arrays (ts ascending, one value per ts — last write wins). */
   final case class RefVersions(ts: Seq[Long], value: Seq[String])
 
@@ -1445,20 +1305,15 @@ object Streaming {
     * State is O(maxVersions) per key whatever the stream length: the
     * history keeps the newest `maxVersions` reference timestamps
     * (last-wins per equal ts), enough to serve probes up to that far
-    * out of order. */
-  final class AsOfProcessor(maxVersions: Int)
-      extends StatefulProcessor[String, AsOfEvent, AsOfJoined] {
+    * out of order. Same RocksDB provider requirement as
+    * [[sessionizeWithState]]. */
+  def asOfWithState(events: Dataset[AsOfEvent],
+      maxVersions: Int = 32): Dataset[AsOfJoined] = {
+    import events.sparkSession.implicits._
     require(maxVersions > 0,
-      s"AsOfProcessor: maxVersions must be positive, got $maxVersions")
-    @transient private var hist: ValueState[RefVersions] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      hist = getHandle.getValueState[RefVersions]("asof",
-        org.apache.spark.sql.Encoders.product[RefVersions], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[AsOfEvent],
-        tv: TimerValues): Iterator[AsOfJoined] = {
-      val prior = if (hist.exists()) hist.get() else RefVersions(Nil, Nil)
+      s"asOfWithState: maxVersions must be positive, got $maxVersions")
+    keyedFold(events)(_.key, "asof", () => Encoders.product[RefVersions],
+        RefVersions(Nil, Nil)) { (key, prior, rows) =>
       var ts = prior.ts.toArray
       var vs = prior.value.toArray
       val out = scala.collection.mutable.ArrayBuffer.empty[AsOfJoined]
@@ -1484,26 +1339,15 @@ object Streaming {
           }
         }
       }
-      hist.update(RefVersions(ts.toSeq, vs.toSeq))
-      out.iterator
+      (Some(RefVersions(ts.toSeq, vs.toSeq)), out.iterator)
     }
-  }
-
-  /** [[AsOfProcessor]] wired onto a keyed mixed stream; same RocksDB
-    * provider requirement as [[sessionizeWithState]]. */
-  def asOfWithState(events: Dataset[AsOfEvent],
-      maxVersions: Int = 32): Dataset[AsOfJoined] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new AsOfProcessor(maxVersions),
-        TimeMode.None(), OutputMode.Append())
   }
 
   final case class TimedEvent(user_id: Long, event_id: Long,
     et: java.sql.Timestamp)
 
   /** Event-time sessionizer with TIMER-driven close — the production
-    * shape of [[SessionProcessor]]: instead of waiting for the NEXT
+    * shape of [[sessionizeWithState]]: instead of waiting for the NEXT
     * event of the same user (which for a churned user never comes, so
     * the tail session would sit in state forever and never emit), every
     * open session registers an event-time timer at `end + gap`; when
@@ -1585,10 +1429,8 @@ object Streaming {
   def sessionizeWithTimers(events: Dataset[TimedEvent], gapSec: Long,
       watermarkDelay: String = "10 seconds"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events.withWatermark("et", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new EventTimeSessionProcessor(gapSec),
-        TimeMode.EventTime(), OutputMode.Append())
+    keyed(events.withWatermark("et", watermarkDelay))(_.user_id,
+      new EventTimeSessionProcessor(gapSec), TimeMode.EventTime())
   }
 
   final case class QuantEvent(grp: String, v: Long)
@@ -1668,9 +1510,7 @@ object Streaming {
   def quantileMonitorWithState(events: Dataset[QuantEvent],
       maxDistinct: Int = 3000000): Dataset[QuantileStat] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.grp)
-      .transformWithState(new QuantileMonitorProcessor(maxDistinct),
-        TimeMode.None(), OutputMode.Append())
+    keyed(events)(_.grp, new QuantileMonitorProcessor(maxDistinct))
   }
 
   final case class DocIngest(source: String, text: String)
@@ -1704,18 +1544,13 @@ object Streaming {
     * Parity contract (test-pinned): after any prefix of the stream,
     * the latest emit per source equals the batch screen run on that
     * prefix — same regex engine, same integer truncating rate.
-    * Bounded state: six longs per source, touched-keys-only writes. */
-  final class DamageMonitorProcessor
-      extends StatefulProcessor[String, DocIngest, DamageStat] {
-    @transient private var st: ValueState[DamageCounts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DamageCounts]("damage",
-        org.apache.spark.sql.Encoders.product[DamageCounts], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DocIngest],
-        tv: TimerValues): Iterator[DamageStat] = {
-      var c = Option(st.get()).getOrElse(DamageCounts(0L, 0L, 0L, 0L, 0L, 0L))
+    * Bounded state: six longs per source, touched-keys-only writes.
+    * Same RocksDB provider requirement as [[sessionizeWithState]]. */
+  def damageMonitorWithState(docs: Dataset[DocIngest]): Dataset[DamageStat] = {
+    import docs.sparkSession.implicits._
+    keyedFold(docs)(_.source, "damage", () => Encoders.product[DamageCounts],
+        DamageCounts(0L, 0L, 0L, 0L, 0L, 0L)) { (key, prev, rows) =>
+      var c = prev
       rows.foreach { d =>
         val t = Option(d.text).getOrElse("")
         val h = DamagePats.map(countMatches(_, t))
@@ -1723,20 +1558,9 @@ object Streaming {
           c.n_damaged + (if (h.sum > 0) 1L else 0L),
           c.l1 + h(0), c.pu + h(1), c.re + h(2), c.nb + h(3))
       }
-      st.update(c)
-      Iterator.single(DamageStat(key, c.n_docs, c.n_damaged,
-        c.n_damaged * 1000000L / c.n_docs, c.l1, c.pu, c.re, c.nb))
+      (Some(c), Iterator.single(DamageStat(key, c.n_docs, c.n_damaged,
+        c.n_damaged * 1000000L / c.n_docs, c.l1, c.pu, c.re, c.nb)))
     }
-  }
-
-  /** [[DamageMonitorProcessor]] wired onto a (source, text) ingest
-    * stream; same RocksDB provider requirement as
-    * [[sessionizeWithState]]. */
-  def damageMonitorWithState(docs: Dataset[DocIngest]): Dataset[DamageStat] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new DamageMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ---- PII-leak monitor (streaming twin of x251 piiChecksums) --------
@@ -1781,18 +1605,13 @@ object Streaming {
     * Parity contract (test-pinned): after any stream prefix, the
     * latest emit per source equals the batch operator aggregated per
     * source over that prefix — same Java regex, same checksums, same
-    * truncating rate. Bounded state: seven longs per source. */
-  final class PiiMonitorProcessor
-      extends StatefulProcessor[String, DocIngest, PiiStat] {
-    @transient private var st: ValueState[PiiCounts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PiiCounts]("pii",
-        org.apache.spark.sql.Encoders.product[PiiCounts], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DocIngest],
-        tv: TimerValues): Iterator[PiiStat] = {
-      var c = Option(st.get()).getOrElse(PiiCounts(0L, 0L, 0L, 0L, 0L, 0L, 0L))
+    * truncating rate. Bounded state: seven longs per source. Same
+    * RocksDB provider requirement as [[sessionizeWithState]]. */
+  def piiMonitorWithState(docs: Dataset[DocIngest]): Dataset[PiiStat] = {
+    import docs.sparkSession.implicits._
+    keyedFold(docs)(_.source, "pii", () => Encoders.product[PiiCounts],
+        PiiCounts(0L, 0L, 0L, 0L, 0L, 0L, 0L)) { (key, prev, rows) =>
+      var c = prev
       rows.foreach { d =>
         val t = Option(d.text).getOrElse("")
         val cards = matches(CardPat, t)
@@ -1805,19 +1624,9 @@ object Streaming {
           c.ic + ibans.length, c.iv + iv,
           c.ph + matches(PhonePat, t).length)
       }
-      st.update(c)
-      Iterator.single(PiiStat(key, c.n_docs, c.n_leaky,
+      (Some(c), Iterator.single(PiiStat(key, c.n_docs, c.n_leaky,
         c.n_leaky * 1000000L / c.n_docs,
-        c.cc, c.cv, c.ic, c.iv, c.ph))
+        c.cc, c.cv, c.ic, c.iv, c.ph)))
     }
-  }
-
-  /** [[PiiMonitorProcessor]] wired onto a (source, text) ingest stream;
-    * same RocksDB provider requirement as [[sessionizeWithState]]. */
-  def piiMonitorWithState(docs: Dataset[DocIngest]): Dataset[PiiStat] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new PiiMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a set of declared queries to
   * files — the before/after plan evidence the optimization rounds
   * commit under plans/rNN/. Usage:
   * `sbt "runMain graft.tools.ExplainDump <outDir> <suffix> <regex-or-substring>"`
   * (e.g. `runMain graft.tools.ExplainDump plans/r18 before 'x209.*|x212.*'`).
   * SPARK_GRAFT_SF_DIR picks the data dir (default sf0.1 — plan shapes,
-  * not timings, so a busy machine is fine).
+  * not timings, so a busy machine is fine); SPARK_GRAFT_CPUS the core
+  * count, on Bench's session and default, so the dumped plans are the
+  * plans Bench times.
   *
   * The dump is self-contained for checkpoint-terminated queries: a
   * QueryExecutionListener captures the plan of every action that runs
@@ -23,11 +23,7 @@ object ExplainDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val only = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val captured =
       scala.collection.mutable.Buffer.empty[(String, String)]
@@ -43,12 +39,10 @@ object ExplainDump {
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
       })
-    def matches(n: String): Boolean = only.forall(o =>
-      scala.util.Try(n.matches(o)).getOrElse(false) || n.contains(o))
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => matches(n) }
+      .filter { case (n, _) => graft.SparkEntry.selects(only, n) }
       .foreach { case (name, fn) =>
         try {
           captured.synchronized(captured.clear())

@@ -1323,4 +1323,25 @@ class StreamingSpec extends SparkSpec {
       assert(fin.values.exists(_._6 > 0) && fin.values.exists(_._8 > 0))
     }
   }
+
+  test("one keyed-state wiring: Streaming.scala calls transformWithState once and " +
+    "defines five processors (the generic fold plus the MapState/timer ones)") {
+    val src = new java.io.File("src/main/scala/graft/streaming/Streaming.scala")
+    assert(src.isFile, src.getAbsolutePath)
+    // code lines only: scaladoc/comment lines and trailing comments may
+    // name the API
+    def code(line: String) = line.trim match {
+      case t if t.startsWith("*") || t.startsWith("/*") => ""
+      case t => t.split("//", 2)(0)
+    }
+    val lines = java.nio.file.Files.readAllLines(src.toPath)
+      .toArray(Array.empty[String]).map(code)
+    def count(needle: String) = lines.map(
+      scala.util.matching.Regex.quote(needle).r.findAllIn(_).size).sum
+    assert(count(".transformWithState(") == 1,
+      "a twin wired by hand instead of through Streaming.keyed")
+    assert(count("extends StatefulProcessor") == 5,
+      "a single-ValueState twin written as its own processor instead of a KeyedFold step")
+    assert(count("override def init") == 5)
+  }
 }
