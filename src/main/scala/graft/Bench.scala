@@ -66,6 +66,11 @@ object Bench {
     val t = planText
       .replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=")
+      // a scan's whole Location value, up to the next metadata key: Spark
+      // cuts the value at spark.sql.maxMetadataStringLength (100), so a
+      // long path lost its closing ']' and the bracket sort below parsed
+      // another structure — the text then followed the checkout path
+      .replaceAll("Location: [^\\n]*?(?=, [A-Z][A-Za-z]*: |\\n|$)", "Location: path:")
       .replaceAll("(file|hdfs|s3a?):[^,\\]\\s)]*", "path:")
       .replaceAll("Statistics\\([^)]*\\)", "")
       // typed operators (MapPartitions/Deserialize…) print the closure's

@@ -55,8 +55,4 @@ object Tables {
         s"events.ts stored as unsupported type $other — extend Tables.events")
     }
   }
-
-  /** Register every table as a temp view (SQL surface of the engine). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

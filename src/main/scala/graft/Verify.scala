@@ -93,7 +93,7 @@ object Verify {
     import scala.jdk.CollectionConverters._
     val tasks = selected.toSeq.map { case (name, fn) =>
       new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = {
+        override def call(): Unit = {
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).coalesce(1).write.mode("overwrite")

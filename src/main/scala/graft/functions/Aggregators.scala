@@ -86,27 +86,6 @@ class TopKScored(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
   override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoders.scoredSeq
 }
 
-/** Changelog merge (reference A2, publish_to_catalog.py:93-124): the
-  * per-category counts monoid — a typed Aggregator form of the run
-  * report so the whole changelog reduces map-side. */
-final case class RunCounts(created: Long, updated: Long, errored: Long) {
-  def +(o: RunCounts): RunCounts =
-    RunCounts(created + o.created, updated + o.updated, errored + o.errored)
-}
-
-object RunCountsAgg extends Aggregator[String, RunCounts, RunCounts] {
-  override def zero: RunCounts = RunCounts(0, 0, 0)
-  override def reduce(b: RunCounts, action: String): RunCounts = action match {
-    case "created" => b.copy(created = b.created + 1)
-    case "updated" => b.copy(updated = b.updated + 1)
-    case _ => b.copy(errored = b.errored + 1)
-  }
-  override def merge(a: RunCounts, b: RunCounts): RunCounts = a + b
-  override def finish(r: RunCounts): RunCounts = r
-  override def bufferEncoder: Encoder[RunCounts] = Encoders.product[RunCounts]
-  override def outputEncoder: Encoder[RunCounts] = Encoders.product[RunCounts]
-}
-
 /** One-pass centered-scatter moments for [[graft.operators.Similarity
   * .embeddingAnisotropy]]: accumulates, over milli-quantized embedding
   * vectors, the row count n, the per-dimension component sums

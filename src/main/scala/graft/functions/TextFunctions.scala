@@ -78,23 +78,6 @@ object TextFunctions {
   def normText(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
-  /** Character n-gram shingles over the normalized text (lowercase,
-    * whitespace collapsed). `transform` over an index sequence keeps it
-    * in Catalyst; for n-char windows over an m-char doc there are
-    * m-n+1 shingles. Docs shorter than n → empty array.
-    *
-    * NOTE: materializing shingle *strings* is O(len²) (substring
-    * re-scans UTF-8 offsets) — hot paths should use the single-pass
-    * [[graft.functions.ShingleFunctions.shingle_hashes]] instead; this
-    * form exists for debugging/inspection. */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = normText(text)
-    when(length(norm) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), length(norm) - (n - 1)),
-        i => substring(norm, i, lit(n))))
-  }
-
   /** Word n-gram shingles (arrays of n consecutive word tokens joined
     * by a space). Native one-pass expression — the HOF formulation
     * (`transform(sequence, i => array_join(slice(...)))`) ran its

@@ -211,7 +211,7 @@ object Dedup {
 
   /** Sorted distinct word-n-gram hash sketch (doc_id, hashes), empty
     * docs dropped — THE one Scala rendering of the Jaccard sketch
-    * contract (its oracle twin is ExtensionQueries' gram CTEs; the two
+    * contract (its oracle twin is CorpusHelpers' gram CTEs; the two
     * must change together), shared by the symmetric and cross-corpus
     * near-dup ops. Jaccard over the hash arrays equals Jaccard over
     * shingles (collisions negligible at 64 bits) and shuffles 8-byte
@@ -357,7 +357,7 @@ object Dedup {
     * (1 − minJaccard)^prefixK — ~0.4% at the (0.5, 8) defaults but
     * ~17% at (0.2, 8). The filter is NOT recall-safe for arbitrary
     * thresholds: when lowering `minJaccard`, raise `prefixK` to match
-    * ([[prefixKFor]] computes the k that keeps the miss probability
+    * (k = ⌈ln ε / ln(1 − minJaccard)⌉ keeps the miss probability
     * under a chosen ε).
     *
     * Scale: the corpus side is sketched once (8-byte hash arrays, ~3
@@ -394,18 +394,6 @@ object Dedup {
       .select(col("new_id"), col("old_id"),
         round(sorted_jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-  }
-
-  /** Smallest `prefixK` whose bottom-k prefix filter misses a true
-    * pair at Jaccard = `minJaccard` with probability ≤ `epsilon`:
-    * ⌈ln ε / ln(1 − minJaccard)⌉. E.g. (0.5, 1%) → 7; (0.2, 1%) → 21.
-    * Larger k only widens the candidate join (more prefix hashes per
-    * doc), never changes verified output — the exact-Jaccard rescore
-    * is the precision gate. */
-  def prefixKFor(minJaccard: Double, epsilon: Double = 0.01): Int = {
-    require(minJaccard > 0 && minJaccard < 1, s"minJaccard in (0,1): $minJaccard")
-    require(epsilon > 0 && epsilon < 1, s"epsilon in (0,1): $epsilon")
-    math.ceil(math.log(epsilon) / math.log1p(-minJaccard)).toInt.max(1)
   }
 
   /** Connected components over near-dup PAIRS → cluster ids: the step

@@ -121,24 +121,6 @@ object Layout {
       .parquet(path)
   }
 
-  /** [[writePartitioned]] under the atomic snapshot-pointer layout
-    * (VERDICT r15 item 3): the partitioned snapshot materializes into
-    * a fresh `snap-N` directory and publishes with one pointer flip —
-    * `mode(overwrite)` on a LIVE path deletes it before rewriting, so
-    * a concurrent reader of the plain layout can see a vanishing or
-    * half-written table; here it resolves either the old snapshot or
-    * the new one. Read with `SnapshotStore.read` (partition discovery
-    * and pruning behave exactly as on a plain partitioned path — the
-    * snapshot dir IS one). Returns the Commit receipt — check
-    * `becameCurrent` if the write derived from the previous current
-    * snapshot (a racing newer writer supersedes this one). */
-  def writePartitionedSnapshot(df: DataFrame, tablePath: String,
-      partCols: Seq[String], sortCols: Seq[String],
-      maxRecordsPerFile: Long = 5000000L): graft.sources.SnapshotStore.Commit =
-    graft.sources.SnapshotStore.writeWith(df.sparkSession, tablePath) { dir =>
-      writePartitioned(df, dir, partCols, sortCols, maxRecordsPerFile)
-    }
-
   /** Broadcast-eligibility advisor: for each table, a deterministic
     * in-memory size estimate against the broadcast threshold — the
     * planning read behind every "should this dimension broadcast"

@@ -630,24 +630,6 @@ object Multimodal {
     }
   }
 
-  /** Deterministic frame sampling: pick `n` evenly-spaced byte slices
-    * as stand-in "frames" (real plumbing: explode to one row per
-    * frame, frame index carried; a video codec would emit decoded
-    * frames here). */
-  def sampleFrames(media: Dataset[MediaRecord], n: Int, frameBytes: Int = 256): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { m =>
-      val len = m.bytes.length
-      if (len == 0) Iterator.empty
-      else (0 until n).iterator.map { i =>
-        val start = ((len.toLong * i) / n).toInt
-        val end = math.min(len, start + frameBytes)
-        (m.media_id, i, java.util.Arrays.copyOfRange(m.bytes, start, end))
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes")
-  }
-
   final case class MediaHash(media_id: Long, phash: Long)
 
   /** Perceptual hash (dHash shape) over the payload's 32-bin byte
@@ -703,17 +685,4 @@ object Multimodal {
         expr("cast(bit_count(__pa ^ __pb) as int)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
-
-  /** Resize stub: re-bucket the byte histogram to `bins` bins — the
-    * plan shape of an image resize (per-row transform of a fixed-width
-    * numeric array, codegen-friendly input, batched compute). Bucket
-    * boundaries are floor(i·n/bins)..floor((i+1)·n/bins) so every
-    * source element lands in exactly one bucket even when `bins` does
-    * not divide the histogram size (mass is conserved). */
-  def rebinHistogram(features: DataFrame, bins: Int): DataFrame =
-    features.withColumn("histogram",
-      expr(s"transform(sequence(0, ${bins - 1}), i -> " +
-        s"aggregate(slice(histogram, int(i * size(histogram) / $bins) + 1, " +
-        s"int((i + 1) * size(histogram) / $bins) - int(i * size(histogram) / $bins)), " +
-        "0D, (a, x) -> a + x))"))
 }

@@ -94,13 +94,16 @@ object Preferences {
               "(n_wins * CAST(1000000000000 AS DECIMAL(38,0))) div __d"))
             .as("__r"))
       val mx = raw.agg(max(col("__r")).as("__mx"))
-      s = raw.crossJoin(broadcast(mx))
+      val next = raw.crossJoin(broadcast(mx))
         .filter(col("__mx") > 0)
         .select(col("item"),
           greatest(expr(
             "(__r * CAST(1000000 AS DECIMAL(38,0))) div __mx"), lit(1L))
             .as("__s"))
         .transform(Materialize(_, "Preferences.bradleyTerry: round"))
+      // the next round's snapshot exists: free the previous one
+      Materialize.release(s)
+      s = next
     }
     items.join(s, "item")
       .select(col("item"), col("n_wins"), col("n_comparisons"),

@@ -1866,11 +1866,15 @@ object Profile {
         .select(col("__c"),
           expr("(__tc * CAST(1000000 AS DECIMAL(38,0))) div __m")
             .as("__sc"))
-      w = afterRow.join(broadcast(colScale), Seq("__c"))
+      val next = afterRow.join(broadcast(colScale), Seq("__c"))
         .select(col("__r"), col("__c"), col("__n"),
           greatest(expr("(__w * __sc) div 1000000"), lit(1).cast(dec))
             .as("__w"))
         .transform(Materialize(_, "Profile.rakingWeights: round"))
+      // the next round's snapshot exists: free the previous one (a
+      // no-op for round 1's `w`, which is not a checkpoint)
+      Materialize.release(w)
+      w = next
     }
     val totMass = w.agg(sum(col("__n").cast(dec) * col("__w")).as("__tm"))
     w.crossJoin(broadcast(totMass))

@@ -1491,10 +1491,13 @@ object Sequences {
           expr("(pi_micro * n) div tot").as("__m"))
         .groupBy(col("state"))
         .agg(sum(col("__m")).cast("bigint").as("__pi2"))
-      pi = states.join(stepped, Seq("state"), "left")
+      val next = states.join(stepped, Seq("state"), "left")
         .select(col("state"),
           coalesce(col("__pi2"), lit(0L)).as("pi_micro"))
         .transform(Materialize(_, "Sequences.markovStationary: round"))
+      // the next round's snapshot exists: free the previous one
+      Materialize.release(pi)
+      pi = next
     }
     pi.select(col("state").as("event_type"), col("pi_micro"))
       .orderBy(col("event_type"))

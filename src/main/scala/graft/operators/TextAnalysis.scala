@@ -1520,8 +1520,7 @@ object TextAnalysis {
     * to the FIRST quality rule it fails (too_short → length_outlier →
     * repetitive → boilerplate → kept), and the output is the per-rule
     * document/char count — the pretraining-filter funnel view ("which
-    * rule costs how much corpus"), the oracle-checkable sibling of
-    * [[graft.pipelines.CorpusPipeline]]'s attrition report.
+    * rule costs how much corpus").
     *
     * Ordering matters and is part of the contract: attribution is
     * first-fail, so rule counts change if the funnel is reordered
@@ -2739,37 +2738,6 @@ object TextAnalysis {
         when(col("l").isNull || col("r").isNull, col("syms"))
           .otherwise(bpe_apply_merge(col("syms"), col("l"), col("r")))
           .as("syms"))
-  }
-
-  /** The pre-r18 window-plan form of [[applyBestPair]] — retained
-    * (test-only) as the executable specification the kernel is pinned
-    * against: TextAnalysisSpec runs both over randomized vocabularies
-    * and asserts identical output. Never called from a query path. */
-  private[graft] def applyBestPairViaWindows(vocab: DataFrame,
-      best: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wp = Window.partitionBy(col("wid")).orderBy(col("p"))
-    val pos = vocab.join(broadcast(best.select(col("l"), col("r"))),
-        lit(true), "left")
-      .select(col("wid"), col("c"), col("l"), col("r"),
-        posexplode(col("syms")).as(Seq("p", "s")))
-    val m = pos
-      .withColumn("mt", coalesce(col("s") === col("l") &&
-        lead(col("s"), 1).over(wp) === col("r"), lit(false)))
-      .withColumn("isl", col("p") - sum(when(col("mt"), 1L).otherwise(0L))
-        .over(wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val wisl = Window.partitionBy(col("wid"), col("isl"))
-    m.withColumn("sel", col("mt") &&
-        ((col("p") - min(when(col("mt"), col("p"))).over(wisl)) % 2 === 0))
-      .withColumn("lead_s", lead(col("s"), 1).over(wp))
-      .withColumn("prev_sel", coalesce(lag(col("sel"), 1).over(wp), lit(false)))
-      .filter(!col("prev_sel"))
-      .select(col("wid"), col("c"), col("p"),
-        when(col("sel"), concat(col("s"), col("lead_s")))
-          .otherwise(col("s")).as("s2"))
-      .groupBy(col("wid"), col("c"))
-      .agg(expr("transform(array_sort(collect_list(struct(p, s2))), x -> x.s2)")
-        .as("syms"))
   }
 
   /** BPE ENCODER — applies an already-induced merge table to NEW text

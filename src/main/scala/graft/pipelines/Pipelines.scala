@@ -269,25 +269,8 @@ object StopsPipeline {
     }
 
     // S5: distributed header-aware parse to the fixed raw-stop schema.
-    // The reference splits lines naively on ',' then strips quotes
-    // (:165, :148-154) — mirrored here; short lines drop (:166).
     val raw = stopsText.as[(String, String)].flatMap { case (feedId, text) =>
-      val lines = text.split("\r?\n").iterator
-        .map(l => if (l.nonEmpty && l.charAt(0) == '﻿') l.substring(1) else l)
-        .filter(_.trim.length > 1).toSeq
-      if (lines.isEmpty) Iterator.empty
-      else {
-        val header = lines.head.split(",", -1).map(_.replace("\"", "").trim)
-        val idx = header.zipWithIndex.toMap
-        def cell(parts: Array[String], name: String): String =
-          idx.get(name).filter(_ < parts.length).map(parts(_)).orNull
-        lines.iterator.drop(1).map { line =>
-          val p = line.split(",", -1)
-          (feedId, cell(p, "stop_name"), cell(p, "stop_lat"), cell(p, "stop_lon"),
-            cell(p, "stop_id"), cell(p, "stop_code"), cell(p, "zone_id"),
-            cell(p, "location_type"))
-        }
-      }
+      GtfsCsv.stopRows(feedId, text)
     }.toDF("feed_id", "stop_name", "stop_lat", "stop_lon",
       "stop_id", "stop_code", "zone_id", "location_type")
 

@@ -451,7 +451,7 @@ object RelationalQueries extends QueryFamily {
     * round-trip) so the result is non-empty and stable at every sf. */
   val q29 = query("q29_token_explode",
     s"""WITH t AS (
-       |  SELECT unnest(${ExtensionQueries.wordsSql("text")}) AS token
+       |  SELECT unnest(${CorpusHelpers.wordsSql("text")}) AS token
        |  FROM documents)
        |SELECT token, count(*) AS n FROM t GROUP BY token
        |HAVING count(*) >= (SELECT count(*) FROM documents)

@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** S5 — GTFS stops.txt CSV semantics (SURVEY §2.1 S5, §1.3):
   * header row, UTF-8 BOM tolerated (publish_to_catalog.py:157 decodes
   * UTF-8-sig), stray quotes/whitespace on cells (cleaned later by
@@ -11,41 +8,29 @@ import org.apache.spark.sql.functions._
   */
 object GtfsCsv {
 
-  /** Strip a UTF-8 BOM from the first line (UTF-8-sig semantics). */
-  def stripBom(lines: Dataset[String]): Dataset[String] = {
-    import lines.sparkSession.implicits._
-    lines.map(l => if (l.nonEmpty && l.charAt(0) == '\uFEFF') l.substring(1) else l)
-  }
-
-  /** Parse stops.txt content (one element per line) into a DataFrame
-    * with the header row as schema — all columns string-typed
-    * (schema-on-read; typed casts happen in StopsTransforms). */
-  def parseStops(spark: SparkSession, lines: Dataset[String]): DataFrame = {
-    import spark.implicits._
-    val clean = stripBom(lines).filter(l => l.trim.length > 1) // :166
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(clean)
-  }
-
-  /** Convenience: zip bytes of one feed → parsed stops DataFrame.
-    * `member` defaults to the GTFS-mandated stops file; falls back to
-    * any entry ending in the member name (archives nest under a
-    * directory, like GTFS_PLACEHOLDER.zip's `GTFS_PLACEHOLDER/…`
-    * layout, publish_to_catalog.py:449). */
-  def stopsFromZip(spark: SparkSession, zipBytes: Array[Byte],
-      member: String = "stops.txt"): DataFrame = {
-    import spark.implicits._
-    val entries = Seq(Tuple1(zipBytes)).toDF("content")
-      .select(ZipFunctions.zip_entries(col("content")).as(Seq("entry_name", "bytes")))
-      // exact basename match: bare `endsWith` would also catch
-      // "backup_stops.txt" and splice its header in as a data row
-      .filter(col("entry_name") === member ||
-        col("entry_name").endsWith("/" + member))
-      .select(decode(col("bytes"), "UTF-8").as("text"))
-      .as[String]
-      .flatMap(_.split("\r?\n"))
-    parseStops(spark, entries)
+  /** One feed's stops.txt text → its raw stop rows, (feed_id,
+    * stop_name, stop_lat, stop_lon, stop_id, stop_code, zone_id,
+    * location_type), every cell a string (typed casts happen in
+    * StopsTransforms; a column the header lacks is null). The reference
+    * splits lines naively on ',' then strips quotes from the header
+    * (:165, :148-154) — mirrored here; short lines drop (:166). */
+  def stopRows(feedId: String, text: String)
+      : Iterator[(String, String, String, String, String, String, String, String)] = {
+    val lines = text.split("\r?\n").iterator
+      .map(l => if (l.nonEmpty && l.charAt(0) == '\uFEFF') l.substring(1) else l)
+      .filter(_.trim.length > 1).toSeq
+    if (lines.isEmpty) Iterator.empty
+    else {
+      val header = lines.head.split(",", -1).map(_.replace("\"", "").trim)
+      val idx = header.zipWithIndex.toMap
+      def cell(parts: Array[String], name: String): String =
+        idx.get(name).filter(_ < parts.length).map(parts(_)).orNull
+      lines.iterator.drop(1).map { line =>
+        val p = line.split(",", -1)
+        (feedId, cell(p, "stop_name"), cell(p, "stop_lat"), cell(p, "stop_lon"),
+          cell(p, "stop_id"), cell(p, "stop_code"), cell(p, "zone_id"),
+          cell(p, "location_type"))
+      }
+    }
   }
 }

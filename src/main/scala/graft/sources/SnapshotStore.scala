@@ -142,36 +142,6 @@ object SnapshotStore {
     spark.read.parquet(fs.makeQualified(dir).toString)
   }
 
-  /** Snapshot inventory: (version, is_current, claimed-only?,
-    * modification time) for everything on disk — the audit view
-    * behind [[readVersion]] and [[vacuum]] decisions. A version with
-    * a claim marker but no directory is a crashed writer's orphan
-    * claim (skipped number); a directory above the current pointer is
-    * a commit racing right now or a superseded forward-only loser. */
-  def history(spark: SparkSession, tablePath: String): Seq[SnapshotInfo] = {
-    val table = new Path(tablePath)
-    val fs = fsOf(spark, table)
-    if (!fs.exists(table)) return Seq.empty
-    val cur = currentVersion(spark, tablePath)
-    val statuses = fs.listStatus(table).toSeq
-    def versionOf(n: String, prefix: String): Option[Long] =
-      if (n.startsWith(prefix))
-        scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-      else None
-    val dirs = statuses.flatMap(st =>
-      versionOf(st.getPath.getName, "snap-")
-        .map(v => v -> st.getModificationTime)).toMap
-    val claims = statuses.flatMap(st =>
-      versionOf(st.getPath.getName, ".claim-snap-")).toSet
-    (dirs.keySet ++ claims).toSeq.sorted.map { v =>
-      SnapshotInfo(v, cur.contains(v), dirs.contains(v),
-        dirs.getOrElse(v, 0L))
-    }
-  }
-
-  final case class SnapshotInfo(version: Long, isCurrent: Boolean,
-    materialized: Boolean, modifiedMs: Long)
-
   /** Commit receipt (ADVICE r17): `version` is the snapshot the writer
     * materialized (always durable on disk, readable via
     * [[readVersion]] until vacuumed); `becameCurrent` says whether the

@@ -12,12 +12,6 @@ object CatalogTransforms {
   def hasTag(tags: Column, tag: String): Column =
     tags.isNotNull && array_contains(tags, tag)
 
-  /** P1 — thumbprint projection (:55-66): (name, feed_id) from either
-    * a catalog row (feed id embedded in description) or an agency row. */
-  def catalogThumbprint(df: DataFrame): DataFrame =
-    df.select(col("name"),
-      StopsTransforms.extractFeedId(coalesce(col("description"), lit(""))).as("feed_id"))
-
   /** P2 — optional field with default '' (`getMetadataFieldIfExists`,
     * :370-373). */
   def fieldOrEmpty(df: DataFrame, name: String): Column =
@@ -95,10 +89,6 @@ object CatalogTransforms {
     * keys absent from the incoming batch. */
   def deleteSet(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
     existing.join(incoming, Seq(key), "left_anti")
-
-  /** J3 — keep-set (:267-281): dual of J2. */
-  def keepSet(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
-    existing.join(incoming, Seq(key), "left_semi")
 
   /** J5 — keyed upsert/merge: incoming wins, unmatched target rows
     * survive (the plain-Spark MERGE: source ∪ (target ⟕̸ source)).

@@ -77,6 +77,27 @@ class BenchSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
+  test("normalizeText: one parquet query read from a short and from a long " +
+      "directory (its Location value cut at 100 characters) gives one text") {
+    val base = java.nio.file.Files.createTempDirectory("graft-loc").toFile
+    try {
+      def planned(dir: java.io.File): String = {
+        val path = new java.io.File(dir, "t.parquet").getAbsolutePath
+        spark.range(0, 20).toDF("id").write.mode("overwrite").parquet(path)
+        spark.read.parquet(path).filter("id > 3").selectExpr("id * 2 AS v")
+          .queryExecution.executedPlan.toString
+      }
+      val short = planned(new java.io.File(base, "s"))
+      val long = planned(new java.io.File(base, "l" * 120))
+      // the long value is cut and loses its closing ']'; the short one is not
+      def location(plan: String) = "Location: [^\\n]*".r.findFirstIn(plan).get
+      assert(!location(short).contains("...") && location(long).contains("..."),
+        s"$short\n$long")
+      assert(Bench.normalizeText(short) == Bench.normalizeText(long),
+        s"${Bench.normalizeText(short)}\n${Bench.normalizeText(long)}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+
   test("query ledger: round-trips ok and error records (incl. control chars " +
       "in the error), skips non-query and torn trailing lines") {
     val ok = Bench.queryLedgerLine("q01_scan", 0.253, 0.07, 3, "deadbeef", None)

@@ -38,12 +38,6 @@ class AggregatorsSpec extends SparkSpec {
     assert(agg.merge(full, full).length == 2)
   }
 
-  test("RunCountsAgg reduces a changelog action stream map-side") {
-    val ds = Seq("created", "updated", "updated", "errored", "created").toDS()
-    val r = ds.groupByKey(_ => 1).agg(RunCountsAgg.toColumn).collect()(0)._2
-    assert(r == RunCounts(2, 2, 1))
-  }
-
   test("ScatterMoments: quantization is bit-identical to the SQL " +
     "round(v*1000.0) it replaced, including .5-boundary adversaries") {
     import org.apache.spark.sql.functions._

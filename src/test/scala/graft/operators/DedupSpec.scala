@@ -91,28 +91,11 @@ class DedupSpec extends SparkSpec {
     assert(out(1)._3 < 1.0 && out(1)._3 >= 0.5)
   }
 
-  test("prefixKFor sizes the bottom-k filter for a target miss probability") {
-    // ceil(ln eps / ln(1-J)): spot-check against hand computation
-    assert(Dedup.prefixKFor(0.5, 0.01) == 7)
-    assert(Dedup.prefixKFor(0.2, 0.01) == 21)
-    assert(Dedup.prefixKFor(0.8, 0.01) == 3)
-    // the bound actually holds at the returned k: (1-J)^k <= eps
-    for (j <- Seq(0.1, 0.3, 0.5, 0.7, 0.9); eps <- Seq(0.05, 0.01, 0.001)) {
-      val k = Dedup.prefixKFor(j, eps)
-      assert(math.pow(1 - j, k.toDouble) <= eps + 1e-12, s"j=$j eps=$eps k=$k")
-      // and k is minimal: one fewer hash would exceed the budget
-      if (k > 1)
-        assert(math.pow(1 - j, (k - 1).toDouble) > eps, s"j=$j eps=$eps k=$k not minimal")
-    }
-    intercept[IllegalArgumentException](Dedup.prefixKFor(0.0))
-    intercept[IllegalArgumentException](Dedup.prefixKFor(0.5, 0.0))
-  }
-
   test("crossNearDup with derived prefixK keeps low-overlap true pairs") {
     // a pair engineered to sit just above a LOW threshold: 4 shared
     // words of 13/13 → trigram overlap well under the 0.5 default.
-    // At prefixK=2 the bottom-k filter can miss it; prefixKFor(0.1)
-    // widens the prefix enough that the candidate join must surface it
+    // At prefixK=2 the bottom-k filter can miss it; k = 90 widens the
+    // prefix enough that the candidate join must surface it
     // (with 64-bit hashes the pair shares >= 1 bottom hash whenever the
     // sketch intersection is nonempty and k >= sketch size).
     val incoming = Seq(
@@ -121,7 +104,9 @@ class DedupSpec extends SparkSpec {
     val standing = Seq(
       (1L, "alpha beta gamma delta unrelated words fill the rest of this line here"))
       .toDF("doc_id", "text")
-    val k = Dedup.prefixKFor(0.05, 0.01) // 90 — covers both docs' full sketches
+    // ceil(ln eps / ln(1 - J)) at (J, eps) = (0.05, 0.01) is 90, which
+    // covers both docs' full sketches
+    val k = 90
     val out = Dedup.crossNearDup(incoming, standing, "doc_id", "text",
         ngram = 3, prefixK = k, minJaccard = 0.05)
       .select($"new_id", $"old_id").as[(Long, Long)].collect()

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.testutil.SourceScan
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ListenerBus
 import org.scalatest.concurrent.Eventually._
@@ -13,21 +15,13 @@ import org.scalatest.time.SpanSugar._
 class MaterializeSpec extends SparkSpec {
 
   test("no code outside Materialize checkpoints or releases a frame directly") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, root.getAbsolutePath)
     val call = """(?<!def )\b(localCheckpoint|unpersistCheckpoint)\(""".r
-    val files = org.apache.commons.io.FileUtils
-      .listFiles(root, Array("scala"), true).toArray(Array.empty[java.io.File])
+    val files = SourceScan.scalaFiles("src/main/scala")
     // code lines only: scaladoc/comment lines and trailing comments
     // may name the primitive
-    def code(line: String) = line.trim match {
-      case t if t.startsWith("*") || t.startsWith("/*") => ""
-      case t => t.split("//", 2)(0)
-    }
-    val calls = files.toSeq.filter(_.getName != "Materialize.scala").flatMap { f =>
-      val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      lines.zipWithIndex.collect {
-        case (line, i) if call.findFirstIn(code(line)).isDefined => s"${f.getName}:${i + 1}"
+    val calls = files.filter(_.getName != "Materialize.scala").flatMap { f =>
+      SourceScan.codeLines(f).zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined => s"${f.getName}:${i + 1}"
       }
     }
     // The one exemption: Bench's calib_io_sec probe times the raw
@@ -106,6 +100,50 @@ class MaterializeSpec extends SparkSpec {
     assert(!sc.getPersistentRDDs.contains(id))
     eventually(timeout(30.seconds), interval(200.millis)) {
       intercept[Exception](cp.count())
+    }
+  }
+
+  test("bradleyTerry, markovStationary and rakingWeights pin as many checkpoints " +
+    "after 6 rounds as after 2: each round frees the one before") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val prefs = Seq(("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"), ("B", "A"))
+      .toDF("winner", "loser")
+    val events = Seq((1L, 1L, "a"), (1L, 2L, "b"), (1L, 3L, "a"), (2L, 4L, "b"),
+        (2L, 5L, "b"), (2L, 6L, "a"))
+      .toDF("user_id", "event_id", "event_type")
+      .withColumn("ts", timestamp_seconds(col("event_id")))
+    val cells = Seq(("r1", "c1"), ("r1", "c1"), ("r1", "c2"), ("r2", "c1"),
+      ("r2", "c2"), ("r2", "c2")).toDF("lang", "source")
+    // The checkpoints a call leaves pinned. getPersistentRDDs holds its
+    // RDDs weakly, so a garbage collection could drop an unreleased round
+    // and hide it: every persisted RDD is held strongly from the start of
+    // the job that fills it, and only a release takes it out of the map.
+    def pinned(build: => DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val held = java.util.concurrent.ConcurrentHashMap
+        .newKeySet[org.apache.spark.rdd.RDD[_]]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          sc.getPersistentRDDs.values.foreach(held.add)
+      }
+      ListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(build.collect().nonEmpty)
+        ListenerBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      held.toArray(Array.empty[org.apache.spark.rdd.RDD[_]])
+        .count(r => !before(r.id) && sc.getPersistentRDDs.contains(r.id))
+    }
+    Seq[(String, Int => DataFrame)](
+      "bradleyTerry" -> (r => Preferences.bradleyTerry(prefs, rounds = r)),
+      "markovStationary" -> (r => Sequences.markovStationary(events, iters = r)),
+      "rakingWeights" -> (r => Profile.rakingWeights(cells, iterations = r))
+    ).foreach { case (name, run) =>
+      val at2 = pinned(run(2))
+      val at6 = pinned(run(6))
+      assert(at2 > 0 && at2 == at6, s"$name: $at2 pinned after 2 rounds, $at6 after 6")
     }
   }
 

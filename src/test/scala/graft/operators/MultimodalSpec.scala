@@ -397,14 +397,6 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(f(1L).histogram.sum - 1.0) < 1e-9)
   }
 
-  test("sampleFrames: n frames per media row, bounded slices") {
-    val frames = Multimodal.sampleFrames(media, n = 4, frameBytes = 100)
-    assert(frames.count() == 200)
-    val bad = frames.filter(length(col("frame_bytes")) > 100).count()
-    assert(bad == 0)
-    assert(frames.groupBy("media_id").count().filter(col("count") =!= 4).count() == 0)
-  }
-
   test("fingerprintDup pairs docs with identical content fingerprints") {
     val d = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again"),
@@ -414,17 +406,6 @@ class MultimodalSpec extends SparkSpec {
     val pairs = TextAnalysis.fingerprintDup(d)
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
-  }
-
-  test("rebinHistogram halves the bins preserving mass") {
-    val f = Multimodal.extractFeatures(media).toDF()
-    val r = Multimodal.rebinHistogram(f, 8)
-      .select(size(col("histogram")).as("n"),
-        aggregate(col("histogram"), lit(0.0), _ + _).as("mass")).collect()
-    r.foreach { row =>
-      assert(row.getInt(0) == 8)
-      assert(math.abs(row.getDouble(1) - 1.0) < 1e-9)
-    }
   }
 
   test("decodeMp4: REAL ISO-BMFF bytes decode to (duration_ms, n_tracks, " +

@@ -240,12 +240,12 @@ class OperatorPropertiesSpec extends SparkSpec {
   }
 
   test("x63 over-cap degradation: exact semi-join screen, same counts, fp_ok pinned") {
-    import graft.queries.ExtensionQueries
+    import graft.queries.JoinsQueries
     val sf001 = "/root/testdata/sf0.001"
-    val capped = ExtensionQueries.x63(spark, sf001)
+    val capped = graft.testutil.Declared("x63")(spark, sf001)
       .as[(Long, Long, Long, Boolean)].head()
     // force the over-cap path: a 1-bit cap can never hold the floor
-    val fallback = ExtensionQueries.bloomPrescreen(spark, sf001, maxNumBits = 1L)
+    val fallback = JoinsQueries.bloomPrescreen(spark, sf001, maxNumBits = 1L)
       .as[(Long, Long, Long, Boolean)].head()
     // exact counts are screen-independent; both paths must agree
     assert(fallback._1 == capped._1 && fallback._2 == capped._2)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** Unit semantics for the corpus text-analysis operators added in
@@ -471,6 +471,38 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.toSeq == Seq(("aaaaa", 1L, Seq("aa", "aaa"))))
   }
 
+  /** The pre-r18 window-plan form of [[TextAnalysis.applyBestPair]]:
+    * posexplode → two wid-partitioned window passes → collect_list
+    * re-assembly. The executable specification the greedy kernel is
+    * pinned against below. */
+  private def applyBestPairViaWindows(vocab: DataFrame,
+      best: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val wp = Window.partitionBy(col("wid")).orderBy(col("p"))
+    val pos = vocab.join(broadcast(best.select(col("l"), col("r"))),
+        lit(true), "left")
+      .select(col("wid"), col("c"), col("l"), col("r"),
+        posexplode(col("syms")).as(Seq("p", "s")))
+    val m = pos
+      .withColumn("mt", coalesce(col("s") === col("l") &&
+        lead(col("s"), 1).over(wp) === col("r"), lit(false)))
+      .withColumn("isl", col("p") - sum(when(col("mt"), 1L).otherwise(0L))
+        .over(wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val wisl = Window.partitionBy(col("wid"), col("isl"))
+    m.withColumn("sel", col("mt") &&
+        ((col("p") - min(when(col("mt"), col("p"))).over(wisl)) % 2 === 0))
+      .withColumn("lead_s", lead(col("s"), 1).over(wp))
+      .withColumn("prev_sel", coalesce(lag(col("sel"), 1).over(wp), lit(false)))
+      .filter(!col("prev_sel"))
+      .select(col("wid"), col("c"), col("p"),
+        when(col("sel"), concat(col("s"), col("lead_s")))
+          .otherwise(col("s")).as("s2"))
+      .groupBy(col("wid"), col("c"))
+      .agg(expr("transform(array_sort(collect_list(struct(p, s2))), x -> x.s2)")
+        .as("syms"))
+  }
+
   test("applyBestPair: the r18 greedy kernel is row-identical to the " +
       "window-plan form on randomized low-alphabet vocabularies " +
       "(consecutive-match runs, multi-char symbols, no-match rounds)") {
@@ -490,7 +522,7 @@ class TextAnalysisSpec extends SparkSpec {
       val best = Seq((l, r)).toDF("l", "r")
       val viaKernel = TextAnalysis.applyBestPair(vocab, best)
         .as[(String, Long, Seq[String])].collect().sortBy(_._1)
-      val viaWindows = TextAnalysis.applyBestPairViaWindows(vocab, best)
+      val viaWindows = applyBestPairViaWindows(vocab, best)
         .as[(String, Long, Seq[String])].collect().sortBy(_._1)
       assert(viaKernel.toSeq == viaWindows.toSeq, s"merge ($l,$r) diverged")
     }

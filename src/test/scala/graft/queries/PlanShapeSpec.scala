@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.testutil.Declared
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, count, lit, row_number, sum}
@@ -54,15 +55,15 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x06: brute-force scoring broadcasts the query side (no cartesian shuffle)") {
-    val plan = physical(ExtensionQueries.x06(spark, sf001))
+    val plan = physical(Declared("x06")(spark, sf001))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x189/x190/x192/x194: recall/mining rankings ride the bounded-heap " +
       "aggregator (zero WindowExec) with the query side broadcast") {
-    Seq(ExtensionQueries.x189, ExtensionQueries.x190,
-        ExtensionQueries.x192, ExtensionQueries.x194).foreach { q =>
+    Seq(Declared("x189"), Declared("x190"),
+        Declared("x192"), Declared("x194")).foreach { q =>
       val plan = physical(q(spark, sf001))
       // long corpus ids take the TopKScored path: a WindowExec here
       // would mean the whole scored corpus shuffles into one partition
@@ -77,12 +78,12 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x191/x193: audit aggregations keep partial+final combine and " +
       "no corpus-wide window") {
-    val ood = physical(ExtensionQueries.x191(spark, sf001))
+    val ood = physical(Declared("x191")(spark, sf001))
     assert(!ood.contains("WindowExec"), ood.take(4000))
     assert(ood.contains("partial_"), ood.take(4000))
     // the (label, dim) stats frame joins back as a broadcast
     assert(ood.contains("BroadcastHashJoin"), ood.take(4000))
-    val sweep = physical(ExtensionQueries.x193(spark, sf001))
+    val sweep = physical(Declared("x193")(spark, sf001))
     // the only windows in the sweep are the prefix-sum offset window
     // over the tiny P×strata totals frame — the blanket gate checks
     // the agg-below rule; here pin that no SortMergeJoin sneaks into
@@ -123,7 +124,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x09: quality features carry no HOF lambda (would break whole-stage codegen)") {
     // the aggregate() HOF formulation showed up as a lambdafunction in
     // the projection and disqualified the whole stage from codegen
-    val plan = physical(ExtensionQueries.x09(spark, sf001))
+    val plan = physical(Declared("x09")(spark, sf001))
     assert(!plan.contains("lambdafunction"), plan)
   }
 
@@ -148,13 +149,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x17: as-of join is one hash exchange on the key — no join node at all") {
-    val plan = physical(ExtensionQueries.x17(spark, sf001))
+    val plan = physical(Declared("x17")(spark, sf001))
     assert(hashExchanges(plan) == 1, plan)
     assert(!plan.contains("Join"), plan)
   }
 
   test("x19: binned range join is an equi-join on the bin, not a cartesian/BNLJ") {
-    val plan = physical(ExtensionQueries.x19(spark, sf001))
+    val plan = physical(Declared("x19")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
@@ -174,7 +175,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x26: fixed-centroid assignment is a narrow projection (no shuffle before list join)") {
-    val plan = physical(ExtensionQueries.x26(spark, sf001))
+    val plan = physical(Declared("x26")(spark, sf001))
     // the corpus side must reach the list_id bucket join through
     // projections only; the probe side is the broadcast
     assert(plan.contains("BroadcastExchange"), plan)
@@ -185,63 +186,63 @@ class PlanShapeSpec extends SparkSpec {
     // (the post-join distinct/agg still shuffle — but only MATCHING
     // (doc_id, gram) pairs; the corpus side reaches the join without
     // a shuffle of its own)
-    val plan = physical(ExtensionQueries.x27(spark, sf001))
+    val plan = physical(Declared("x27")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("ShuffledHashJoin"), plan)
   }
 
   test("x37: group sizes broadcast onto the pair frame; no cartesian") {
-    val plan = physical(ExtensionQueries.x37(spark, sf001))
+    val plan = physical(Declared("x37")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x38: one partial+final hash agg, no join or window in the plan") {
-    val plan = physical(ExtensionQueries.x38(spark, sf001))
+    val plan = physical(Declared("x38")(spark, sf001))
     assert(plan.contains("partial_count") || plan.contains("partial_min"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x39: percentile bounds broadcast; the corpus side is never shuffled for the join") {
-    val plan = physical(ExtensionQueries.x39(spark, sf001))
+    val plan = physical(Declared("x39")(spark, sf001))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
   test("x40: sequences build as one partial+final objectagg, no window exchange") {
-    val plan = physical(ExtensionQueries.x40(spark, sf001))
+    val plan = physical(Declared("x40")(spark, sf001))
     assert(plan.contains("partial_collect_list") || plan.contains("ObjectHashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x41: signature projection is codegen-compiled (no interpreted HOF)") {
-    val plan = physical(ExtensionQueries.x41(spark, sf001))
+    val plan = physical(Declared("x41")(spark, sf001))
     assert(!plan.contains("lambdafunction"), plan)
   }
 
   test("x43: metric joins are hash joins on the doc id, bounds broadcast, no cartesian") {
-    val plan = physical(ExtensionQueries.x43(spark, sf001))
+    val plan = physical(Declared("x43")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x44: stratum rates broadcast onto a map-side filter; corpus never sort-merge joined") {
-    val plan = physical(ExtensionQueries.x44(spark, sf001))
+    val plan = physical(Declared("x44")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
   test("x45: one window over the key partition, no join in the plan") {
-    val plan = physical(ExtensionQueries.x45(spark, sf001))
+    val plan = physical(Declared("x45")(spark, sf001))
     assert(plan.contains("Window"), plan)
     assert(!plan.contains("Join"), plan)
   }
 
   test("x46: per-group top-k is a partial-merging aggregate, NOT a window sort") {
-    val plan = physical(ExtensionQueries.x46(spark, sf001))
+    val plan = physical(Declared("x46")(spark, sf001))
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
     assert(!plan.contains("Window"), plan)
   }
@@ -260,7 +261,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x58: BM25 ranks via the bounded heap, NOT a per-query window") {
-    val plan = physical(ExtensionQueries.x58(spark, sf001))
+    val plan = physical(Declared("x58")(spark, sf001))
     // ranking must be the TopKScored aggregate: a row_number window
     // would shuffle EVERY candidate doc for a query into one partition
     // (heavy-hitter skew on common-term queries)
@@ -274,20 +275,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x59: per-source cap is a bounded-heap aggregate, NOT a corpus window") {
-    val plan = physical(ExtensionQueries.x59(spark, sf001))
+    val plan = physical(Declared("x59")(spark, sf001))
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Join"), plan)
   }
 
   test("x60: vocabulary membership probe is a broadcast join over one token pass") {
-    val plan = physical(ExtensionQueries.x60(spark, sf001))
+    val plan = physical(Declared("x60")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x62: snapshot diff hashes BEFORE the one full-outer shuffle (no payload on the wire)") {
-    val df = ExtensionQueries.x62(spark, sf001)
+    val df = Declared("x62")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("FullOuter"), plan)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -313,27 +314,27 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x63: bloom probe is a map-side expression over a literal; membership join broadcasts") {
-    val plan = physical(ExtensionQueries.x63(spark, sf001))
+    val plan = physical(Declared("x63")(spark, sf001))
     assert(plan.contains("might_contain"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
   }
 
   test("x64: leakage audit broadcasts the pair relation; split frame never shuffles pre-agg") {
-    val plan = physical(ExtensionQueries.x64(spark, sf001))
+    val plan = physical(Declared("x64")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x65: overlap screen broadcasts benchmark grams; corpus grams stay map-side to the join") {
-    val plan = physical(ExtensionQueries.x65(spark, sf001))
+    val plan = physical(Declared("x65")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
   }
 
   test("x66: Gini runs its window over the count HISTOGRAM, not the key frame") {
-    val df = ExtensionQueries.x66(spark, sf001)
+    val df = Declared("x66")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("Join"), plan)
     // the window's child must be the second (histogram) aggregate:
@@ -354,7 +355,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x61: the whole expectation suite is ONE partial+final aggregate pass") {
-    val plan = physical(ExtensionQueries.x61(spark, sf001))
+    val plan = physical(Declared("x61")(spark, sf001))
     assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
@@ -364,42 +365,42 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x48: redaction is one narrow projection — no shuffle before the final sort") {
-    val plan = physical(ExtensionQueries.x48(spark, sf001))
+    val plan = physical(Declared("x48")(spark, sf001))
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("hashpartitioning"), plan) // only the orderBy range exchange
     assert(!plan.contains("lambdafunction"), plan)   // stays codegen-compilable
   }
 
   test("x49: span dedup is agg+join on the span hash — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x49(spark, sf001))
+    val plan = physical(Declared("x49")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x50: phase-1 aggregate keys on (user_id, __salt); no join, no window") {
-    val plan = physical(ExtensionQueries.x50(spark, sf001))
+    val plan = physical(Declared("x50")(spark, sf001))
     assert(plan.contains("__salt"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x51: within-cluster pair join is an equi-join on list_id, never cartesian") {
-    val plan = physical(ExtensionQueries.x51(spark, sf001))
+    val plan = physical(Declared("x51")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("list_id"), plan)
   }
 
   test("x52: quantize is codegen'd (no interpreted HOF); agg is partial+final") {
-    val plan = physical(ExtensionQueries.x52(spark, sf001))
+    val plan = physical(Declared("x52")(spark, sf001))
     assert(!plan.contains("lambdafunction"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x53: sketch and exact count share ONE deduped hash frame (single distinct)") {
-    val plan = physical(ExtensionQueries.x53(spark, sf001))
+    val plan = physical(Declared("x53")(spark, sf001))
     // the localCheckpoint collapses the shared distinct into a scan —
     // the gram explode + dedup must not appear once per consumer
     assert(!plan.contains("CartesianProduct"), plan)
@@ -408,7 +409,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x54: census broadcast onto a map-side explode; corpus never sort-merge joined") {
-    val plan = physical(ExtensionQueries.x54(spark, sf001))
+    val plan = physical(Declared("x54")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(plan.contains("Generate explode"), plan)
@@ -417,7 +418,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x55: term equi-join candidates; argmax is a partial+final " +
     "min(struct) aggregation — no window, no per-doc sort (r18: the " +
     "WindowGroupLimit form still sorted each exchange partition)") {
-    val plan = physical(ExtensionQueries.x55(spark, sf001))
+    val plan = physical(Declared("x55")(spark, sf001))
     // the only nested-loop join allowed is the 1-row doc-census
     // broadcast (the x39 bounds pattern) — never a doc×doc cartesian
     assert(!plan.contains("CartesianProduct"), plan)
@@ -435,7 +436,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x56: moments broadcast back onto the daily frame; no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x56(spark, sf001))
+    val plan = physical(Declared("x56")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("Window"), plan)
@@ -468,7 +469,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x69: the collision-scale cluster map broadcasts onto the corpus " +
     "(no corpus shuffle for the split assignment)") {
-    val plan = physical(ExtensionQueries.x69(spark, sf001))
+    val plan = physical(Declared("x69")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // the corpus side must not sort-merge against the cluster map
@@ -476,7 +477,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x70: sample gate is map-side below ONE partial+final aggregation") {
-    val plan = physical(ExtensionQueries.x70(spark, sf001))
+    val plan = physical(Declared("x70")(spark, sf001))
     // percentile is an object agg — partial on the mapper, final after
     // the single group-by exchange; the hash-gate filter adds no
     // exchange of its own and there is no join anywhere. The docs()
@@ -494,7 +495,7 @@ class PlanShapeSpec extends SparkSpec {
     // in ONE task. Now the plan must show the grouped-prefix-sum
     // decomposition: every window either rides an aggregated frame
     // (the P×groups offsets) or partitions by (partition id, group)
-    val df = ExtensionQueries.x71(spark, sf001)
+    val df = Declared("x71")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("Window"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan) // the offset join
@@ -515,7 +516,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x74: the one-row sketch broadcasts; token counting is partial+final") {
-    val plan = physical(ExtensionQueries.x74(spark, sf001))
+    val plan = physical(Declared("x74")(spark, sf001))
     // the exact top-k joins AGAINST the sketch — never the reverse: a
     // shuffled join here would move the sketch per-partition for no
     // reason, and at 100 TB the token-count aggregation must combine
@@ -526,7 +527,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x75: one narrow pass — kernel projection fused over a pruned 2-column scan, no join") {
-    val plan = physical(ExtensionQueries.x75(spark, sf001))
+    val plan = physical(Declared("x75")(spark, sf001))
     // (the AQE plan prints pre-execution without WholeStageCodegen
     // annotations; codegen-vs-interpreted agreement for the kernel is
     // pinned directly in VectorExpressionsSpec)
@@ -541,7 +542,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x78: corpus collapses to distinct words before pair expansion; top-N is a bounded heap") {
-    val plan = physical(ExtensionQueries.x78(spark, sf001))
+    val plan = physical(Declared("x78")(spark, sf001))
     // the final cut must be TakeOrderedAndProject (per-partition heap),
     // never a global Sort feeding a Limit — at 100 TB the pair
     // histogram is vocab-sized but the sort would still be a full
@@ -553,7 +554,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x79: sessionization windows and the per-session aggregate share ONE user_id shuffle") {
-    val plan = physical(ExtensionQueries.x79(spark, sf001))
+    val plan = physical(Declared("x79")(spark, sf001))
     // lag + running-sum windows partition on user_id; the
     // (user_id, session_id) hash aggregate's clustering requirement is
     // satisfied by that same partitioning (subset rule), so the whole
@@ -562,7 +563,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x81: equi-join on the gram key, partial+final aggs, no windows or nested loops") {
-    val plan = physical(ExtensionQueries.x81(spark, sf001))
+    val plan = physical(Declared("x81")(spark, sf001))
     // the join strategy (broadcast at toy sf, shuffle at scale) is
     // Catalyst's stats call — what must hold at EVERY scale is: a
     // keyed equi-join (never a nested loop over the gram dictionary),
@@ -577,7 +578,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x76: the k-NN self-join is a bucket-keyed equi-join ranked by the bounded heap, not a window") {
-    val plan = physical(ExtensionQueries.x76(spark, sf001))
+    val plan = physical(Declared("x76")(spark, sf001))
     // all-pairs scoring would surface as a nested loop; ranking the
     // scored pairs through a Window would shuffle every scored triple
     // to one partition per src
@@ -588,7 +589,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x82: PageRank's output reads the final checkpoint — iterative lineage truncated") {
-    val plan = physical(ExtensionQueries.x82(spark, sf001))
+    val plan = physical(Declared("x82")(spark, sf001))
     // the per-round localCheckpoint means the consumer plan is a scan
     // of materialized rank blocks, NOT a replay of the whole iteration
     // chain (the classic iterative-lineage OOM/recompute trap); the
@@ -599,7 +600,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x85: one tokenization feeds all token signals; assembly is doc-keyed joins, no window") {
-    val plan = physical(ExtensionQueries.x85(spark, sf001))
+    val plan = physical(Declared("x85")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     // the scorecard itself must not introduce a window (the canonical
     // chain's per-cluster row_number is bounded-heap by construction
@@ -608,7 +609,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x92: retention is aggregation-only — no window, cohort sizes broadcast") {
-    val plan = physical(ExtensionQueries.x92(spark, sf001))
+    val plan = physical(Declared("x92")(spark, sf001))
     // the per-user first-event and the (cohort, offset) rollup are hash
     // aggregations (partial+final); a window here would mean a per-user
     // sort that the operator deliberately avoids
@@ -621,7 +622,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x93: link prediction is keyed equi-joins over checkpointed adjacency — " +
     "no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x93(spark, sf001))
+    val plan = physical(Declared("x93")(spark, sf001))
     // adjacency is localCheckpoint'd (wedge + degree + anti-join reuse)
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
@@ -629,7 +630,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x94: MAD screen joins group-cardinality frames by broadcast — no window") {
-    val plan = physical(ExtensionQueries.x94(spark, sf001))
+    val plan = physical(Declared("x94")(spark, sf001))
     // both medians are grouped aggregates; the ≤|groups|-row med/mad
     // frames broadcast against the corpus-scale side
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -640,7 +641,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x95: the systematic draw's cumulative line is the two-phase " +
     "prefix sum — no whole-stratum window, no global sort (round 12)") {
-    val df = ExtensionQueries.x95(spark, sf001)
+    val df = Declared("x95")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("Window"), plan)
     assert(!plan.contains("SinglePartition"), plan)
@@ -663,7 +664,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x97: actives collapse to the (day,user) frame first; day list broadcasts " +
     "into the range join") {
-    val plan = physical(ExtensionQueries.x97(spark, sf001))
+    val plan = physical(Declared("x97")(spark, sf001))
     // the trailing-window join must be the broadcast of the tiny
     // distinct-days frame against the compact (day,user) frame — a
     // shuffled range join (or worse, a cartesian) here would move
@@ -674,7 +675,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x98: the per-source top-N short-circuits via WindowGroupLimit") {
-    val plan = physical(ExtensionQueries.x98(spark, sf001))
+    val plan = physical(Declared("x98")(spark, sf001))
     // rank <= 5 must compile to the partial+final WindowGroupLimit
     // pushdown (bounded per-partition heaps before the exchange), not
     // a full per-source sort of the vocab frame
@@ -683,7 +684,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x99: the forward as-of compiles to one keyed window — no join node at all") {
-    val plan = physical(ExtensionQueries.x99(spark, sf001))
+    val plan = physical(Declared("x99")(spark, sf001))
     // tag → unionByName → running window: the as-of never materializes
     // a join operator, so there is nothing to mis-broadcast or skew
     assert(plan.contains("Window"), plan)
@@ -692,7 +693,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x100: mixture drift is aggregation + profile-cardinality grid joins — no window") {
-    val plan = physical(ExtensionQueries.x100(spark, sf001))
+    val plan = physical(Declared("x100")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     // the margins cross on group/category-cardinality frames; the
     // corpus-volume work is the single (group, category) aggregation
@@ -700,14 +701,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x101: PQ scores against broadcast queries; ranking is the bounded heap, no window") {
-    val plan = physical(ExtensionQueries.x101(spark, sf001))
+    val plan = physical(Declared("x101")(spark, sf001))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x102: kappa is ONE corpus aggregation; the pair explosion reuses the 1-row result") {
-    val df = ExtensionQueries.x102(spark, sf001)
+    val df = Declared("x102")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("CartesianProduct"), plan)
     // the three pair rows must come from a reused exchange/subtree of
@@ -718,8 +719,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x108-x111: the compact-frame analytics stay window-free with " +
     "partial+final aggregation") {
-    for (q <- Seq(ExtensionQueries.x108, ExtensionQueries.x109,
-        ExtensionQueries.x110, ExtensionQueries.x111)) {
+    for (q <- Seq(Declared("x108"), Declared("x109"),
+        Declared("x110"), Declared("x111"))) {
       val plan = physical(q(spark, sf001))
       // each collapses the data volume in ONE partial+final hash
       // aggregation; everything after runs on day/week/class-
@@ -733,7 +734,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x120: per-user windows hash-partition on the user key — never a " +
     "single global partition") {
-    val plan = physical(ExtensionQueries.x120(spark, sf001))
+    val plan = physical(Declared("x120")(spark, sf001))
     assert(plan.contains("Window"), plan)
     assert(plan.contains("hashpartitioning(u"), plan)
   }
@@ -747,7 +748,7 @@ class PlanShapeSpec extends SparkSpec {
     // HISTOGRAM (an aggregation sits below) or (b) boundary tie sets
     // (partition spec includes the VALUE column, so no partition
     // exceeds one (group, value) tie set)
-    val df = ExtensionQueries.x113(spark, sf001)
+    val df = Declared("x113")(spark, sf001)
     val inner = qe(df).executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
@@ -771,8 +772,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x114/x116/x117: aggregation-first analytics — partial+final combine, " +
     "tiny frames broadcast, no cartesian") {
-    for (q <- Seq(ExtensionQueries.x114, ExtensionQueries.x116,
-        ExtensionQueries.x117)) {
+    for (q <- Seq(Declared("x114"), Declared("x116"),
+        Declared("x117"))) {
       val plan = physical(q(spark, sf001))
       assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
       assert(!plan.contains("CartesianProduct"), plan)
@@ -783,19 +784,19 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x115/x121: the group/canonical relation joins back by broadcast — " +
     "the corpus side never shuffles for it") {
-    for (q <- Seq(ExtensionQueries.x115, ExtensionQueries.x121)) {
+    for (q <- Seq(Declared("x115"), Declared("x121"))) {
       val plan = physical(q(spark, sf001))
       assert(plan.contains("BroadcastHashJoin"), plan)
       assert(!plan.contains("CartesianProduct"), plan)
     }
     // x121 specifically must stay window-free: quartiles are grouped
     // order statistics, not per-row window percentiles
-    assert(!physical(ExtensionQueries.x121(spark, sf001)).contains("Window"))
+    assert(!physical(Declared("x121")(spark, sf001)).contains("Window"))
   }
 
   test("x118: the pairing is an equi-join on (bucket, rank) — no cartesian, " +
     "no theta join") {
-    val plan = physical(ExtensionQueries.x118(spark, sf001))
+    val plan = physical(Declared("x118")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     // the A↔B pairing itself is a hash equi-join; the only nested-loop
     // joins are Rank.withExactNtile's tiny broadcasts (≤ t−1 boundary
@@ -813,7 +814,7 @@ class PlanShapeSpec extends SparkSpec {
     // partitioned by value so each partition is one tie set); windows
     // over aggregated frames (histograms, the subtile-offset counts)
     // are exempt via the agg-below rule
-    val df = ExtensionQueries.x118(spark, sf001)
+    val df = Declared("x118")(spark, sf001)
     val inner = qe(df).executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
@@ -834,7 +835,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x119: coverage runs on the count histogram — token counting is " +
     "partial+final; the window sees histogram rows, not the vocabulary") {
-    val df = ExtensionQueries.x119(spark, sf001)
+    val df = Declared("x119")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("partial_count"), plan)
     // two stacked aggregations (token counts → count histogram) must
@@ -845,21 +846,21 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x112: entity sizes broadcast back; closure output joins without cartesian") {
-    val plan = physical(ExtensionQueries.x112(spark, sf001))
+    val plan = physical(Declared("x112")(spark, sf001))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x122: fingerprint pairing is an equi-join on the fingerprint value — " +
     "no cartesian, df-cap aggregation is partial+final") {
-    val plan = physical(ExtensionQueries.x122(spark, sf001))
+    val plan = physical(Declared("x122")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("partial_count"), plan)
   }
 
   test("x123: the trend is aggregation + a broadcast week spine — no window") {
-    val plan = physical(ExtensionQueries.x123(spark, sf001))
+    val plan = physical(Declared("x123")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
     assert(plan.contains("BroadcastHashJoin") ||
@@ -869,10 +870,10 @@ class PlanShapeSpec extends SparkSpec {
   test("x124/x125: the event volume collapses or shuffles ONCE on the user key") {
     // x124: per-user aggregation is partial+final; tiles run on the
     // user-cardinality frame
-    val p124 = physical(ExtensionQueries.x124(spark, sf001))
+    val p124 = physical(Declared("x124")(spark, sf001))
     assert(p124.contains("partial_count"), p124)
     // x125: ONE keyed window does both attributions — no join node
-    val p125 = physical(ExtensionQueries.x125(spark, sf001))
+    val p125 = physical(Declared("x125")(spark, sf001))
     assert(p125.contains("Window"), p125)
     assert(p125.contains("hashpartitioning(__u"), p125)
     assert(!p125.contains("Join"), p125)
@@ -880,7 +881,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x126: the interval overlap compiles to a bucket equi-join — " +
     "no cartesian, no nested loop") {
-    val plan = physical(ExtensionQueries.x126(spark, sf001))
+    val plan = physical(Declared("x126")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("partial_count") || plan.contains("partial_min"), plan)
@@ -888,7 +889,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x127: the pair sample is a group-keyed BroadcastHashJoin and the " +
     "histogram materializes once (the totals join reads the checkpoint)") {
-    val plan = physical(ExtensionQueries.x127(spark, sf001))
+    val plan = physical(Declared("x127")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     // the one BNLJ is the 1-row totals broadcast onto the ≤20-row
     // histogram — scale-safe by construction; the PAIR join must be
@@ -905,7 +906,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x128: dup membership broadcasts onto the decile frame — no corpus " +
     "shuffle for the calibration join, and the deciles are histogram " +
     "tiles, not a corpus-global window (VERDICT r10 item 1)") {
-    val df = ExtensionQueries.x128(spark, sf001)
+    val df = Declared("x128")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     val plan = physical(df)
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -914,7 +915,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x129: the bootstrap is one (group, replicate) partial+final aggregation — " +
     "the ×B expansion happens map-side under it, no join for the weights") {
-    val plan = physical(ExtensionQueries.x129(spark, sf001))
+    val plan = physical(Declared("x129")(spark, sf001))
     assert(plan.contains("partial_sum"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // the rank algebra runs on the group×B frame, partitioned by group
@@ -924,7 +925,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x130: the reshard plan is a single partial+final aggregation — " +
     "no join, no window, no data movement") {
-    val plan = physical(ExtensionQueries.x130(spark, sf001))
+    val plan = physical(Declared("x130")(spark, sf001))
     assert(plan.contains("partial_count"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
@@ -932,7 +933,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x131: pair building is an equi-join on (doc, position) and the top-50 " +
     "cut is TakeOrderedAndProject, not a global sort") {
-    val plan = physical(ExtensionQueries.x131(spark, sf001))
+    val plan = physical(Declared("x131")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
@@ -951,7 +952,7 @@ class PlanShapeSpec extends SparkSpec {
     // the histogram collapse itself happens at the gv checkpoint
     // (upstream of this plan) — what this plan must show is the
     // per-group window partitioning and a join-shaped grid
-    val plan = physical(ExtensionQueries.x132(spark, sf001))
+    val plan = physical(Declared("x132")(spark, sf001))
     assert(plan.contains("windowspecdefinition(grp"), plan)
     assert(plan.contains("hashpartitioning(grp"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -959,7 +960,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x133: the cohort collapses via partial+final hash aggregates and " +
     "the 1-row horizon broadcasts — no cartesian, no per-event window") {
-    val plan = physical(ExtensionQueries.x133(spark, sf001))
+    val plan = physical(Declared("x133")(spark, sf001))
     // first-signup and first-conversion are aggregates (map-side
     // partial), never per-user windows over the event volume
     assert(plan.contains("HashAggregate"), plan)
@@ -975,7 +976,7 @@ class PlanShapeSpec extends SparkSpec {
     "partitions by group and runs AFTER a hash aggregation, never a " +
     "global per-row sort; the histogram is BOUNDED in-plan (VERDICT " +
     "r12 item 1: quantized score + rankAuc cardinality envelope)") {
-    val plan = physical(ExtensionQueries.x134(spark, sf001))
+    val plan = physical(Declared("x134")(spark, sf001))
     assert(plan.contains("windowspecdefinition(grp"), plan)
     assert(plan.contains("hashpartitioning(grp"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -995,7 +996,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x135: CUSUM windows partition by event type over the dense daily " +
     "frame; the argmax is a min-struct aggregate, not a ranking window") {
-    val plan = physical(ExtensionQueries.x135(spark, sf001))
+    val plan = physical(Declared("x135")(spark, sf001))
     assert(plan.contains("windowspecdefinition(__t"), plan)
     assert(plan.contains("hashpartitioning(__t"), plan)
     // best-row selection is min(struct(...)) — no row_number-filter
@@ -1006,7 +1007,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x136: the bucket model broadcasts and the top-K cut is a bounded " +
     "heap (TakeOrderedAndProject), never a global sort") {
-    val plan = physical(ExtensionQueries.x136(spark, sf001))
+    val plan = physical(Declared("x136")(spark, sf001))
     assert(plan.contains("BroadcastExchange"), plan)
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1014,7 +1015,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x137: the final core-degree pass joins the checkpointed survivor " +
     "set on both endpoints — keyed equi-joins, no cartesian, no window") {
-    val plan = physical(ExtensionQueries.x137(spark, sf001))
+    val plan = physical(Declared("x137")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed rounds
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1024,7 +1025,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x195: every BPE round rides checkpointed vocab frames — the final " +
     "plan unions six 1-row best frames with NO corpus scan and no " +
     "window (expansion stays O(vocab), the x137 fixpoint pattern)") {
-    val plan = physical(ExtensionQueries.x195(spark, sf001))
+    val plan = physical(Declared("x195")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed rounds
     assert(!plan.contains("Scan parquet"), plan)    // corpus never re-read
     assert(!plan.contains("Window"), plan)          // argmax is min-struct
@@ -1035,7 +1036,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x196: the fertility rollup scans the corpus ONCE (word explosion) " +
     "and joins the checkpointed vocab — no per-round corpus re-read, " +
     "no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x196(spark, sf001))
+    val plan = physical(Declared("x196")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed vocab
     val scans = "Scan parquet".r.findAllIn(plan).length
     assert(scans == 1, s"expected exactly 1 corpus scan, got $scans:\n$plan")
@@ -1047,7 +1048,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x209: the encode rollup scans the corpus ONCE and joins the " +
     "checkpointed encoded vocab — no window, no cartesian (x196 shape " +
     "with the merged-token split)") {
-    val plan = physical(ExtensionQueries.x209(spark, sf001))
+    val plan = physical(Declared("x209")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed encoding
     val scans = "Scan parquet".r.findAllIn(plan).length
     assert(scans == 1, s"expected exactly 1 corpus scan, got $scans:\n$plan")
@@ -1072,7 +1073,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x210: Gini reads off the checkpointed histogram — the final plan " +
     "windows the HISTOGRAM (no corpus re-scan), no cartesian") {
-    val plan = physical(ExtensionQueries.x210(spark, sf001))
+    val plan = physical(Declared("x210")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed histogram
     assert(!plan.contains("Scan parquet"), plan)    // corpus never re-read
     assert(plan.contains("Window"), plan)           // cumulative over cells
@@ -1081,7 +1082,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x211: the cluster-size spectrum is hash aggregations over the " +
     "checkpointed CC labels — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x211(spark, sf001))
+    val plan = physical(Declared("x211")(spark, sf001))
     // materialized CC labels: a checkpoint scan from the label loop, or
     // the local relation of the local finish (small graphs, as here) —
     // never the pair pipeline recomputed
@@ -1094,7 +1095,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x212: the spectrum result assembles 1-row broadcast frames over " +
     "checkpointed iteration state — no corpus scan, no window, no " +
     "cartesian in the final plan") {
-    val plan = physical(ExtensionQueries.x212(spark, sf001))
+    val plan = physical(Declared("x212")(spark, sf001))
     assert(!plan.contains("Scan parquet"), plan)    // all rounds checkpointed
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1102,14 +1103,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x213: interpolation windows ride the bounded day SPINE (dense " +
     "calendar frame), never event rows — no cartesian") {
-    val plan = physical(ExtensionQueries.x213(spark, sf001))
+    val plan = physical(Declared("x213")(spark, sf001))
     assert(plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x214: the capping curve re-aggregates the checkpointed (user, day) " +
     "unit frame per cap — no window, no corpus re-scan") {
-    val plan = physical(ExtensionQueries.x214(spark, sf001))
+    val plan = physical(Declared("x214")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed units
     assert(!plan.contains("Scan parquet"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1118,7 +1119,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x215: the hapax profile is one tokenize pass + two hash " +
     "aggregations — single corpus scan, no window, no join") {
-    val plan = physical(ExtensionQueries.x215(spark, sf001))
+    val plan = physical(Declared("x215")(spark, sf001))
     val scans = "Scan parquet".r.findAllIn(plan).length
     assert(scans == 1, s"expected exactly 1 corpus scan, got $scans:\n$plan")
     assert(!plan.contains("Window"), plan)
@@ -1127,7 +1128,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x216: order forecasts aggregate the checkpointed 3-way key " +
     "histogram — never row volume, no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x216(spark, sf001))
+    val plan = physical(Declared("x216")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed histogram
     assert(!plan.contains("Scan parquet"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1136,7 +1137,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x217: ACF windows ride the checkpointed deviation SPINE (bounded " +
     "by calendar span), not event rows — no corpus re-scan") {
-    val plan = physical(ExtensionQueries.x217(spark, sf001))
+    val plan = physical(Declared("x217")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed spine
     assert(!plan.contains("Scan parquet"), plan)
     assert(plan.contains("Window"), plan)
@@ -1145,7 +1146,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x218: assortativity is keyed joins + one global moment " +
     "aggregation — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x218(spark, sf001))
+    val plan = physical(Declared("x218")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1153,7 +1154,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x219: the Pareto cut windows the checkpointed per-key value " +
     "HISTOGRAM (envelope-guarded), never event rows") {
-    val plan = physical(ExtensionQueries.x219(spark, sf001))
+    val plan = physical(Declared("x219")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed histogram
     assert(!plan.contains("Scan parquet"), plan)
     assert(plan.contains("Window"), plan)
@@ -1162,7 +1163,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x220: dup-rate buckets join the distinct pair-side doc set — " +
     "no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x220(spark, sf001))
+    val plan = physical(Declared("x220")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1170,7 +1171,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x221: cap forecasts re-aggregate the checkpointed df HISTOGRAM " +
     "(gram cardinality, never pair materialization) — no window") {
-    val plan = physical(ExtensionQueries.x221(spark, sf001))
+    val plan = physical(Declared("x221")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed histogram
     assert(!plan.contains("Scan parquet"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1179,7 +1180,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x222: the language matrix is two doc-keyed joins of the pair " +
     "relation + one hash agg — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x222(spark, sf001))
+    val plan = physical(Declared("x222")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1187,7 +1188,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x223: the partition advisor is ONE aggregation pass — no window, " +
     "no join, no cartesian") {
-    val plan = physical(ExtensionQueries.x223(spark, sf001))
+    val plan = physical(Declared("x223")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1195,7 +1196,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x224: precision thresholds re-aggregate the checkpointed scored-" +
     "candidate frame — one candidate pass, no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x224(spark, sf001))
+    val plan = physical(Declared("x224")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed candidates
     assert(!plan.contains("Scan parquet"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1204,7 +1205,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x197: the l-diversity profile is ONE aggregation pass over the QI " +
     "tuple — no window, no join, no cartesian") {
-    val plan = physical(ExtensionQueries.x197(spark, sf001))
+    val plan = physical(Declared("x197")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Join"), plan)
@@ -1214,7 +1215,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x198: the touch-conversion pairing is a user-keyed equi-join with " +
     "a range filter; the checkpointed pair frame feeds all three " +
     "aggregations; no cartesian, no window") {
-    val plan = physical(ExtensionQueries.x198(spark, sf001))
+    val plan = physical(Declared("x198")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed pairs
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1223,7 +1224,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x199: the salt advisor's top-N is a bounded TakeOrderedAndProject " +
     "over the key histogram, never a global sort") {
-    val plan = physical(ExtensionQueries.x199(spark, sf001))
+    val plan = physical(Declared("x199")(spark, sf001))
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1231,7 +1232,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x200: weekday cells ride hash aggregations over the dense spine " +
     "with broadcast totals — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x200(spark, sf001))
+    val plan = physical(Declared("x200")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1240,7 +1241,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x201: distortion cells collapse by partial+final hash aggregation " +
     "— one posexplode fan-out, no window, no join") {
-    val plan = physical(ExtensionQueries.x201(spark, sf001))
+    val plan = physical(Declared("x201")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("Generate"), plan) // the posexplode fan-out
     assert(!plan.contains("Window"), plan)
@@ -1249,7 +1250,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x202: every power-iteration round rides checkpointed state — the " +
     "final plan reads the last round's frame, no per-round event re-scan") {
-    val plan = physical(ExtensionQueries.x202(spark, sf001))
+    val plan = physical(Declared("x202")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed rounds
     assert(!plan.contains("Scan parquet"), plan)    // events never re-read
     assert(!plan.contains("Window"), plan)
@@ -1259,7 +1260,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x203: the checkpointed chunk frame feeds corpus frequency and the " +
     "rollup — hash-keyed join, no cartesian; the chunk-index window is " +
     "per-document, upstream of the checkpoint") {
-    val plan = physical(ExtensionQueries.x203(spark, sf001))
+    val plan = physical(Declared("x203")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1268,7 +1269,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x204: idf-simhash candidates come from the chunk-bucket equi-join " +
     "over the materialized signature frame — no cartesian, vote fan-out " +
     "collapsed by hash aggregation") {
-    val plan = physical(ExtensionQueries.x204(spark, sf001))
+    val plan = physical(Declared("x204")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // materialized sketches
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate") || plan.contains("SortAggregate"), plan)
@@ -1277,7 +1278,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x205: quantiles ride the guarded (group, value) histogram — the " +
     "window partitions by group AFTER a hash aggregation, with the " +
     "raise_error envelope in-plan; no per-group row sort") {
-    val plan = physical(ExtensionQueries.x205(spark, sf001))
+    val plan = physical(Declared("x205")(spark, sf001))
     assert(plan.contains("windowspecdefinition(grp"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("raise_error"), plan)
@@ -1286,7 +1287,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x206: split leakage rides the checkpointed chunk frame — spread " +
     "join is hash-keyed, no cartesian") {
-    val plan = physical(ExtensionQueries.x206(spark, sf001))
+    val plan = physical(Declared("x206")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1295,7 +1296,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x207: the join-size forecast joins HISTOGRAMS, not rows — two hash " +
     "aggregations, a bounded TakeOrderedAndProject, no cartesian beyond " +
     "the 1-row broadcast total") {
-    val plan = physical(ExtensionQueries.x207(spark, sf001))
+    val plan = physical(Declared("x207")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1305,7 +1306,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x208: entropy cells ride the checkpointed bigram histogram — " +
     "left-context counts aggregate off it, no second corpus scan, no " +
     "window, no cartesian") {
-    val plan = physical(ExtensionQueries.x208(spark, sf001))
+    val plan = physical(Declared("x208")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Scan parquet"), plan) // corpus read once, upstream
     assert(plan.contains("HashAggregate"), plan)
@@ -1315,7 +1316,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x138: one tokenize fan-out, two hash aggregations, a conditional " +
     "pivot — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x138(spark, sf001))
+    val plan = physical(Declared("x138")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1323,7 +1324,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x139: the corpus centroid broadcasts onto the group frame; the " +
     "cell collapse is partial+final hash aggregation, no window") {
-    val plan = physical(ExtensionQueries.x139(spark, sf001))
+    val plan = physical(Declared("x139")(spark, sf001))
     assert(plan.contains("BroadcastExchange"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1332,7 +1333,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x140: the midpoint and half totals broadcast; the volume collapses " +
     "in one (type, half) aggregation") {
-    val plan = physical(ExtensionQueries.x140(spark, sf001))
+    val plan = physical(Declared("x140")(spark, sf001))
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1341,7 +1342,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x141: the lag window partitions by user; the percentile aggregate " +
     "runs on the collapsed gap column, no cartesian") {
-    val plan = physical(ExtensionQueries.x141(spark, sf001))
+    val plan = physical(Declared("x141")(spark, sf001))
     assert(plan.contains("windowspecdefinition(user_id"), plan)
     assert(plan.contains("hashpartitioning(user_id"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1350,7 +1351,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x142: the character histogram collapses in a hash aggregation " +
     "before the doc-partitioned total window — shuffled volume is " +
     "alphabet-sized, not character-sized") {
-    val plan = physical(ExtensionQueries.x142(spark, sf001))
+    val plan = physical(Declared("x142")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("windowspecdefinition(doc_id"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1358,7 +1359,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x143: the target relation broadcasts (LocalTableScan side); one " +
     "language-keyed aggregation, no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x143(spark, sf001))
+    val plan = physical(Declared("x143")(spark, sf001))
     assert(plan.contains("LocalTableScan"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1367,7 +1368,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x144: the sweep runs on the checkpointed pair relation — decile " +
     "windows over the ≤10-row histogram, no second near-dup pass") {
-    val plan = physical(ExtensionQueries.x144(spark, sf001))
+    val plan = physical(Declared("x144")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed pairs
     assert(plan.contains("windowspecdefinition(dec"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1375,14 +1376,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x145: the top-(k+1) cut is a bounded heap (TakeOrderedAndProject), " +
     "never a global sort of the corpus") {
-    val plan = physical(ExtensionQueries.x145(spark, sf001))
+    val plan = physical(Declared("x145")(spark, sf001))
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x146: quartile edges and totals broadcast; the volume collapses in " +
     "one (type, bin) aggregation") {
-    val plan = physical(ExtensionQueries.x146(spark, sf001))
+    val plan = physical(Declared("x146")(spark, sf001))
     assert(plan.contains("BroadcastExchange"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1390,7 +1391,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x147: the fused top-K cut is a bounded heap; signal joins are " +
     "doc-keyed equi-joins, no cartesian") {
-    val plan = physical(ExtensionQueries.x147(spark, sf001))
+    val plan = physical(Declared("x147")(spark, sf001))
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -1398,7 +1399,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x148: one stratum aggregation collapses the corpus; the 1-row " +
     "weight total and leftover broadcast; the remainder window runs on " +
     "the |strata| frame") {
-    val plan = physical(ExtensionQueries.x148(spark, sf001))
+    val plan = physical(Declared("x148")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
@@ -1407,7 +1408,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x149: the lag window partitions by user; everything after is one " +
     "user-keyed aggregation, no cartesian") {
-    val plan = physical(ExtensionQueries.x149(spark, sf001))
+    val plan = physical(Declared("x149")(spark, sf001))
     assert(plan.contains("windowspecdefinition(user_id"), plan)
     assert(plan.contains("hashpartitioning(user_id"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1415,7 +1416,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x150: the pair relation is an equi-join on type over the " +
     "checkpointed dense spine — no cartesian, no window") {
-    val plan = physical(ExtensionQueries.x150(spark, sf001))
+    val plan = physical(Declared("x150")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed spine
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1423,7 +1424,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x151: one sketch build (checkpointed) feeds candidates and " +
     "containment; joins are doc-keyed, no cartesian") {
-    val plan = physical(ExtensionQueries.x151(spark, sf001))
+    val plan = physical(Declared("x151")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -1431,14 +1432,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x153: the rescore joins are (doc, gram)-keyed over the " +
     "checkpointed gram frame; the idf df-side hash-joins, no cartesian") {
-    val plan = physical(ExtensionQueries.x153(spark, sf001))
+    val plan = physical(Declared("x153")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x154: the per-group CDF windows hash-partition by group over the " +
     "collapsed histogram, never a global per-row sort") {
-    val plan = physical(ExtensionQueries.x154(spark, sf001))
+    val plan = physical(Declared("x154")(spark, sf001))
     assert(plan.contains("windowspecdefinition(grp"), plan)
     assert(plan.contains("hashpartitioning(grp"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1446,7 +1447,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x155: the lag window partitions by user; model and vocab frames " +
     "broadcast onto the V²-bounded test frame") {
-    val plan = physical(ExtensionQueries.x155(spark, sf001))
+    val plan = physical(Declared("x155")(spark, sf001))
     assert(plan.contains("windowspecdefinition(user_id"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
@@ -1454,7 +1455,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x156: one key explode, one key-keyed aggregation, the 1-row total " +
     "broadcasts — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x156(spark, sf001))
+    val plan = physical(Declared("x156")(spark, sf001))
     assert(plan.contains("Generate"), plan) // the keys explode
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1463,7 +1464,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x157: the audit is one hash aggregation plus an integer filter — " +
     "no join, no window") {
-    val plan = physical(ExtensionQueries.x157(spark, sf001))
+    val plan = physical(Declared("x157")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1471,7 +1472,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x158: each candidate contributes two rank windows over a 2-column " +
     "projection; the scan reads only the advisor's columns") {
-    val plan = physical(ExtensionQueries.x158(spark, sf001))
+    val plan = physical(Declared("x158")(spark, sf001))
     assert(plan.contains("windowspecdefinition"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // column pruning: text never reaches the scan
@@ -1480,7 +1481,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x159: histogram-tile ranking over a 3-column projection, cumulative " +
     "windows over collapsed frames; the 1-row total broadcasts") {
-    val plan = physical(ExtensionQueries.x159(spark, sf001))
+    val plan = physical(Declared("x159")(spark, sf001))
     assert(plan.contains("windowspecdefinition"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
@@ -1489,7 +1490,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x160: modularity is keyed joins + hash aggregations over the " +
     "checkpointed term frame — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x160(spark, sf001))
+    val plan = physical(Declared("x160")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1497,7 +1498,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x161: one stratum aggregation; the 1-row totals and weighted sums " +
     "broadcast onto the |strata| frame — no window") {
-    val plan = physical(ExtensionQueries.x161(spark, sf001))
+    val plan = physical(Declared("x161")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
@@ -1507,14 +1508,14 @@ class PlanShapeSpec extends SparkSpec {
   test("x162: the overlap curve is a cumulative window over the ≤K-row " +
     "entry histogram — no per-depth set intersection, no checkpoint " +
     "(the truncated-sum total rides a full-frame window, not a rejoin)") {
-    val plan = physical(ExtensionQueries.x162(spark, sf001))
+    val plan = physical(Declared("x162")(spark, sf001))
     assert(!plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("x163: two aggregation passes with the 1-row parameter frame " +
     "broadcast between them — no window over rows") {
-    val plan = physical(ExtensionQueries.x163(spark, sf001))
+    val plan = physical(Declared("x163")(spark, sf001))
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan)
@@ -1524,7 +1525,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x164: the df join reuses the term partitioning over the " +
     "checkpointed (source, term) frame — no broadcast of the " +
     "vocabulary, no window") {
-    val plan = physical(ExtensionQueries.x164(spark, sf001))
+    val plan = physical(Declared("x164")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1534,7 +1535,7 @@ class PlanShapeSpec extends SparkSpec {
     "sides; the argmax is a min-struct aggregate, not a window; the " +
     "clusters×dim centroid frame joins back as an EXPLICIT broadcast " +
     "(VERDICT r12 item 4)") {
-    val plan = physical(ExtensionQueries.x165(spark, sf001))
+    val plan = physical(Declared("x165")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1547,7 +1548,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x166: the 24-row angle table broadcasts onto the collapsed " +
     "(type, hour) frame — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x166(spark, sf001))
+    val plan = physical(Declared("x166")(spark, sf001))
     assert(plan.contains("BroadcastExchange"), plan)
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1619,17 +1620,17 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x118: equi-depth buckets come from the histogram primitive — " +
     "no unpartitioned window over the doc frame") {
-    assertNoGlobalWindowOverBase(ExtensionQueries.x118(spark, sf001))
+    assertNoGlobalWindowOverBase(Declared("x118")(spark, sf001))
   }
 
   test("x124: all three RFM quintiles are histogram tiles — no " +
     "unpartitioned window over the user frame") {
-    assertNoGlobalWindowOverBase(ExtensionQueries.x124(spark, sf001))
+    assertNoGlobalWindowOverBase(Declared("x124")(spark, sf001))
   }
 
   test("x225: substring-run stitching joins anchors on the df-capped " +
     "fingerprint (never all-pairs) and windows only per (pair, diagonal)") {
-    val df = ExtensionQueries.x225(spark, sf001)
+    val df = Declared("x225")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("CartesianProduct"), plan.take(4000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(4000))
@@ -1642,12 +1643,12 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x159: quality deciles are histogram tiles — no unpartitioned " +
     "window over the doc frame") {
-    assertNoGlobalWindowOverBase(ExtensionQueries.x159(spark, sf001))
+    assertNoGlobalWindowOverBase(Declared("x159")(spark, sf001))
   }
 
   test("x147: per-signal lists are bounded-heap aggregates; the only " +
     "global window ranks the 50-row fused shortlist") {
-    val df = ExtensionQueries.x147(spark, sf001)
+    val df = Declared("x147")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     val plan = physical(df)
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
@@ -1657,7 +1658,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x162: both rankings are bounded-heap top-K aggregates — no " +
     "unpartitioned window over the doc frame") {
-    val df = ExtensionQueries.x162(spark, sf001)
+    val df = Declared("x162")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     val plan = physical(df)
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
@@ -1666,7 +1667,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x167: the packing offsets ride a source-partitioned window; " +
     "aggregation is partial+final") {
-    val df = ExtensionQueries.x167(spark, sf001)
+    val df = Declared("x167")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     val plan = physical(df)
     assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
@@ -1674,14 +1675,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x168: label joins are keyed equi-joins over the kNN edges — " +
     "no cartesian; disagreement is one hash aggregation") {
-    val plan = physical(ExtensionQueries.x168(spark, sf001))
+    val plan = physical(Declared("x168")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
   }
 
   test("x169: the dispersion identity is two stacked aggregations — " +
     "no window, no join, no pair enumeration") {
-    val plan = physical(ExtensionQueries.x169(spark, sf001))
+    val plan = physical(Declared("x169")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Join"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1689,7 +1690,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x170: every grid row aggregates the one checkpointed pair " +
     "relation — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x170(spark, sf001))
+    val plan = physical(Declared("x170")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1697,21 +1698,21 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x171: the head cut is a bounded TakeOrdered, never a vocabulary " +
     "sort; the only global window ranks the 100-row head") {
-    val df = ExtensionQueries.x171(spark, sf001)
+    val df = Declared("x171")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(physical(df).contains("TakeOrderedAndProject"), physical(df))
   }
 
   test("x172: chunk predictions collapse through two aggregations — " +
     "no unpartitioned window, no cartesian") {
-    val df = ExtensionQueries.x172(spark, sf001)
+    val df = Declared("x172")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(!physical(df).contains("CartesianProduct"), physical(df))
   }
 
   test("x173: candidates come from the bucket equi-join; the argmax is " +
     "a bounded heap — no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x173(spark, sf001))
+    val plan = physical(Declared("x173")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"), plan)
@@ -1719,7 +1720,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x174: scoring joins are keyed on term/source over the " +
     "checkpointed count frame — no window") {
-    val plan = physical(ExtensionQueries.x174(spark, sf001))
+    val plan = physical(Declared("x174")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1727,7 +1728,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x175: the lag windows are user-partitioned; path counting is " +
     "partial+final") {
-    val df = ExtensionQueries.x175(spark, sf001)
+    val df = Declared("x175")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(physical(df).contains("partial_count") ||
       physical(df).contains("HashAggregate"), physical(df))
@@ -1735,7 +1736,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x176: one prefix aggregation + the broadcast 1-row total — " +
     "no window, no keyed join") {
-    val plan = physical(ExtensionQueries.x176(spark, sf001))
+    val plan = physical(Declared("x176")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -1743,7 +1744,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x177: ONE conditional-sum pass feeds every candidate length — " +
     "the unpivot reads the checkpointed 1-row frame, never the corpus") {
-    val plan = physical(ExtensionQueries.x177(spark, sf001))
+    val plan = physical(Declared("x177")(spark, sf001))
     assert(!plan.contains("FileScan parquet"), plan) // branches read the checkpoint
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1752,7 +1753,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x152: the Heaps unpivot reads the checkpointed 1-row aggregate " +
     "(round 9 re-ran the tokenize per percentile: 8 scans, 0 reuse); " +
     "the 1-row fit broadcasts") {
-    val plan = physical(ExtensionQueries.x152(spark, sf001))
+    val plan = physical(Declared("x152")(spark, sf001))
     assert(!plan.contains("FileScan parquet"), plan)
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -1761,14 +1762,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x178: LOSO columns come from per-source sums + the broadcast " +
     "1-row totals — no per-ablation rescan, no window") {
-    val plan = physical(ExtensionQueries.x178(spark, sf001))
+    val plan = physical(Declared("x178")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
   }
 
   test("x179: one aggregation per table, unioned — no join, no window") {
-    val plan = physical(ExtensionQueries.x179(spark, sf001))
+    val plan = physical(Declared("x179")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Join"), plan)
     assert(plan.contains("Union"), plan)
@@ -1776,7 +1777,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x180: all FD pairs ride ONE aggregation pass — the unpivot " +
     "reads the checkpointed 1-row frame") {
-    val plan = physical(ExtensionQueries.x180(spark, sf001))
+    val plan = physical(Declared("x180")(spark, sf001))
     assert(!plan.contains("FileScan parquet"), plan)
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1784,14 +1785,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x181: the inversion count is one user-partitioned lag + one " +
     "aggregation — no unpartitioned window") {
-    val df = ExtensionQueries.x181(spark, sf001)
+    val df = Declared("x181")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(physical(df).contains("Window"), physical(df))
   }
 
   test("x182: every FK edge is a keyed join against the distinct " +
     "parent-key frame — no cartesian") {
-    val plan = physical(ExtensionQueries.x182(spark, sf001))
+    val plan = physical(Declared("x182")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("Window"), plan)
@@ -1799,7 +1800,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x183: two stacked aggregations over the checkpointed ln frame — " +
     "no window, no cartesian") {
-    val plan = physical(ExtensionQueries.x183(spark, sf001))
+    val plan = physical(Declared("x183")(spark, sf001))
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -1807,7 +1808,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x184: one stratum aggregation + the broadcast 1-row corpus " +
     "totals — no window") {
-    val plan = physical(ExtensionQueries.x184(spark, sf001))
+    val plan = physical(Declared("x184")(spark, sf001))
     assert(!plan.contains("Window"), plan)
     assert(plan.contains("BroadcastExchange") ||
       plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -1816,26 +1817,26 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x185: source cells come from keyed tag joins over the pair " +
     "relation — no cartesian, no window") {
-    val plan = physical(ExtensionQueries.x185(spark, sf001))
+    val plan = physical(Declared("x185")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), plan)
   }
 
   test("x186: the savings curve windows only the <=10-row decile frame") {
-    val df = ExtensionQueries.x186(spark, sf001)
+    val df = Declared("x186")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(!physical(df).contains("CartesianProduct"), physical(df))
   }
 
   test("x187: the result is exported dim-bounded constants (the x22/x26 " +
     "pattern); the scatter work happened in keyed joins upstream") {
-    val plan = physical(ExtensionQueries.x187(spark, sf001))
+    val plan = physical(Declared("x187")(spark, sf001))
     assert(plan.contains("LocalTableScan"), plan)
   }
 
   test("x188: stage relations union into two doc-keyed aggregations — " +
     "no unpartitioned window, no cartesian") {
-    val df = ExtensionQueries.x188(spark, sf001)
+    val df = Declared("x188")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(!physical(df).contains("CartesianProduct"), physical(df))
   }
@@ -1944,14 +1945,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x233-x248: no tranche-39-44 query compiles to a CartesianProduct") {
-    Seq(ExtensionQueries.x233, ExtensionQueries.x234,
-        ExtensionQueries.x235, ExtensionQueries.x236,
-        ExtensionQueries.x237, ExtensionQueries.x238,
-        ExtensionQueries.x239, ExtensionQueries.x240,
-        ExtensionQueries.x241, ExtensionQueries.x242,
-        ExtensionQueries.x243, ExtensionQueries.x244,
-        ExtensionQueries.x245, ExtensionQueries.x246,
-        ExtensionQueries.x247, ExtensionQueries.x248)
+    Seq(Declared("x233"), Declared("x234"),
+        Declared("x235"), Declared("x236"),
+        Declared("x237"), Declared("x238"),
+        Declared("x239"), Declared("x240"),
+        Declared("x241"), Declared("x242"),
+        Declared("x243"), Declared("x244"),
+        Declared("x245"), Declared("x246"),
+        Declared("x247"), Declared("x248"))
       .foreach { q =>
         val plan = physical(q(spark, sf001))
         assert(!plan.contains("CartesianProduct"), plan.take(4000))
@@ -1960,30 +1961,30 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x244: curriculum phases ride the boundary spine — no " +
       "unpartitioned window over the scored doc frame") {
-    assertNoGlobalWindowOverBase(ExtensionQueries.x244(spark, sf001))
+    assertNoGlobalWindowOverBase(Declared("x244")(spark, sf001))
   }
 
   test("x241/x247: the leakage semi joins ARE semi joins (no subquery " +
       "loops), and x247's top-N is a bounded heap, not a global sort") {
-    assert(physical(ExtensionQueries.x241(spark, sf001)).contains("LeftSemi"))
+    assert(physical(Declared("x241")(spark, sf001)).contains("LeftSemi"))
     // x247's endpoint semi join materializes inside the pairedTerms
     // localCheckpoint (lineage cut — it cannot appear in this plan);
     // what the FINAL plan must show is the bounded-heap top-N
-    val p247 = physical(ExtensionQueries.x247(spark, sf001))
+    val p247 = physical(Declared("x247")(spark, sf001))
     assert(p247.contains("TakeOrderedAndProject"), p247.take(4000))
   }
 
   test("x249-x252: no new-tranche query compiles to a CartesianProduct; " +
       "x251 is one narrow projection (no join, no hash exchange); x250's " +
       "stitch window partitions by (pair, diag)") {
-    Seq(ExtensionQueries.x249, ExtensionQueries.x250,
-        ExtensionQueries.x251, ExtensionQueries.x252,
-        ExtensionQueries.x253, ExtensionQueries.x254,
-        ExtensionQueries.x255, ExtensionQueries.x256).foreach { q =>
+    Seq(Declared("x249"), Declared("x250"),
+        Declared("x251"), Declared("x252"),
+        Declared("x253"), Declared("x254"),
+        Declared("x255"), Declared("x256")).foreach { q =>
       val plan = physical(q(spark, sf001))
       assert(!plan.contains("CartesianProduct"), plan.take(4000))
     }
-    val p251 = physical(ExtensionQueries.x251(spark, sf001))
+    val p251 = physical(Declared("x251")(spark, sf001))
     assert(!p251.contains("Join"), p251.take(4000))
     assert(!p251.contains("Exchange hashpartitioning"), p251.take(4000))
     // the checksums are codegen kernel expressions — a reintroduced
@@ -1992,7 +1993,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p251.contains("lambdafunction"), p251.take(4000))
     assert(p251.contains("luhn_valid_count") && p251.contains("iban_valid_count"),
       p251.take(4000))
-    val p250 = physical(ExtensionQueries.x250(spark, sf001))
+    val p250 = physical(Declared("x250")(spark, sf001))
     // the gaps-and-islands windows must ride the (doc_a, doc_b, diag)
     // partition — an unpartitioned variant would shuffle every matched
     // position into one task. Window prints as
@@ -2060,7 +2061,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x179 gate: q04/q44 join strategies agree with the broadcast " +
       "advisor in BOTH directions") {
-    val advice = ExtensionQueries.x179(spark, sf001).collect()
+    val advice = Declared("x179")(spark, sf001).collect()
     val dims = advice.map(_.getAs[String]("table")).toSet
     val advised = advice.filter(_.getAs[Boolean]("fits_broadcast"))
       .map(_.getAs[String]("table")).toSet
@@ -2104,7 +2105,7 @@ class PlanShapeSpec extends SparkSpec {
     // x50 salts events.user_id with nSalts=16; x199 IS the advisor for
     // that key at targetPerTask=50 — its max advised factor must be
     // covered, or x50's constant has drifted below its own advice
-    val advised = ExtensionQueries.x199(spark, sf001).collect()
+    val advised = Declared("x199")(spark, sf001).collect()
     val maxFactor = advised.map(_.getAs[Long]("salt_factor")).max
     assert(maxFactor <= 16L,
       s"x199 advises salt_factor $maxFactor; x50's nSalts=16 no longer covers it")
@@ -2156,7 +2157,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x259: intra-doc islands window is partitioned (doc, diagonal) — " +
       "never an unpartitioned window; self-join is an equi-join, no " +
       "cartesian") {
-    val df = ExtensionQueries.x259(spark, sf001)
+    val df = Declared("x259")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     val plan = physical(df)
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
@@ -2164,7 +2165,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x260: periodicity is one whole-stage-codegen projection — zero " +
       "exchanges besides the final order") {
-    val df = ExtensionQueries.x260(spark, sf001)
+    val df = Declared("x260")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("min_full_period"), plan.take(2000))
     // per-row kernel: no aggregate, no join, no window anywhere
@@ -2173,7 +2174,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x262: stratified sample is a bounded-heap aggregation — no " +
       "Window, no per-stratum Sort below the aggregate") {
-    val df = ExtensionQueries.x262(spark, sf001)
+    val df = Declared("x262")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("Window"), plan.take(3000))
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
@@ -2182,7 +2183,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x263: the top-50 PMI cut is TakeOrderedAndProject; margins join " +
       "shuffled (vocabulary-sized), only the 1-row N frame broadcast") {
-    val plan = physical(ExtensionQueries.x263(spark, sf001))
+    val plan = physical(Declared("x263")(spark, sf001))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(3000))
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"), plan.take(3000))
@@ -2190,21 +2191,21 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x264: source overlap joins on the gram key and broadcasts only " +
       "the source-cardinality size frames; no cartesian") {
-    val plan = physical(ExtensionQueries.x264(spark, sf001))
+    val plan = physical(Declared("x264")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
     assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
   }
 
   test("x258: hashed-embedding agreement keeps the bucket equi-join — " +
       "no cartesian, no corpus-global window") {
-    val df = ExtensionQueries.x258(spark, sf001)
+    val df = Declared("x258")(spark, sf001)
     assertNoGlobalWindowOverBase(df)
     assert(!physical(df).contains("CartesianProduct"))
   }
 
   test("x265: clustering agreement is hash aggs + 1-row broadcasts — " +
       "no window, no cartesian beyond the broadcast 1-row crosses") {
-    val df = ExtensionQueries.x265(spark, sf001)
+    val df = Declared("x265")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("Window"), plan.take(3000))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
@@ -2212,7 +2213,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x266/x267: pair forensics ride the candidate pair relation — " +
       "windows (if any) partition per pair, no cartesian") {
-    val e = ExtensionQueries.x266(spark, sf001)
+    val e = Declared("x266")(spark, sf001)
     assertNoGlobalWindowOverBase(e)
     val ePlan = physical(e)
     assert(!ePlan.contains("CartesianProduct"))
@@ -2221,7 +2222,7 @@ class PlanShapeSpec extends SparkSpec {
     // shuffle corpus mass where only duplicate-volume mass is needed.
     // The df aggregate keeps the full postings; the PAIR joins don't.
     assert(ePlan.contains("LeftSemi"), ePlan.take(3000))
-    val d = ExtensionQueries.x267(spark, sf001)
+    val d = Declared("x267")(spark, sf001)
     val plan = physical(d)
     assert(!plan.contains("Window") && !plan.contains("CartesianProduct"),
       plan.take(3000))
@@ -2233,7 +2234,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("x272: weighted sample is the same bounded-heap shape as x262 — " +
       "no Window, no per-stratum Sort below the aggregate") {
-    val df = ExtensionQueries.x272(spark, sf001)
+    val df = Declared("x272")(spark, sf001)
     val plan = physical(df)
     assert(!plan.contains("Window"), plan.take(3000))
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
@@ -2243,7 +2244,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x273: NB scoring joins BROADCAST the 2^18-capped weight table — " +
       "map-side scoring at any corpus scale; no cartesian beyond the " +
       "1-row bias/class broadcasts") {
-    val df = ExtensionQueries.x273(spark, sf001)
+    val df = Declared("x273")(spark, sf001)
     val plan = physical(df)
     assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
@@ -2253,7 +2254,7 @@ class PlanShapeSpec extends SparkSpec {
   test("x275/x281: snapshot-served sketch probes keep the equi-join on " +
       "the prefix hash — no cartesian, no corpus-global window; the " +
       "served index arrives as a parquet scan, not a re-hash") {
-    Seq(ExtensionQueries.x275, ExtensionQueries.x281).foreach { q =>
+    Seq(Declared("x275"), Declared("x281")).foreach { q =>
       val df = q(spark, sf001)
       val plan = physical(df)
       assert(!plan.contains("CartesianProduct"), plan.take(3000))
@@ -2267,14 +2268,14 @@ class PlanShapeSpec extends SparkSpec {
   test("x277: both assignments are literal-centroid projections — zero " +
       "joins on the corpus path beyond the final vec_id equi-join; no " +
       "cartesian") {
-    val plan = physical(ExtensionQueries.x277(spark, sf001))
+    val plan = physical(Declared("x277")(spark, sf001))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
     assert(!plan.contains("Window"), plan.take(3000))
   }
 
   test("x280: mixture planning is one hash agg + a broadcast 1-row " +
       "totals frame — no shuffle join, no window") {
-    val plan = physical(ExtensionQueries.x280(spark, sf001))
+    val plan = physical(Declared("x280")(spark, sf001))
     assert(!plan.contains("Window"), plan.take(3000))
     assert(!plan.contains("SortMergeJoin"), plan.take(3000))
     assert(plan.contains("BroadcastNestedLoopJoin") ||

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkSpec, SparkEntry}
+import graft.testutil.Declared
 
 /** Smoke-level pinning for every declared query: runs at sf0.001,
   * asserts non-empty and stable row counts where the count is a
@@ -20,15 +21,15 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("340 queries, no name shadowed across the three families") {
-    val declared = Seq(RelationalQueries, ReferenceQueries, ExtensionQueries).map(_.all.size).sum
+    val declared = SparkEntry.families.map(_.all.size).sum
     val distinct = SparkEntry.queries.size
     assert(distinct == 340)
     assert(distinct == declared, "a name is declared more than once")
   }
 
   test("every query carries an oracle once x22 and x277 have run") {
-    ExtensionQueries.x22(spark, sf001).count()
-    ExtensionQueries.x277(spark, sf001).count()
+    Declared("x22")(spark, sf001).count()
+    Declared("x277")(spark, sf001).count()
     val queries = SparkEntry.queries.keySet
     val oracles = SparkEntry.oracleSql.keySet
     val withoutOracle = queries -- oracles

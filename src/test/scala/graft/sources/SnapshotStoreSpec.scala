@@ -208,9 +208,8 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(claims.forall(_ == ".claim-snap-00000004"), claims.toSeq)
   }
 
-  test("readVersion/history: time travel reads any on-disk snapshot; " +
-      "vacuumed versions fail with the retention hint; history shows " +
-      "orphan claims") {
+  test("readVersion: time travel reads any on-disk snapshot; " +
+      "vacuumed versions fail with the retention hint") {
     val table = tmp("snap_tt") + "/t"
     (1 to 3).foreach(v => SnapshotStore.write(Seq(v * 10).toDF("x"), table))
     // time travel: every committed version reads as written
@@ -218,13 +217,6 @@ class SnapshotStoreSpec extends SparkSpec {
       assert(SnapshotStore.readVersion(spark, table, v.toLong)
         .as[Int].collect().toSeq == Seq(v * 10))
     }
-    // an orphan claim (crashed writer, no directory) shows in history
-    new java.io.File(table, ".claim-snap-00000009").createNewFile()
-    val h = SnapshotStore.history(spark, table)
-    assert(h.map(_.version) == Seq(1L, 2L, 3L, 9L), h.toString)
-    assert(h.filter(_.isCurrent).map(_.version) == Seq(3L))
-    assert(!h.find(_.version == 9L).get.materialized)
-    assert(h.filter(_.materialized).forall(_.modifiedMs > 0L))
     // vacuum reclaims v1 (age the dirs), then readVersion fails loudly
     (1 to 2).foreach { v =>
       new java.io.File(table, SnapshotStore.snapName(v))
@@ -238,25 +230,5 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("keepLast"), e.getMessage)
     assert(SnapshotStore.readVersion(spark, table, 2L)
       .as[Int].collect().toSeq == Seq(20))
-  }
-
-  test("writePartitionedSnapshot: published snapshot prunes partitions " +
-      "like a plain partitioned path") {
-    val table = tmp("snap_part") + "/t"
-    val docs = graft.Tables.load(spark, sf001, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val v = graft.operators.Layout.writePartitionedSnapshot(
-      docs, table, partCols = Seq("lang"), sortCols = Seq("doc_id"))
-    assert(v == SnapshotStore.Commit(1L, becameCurrent = true))
-    val read = SnapshotStore.read(spark, table)
-    assert(read.count() == docs.count())
-    val pruned = read.filter(col("lang") === "en")
-    val scans = pruned.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty)
-    assert(scans.head.selectedPartitions.partitionCount == 1,
-      s"expected 1 pruned lang partition, got ${scans.head.selectedPartitions.partitionCount}")
-    assert(pruned.count() == docs.filter(col("lang") === "en").count())
   }
 }

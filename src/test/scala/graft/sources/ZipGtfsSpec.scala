@@ -27,13 +27,18 @@ class ZipGtfsSpec extends SparkSpec {
     assert(n == 0)
   }
 
-  test("stopsFromZip: BOM stripped, header parsed, short lines dropped") {
-    val bytes = Fixtures.zip("feed/stops.txt" -> Fixtures.messyStops)
-    val df = GtfsCsv.stopsFromZip(spark, bytes)
-    assert(df.columns.contains("stop_id") && df.columns.contains("stop_lat"))
-    assert(!df.columns.head.contains("﻿"))
+  test("stopRows: BOM stripped, header parsed, short lines dropped") {
+    val rows = GtfsCsv.stopRows("feedA", Fixtures.messyStops).toSeq
     // 6 data lines minus the 1-char line (dropped) = 5 rows
-    assert(df.count() == 5)
-    assert(df.filter($"stop_id" === "S5").count() == 1)
+    assert(rows.size == 5)
+    assert(rows.forall(_._1 == "feedA"))
+    // the BOM-prefixed header still names stop_id, so ids resolve
+    assert(rows.map(_._5) == Seq("S1", "S2", "S3", "S4", "S5"))
+    // cells stay raw strings: quotes/whitespace are StopsTransforms' job
+    assert(rows.head._2 == "\"Main St Station\"" && rows.head._3 == " 40.75 ")
+    // a trailing empty cell is "", a column the header lacks is null
+    assert(rows.last._8 == "")
+    assert(GtfsCsv.stopRows("f", "stop_id,stop_name\nS9,X\n").toSeq ==
+      Seq(("f", "X", null, null, "S9", null, null, null)))
   }
 }

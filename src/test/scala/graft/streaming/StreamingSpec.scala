@@ -581,7 +581,7 @@ class StreamingSpec extends SparkSpec {
       val emb = graft.Tables.load(spark, sf001, "embeddings")
       val dims = Seq(8, 16, 32, 64)
       // batch ground truth: x189's per-dim topk_hits over the corpus
-      val expected = graft.queries.ExtensionQueries.x189(spark, sf001)
+      val expected = graft.testutil.Declared("x189")(spark, sf001)
         .select(col("dim"), col("topk_hits"))
         .as[(Long, Long)].collect().toMap
       // reference ranking = batch full-dim top-10 (the audit's ftk)
@@ -1193,7 +1193,7 @@ class StreamingSpec extends SparkSpec {
       val fin = spark.table("quant_parity").as[Streaming.QuantileStat]
         .collect().groupBy(_.grp).map { case (_, ss) => ss.maxBy(_.n) }
         .map(s => (s.grp, s.n, s.p25, s.p50, s.p75, s.p90, s.p99)).toSet
-      val x205 = graft.queries.ExtensionQueries.x205(spark, sf001)
+      val x205 = graft.testutil.Declared("x205")(spark, sf001)
         .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
       assert(fin == x205, s"stream $fin vs x205 $x205")
     }
@@ -1330,12 +1330,7 @@ class StreamingSpec extends SparkSpec {
     assert(src.isFile, src.getAbsolutePath)
     // code lines only: scaladoc/comment lines and trailing comments may
     // name the API
-    def code(line: String) = line.trim match {
-      case t if t.startsWith("*") || t.startsWith("/*") => ""
-      case t => t.split("//", 2)(0)
-    }
-    val lines = java.nio.file.Files.readAllLines(src.toPath)
-      .toArray(Array.empty[String]).map(code)
+    val lines = graft.testutil.SourceScan.codeLines(src)
     def count(needle: String) = lines.map(
       scala.util.matching.Regex.quote(needle).r.findAllIn(_).size).sum
     assert(count(".transformWithState(") == 1,

@@ -73,6 +73,10 @@ class TransformsSpec extends SparkSpec {
       StopsTransforms.extractFeedId($"d"),
       StopsTransforms.extractFetchLink($"d")).as[(String, String)].head()
     assert(r == (("feed42", "http://h/x.zip")))
+    // no marker: empty, not null (the catalog side coalesces a null
+    // description to "" first)
+    assert(Seq("no markers").toDF("d").select(StopsTransforms.extractFeedId($"d"))
+      .as[String].head() == "")
   }
 
   test("resolveFourfour: first-match left join on embedded feed id") {
@@ -87,15 +91,6 @@ class TransformsSpec extends SparkSpec {
     assert(r("feedN") == null)
   }
 
-  test("catalogThumbprint projects name + embedded feed id") {
-    val cat = Seq(("Alpha GTFS dataset", "x\nFeed ID: feedA\ny"),
-                  ("No markers", null: String)).toDF("name", "description")
-    val r = CatalogTransforms.catalogThumbprint(cat)
-      .as[(String, String)].collect().toMap
-    assert(r("Alpha GTFS dataset") == "feedA")
-    assert(r("No markers") == "")
-  }
-
   test("lastWinsByKey keeps the newest row per key") {
     val df = Seq(("k1", 1, "old"), ("k1", 2, "new"), ("k2", 1, "only"))
       .toDF("k", "ts", "v")
@@ -104,13 +99,11 @@ class TransformsSpec extends SparkSpec {
     assert(r == Map("k1" -> "new", "k2" -> "only"))
   }
 
-  test("deleteSet / keepSet / upsert implement merge semantics") {
+  test("deleteSet / upsert implement merge semantics") {
     val target = Seq(("a", 1), ("b", 1), ("c", 1)).toDF("k", "v")
     val source = Seq(("b", 2), ("d", 2)).toDF("k", "v")
     assert(CatalogTransforms.deleteSet(target, source, "k")
       .select("k").as[String].collect().toSet == Set("a", "c"))
-    assert(CatalogTransforms.keepSet(target, source, "k")
-      .select("k").as[String].collect().toSet == Set("b"))
     val merged = CatalogTransforms.upsert(target, source, "k")
       .select("k", "v").as[(String, Int)].collect().toMap
     assert(merged == Map("a" -> 1, "b" -> 2, "c" -> 1, "d" -> 2))
