@@ -284,8 +284,8 @@ object Bench {
     // centroid array), so dropping every persistent RDD between runs
     // is safe and makes each timing start from a clean block manager —
     // the headline measures plans, not block-manager history.
-    def dropLingering(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    def dropLingering(): Unit = spark.sparkContext.getPersistentRDDs.values
+      .foreach(org.apache.spark.sql.graftbridge.unpersistQuietly(_, blocking = true))
     dropLingering()
     // Dev knobs (unset in driver runs): SPARK_GRAFT_ONLY=<substring>
     // times only matching queries; SPARK_GRAFT_REPEAT=N overrides the

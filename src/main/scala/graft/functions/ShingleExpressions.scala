@@ -505,43 +505,6 @@ case class CharSyms(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `bpe_apply_merge(syms, l, r)` → array<string>: greedy
-  * non-overlapping application of ONE BPE merge
-  * ([[ShingleKernels.bpeApplyMerge]] — provably identical to the
-  * even-offset-island window plan it replaces). Null-intolerant: the
-  * empty-merge pass-through is the caller's `when(l.isNull, syms)`
-  * guard, keeping this a plain codegen ternary. */
-case class BpeApplyMerge(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def prettyName: String = "bpe_apply_merge"
-
-  override def checkInputDataTypes() = {
-    val a = K.expect("bpe_apply_merge", first.dataType,
-      K.isStringArray, "array<string>")
-    if (a.isFailure) a
-    else {
-      val b = K.expect("bpe_apply_merge", second.dataType, K.isString, "string")
-      if (b.isFailure) b
-      else K.expect("bpe_apply_merge", third.dataType, K.isString, "string")
-    }
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(syms: Any, l: Any, r: Any): Any =
-    ShingleKernels.bpeApplyMerge(
-      syms.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      l.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, l, r) =>
-      s"${K.cls}.bpeApplyMerge($s, $l, $r)")
-
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(first = a, second = b, third = c)
-}
-
 /** `bpe_apply_merges(syms, lefts, rights)` → array<string>: a whole
   * round-ordered merge table applied in ONE projection
   * ([[ShingleKernels.bpeApplyMerges]]) — the encoder's replacement
@@ -634,8 +597,6 @@ object ShingleFunctions {
     toColumn(AdjacentTriples(toExpression(tokens), f1, f2, f3))
   def char_syms(s: Column): Column =
     toColumn(CharSyms(toExpression(s)))
-  def bpe_apply_merge(syms: Column, l: Column, r: Column): Column =
-    toColumn(BpeApplyMerge(toExpression(syms), toExpression(l), toExpression(r)))
   def bpe_apply_merges(syms: Column, ls: Column, rs: Column): Column =
     toColumn(BpeApplyMerges(toExpression(syms), toExpression(ls), toExpression(rs)))
   def min_full_period(s: Column): Column =

@@ -674,16 +674,14 @@ object ShingleKernels {
   }
 
   /** Greedy non-overlapping application of ONE BPE merge (l, r) to a
-    * symbol array — the single-pass kernel form of
-    * [[graft.operators.TextAnalysis.applyBestPair]]'s window plan
-    * (posexplode → wid-partitioned windows → collect_list agg), which
-    * cost 3 shuffles + a checkpoint PER ROUND. Left-to-right greedy
-    * selection is provably identical to the even-offset-island rule
-    * the window plan computes: matches inside an island are
-    * consecutive positions, and both rules take even offsets from the
-    * island's first match (TextAnalysisSpec pins the equivalence on
-    * the hand-traced corpora + the aaaaa adversary). */
-  def bpeApplyMerge(syms: ArrayData, l: UTF8String, r: UTF8String): ArrayData = {
+    * symbol array in one pass. Left-to-right greedy selection is
+    * provably identical to the even-offset-island rule of the window
+    * plan (posexplode → wid-partitioned windows → collect_list agg)
+    * TextAnalysisSpec keeps as the reference: matches inside an island
+    * are consecutive positions, and both rules take even offsets from
+    * the island's first match (the spec pins the equivalence on random
+    * vocabularies, the hand-traced corpora and the aaaaa adversary). */
+  private def bpeApplyMerge(syms: ArrayData, l: UTF8String, r: UTF8String): ArrayData = {
     val n = syms.numElements()
     if (n < 2) return syms
     val out = new scala.collection.mutable.ArrayBuffer[UTF8String](n)
@@ -706,7 +704,8 @@ object ShingleKernels {
     * sequentially. Rounds absent from the table (nothing merged at
     * induction time) are naturally pass-through: they simply do not
     * appear in the arrays. Turns the encoder's per-round
-    * join+window+agg+checkpoint pipeline into ONE projection. */
+    * join+window+agg+checkpoint pipeline into ONE projection, and is
+    * every induction round's vocab projection too. */
   def bpeApplyMerges(symsIn: ArrayData, ls: ArrayData, rs: ArrayData): ArrayData = {
     var syms = symsIn
     val rounds = ls.numElements()

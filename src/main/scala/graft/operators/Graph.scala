@@ -39,11 +39,10 @@ object Graph {
   def labelPropagate(edges: DataFrame, seeds: DataFrame,
       rounds: Int = 2): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    var labels = seeds
+    val seeded = seeds
       .select(col("id"), col("label"), lit(0).as("round"))
       .transform(Materialize(_, "Graph.labelPropagate: labels"))
-    var labelsMat = labels
-    for (r <- 1 to rounds) {
+    Materialize.rounds(seeded, rounds, "Graph.labelPropagate: round") { (labels, r) =>
       val adopted = e
         .join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("c"))
@@ -52,12 +51,8 @@ object Graph {
         .agg(max_by(col("label"), struct(col("c"), -col("label"))).as("label"))
         .select(col("src").as("id"), col("label"), lit(r).as("round"))
         .join(labels.select("id"), Seq("id"), "left_anti")
-      val next = Materialize(labels.union(adopted), "Graph.labelPropagate: round")
-      Materialize.release(labelsMat)
-      labelsMat = next
-      labels = next
+      labels.union(adopted)
     }
-    labels
   }
 
   /** Integer-exact PageRank, fixed synchronous iterations — the
@@ -91,23 +86,18 @@ object Graph {
     val eDeg = e.join(
         e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src")
       .transform(Materialize(_, "Graph.pageRank: edge degrees")) // feeds every iteration; compute once
-    var pr = Materialize(nodes.withColumn("pr", lit(1000000L)), "Graph.pageRank: pr")
-    var prMat = pr
-    for (_ <- 1 to iters) {
+    // round 0 is a literal column over the nodes checkpoint
+    Materialize.rounds(nodes.withColumn("pr", lit(1000000L)), iters,
+        "Graph.pageRank: round") { (pr, _) =>
       val inMass = eDeg
         .join(pr.select(col("id").as("src"), col("pr")), "src")
         .select(col("dst").as("id"),
           expr("pr * 17L div (20L * out_deg)").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("m"))
-      val next = nodes.join(inMass, Seq("id"), "left")
+      nodes.join(inMass, Seq("id"), "left")
         .select(col("id"),
           (lit(150000L) + coalesce(col("m"), lit(0L))).as("pr"))
-        .transform(Materialize(_, "Graph.pageRank: round"))
-      Materialize.release(prMat)
-      prMat = next
-      pr = next
     }
-    pr
   }
 
   /** Reciprocated edges of a directed graph as an undirected
@@ -442,25 +432,16 @@ object Graph {
     val e = und.select(col("u"), col("v"))
       .union(und.select(col("v").as("u"), col("u").as("v")))
       .transform(Materialize(_, "Graph.kCore: edges")) // reused every round + the final degree
-    var alive = e.select(col("u").as("node")).distinct()
-    for (_ <- 1 to rounds) {
-      val next = e
-        .join(alive.withColumnRenamed("node", "u"), "u")
-        .join(alive.withColumnRenamed("node", "v"), "v")
+    val alive = Materialize.rounds(e.select(col("u").as("node")).distinct(),
+        rounds, "Graph.kCore: round") { (live, _) =>
+      e.join(live.withColumnRenamed("node", "u"), "u")
+        .join(live.withColumnRenamed("node", "v"), "v")
         .groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("u").as("node"))
-        // eager: materialized before the release below
-        .transform(Materialize(_, "Graph.kCore: round"))
-      // release the PREVIOUS round's snapshot (a no-op for round 1's
-      // `alive`, which only reads the shared edge checkpoint)
-      Materialize.release(alive)
-      alive = next
     }
-    val core = e
-      .join(alive.withColumnRenamed("node", "u"), "u")
+    e.join(alive.withColumnRenamed("node", "u"), "u")
       .join(alive.withColumnRenamed("node", "v"), "v")
       .groupBy(col("u").as("id")).agg(count(lit(1)).as("core_deg"))
-    core
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 
 /** The one owner of "pin this intermediate": every checkpoint the
   * engine takes (operators, queries, pipelines and the streaming
@@ -39,8 +39,13 @@ object Materialize {
     * which is race-free only when that action is its sole consumer
     * until the blocks exist (connected components' count-driven
     * rounds). */
-  def apply(df: DataFrame, step: String, eager: Boolean = true): DataFrame =
-    named(df.sparkSession, step)(df.localCheckpoint(eager))
+  def apply(df: DataFrame, step: String, eager: Boolean = true): DataFrame = {
+    val cp = named(df.sparkSession, step)(df.localCheckpoint(eager))
+    // the RDD carries the step's name too, so the stages that read the
+    // checkpoint and the storage listing name it
+    graftbridge.checkpointRdd(cp).foreach(_.setName(step))
+    cp
+  }
 
   /** Free the blocks behind a checkpoint NOW, instead of when the
     * ContextCleaner collects it — iterative operators holding one
@@ -48,9 +53,23 @@ object Materialize {
     * round count. Only a frame that IS a checkpoint (its analyzed plan
     * is the checkpoint's RDD scan) is released; any frame derived from
     * one is a no-op, so releasing it can never free a checkpoint that
-    * other frames still read. */
+    * other frames still read. An expected free: it logs nothing. */
   def release(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.unpersistCheckpoint(df)
+    graftbridge.checkpointRdd(df).foreach(graftbridge.unpersistQuietly(_, blocking = false))
+
+  /** A fixed-round loop: round r's frame is `next(previous, r)`,
+    * checkpointed under `step` (static job graph, truncated lineage),
+    * and the previous round's frame is released once the next one
+    * exists — a no-op when it is not a checkpoint, such as a lazy
+    * round-0 frame derived from one. Returns round `n`'s frame (`init`
+    * when `n` is 0). */
+  def rounds(init: DataFrame, n: Int, step: String)(
+      next: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to n).foldLeft(init) { (prev, r) =>
+      val cur = apply(next(prev, r), step)
+      release(prev)
+      cur
+    }
 
   /** Run `body` with `step` as the Spark job description, so its jobs
     * and stages carry the step's name; the caller's description (a

@@ -75,9 +75,9 @@ object Preferences {
       .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"),
         col("n_comparisons"))
       .transform(Materialize(_, "Preferences.bradleyTerry: items"))
-    var s = items.select(col("item"), lit(1000000L).as("__s"))
+    val scores = items.select(col("item"), lit(1000000L).as("__s"))
       .transform(Materialize(_, "Preferences.bradleyTerry: scores"))
-    for (_ <- 1 to rounds) {
+    val fitted = Materialize.rounds(scores, rounds, "Preferences.bradleyTerry: round") { (s, _) =>
       val denom = edges
         .join(broadcast(s.select(col("item"), col("__s").as("__si"))), "item")
         .join(broadcast(s.select(col("item").as("__o"), col("__s").as("__sj"))),
@@ -94,18 +94,14 @@ object Preferences {
               "(n_wins * CAST(1000000000000 AS DECIMAL(38,0))) div __d"))
             .as("__r"))
       val mx = raw.agg(max(col("__r")).as("__mx"))
-      val next = raw.crossJoin(broadcast(mx))
+      raw.crossJoin(broadcast(mx))
         .filter(col("__mx") > 0)
         .select(col("item"),
           greatest(expr(
             "(__r * CAST(1000000 AS DECIMAL(38,0))) div __mx"), lit(1L))
             .as("__s"))
-        .transform(Materialize(_, "Preferences.bradleyTerry: round"))
-      // the next round's snapshot exists: free the previous one
-      Materialize.release(s)
-      s = next
     }
-    items.join(s, "item")
+    items.join(fitted, "item")
       .select(col("item"), col("n_wins"), col("n_comparisons"),
         col("__s").as("strength_micro"))
       .orderBy(col("strength_micro").desc, col("item"))

@@ -1772,8 +1772,6 @@ object Profile {
     val thr = grid.join(rcum, col("__cum") >= col("__k"), "left")
       .groupBy(col("pct"), col("n_cal"))
       .agg(min(col("__r")).as("threshold"))
-      // tiny; broadcast against the eval histogram
-      .transform(Materialize(_, "Profile.conformalCoverage: thr"))
     val ehist = base.filter(!col("__cal"))
       .join(med, Seq("__g"))
       .select(abs(col("__y") - col("__med")).as("__r"))
@@ -1845,9 +1843,9 @@ object Profile {
         expr("(__tot * CAST(1000000 AS DECIMAL(38,0))) div __nc")
           .as("__tc"))
       .transform(Materialize(_, "Profile.rakingWeights: targets"))
-    var w = cells.select(col("__r"), col("__c"), col("__n"),
-      lit(1000000L).cast(dec).as("__w"))
-    for (_ <- 1 to iterations) {
+    val fitted = Materialize.rounds(cells.select(col("__r"), col("__c"), col("__n"),
+        lit(1000000L).cast(dec).as("__w")), iterations,
+        "Profile.rakingWeights: round") { (w, _) =>
       val rowScale = w
         .groupBy(col("__r"))
         .agg(sum(col("__n").cast(dec) * col("__w")).as("__m"))
@@ -1866,18 +1864,13 @@ object Profile {
         .select(col("__c"),
           expr("(__tc * CAST(1000000 AS DECIMAL(38,0))) div __m")
             .as("__sc"))
-      val next = afterRow.join(broadcast(colScale), Seq("__c"))
+      afterRow.join(broadcast(colScale), Seq("__c"))
         .select(col("__r"), col("__c"), col("__n"),
           greatest(expr("(__w * __sc) div 1000000"), lit(1).cast(dec))
             .as("__w"))
-        .transform(Materialize(_, "Profile.rakingWeights: round"))
-      // the next round's snapshot exists: free the previous one (a
-      // no-op for round 1's `w`, which is not a checkpoint)
-      Materialize.release(w)
-      w = next
     }
-    val totMass = w.agg(sum(col("__n").cast(dec) * col("__w")).as("__tm"))
-    w.crossJoin(broadcast(totMass))
+    val totMass = fitted.agg(sum(col("__n").cast(dec) * col("__w")).as("__tm"))
+    fitted.crossJoin(broadcast(totMass))
       .filter(col("__tm") > 0)
       .select(col("__r").as(rowCol), col("__c").as(colCol),
         col("__n").as("n_docs"),

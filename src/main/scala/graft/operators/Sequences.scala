@@ -1483,23 +1483,19 @@ object Sequences {
     val states = edges.select(col("src").as("state"))
       .union(edges.select(col("dst").as("state"))).distinct()
       .transform(Materialize(_, "Sequences.markovStationary: states"))
-    var pi = states.withColumn("pi_micro", lit(1000000L))
-      .transform(Materialize(_, "Sequences.markovStationary: pi"))
-    for (_ <- 1 to iters) {
+    // round 0 is a literal column over the states checkpoint
+    val stationary = Materialize.rounds(states.withColumn("pi_micro", lit(1000000L)),
+        iters, "Sequences.markovStationary: round") { (pi, _) =>
       val stepped = edges.join(pi, edges("src") === pi("state"))
         .select(col("dst").as("state"),
           expr("(pi_micro * n) div tot").as("__m"))
         .groupBy(col("state"))
         .agg(sum(col("__m")).cast("bigint").as("__pi2"))
-      val next = states.join(stepped, Seq("state"), "left")
+      states.join(stepped, Seq("state"), "left")
         .select(col("state"),
           coalesce(col("__pi2"), lit(0L)).as("pi_micro"))
-        .transform(Materialize(_, "Sequences.markovStationary: round"))
-      // the next round's snapshot exists: free the previous one
-      Materialize.release(pi)
-      pi = next
     }
-    pi.select(col("state").as("event_type"), col("pi_micro"))
+    stationary.select(col("state").as("event_type"), col("pi_micro"))
       .orderBy(col("event_type"))
   }
 
@@ -1674,7 +1670,6 @@ object Sequences {
       .withColumn("__n", sum(col("__c")).over(Window.partitionBy()))
       .filter(expr(s"__cum >= (__n * $trainPct + 99) div 100"))
       .agg(min(col("__d")).as("__cutoff"))
-      .transform(Materialize(_, "Sequences.temporalSplitAudit: cut"))
     val flagged = base.crossJoin(broadcast(cut))
       .select(col("__u"), (col("__d") <= col("__cutoff")).as("__train"),
         col("__cutoff"))

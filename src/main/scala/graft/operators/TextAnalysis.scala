@@ -2591,25 +2591,25 @@ object TextAnalysis {
     * across every word. The output is the merge TABLE (the learned
     * tokenizer), one row per round.
     *
-    * The greedy non-overlapping merge is fully relational (no
-    * sequential per-word scan): positions where (sym, next) equals
-    * the pair are match candidates; consecutive candidate runs — which
-    * require left==right (an "aaaa" run) — are islands in the
-    * gaps-and-islands sense (position − running match count), and
-    * greedy selects every EVEN offset from each island's first match.
-    * A selected position emits the merged symbol, the position after
-    * it drops, everything else passes through; the new sequence is
-    * rebuilt by position sort. Hand-traced on the "aaaa"/(a,a) →
-    * [aa, aa] adversary in TextAnalysisSpec.
+    * The greedy non-overlapping merge is the encoder's own kernel,
+    * [[graft.functions.ShingleKernels.bpeApplyMerges]]: one O(|syms|)
+    * codegen pass per word and merge, which takes even offsets from
+    * the first match of every run of consecutive matches — the
+    * "aaaa"/(a,a) → [aa, aa] adversary, hand-traced in
+    * TextAnalysisSpec.
     *
     * Scale design: the corpus collapses to DISTINCT words ONCE (one
-    * hash agg — the same O(vocab) envelope as [[bpePairStats]]); all
-    * N rounds run over the vocab frame only, O(vocab × word-length)
-    * rows per round, independent of corpus row count. Every window
-    * partitions by word (bounded by the longest word); each round's
-    * survivor frame and 1-row best pair are checkpointed so round k+1
-    * never re-runs round k (the x137 k-core fixpoint pattern). The
-    * per-round argmax is a min-struct aggregate, not a global sort.
+    * hash agg — the same O(vocab) envelope as [[bpePairStats]]) into
+    * the one checkpointed (wid, c, syms) vocab; every round reads only
+    * that checkpoint, O(vocab × word-length) rows, independent of
+    * corpus row count. Round k's vocab is one `bpe_apply_merges`
+    * projection of the checkpoint under the k − 1 merges found so far
+    * (literal symbol arrays), and its argmax is a min-struct
+    * aggregate, not a global sort. The only per-round driver traffic
+    * is that one best-pair row: the merge list it grows is bounded by
+    * `rounds` ≤ 64, not by the data, so no round is checkpointed and
+    * no size bound or second code path is needed. The loop stops at
+    * pair exhaustion.
     *
     * Output: (round, left_sym, right_sym, merged, pair_count),
     * ordered by round; rounds after pair exhaustion emit nothing. */
@@ -2620,31 +2620,64 @@ object TextAnalysis {
     bpeInductionWithVocab(docs, rounds, textCol)._1
   }
 
-  /** [[bpeInduction]] exposing BOTH outputs: the merge table AND the
-    * final per-word symbol state (wid, c, syms) after all rounds —
-    * the encoded vocabulary downstream consumers ([[bpeFertility]])
-    * aggregate over. Words always survive pair exhaustion: the merge
-    * round left-joins the (possibly empty) best-pair frame, so an
-    * exhausted round passes every word through unchanged. */
+  /** [[bpeInduction]] exposing BOTH outputs: the merge table (a local
+    * frame) AND the final per-word symbol state (wid, c, syms) after
+    * all rounds — the encoded vocabulary downstream consumers
+    * ([[bpeFertility]]) aggregate over. Words always survive pair
+    * exhaustion: the final vocab is the checkpointed vocab under the
+    * merges that were found, so an exhausted round changes no word. */
   def bpeInductionWithVocab(docs: DataFrame, rounds: Int = 6,
       textCol: String = "text"): (DataFrame, DataFrame) = {
+    import graft.functions.ShingleFunctions.{adjacent_pairs, bpe_apply_merges, char_syms}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     require(rounds >= 1 && rounds <= 64,
       s"bpeInductionWithVocab: rounds must be in [1, 64], got $rounds")
-    var vocab = docs
+    val vocab = docs
       .select(explode(words(col(textCol))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .select(col("w").as("wid"), col("c"),
-        // codegen kernel split (identical codepoint semantics to the
-        // old transform/substring lambda, one O(len) pass — r18)
-        graft.functions.ShingleFunctions.char_syms(col("wid")).as("syms"))
+      .select(col("w").as("wid"), col("c"), char_syms(col("w")).as("syms"))
       .transform(Materialize(_, "TextAnalysis.bpeInductionWithVocab: vocab"))
-    val merges = (1 to rounds).map { r =>
-      val (best, next) = bpeMergeRound(vocab, r)
-      vocab = next
-      best
-    }
-    (merges.reduce(_ unionAll _).orderBy(col("round")), vocab)
+    // (left, right, pair count) per round, in round order
+    type Merge = (String, String, Long)
+    def applied(merges: Seq[Merge]): DataFrame =
+      vocab.select(col("wid"), col("c"), bpe_apply_merges(col("syms"),
+        typedLit(merges.map(_._1)), typedLit(merges.map(_._2))).as("syms"))
+    def best(merges: Seq[Merge]): Option[Merge] =
+      Materialize.named(docs.sparkSession,
+          "TextAnalysis.bpeInductionWithVocab: best") {
+        applied(merges)
+          // fully-merged single-symbol words carry no pairs
+          .filter(size(col("syms")) >= 2)
+          .select(col("c"), explode(adjacent_pairs(col("syms"), "l", "r")).as("pr"))
+          .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
+          .agg(sum(col("c")).cast("bigint").as("cnt"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("l"), col("r"),
+            col("cnt"))).as("b"))
+          .select(col("b.l"), col("b.r"), col("b.cnt"))
+          .filter(col("l").isNotNull) // empty pair space → no row
+          .collect().headOption
+          .map(b => (b.getString(0), b.getString(1), b.getLong(2)))
+      }
+    @scala.annotation.tailrec
+    def induce(merges: Vector[Merge]): Vector[Merge] =
+      if (merges.length == rounds) merges
+      else best(merges) match {
+        case Some(m) => induce(merges :+ m)
+        case None => merges
+      }
+    val merges = induce(Vector.empty)
+    val table = org.apache.spark.sql.graftbridge.localFrame(docs.sparkSession,
+      StructType(Seq(StructField("round", LongType, nullable = false),
+        StructField("left_sym", StringType), StructField("right_sym", StringType),
+        StructField("merged", StringType), StructField("pair_count", LongType))),
+      merges.zipWithIndex.map { case ((l, r, cnt), i) =>
+        InternalRow(i + 1L, UTF8String.fromString(l), UTF8String.fromString(r),
+          UTF8String.fromString(l + r), cnt)
+      })
+    (table, applied(merges))
   }
 
   /** Tokenizer fertility under the induced BPE vocabulary — the
@@ -2681,73 +2714,14 @@ object TextAnalysis {
       .orderBy(col(groupCol))
   }
 
-  /** One BPE merge round over a (wid, c, syms) vocab frame: returns
-    * (the 1-row merge record for `round`, the merged vocab frame).
-    * See [[bpeInduction]] for the greedy-merge decomposition. */
-  private def bpeMergeRound(vocab: DataFrame, round: Int)
-      : (DataFrame, DataFrame) = {
-    // fully-merged single-symbol words carry no pairs, so they leave
-    // before the pair explode
-    val best = vocab
-      .filter(size(col("syms")) >= 2)
-      .select(col("c"), explode(graft.functions.ShingleFunctions
-        .adjacent_pairs(col("syms"), "l", "r")).as("pr"))
-      .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
-      .agg(sum(col("c")).cast("bigint").as("cnt"))
-      .agg(min(struct((-col("cnt")).as("nc"), col("l").as("l"),
-        col("r").as("r"), col("cnt").as("cnt"))).as("b"))
-      .select(col("b.l").as("l"), col("b.r").as("r"), col("b.cnt").as("cnt"))
-      .filter(col("l").isNotNull) // empty pair space → empty best
-      // 1 row; feeds the merge AND the output
-      .transform(Materialize(_, "TextAnalysis.bpeMergeRound: best"))
-    // r18: the merge application is a zero-shuffle kernel projection
-    // now, so round k+1 re-deriving round k's vocab is a chain of ≤ k
-    // broadcast-join projections over the CHECKPOINTED initial vocab —
-    // cheaper than the per-round eager checkpoint it replaces (which
-    // was a full materialization job per round when the application
-    // was a 3-exchange window plan)
-    val next = applyBestPair(vocab, best)
-    (best.select(lit(round.toLong).as("round"), col("l").as("left_sym"),
-      col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
-      col("cnt").as("pair_count")), next)
-  }
-
-  /** Greedy non-overlapping application of ONE pair row to every word
-    * of a (wid, c, syms) frame — the merge kernel [[bpeInduction]]
-    * documents. `best` must be ≤ 1 row with columns (l, r); an EMPTY
-    * best passes every word through unchanged (LEFT join on true:
-    * null l/r hit the `when` pass-through arm, so nothing merges).
-    * Returns the merged (wid, c, syms) frame, lazy: the induction
-    * leaves rounds unmaterialized, as a re-derivation is a chain of
-    * ≤ rounds broadcast-join projections over the checkpointed initial
-    * vocab.
-    *
-    * r18 optimization (guide §2.4 + §1.2 step 2): the merge used to
-    * run as posexplode → two wid-partitioned window passes →
-    * collect_list re-assembly — 3 exchanges + 2 sorts PER ROUND, per
-    * round checkpointed. [[graft.functions.ShingleKernels.bpeApplyMerge]]
-    * is the same greedy even-offset-island selection as one O(|syms|)
-    * codegen pass per word, so a round is now a zero-shuffle
-    * broadcast-join projection. Equivalence is pinned by
-    * TextAnalysisSpec's kernel-vs-window property test plus the
-    * hand-traced corpora. */
-  private[graft] def applyBestPair(vocab: DataFrame, best: DataFrame): DataFrame = {
-    import graft.functions.ShingleFunctions.bpe_apply_merge
-    vocab.join(broadcast(best.select(col("l"), col("r"))), lit(true), "left")
-      .select(col("wid"), col("c"),
-        when(col("l").isNull || col("r").isNull, col("syms"))
-          .otherwise(bpe_apply_merge(col("syms"), col("l"), col("r")))
-          .as("syms"))
-  }
-
   /** BPE ENCODER — applies an already-induced merge table to NEW text
     * (the streaming-ingest tokenize-and-count use [[bpeInduction]]
     * learns for but cannot serve itself: induction reads its own
     * corpus; this reads ANY corpus under a FIXED tokenizer). Replays
     * the merge table in round order: round r's (left_sym, right_sym)
     * row — or pass-through when round r merged nothing at induction
-    * time — is greedily applied ([[applyBestPair]], the exact kernel
-    * the induction used), so a word seen at induction time encodes
+    * time — is greedily applied (the `bpe_apply_merges` kernel the
+    * induction uses), so a word seen at induction time encodes
     * BIT-IDENTICALLY to its final induction vocab state, and an
     * unseen word gets the deterministic greedy encoding under the
     * same rules. Single-char words carry no pairs and are excluded,
@@ -2778,10 +2752,6 @@ object TextAnalysis {
         .groupBy(col("w")).agg(count(lit(1)).as("c")),
       merges, rounds)
 
-  /** [[bpeEncode]] over a PRE-AGGREGATED (w, c) distinct-word frame —
-    * the shared-subtree form for callers that encode ONE corpus under
-    * SEVERAL merge tables (x276 encodes tokenizer v1 AND v2: one word
-    * aggregation, two kernel projections — r18). */
   /** The 1-row (left-syms, right-syms) arrays of a round-capped merge
     * table — the broadcastable form both encode entry points consume. */
   private def bpeMergeArrays(merges: DataFrame, rounds: Int): DataFrame = {
@@ -2804,6 +2774,7 @@ object TextAnalysis {
         expr("transform(__m, x -> x.right_sym)").as("__rs"))
   }
 
+  /** [[bpeEncode]] over a PRE-AGGREGATED (w, c) distinct-word frame. */
   private[graft] def bpeEncodeFromWordCounts(wordCounts: DataFrame,
       merges: DataFrame, rounds: Int): DataFrame = {
     import graft.functions.ShingleFunctions.{bpe_apply_merges, char_syms}
@@ -2812,10 +2783,10 @@ object TextAnalysis {
       .select(col("w").as("wid"), col("c"),
         bpe_apply_merges(char_syms(col("w")), col("__ls"), col("__rs"))
           .as("syms"))
-      // terminate the encode once: every consumer (x209's rollup joins
-      // it against a fresh corpus explode; x276 reads it twice) starts
-      // from the materialized vocab instead of re-running the agg —
-      // ONE checkpoint job total, where the round-replay form cost 7
+      // one reader (x209/x271's rollup), kept anyway: that rollup joins
+      // the encoding against a SECOND explode of the same corpus, and
+      // the checkpoint keeps its final plan at one corpus scan instead
+      // of two (PlanShapeSpec's x209 pin)
       .transform(Materialize(_, "TextAnalysis.bpeEncodeFromWordCounts: encode"))
   }
 
@@ -2842,7 +2813,6 @@ object TextAnalysis {
           .as("syms_a"),
         bpe_apply_merges(char_syms(col("w")), col("__ls_b"), col("__rs_b"))
           .as("syms_b"))
-      .transform(Materialize(_, "TextAnalysis.bpeEncodeDualFromWordCounts: encode"))
   }
 
   /** Per-document curation scorecard — the explainable decision

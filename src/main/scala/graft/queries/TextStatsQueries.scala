@@ -872,7 +872,7 @@ object TextStatsQueries extends QueryFamily {
   /** x195 iterated BPE vocabulary induction — see
     * [[graft.operators.TextAnalysis.bpeInduction]]: six full merge
     * rounds of the Sennrich trainer over the distinct-word vocabulary
-    * (deterministic (count desc, pair asc) picks, greedy relational
+    * (deterministic (count desc, pair asc) picks, greedy
     * left-to-right merges), emitting the learned merge table — the
     * multi-round answer to x78's single-round pair statistics
     * (VERDICT r12 item 6). */
@@ -1527,18 +1527,16 @@ object TextStatsQueries extends QueryFamily {
       s, table, merges.filter(col("round") <= 4))
     val c6 = graft.sources.IndexArtifacts.saveBpeMerges(s, table, merges)
     graft.sources.SnapshotStore.vacuum(s, table, keepLast = 2)
-    // r18: the two served encodes read ONE corpus — tokenize and
-    // count once (the scorecard "one tokenization pass" rule), then
-    // each version is a kernel projection over the shared frames
+    // the distinct-word counts and the (source, word) explode each
+    // have one reader, so neither is checkpointed: the final plan
+    // below reads each once
     val wc = d.select(explode(graft.functions.TextFunctions
         .words(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .transform(Materialize(_, "TextStatsQueries.x276: word counts"))
     val srcWords = d.select(col("source"),
         explode(graft.functions.TextFunctions.words(col("text"))).as("__w"))
       .filter(length(col("__w")) >= 2)
-      .transform(Materialize(_, "TextStatsQueries.x276: srcWords"))
     // r19 (VERDICT r18 item 6, step 2): BOTH version encodes come out
     // of one kernel projection over the shared distinct-word frame
     // (bpeEncodeDualFromWordCounts), so the corpus (source, word)

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -15,27 +16,31 @@ import org.apache.spark.sql.types.StructType
   * `graft.functions`) conventionally expose it from a package stub
   * inside `org.apache.spark.sql`; this object is that stub and the
   * only program file living outside the `graft` namespace (the tests
-  * add a listener-bus accessor beside it).
+  * add listener-bus and block-manager accessors beside it).
   */
 package object graftbridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Release the storage blocks behind a `localCheckpoint`ed frame NOW.
-    *
-    * `Dataset.unpersist` only uncaches CacheManager entries; a local
-    * checkpoint's persistence lives at the RDD layer (the `LogicalRDD`
-    * the checkpointed plan is), which the public API cannot reach —
-    * without this, blocks are freed only when the ContextCleaner
-    * eventually GCs the dropped RDD, which is too lazy for iterative
-    * algorithms holding one snapshot per round. No-op unless the
-    * frame's analyzed plan IS the checkpoint: a frame derived from one
-    * only reads it, and must not free what other frames still read. */
-  def unpersistCheckpoint(df: DataFrame): Unit =
+  /** The RDD behind a `localCheckpoint`ed frame: `Some` only when the
+    * frame's analyzed plan IS the checkpoint (the `LogicalRDD` scan). A
+    * local checkpoint's persistence lives at that RDD layer, which the
+    * public API cannot reach: `Dataset.unpersist` only uncaches
+    * CacheManager entries. A frame derived from a checkpoint only reads
+    * it, so it has none. */
+  def checkpointRdd(df: DataFrame): Option[RDD[InternalRow]] =
     df.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ =>
+      case lr: execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
+
+  /** Free an RDD's storage blocks NOW, without the WARN that
+    * `RDD.unpersist` logs for every locally checkpointed RDD ("its
+    * lineage has been truncated"): here the free is expected, and the
+    * ContextCleaner frees the same way. Waits for the blocks to go
+    * when `blocking`. */
+  def unpersistQuietly(r: RDD[_], blocking: Boolean): Unit =
+    r.sparkContext.unpersistRDD(r.id, blocking)
 
   /** A frame over rows already in Catalyst's internal form: the local
     * relation `createDataFrame` builds, without the round trip through

@@ -15,7 +15,7 @@ import org.scalatest.time.SpanSugar._
 class MaterializeSpec extends SparkSpec {
 
   test("no code outside Materialize checkpoints or releases a frame directly") {
-    val call = """(?<!def )\b(localCheckpoint|unpersistCheckpoint)\(""".r
+    val call = """(?<!def )\b(localCheckpoint|checkpointRdd)\(""".r
     val files = SourceScan.scalaFiles("src/main/scala")
     // code lines only: scaladoc/comment lines and trailing comments
     // may name the primitive
@@ -103,10 +103,69 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("bradleyTerry, markovStationary and rakingWeights pin as many checkpoints " +
-    "after 6 rounds as after 2: each round frees the one before") {
+  /** The WARN-or-worse messages loggers under `org.apache.spark.rdd`
+    * log while `body` runs (the suite's session logs at ERROR, so the
+    * level is WARN meanwhile). */
+  private def rddWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "org.apache.spark.rdd"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("MaterializeSpec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val prev = LogManager.getLogger(name).getLevel
+    Configurator.setLevel(name, Level.WARN)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val conf = ctx.getConfiguration.getLoggerConfig(name)
+    conf.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      conf.removeAppender(appender.getName)
+      Configurator.setLevel(name, prev)
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a release logs no WARN and frees the blocks; the RDD carries the step's name") {
+    val sc = spark.sparkContext
+    def checkpoint(step: String) = {
+      val cp = Materialize(spark.range(0, 100, 1, 4).toDF("id"), step)
+      val rdd = org.apache.spark.sql.graftbridge.checkpointRdd(cp).get
+      assert(org.apache.spark.sql.graftbridge.Blocks.ofRdd(sc, rdd.id).size == 4)
+      (cp, rdd)
+    }
+    val (cp, rdd) = checkpoint("MaterializeSpec.test: quiet")
+    assert(rdd.name == "MaterializeSpec.test: quiet")
+    assert(rddWarnings(Materialize.release(cp)).isEmpty)
+    assert(!sc.getPersistentRDDs.contains(rdd.id))
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      assert(org.apache.spark.sql.graftbridge.Blocks.ofRdd(sc, rdd.id).isEmpty)
+    }
+    // the control: Spark's own unpersist warns, so the capture works
+    val (_, loud) = checkpoint("MaterializeSpec.test: loud")
+    val warned = rddWarnings(loud.unpersist(blocking = true))
+    assert(warned.exists(_.contains("locally checkpointed")), warned)
+  }
+
+  test("every fixed-round loop (labelPropagate, pageRank, kCore, bradleyTerry, " +
+    "markovStationary, rakingWeights) pins as many checkpoints after 6 rounds " +
+    "as after 2: each round frees the one before") {
     import spark.implicits._
     val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("src", "dst")
+    val seeds = Seq((1L, 10L), (6L, 20L)).toDF("id", "label")
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L), (3L, 4L),
+      (4L, 5L)).toDF("u", "v")
     val prefs = Seq(("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"), ("B", "A"))
       .toDF("winner", "loser")
     val events = Seq((1L, 1L, "a"), (1L, 2L, "b"), (1L, 3L, "a"), (2L, 4L, "b"),
@@ -137,6 +196,9 @@ class MaterializeSpec extends SparkSpec {
         .count(r => !before(r.id) && sc.getPersistentRDDs.contains(r.id))
     }
     Seq[(String, Int => DataFrame)](
+      "labelPropagate" -> (r => Graph.labelPropagate(edges, seeds, rounds = r)),
+      "pageRank" -> (r => Graph.pageRank(edges, iters = r)),
+      "kCore" -> (r => Graph.kCore(und, k = 3, rounds = r)),
       "bradleyTerry" -> (r => Preferences.bradleyTerry(prefs, rounds = r)),
       "markovStationary" -> (r => Sequences.markovStationary(events, iters = r)),
       "rakingWeights" -> (r => Profile.rakingWeights(cells, iterations = r))

@@ -471,9 +471,10 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.toSeq == Seq(("aaaaa", 1L, Seq("aa", "aaa"))))
   }
 
-  /** The pre-r18 window-plan form of [[TextAnalysis.applyBestPair]]:
+  /** The pre-r18 window-plan form of one greedy BPE merge round:
     * posexplode → two wid-partitioned window passes → collect_list
-    * re-assembly. The executable specification the greedy kernel is
+    * re-assembly. `best` is ≤ 1 (l, r) row; an empty one passes every
+    * word through. The executable specification the greedy kernel is
     * pinned against below. */
   private def applyBestPairViaWindows(vocab: DataFrame,
       best: DataFrame): DataFrame = {
@@ -503,9 +504,75 @@ class TextAnalysisSpec extends SparkSpec {
         .as("syms"))
   }
 
-  test("applyBestPair: the r18 greedy kernel is row-identical to the " +
-      "window-plan form on randomized low-alphabet vocabularies " +
+  /** The checkpointed-round form of [[TextAnalysis.bpeInductionWithVocab]]
+    * the driver-side merge list replaced: every round's 1-row best
+    * pair and merged vocab are checkpoints, and each round's merge is
+    * the window plan above. The reference the induction is pinned
+    * against. */
+  private def bpeInductionViaRounds(docs: DataFrame,
+      rounds: Int): (DataFrame, DataFrame) = {
+    import graft.functions.ShingleFunctions.{adjacent_pairs, char_syms}
+    import org.apache.spark.sql.functions._
+    val vocab0 = docs
+      .select(explode(graft.functions.TextFunctions.words(col("text"))).as("w"))
+      .filter(length(col("w")) >= 2)
+      .groupBy(col("w")).agg(count(lit(1)).as("c"))
+      .select(col("w").as("wid"), col("c"), char_syms(col("w")).as("syms"))
+      .localCheckpoint()
+    val (bests, vocab) = (1 to rounds).foldLeft((Seq.empty[DataFrame], vocab0)) {
+      case ((acc, vocab), round) =>
+        val best = vocab
+          .filter(size(col("syms")) >= 2)
+          .select(col("c"), explode(adjacent_pairs(col("syms"), "l", "r")).as("pr"))
+          .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
+          .agg(sum(col("c")).cast("bigint").as("cnt"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("l"), col("r"),
+            col("cnt"))).as("b"))
+          .select(col("b.l").as("l"), col("b.r").as("r"), col("b.cnt").as("cnt"))
+          .filter(col("l").isNotNull)
+          .localCheckpoint()
+        (acc :+ best.select(lit(round.toLong).as("round"), col("l").as("left_sym"),
+            col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
+            col("cnt").as("pair_count")),
+          applyBestPairViaWindows(vocab, best).localCheckpoint())
+    }
+    (bests.reduce(_ unionAll _).orderBy(col("round")), vocab)
+  }
+
+  test("bpeInductionWithVocab: the driver-side merge list equals the " +
+      "checkpointed-round reference row for row on seeded random " +
+      "low-alphabet corpora (ties, multi-char symbols, pair exhaustion, " +
+      "the empty corpus, rounds 1-8)") {
+    val rnd = new scala.util.Random(7)
+    val letters = Seq("a", "b", "c", "é")
+    def corpus(nDocs: Int, maxLen: Int): DataFrame =
+      (1 to nDocs).map { d =>
+        (d.toLong, Seq.fill(1 + rnd.nextInt(5)) {
+          Seq.fill(1 + rnd.nextInt(maxLen))(letters(rnd.nextInt(letters.length))).mkString
+        }.mkString(" "))
+      }.toDF("doc_id", "text")
+    val cases = Seq(
+      "empty" -> (Seq.empty[(Long, String)].toDF("doc_id", "text"), 3),
+      "single chars only" -> (Seq((1L, "a b é")).toDF("doc_id", "text"), 2),
+      // two words, exhausted after 3 merges: rounds 4-8 emit nothing
+      "exhaustion" -> (Seq((1L, "abab abc")).toDF("doc_id", "text"), 8)) ++
+      (1 to 8).map(r => s"random $r" -> (corpus(3 + rnd.nextInt(6), 2 + rnd.nextInt(6)), r))
+    cases.foreach { case (name, (docs, rounds)) =>
+      val (merges, vocab) = TextAnalysis.bpeInductionWithVocab(docs, rounds)
+      val (refMerges, refVocab) = bpeInductionViaRounds(docs, rounds)
+      val got = merges.collect().toSeq
+      assert(got == refMerges.collect().toSeq, s"$name: merge tables differ")
+      assert(got.length <= rounds, name)
+      def rows(v: DataFrame) = v.as[(String, Long, Seq[String])].collect().sortBy(_._1).toSeq
+      assert(rows(vocab) == rows(refVocab), s"$name: final vocabularies differ")
+    }
+  }
+
+  test("bpe_apply_merges with one-element arrays is row-identical to the " +
+      "window-plan merge round on randomized low-alphabet vocabularies " +
       "(consecutive-match runs, multi-char symbols, no-match rounds)") {
+    import graft.functions.ShingleFunctions.bpe_apply_merges
+    import org.apache.spark.sql.functions.typedLit
     val rnd = new scala.util.Random(42)
     // low alphabet → dense match runs (the even-offset-island cases);
     // seed some multi-char symbols the way later rounds produce them
@@ -516,21 +583,20 @@ class TextAnalysisSpec extends SparkSpec {
         Seq.fill(n)(symsPool(rnd.nextInt(symsPool.length))))
     }
     val vocab = vocabRows.toDF("wid", "c", "syms")
+    def viaKernel(ls: Seq[String], rs: Seq[String]) = vocab
+      .select(col("wid"), col("c"),
+        bpe_apply_merges(col("syms"), typedLit(ls), typedLit(rs)).as("syms"))
+      .as[(String, Long, Seq[String])].collect().sortBy(_._1)
     val pairs = Seq(("a", "a"), ("a", "b"), ("ab", "a"), ("aa", "aa"),
       ("zz", "zz")) // last one matches nothing
     pairs.foreach { case (l, r) =>
-      val best = Seq((l, r)).toDF("l", "r")
-      val viaKernel = TextAnalysis.applyBestPair(vocab, best)
+      val viaWindows = applyBestPairViaWindows(vocab, Seq((l, r)).toDF("l", "r"))
         .as[(String, Long, Seq[String])].collect().sortBy(_._1)
-      val viaWindows = applyBestPairViaWindows(vocab, best)
-        .as[(String, Long, Seq[String])].collect().sortBy(_._1)
-      assert(viaKernel.toSeq == viaWindows.toSeq, s"merge ($l,$r) diverged")
+      assert(viaKernel(Seq(l), Seq(r)).toSeq == viaWindows.toSeq,
+        s"merge ($l,$r) diverged")
     }
-    // empty best frame (exhausted round): pass-through in both forms
-    val empty = Seq.empty[(String, String)].toDF("l", "r")
-    val viaKernel = TextAnalysis.applyBestPair(vocab, empty)
-      .as[(String, Long, Seq[String])].collect().sortBy(_._1)
-    assert(viaKernel.toSeq == vocabRows.sortBy(_._1))
+    // empty merge arrays (an exhausted table): pass-through
+    assert(viaKernel(Nil, Nil).toSeq == vocabRows.sortBy(_._1))
   }
 
   test("curationScorecard: per-doc signals and first-fail verdict precedence") {

@@ -1022,15 +1022,16 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"), plan)
   }
 
-  test("x195: every BPE round rides checkpointed vocab frames — the final " +
-    "plan unions six 1-row best frames with NO corpus scan and no " +
-    "window (expansion stays O(vocab), the x137 fixpoint pattern)") {
+  test("x195: the BPE merge table is a local relation — the final plan " +
+    "has no corpus scan, no window and no join (each round's best pair " +
+    "came to the driver as one row)") {
     val plan = physical(Declared("x195")(spark, sf001))
-    assert(plan.contains("Scan ExistingRDD"), plan) // checkpointed rounds
+    assert(plan.contains("LocalTableScan"), plan)   // the driver's merge list
     assert(!plan.contains("Scan parquet"), plan)    // corpus never re-read
-    assert(!plan.contains("Window"), plan)          // argmax is min-struct
+    assert(!plan.contains("Scan ExistingRDD"), plan)
+    assert(!plan.contains("Window"), plan)
+    assert(!plan.contains("Join"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
-    assert(plan.contains("Union"), plan)
   }
 
   test("x196: the fertility rollup scans the corpus ONCE (word explosion) " +
@@ -1057,16 +1058,30 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"), plan)
   }
 
-  test("x209 replay round: the merge slice is BROADCAST-joined onto the " +
-    "vocab frame, never collected to the driver (pre-checkpoint round " +
-    "plan via the applyBestPair seam)") {
+  test("x209 replay: bpeEncodeFromWordCounts broadcasts the merge " +
+    "arrays onto the word counts and never collects them — the one " +
+    "action is the encode's checkpoint") {
     import spark.implicits._
-    val vocab = Seq(("ab", 1L, Seq("a", "b"))).toDF("wid", "c", "syms")
-    val slice = Seq(("a", "b")).toDF("l", "r")
-    val plan = physical(
-      graft.operators.TextAnalysis.applyBestPair(vocab, slice))
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastHashJoin"), plan)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add((f, qe.executedPlan.toString))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add((f, e.toString))
+    }
+    val wordCounts = Seq(("abab", 2L), ("abc", 1L)).toDF("w", "c")
+    val merges = Seq((1L, "a", "b"), (2L, "ab", "ab")).toDF("round", "left_sym", "right_sym")
+    org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.TextAnalysis.bpeEncodeFromWordCounts(wordCounts, merges, 6)
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val actions = plans.toArray(Array.empty[(String, String)]).toSeq
+    assert(actions.map(_._1) == Seq("localCheckpoint"), actions)
+    val plan = actions.head._2
+    assert(plan.contains("BroadcastExchange"), plan)
+    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CollectLimit"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
