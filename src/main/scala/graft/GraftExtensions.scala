@@ -1,23 +1,30 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
 
-import graft.functions._
+import graft.functions.{HashFunctions, ShingleFunctions, VectorFunctions}
 import graft.sources.ZipEntries
 
-/** SQL registration for the engine's native expressions, so
-  * `spark.sql` users have the same surface as the Column API:
+/** SQL registration for the engine's native functions, so `spark.sql`
+  * users have the same surface as the Column API:
   *
   *  - `cosine_similarity(a, b)`, `dot_product(a, b)`
   *  - `minhash(tokens, k)`, `minhash_longs(hashes, k)`, `simhash(tokens)`
-  *  - `shingle_hashes(text, n)`, `ngram_hashes(tokens, n)`
+  *  - `shingle_hashes(text, n)`, `ngram_hashes(tokens, n)`,
+  *    `ngram_strings(tokens, n)`
   *  - `sorted_jaccard(a, b)`
+  *  - `md5_shingle_hashes(text, n)`, `md5_simhash(tokens)`,
+  *    `md5_ngram_hashes(tokens, n)`, `md5_ngram_minhash(tokens, n, k)`
   *  - `zip_entries(binary)` (generator)
   *  - `md5_bucket60(key)` (the portable split/sample/shard bucket)
+  *  - `normalize_text(text)` (the canonical text cleanup)
   *
-  * Two entry points:
+  * The kernel functions are built by their Column declarations
+  * ([[graft.functions.KernelCall]]), so SQL and Column calls are one
+  * plan. Two entry points:
   *  - builder time: `.withExtensions(new GraftExtensions)` — survives
   *    into every derived session;
   *  - post hoc: `GraftExtensions.register(spark)` for an existing
@@ -51,48 +58,50 @@ object GraftExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
 
+  /** One call's SQL arguments, as a Column declaration takes them. */
+  private final class SqlArgs(args: Seq[Expression]) {
+    def col(i: Int): Column = toColumn(args(i))
+    def int(i: Int, what: String): Int = intArg(args(i), what)
+  }
+
+  /** A kernel function, built by its Column declaration. */
+  private def kernel(name: String, usage: String, n: Int)(declare: SqlArgs => Column) =
+    (name, info(name, usage),
+      arity(name, n)(args => toExpression(declare(new SqlArgs(args)))))
+
   /** (name, info, builder) triples for every SQL-exposed expression. */
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("cosine_similarity",
-      info("cosine_similarity", "_FUNC_(a, b) - cosine of two float arrays"),
-      arity("cosine_similarity", 2)(args => CosineSimilarity(args(0), args(1)))),
-    ("dot_product",
-      info("dot_product", "_FUNC_(a, b) - dot product of two float arrays"),
-      arity("dot_product", 2)(args => DotProduct(args(0), args(1)))),
-    ("minhash",
-      info("minhash", "_FUNC_(tokens, k) - k-wide minhash signature of a string array"),
-      arity("minhash", 2)(args => MinHashSignature(args(0), intArg(args(1), "k")))),
-    ("minhash_longs",
-      info("minhash_longs", "_FUNC_(hashes, k) - k-wide minhash signature of a long array"),
-      arity("minhash_longs", 2)(args => MinHashFromLongs(args(0), intArg(args(1), "k")))),
-    ("simhash",
-      info("simhash", "_FUNC_(tokens) - 64-bit simhash of a string array"),
-      arity("simhash", 1)(args => SimHash64(args(0)))),
-    ("shingle_hashes",
-      info("shingle_hashes", "_FUNC_(text, n) - xxhash64 of every n-codepoint window"),
-      arity("shingle_hashes", 2)(args => ShingleHashes(args(0), intArg(args(1), "n")))),
-    ("ngram_hashes",
-      info("ngram_hashes", "_FUNC_(tokens, n) - combined hash of every n consecutive tokens"),
-      arity("ngram_hashes", 2)(args => NGramHashes(args(0), intArg(args(1), "n")))),
-    ("sorted_jaccard",
-      info("sorted_jaccard", "_FUNC_(a, b) - Jaccard of two sorted distinct long arrays"),
-      arity("sorted_jaccard", 2)(args => SortedLongJaccard(args(0), args(1)))),
-    ("ngram_strings",
-      info("ngram_strings", "_FUNC_(tokens, n) - space-joined n-grams of consecutive tokens"),
-      arity("ngram_strings", 2)(args => NGramStrings(args(0), intArg(args(1), "n")))),
-    ("md5_shingle_hashes",
-      info("md5_shingle_hashes", "_FUNC_(text, n) - portable md5-60 hash of every n-codepoint window"),
-      arity("md5_shingle_hashes", 2)(args => Md5ShingleHashes(args(0), intArg(args(1), "n")))),
-    ("md5_simhash",
-      info("md5_simhash", "_FUNC_(tokens) - portable 60-bit simhash of a string array"),
-      arity("md5_simhash", 1)(args => Md5SimHash(args(0)))),
-    ("md5_ngram_hashes",
-      info("md5_ngram_hashes", "_FUNC_(tokens, n) - portable md5-60 hash of every n-token window"),
-      arity("md5_ngram_hashes", 2)(args => Md5NGramHashes(args(0), intArg(args(1), "n")))),
-    ("md5_ngram_minhash",
-      info("md5_ngram_minhash", "_FUNC_(tokens, n, k) - k-slot salted-md5 minhash over n-token windows"),
-      arity("md5_ngram_minhash", 3)(args =>
-        Md5NGramMinHash(args(0), intArg(args(1), "n"), intArg(args(2), "k")))),
+    kernel("cosine_similarity", "_FUNC_(a, b) - cosine of two float arrays", 2) {
+      a => VectorFunctions.cosine_similarity(a.col(0), a.col(1)) },
+    kernel("dot_product", "_FUNC_(a, b) - dot product of two float arrays", 2) {
+      a => VectorFunctions.dot_product(a.col(0), a.col(1)) },
+    kernel("minhash", "_FUNC_(tokens, k) - k-wide minhash signature of a string array", 2) {
+      a => HashFunctions.minhash(a.col(0), a.int(1, "k")) },
+    kernel("minhash_longs", "_FUNC_(hashes, k) - k-wide minhash signature of a long array", 2) {
+      a => ShingleFunctions.minhash_longs(a.col(0), a.int(1, "k")) },
+    kernel("simhash", "_FUNC_(tokens) - 64-bit simhash of a string array", 1) {
+      a => HashFunctions.simhash(a.col(0)) },
+    kernel("shingle_hashes", "_FUNC_(text, n) - xxhash64 of every n-codepoint window", 2) {
+      a => ShingleFunctions.shingle_hashes(a.col(0), a.int(1, "n")) },
+    kernel("ngram_hashes",
+        "_FUNC_(tokens, n) - combined hash of every n consecutive tokens", 2) {
+      a => ShingleFunctions.ngram_hashes(a.col(0), a.int(1, "n")) },
+    kernel("sorted_jaccard", "_FUNC_(a, b) - Jaccard of two sorted distinct long arrays", 2) {
+      a => ShingleFunctions.sorted_jaccard(a.col(0), a.col(1)) },
+    kernel("ngram_strings",
+        "_FUNC_(tokens, n) - space-joined n-grams of consecutive tokens", 2) {
+      a => ShingleFunctions.ngram_strings(a.col(0), a.int(1, "n")) },
+    kernel("md5_shingle_hashes",
+        "_FUNC_(text, n) - portable md5-60 hash of every n-codepoint window", 2) {
+      a => ShingleFunctions.md5_shingle_hashes(a.col(0), a.int(1, "n")) },
+    kernel("md5_simhash", "_FUNC_(tokens) - portable 60-bit simhash of a string array", 1) {
+      a => ShingleFunctions.md5_simhash(a.col(0)) },
+    kernel("md5_ngram_hashes",
+        "_FUNC_(tokens, n) - portable md5-60 hash of every n-token window", 2) {
+      a => ShingleFunctions.md5_ngram_hashes(a.col(0), a.int(1, "n")) },
+    kernel("md5_ngram_minhash",
+        "_FUNC_(tokens, n, k) - k-slot salted-md5 minhash over n-token windows", 3) {
+      a => ShingleFunctions.md5_ngram_minhash(a.col(0), a.int(1, "n"), a.int(2, "k")) },
     ("zip_entries",
       info("zip_entries", "_FUNC_(bytes) - explode zip archive bytes to (entry_name, content)"),
       arity("zip_entries", 1)(args => ZipEntries(args(0)))),

@@ -6,11 +6,11 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Imperative kernels behind the sketch expressions. Kept in a
-  * top-level object so Scala emits static forwarders — the generated
-  * whole-stage code calls these directly (`ShingleKernels.xxx(...)`),
-  * which keeps the expressions inside codegen spans instead of
-  * falling back to the interpreted `eval` boundary.
+/** Imperative kernels behind the text-sketch functions
+  * ([[ShingleFunctions]], [[HashFunctions]]). Kept in a top-level
+  * object so Scala emits static forwarders: a [[KernelCall]] calls them
+  * as static methods (`ShingleKernels.xxx(...)`) from whole-stage
+  * codegen and interpreted eval alike.
   */
 object ShingleKernels {
 
@@ -104,8 +104,8 @@ object ShingleKernels {
     new GenericArrayData(out)
   }
 
-  /** Kirsch–Mitzenmacher minhash over pre-hashed shingles; null (the
-    * caller checks) is represented by returning null for empty. */
+  /** Kirsch–Mitzenmacher minhash over pre-hashed shingles; null for an
+    * empty array. */
   def minhashLongs(arr: ArrayData, numHashes: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
@@ -151,10 +151,11 @@ object ShingleKernels {
     new GenericArrayData(mins)
   }
 
-  /** 64-bit SimHash of a non-empty token array (callers null out the
-    * empty case — every 64-bit value is a legal simhash). */
-  def simhash(arr: ArrayData): Long = {
+  /** 64-bit SimHash of a token array; null for an empty array (every
+    * 64-bit value is a legal simhash, so no value can stand for it). */
+  def simhash(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
+    if (n == 0) return null
     val tally = new Array[Int](64)
     var i = 0
     while (i < n) {
@@ -172,7 +173,7 @@ object ShingleKernels {
     var out = 0L
     var b = 0
     while (b < 64) { if (tally(b) > 0) out |= (1L << b); b += 1 }
-    out
+    java.lang.Long.valueOf(out)
   }
 
   // --- portable (DuckDB-replicable) md5-derived 60-bit hash family ---
@@ -221,9 +222,11 @@ object ShingleKernels {
 
   /** 60-bit SimHash over md5-60 token hashes (portable sibling of
     * [[simhash]]): each of the 60 bits votes ±1 per token occurrence,
-    * bit set iff its tally is strictly positive. */
-  def md5SimHash(arr: ArrayData): Long = {
+    * bit set iff its tally is strictly positive. Null for an empty
+    * array. */
+  def md5SimHash(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
+    if (n == 0) return null
     val tally = new Array[Int](60)
     val md = java.security.MessageDigest.getInstance("MD5")
     var i = 0
@@ -243,7 +246,7 @@ object ShingleKernels {
     var out = 0L
     var bit = 0
     while (bit < 60) { if (tally(bit) > 0) out |= (1L << bit); bit += 1 }
-    out
+    java.lang.Long.valueOf(out)
   }
 
   @inline private def digest60(md: java.security.MessageDigest): Long = {
@@ -362,11 +365,11 @@ object ShingleKernels {
     new GenericArrayData(out.toArray)
   }
 
-  /** Linear-merge Jaccard of sorted distinct long arrays; NaN = null
-    * (both empty). */
-  def sortedJaccard(x: ArrayData, y: ArrayData): Double = {
+  /** Linear-merge Jaccard of sorted distinct long arrays; null when
+    * both are empty. */
+  def sortedJaccard(x: ArrayData, y: ArrayData): java.lang.Double = {
     val nx = x.numElements(); val ny = y.numElements()
-    if (nx == 0 && ny == 0) return Double.NaN
+    if (nx == 0 && ny == 0) return null
     var i = 0; var j = 0; var inter = 0
     while (i < nx && j < ny) {
       val xi = x.getLong(i); val yj = y.getLong(j)
@@ -374,16 +377,16 @@ object ShingleKernels {
       else if (xi < yj) i += 1
       else j += 1
     }
-    inter.toDouble / (nx + ny - inter).toDouble
+    java.lang.Double.valueOf(inter.toDouble / (nx + ny - inter).toDouble)
   }
 
-  /** Equal-slot count of two signatures; -1 = length mismatch (null). */
-  def agreement(x: ArrayData, y: ArrayData): Int = {
+  /** Equal-slot count of two signatures; null on length mismatch. */
+  def agreement(x: ArrayData, y: ArrayData): java.lang.Integer = {
     val n = x.numElements()
-    if (n != y.numElements()) return -1
+    if (n != y.numElements()) return null
     var i = 0; var eq = 0
     while (i < n) { if (x.getLong(i) == y.getLong(i)) eq += 1; i += 1 }
-    eq
+    java.lang.Integer.valueOf(eq)
   }
 
   /** Distinct minima of every `w`-wide sliding window over a long

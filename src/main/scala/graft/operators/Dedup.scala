@@ -72,7 +72,7 @@ object Dedup {
     }
 
   /** Sketch table: doc id + minhash signature over character shingles
-    * (single-pass shingle hashing, see ShingleHashes). */
+    * (single-pass shingle hashing, see shingle_hashes). */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 5, numHashes: Int = 64): DataFrame =
     docs.select(

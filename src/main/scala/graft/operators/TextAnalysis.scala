@@ -667,7 +667,7 @@ object TextAnalysis {
     require(k > 0 && w > 0 && minShared > 0 && dfCap > 0,
       s"winnowingNearDup: k, w, minShared, dfCap must be positive, got ($k, $w, $minShared, $dfCap)")
     // one codegen'd kernel pass per doc: rolling md5-60 gram hashes
-    // (Md5ShingleHashes) → O(n) deque window minima (WinnowMinima).
+    // (md5_shingle_hashes) → O(n) deque window minima (winnow_minima).
     // The first cut of this operator composed built-ins —
     // transform(sequence, array_min(slice)) — and ran ~300× slower:
     // higher-order lambdas execute INTERPRETED, paying a boxed
@@ -2234,9 +2234,9 @@ object TextAnalysis {
     *  - phones: E.164-shaped `\+[1-9]\d{7,14}\b` counted (no
     *    checksum exists for phone numbers).
     *
-    * Both checksum counts are codegen Catalyst expressions
-    * ([[graft.functions.ShingleExpressions LuhnValidCount/
-    * IbanValidCount]]) — the first cut used `size(filter(arr, c ->
+    * Both checksum counts are codegen kernel calls
+    * ([[graft.functions.ShingleFunctions.luhn_valid_count]],
+    * `iban_valid_count`) — the first cut used `size(filter(arr, c ->
     * luhn_check(c)))` and the higher-order filter excluded the whole
     * projection from whole-stage codegen (the round-9 trap).
     *
@@ -3442,8 +3442,10 @@ object TextAnalysis {
     * with the md5-60 gate (the x30/x95 sampling contract).
     *
     * Scale: one tokenize+count aggregation per language (partial+
-    * final); the target map is a literal VALUES relation (broadcast
-    * by construction). Languages in the corpus but not the target
+    * final); the target map is a local relation, joined full outer
+    * on `lang` — Spark broadcasts neither side of a full outer join,
+    * so the join moves language-sized rows, one per language on each
+    * side. Languages in the corpus but not the target
     * get rate 0 (excluded from the mix); target languages absent
     * from the corpus surface as avail 0 / shortfall = desired.
     *
@@ -3464,7 +3466,7 @@ object TextAnalysis {
         size(graft.functions.TextFunctions.words(col(textCol)))
           .cast("bigint").as("__t"))
       .groupBy(col("lang")).agg(sum(col("__t")).cast("bigint").as("avail_tokens"))
-    avail.join(broadcast(tgt), Seq("lang"), "full_outer")
+    avail.join(tgt, Seq("lang"), "full_outer")
       .select(col("lang"),
         coalesce(col("avail_tokens"), lit(0L)).as("avail_tokens"),
         coalesce(col("target_micro"), lit(0L)).as("target_micro"))

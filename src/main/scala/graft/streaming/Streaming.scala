@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
@@ -801,10 +803,10 @@ object Streaming {
   /** Scores an embedding-ingest stream against a small in-closure
     * query set at each truncation dim — the candidate stage in front
     * of [[recallMonitorWithState]], mirroring the batch x189 scoring
-    * EXACTLY: the cosine accumulates in the same element order as the
-    * CosineSimilarity expression (dot / √(nx·ny), float→double per
-    * element), is rounded once to 6 dp with the Round expression's
-    * HALF_UP BigDecimal path, and carried as the exact micro integer
+    * EXACTLY: the cosine is the batch's own kernel
+    * ([[graft.functions.VectorKernels.cosinePrefix]]: dot / √(nx·ny),
+    * float→double per element), is rounded once to 6 dp with the Round
+    * expression's HALF_UP BigDecimal path, and carried as the exact micro integer
     * (the unscaled value — ranking by it is ranking by the batch's
     * round-6 double, since distinct 6-dp decimals stay distinct and
     * ordered as doubles). A zero-norm prefix, a vector shorter than
@@ -815,11 +817,16 @@ object Streaming {
     import stream.sparkSession.implicits._
     require(queries.nonEmpty && dims.nonEmpty,
       "truncationCandidates: need queries and dims")
+    // each vector is wrapped for the kernel once, not per (query, dim)
+    def wrap(a: Array[Float]): ArrayData =
+      if (a == null) null else UnsafeArrayData.fromPrimitiveArray(a)
+    val qs = queries.map { case (qid, qv) => (qid, wrap(qv)) }
     stream.flatMap { v =>
+      val e = wrap(v.embedding)
       for {
-        (qid, qv) <- queries.iterator
+        (qid, qv) <- qs.iterator
         d <- dims.iterator
-        cm <- prefixCosMicro(v.embedding, qv, d).iterator
+        cm <- prefixCosMicro(e, qv, d).iterator
       } yield RecallCand(qid, d, v.vec_id, cm)
     }
   }
@@ -827,24 +834,13 @@ object Streaming {
   /** Exact mirror of `round(cosine_similarity(slice(a,1,d),
     * slice(b,1,d)), 6)` as a micro integer — see
     * [[truncationCandidates]]. */
-  private[graft] def prefixCosMicro(a: Array[Float], b: Array[Float],
-      d: Int): Option[Long] = {
-    if (a == null || b == null || a.length < d || b.length < d) return None
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < d) {
-      val xi = a(i).toDouble; val yi = b(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) None
-    else {
-      val c = dot / math.sqrt(nx * ny)
-      if (!java.lang.Double.isFinite(c)) None
-      else Some(java.math.BigDecimal.valueOf(c)
+  private def prefixCosMicro(a: ArrayData, b: ArrayData, d: Int): Option[Long] =
+    if (a == null || b == null || a.numElements() < d || b.numElements() < d) None
+    else Option(graft.functions.VectorKernels.cosinePrefix(a, b, d)).map(_.doubleValue)
+      .filter(java.lang.Double.isFinite)
+      .map(c => java.math.BigDecimal.valueOf(c)
         .setScale(6, java.math.RoundingMode.HALF_UP)
         .unscaledValue().longValueExact())
-    }
-  }
 
   /** Streaming retrieval-recall monitor — the live twin of the batch
     * x189/x192 calibration audits (VERDICT r12 item 8): a per-micro-

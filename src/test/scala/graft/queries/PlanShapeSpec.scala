@@ -533,8 +533,9 @@ class PlanShapeSpec extends SparkSpec {
     // pinned directly in VectorExpressionsSpec)
     assert(!plan.contains("Join"), plan)
     // the kernel runs once, in a Project directly over the scan's
-    // filter — not re-derived per output column
-    assert("jl_project".r.findAllIn(plan).length == 1, plan)
+    // filter — not re-derived per output column (the physical plan
+    // prints the kernel call, VectorKernels.jlProject)
+    assert("jlProject".r.findAllIn(plan).length == 1, plan)
     // scan pruned to the two columns the query reads; the validity
     // screen reaches the scan's DataFilters
     assert(plan.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>>"), plan)
@@ -1372,7 +1373,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("x143: the target relation broadcasts (LocalTableScan side); one " +
+  test("x143: the target relation is a local relation (LocalTableScan); one " +
     "language-keyed aggregation, no window, no cartesian") {
     val plan = physical(Declared("x143")(spark, sf001))
     assert(plan.contains("LocalTableScan"), plan)
@@ -2006,8 +2007,8 @@ class PlanShapeSpec extends SparkSpec {
     // higher-order filter (lambdafunction in the projection) would
     // break the whole-stage span (round-9 trap)
     assert(!p251.contains("lambdafunction"), p251.take(4000))
-    assert(p251.contains("luhn_valid_count") && p251.contains("iban_valid_count"),
-      p251.take(4000))
+    assert(p251.contains("ShingleKernels.luhnValidCount") &&
+      p251.contains("ShingleKernels.ibanValidCount"), p251.take(4000))
     val p250 = physical(Declared("x250")(spark, sf001))
     // the gaps-and-islands windows must ride the (doc_a, doc_b, diag)
     // partition — an unpartitioned variant would shuffle every matched
@@ -2182,7 +2183,7 @@ class PlanShapeSpec extends SparkSpec {
       "exchanges besides the final order") {
     val df = Declared("x260")(spark, sf001)
     val plan = physical(df)
-    assert(plan.contains("min_full_period"), plan.take(2000))
+    assert(plan.contains("ShingleKernels.minFullPeriod"), plan.take(2000))
     // per-row kernel: no aggregate, no join, no window anywhere
     assert(!plan.contains("Window") && !plan.contains("Join"), plan.take(3000))
   }

@@ -20,7 +20,7 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("340 queries, no name shadowed across the three families") {
+  test("340 queries, no name shadowed across the twelve families") {
     val declared = SparkEntry.families.map(_.all.size).sum
     val distinct = SparkEntry.queries.size
     assert(distinct == 340)

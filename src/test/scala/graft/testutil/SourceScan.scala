@@ -5,7 +5,7 @@ import java.io.File
 import scala.jdk.CollectionConverters._
 
 /** The project's Scala sources as code lines, for the source guards
-  * (MaterializeSpec, StreamingSpec, ReachabilitySpec). Paths are
+  * (MaterializeSpec, StreamingSpec, ReachabilitySpec, KernelCallSpec). Paths are
   * relative to the repository root, where sbt runs the tests. */
 object SourceScan {
 
