@@ -1,5 +1,18 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.objects.LambdaVariable
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  PartitioningCollection, RangePartitioning}
+import org.apache.spark.sql.execution.{ExecSubqueryExpression, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.types._
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. The headline "value" is the total for the
   * declared §2.9 relational set (q01–q26) — the workload BASELINE.md
@@ -8,141 +21,126 @@ package graft
   */
 object Bench {
 
-  /** Comma-split at paren/bracket/brace depth 0. */
-  private def splitTop(s: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach { ch =>
-      if (ch == '(' || ch == '[' || ch == '{') depth += 1
-      else if (ch == ')' || ch == ']' || ch == '}') depth -= 1
-      if (ch == ',' && depth == 0) { parts += cur.toString; cur.clear() }
-      else cur += ch
+  /** The physical plan as the text [[planFingerprint]] hashes: one line
+    * per node, children indented below, with the node's class name, its
+    * other arguments in order (see `value`), each partitioning as its
+    * kind with hash keys sorted and the count as N (it follows the core
+    * count), and its expressions in one sorted list: this trades
+    * within-list order (sort keys, projections) for independence from
+    * aggregate-key and grouping-id order, which follow expression-id
+    * hashing and so what ran earlier in the session. An adaptive plan is
+    * walked through its `initialPlan` (exchanges placed, no stage run),
+    * which executing the frame leaves as it was; the final plan numbers
+    * its stages in the order they finished. */
+  private[graft] def planText(df: DataFrame): String = {
+    def walk(p: SparkPlan, depth: Int): String = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan, depth)
+      case _ =>
+        val args = ArrayBuffer.empty[String]
+        val exprs = ArrayBuffer.empty[String]
+        def field(x: Any): Unit = x match {
+          case part: Partitioning => args += partitioning(part)
+          case e: Expression => exprs += expression(e, depth)
+          case Some(v) => field(v)
+          case xs: Iterable[_] if !xs.isInstanceOf[DataType] => xs.foreach(field)
+          case _ => args ++= value(x)
+        }
+        p.productIterator.foreach(field)
+        "  " * depth + (className(p) +: args).mkString(" ") +
+          exprs.sorted.mkString(" [", ", ", "]\n") +
+          p.children.map(walk(_, depth + 1)).mkString
     }
-    parts += cur.toString
-    parts.toSeq
+    // Field by field: the class name, then each argument — a child
+    // recursively, a string (alias or function name) without ids, the
+    // rest by `value`. A JVM object literal (a codebook array) prints its
+    // type, and a subquery the walk of its plan.
+    def expression(e: Expression, depth: Int): String = e match {
+      case a: Attribute => withoutIds(a.name)
+      case Literal(_, t: ObjectType) => t.toString
+      case l @ Literal(_, _: ArrayType | _: MapType | _: StructType) => l.sql
+      case l: Literal => l.toString
+      case v: NamedLambdaVariable => // functions.transform names it x_<counter>
+        val base = v.name.reverse.dropWhile(_.isDigit).reverse
+        "lambda " + (if (base.endsWith("_")) base.init else v.name)
+      case v: LambdaVariable => s"lambdavariable(${v.name})"
+      // RewriteDistinctAggregates numbers its gids in expression-id hash order
+      case EqualTo(g: Attribute, _: Literal) if Set("gid", "spark_grouping_id")(g.name) =>
+        s"EqualTo(${g.name}, G)"
+      case s: ExecSubqueryExpression =>
+        s.children.map(expression(_, depth)).mkString(className(s) + "(", ", ", ") {\n") +
+          walk(s.plan, depth + 1) + "}"
+      case _ =>
+        def arg(x: Any): Option[String] = x match {
+          case c: Expression => Some(expression(c, depth))
+          case s: String => Some(withoutIds(s))
+          case Some(v) => arg(v)
+          case xs: Iterable[_] if !xs.isInstanceOf[DataType] =>
+            Some(xs.flatMap(arg).mkString("[", ", ", "]"))
+          case _ => value(x)
+        }
+        e.productIterator.flatMap(arg).mkString(className(e) + "(", ", ", ")")
+    }
+    def partitioning(p: Partitioning): String = p match {
+      case h: HashPartitioning =>
+        (h.expressions.map(expression(_, 0)).sorted :+ "N").mkString("hashpartitioning(", ", ", ")")
+      case r: RangePartitioning =>
+        (r.ordering.map(expression(_, 0)) :+ "N").mkString("rangepartitioning(", ", ", ")")
+      case c: PartitioningCollection => c.partitionings.map(partitioning).sorted.mkString("[", ", ", "]")
+      case _ => className(p)
+    }
+    walk(df.queryExecution.executedPlan, 0)
   }
 
-  /** Sorts the top-level comma-separated elements of every [...] list
-    * (innermost-first, recursive) and collapses bare-integer elements
-    * to "N". WHY: grouping-sets / multi-count-distinct plans iterate
-    * attribute sets keyed by expression id, so aggregate key/output
-    * order AND grouping-id assignment depend on the session-global
-    * expression counter — i.e. on which queries ran BEFORE this one,
-    * not on the plan (r14 verdict: 14 queries churned fps across
-    * identical-source sweeps). Deliberate trade: WITHIN-list ordering
-    * (sort keys, projection order, IN-list literals) is not part of
-    * the fingerprint; operator structure, exchange placement, join
-    * strategies, and pushdowns all remain fingerprinted. */
-  private def sortBrackets(s: String): String = {
-    val n = s.length
-    // returns (normalized bracket group, index after ']'); i is at '['
-    def parse(i: Int): (String, Int) = {
-      var j = i + 1
-      val buf = new StringBuilder
-      while (j < n && s(j) != ']') {
-        if (s(j) == '[') { val (sub, nj) = parse(j); buf ++= sub; j = nj }
-        else { buf += s(j); j += 1 }
-      }
-      val parts = splitTop(buf.toString).map(_.trim)
-        .map(p => if (p.nonEmpty && p.forall(_.isDigit)) "N" else p)
-      ("[" + parts.sorted.mkString(",") + "]", j + 1)
-    }
-    val out = new StringBuilder
-    var i = 0
-    while (i < n) {
-      if (s(i) == '[') { val (sub, ni) = parse(i); out ++= sub; i = ni }
-      else { out += s(i); i += 1 }
-    }
-    out.toString
+  /** A non-expression argument: join type, build side, shuffle origin,
+    * flags and limits as themselves, a file scan's relation as its
+    * format, an identity (RDD, relation, closure) as its class name;
+    * nothing for a child plan, a label (a subquery's carries its id), an
+    * expression id, `None` or a local table's rows. */
+  private def value(x: Any): Option[String] = x match {
+    case _: SparkPlan | _: String | _: ExprId | _: InternalRow | None => None
+    case t: DataType => Some(t.catalogString)
+    case c: Class[_] => Some(c.getName)
+    case r: HadoopFsRelation => Some(r.fileFormat.toString)
+    case v @ (_: Boolean | _: Int | _: Long | _: Double | _: Enumeration#Value) => Some(v.toString)
+    case v => Some(className(v))
   }
 
-  /** The physical plan text with every run/session-dependent token
-    * normalized away — the input [[planFingerprint]] hashes. */
-  private[graft] def normalizedPlan(df: org.apache.spark.sql.DataFrame): String =
-    normalizeText(df.queryExecution.executedPlan.toString)
-
-  private[graft] def normalizeText(planText: String): String = {
-    val t = planText
-      .replaceAll("#\\d+", "#")
-      .replaceAll("plan_id=\\d+", "plan_id=")
-      // a scan's whole Location value, up to the next metadata key: Spark
-      // cuts the value at spark.sql.maxMetadataStringLength (100), so a
-      // long path lost its closing ']' and the bracket sort below parsed
-      // another structure — the text then followed the checkout path
-      .replaceAll("Location: [^\\n]*?(?=, [A-Z][A-Za-z]*: |\\n|$)", "Location: path:")
-      .replaceAll("(file|hdfs|s3a?):[^,\\]\\s)]*", "path:")
-      .replaceAll("Statistics\\([^)]*\\)", "")
-      // typed operators (MapPartitions/Deserialize…) print the closure's
-      // JVM identity — Lambda$<id>/0x<ptr>@<hash> — which differs every
-      // SESSION; un-normalized it made x71-class fingerprints flip with
-      // no plan change (observed: four canonical runs, four fps)
-      .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+", "Lambda")
-      // object identities (LogicalRDD@1a2b3c…): anchored to an
-      // identifier token so a literal hex STRING in a filter can't be
-      // normalized away and hide a real plan change (ADVICE r14)
-      .replaceAll("([A-Za-z][A-Za-z0-9$.]*)@[0-9a-f]{6,}", "$1@")
-      // higher-order-function lambda variables print the session-global
-      // expression counter IN the name (lambda x_2724#) — run-order
-      // dependent, not plan shape
-      .replaceAll("lambda ([A-Za-z0-9]+)_\\d+#", "lambda $1_#")
-      // grouping-id literals: RewriteDistinctAggregates assigns gids by
-      // expression-id hash iteration — which distinct column gets which
-      // gid varies run-to-run with an identical plan
-      .replaceAll("(gid|spark_grouping_id)# = \\d+", "$1# = G")
-    sortBrackets(normalizePartitionings(t)).replaceAll("\\s+", " ")
-  }
-
-  /** Partitionings with their partition count printed as N: it follows
-    * the core count (`RoundRobinPartitioning(8)` from a parallelism
-    * restore) or `spark.sql.shuffle.partitions` (`hashpartitioning(k#,
-    * 200)`, `rangepartitioning(k# ASC, 200)`), not the plan, and left in
-    * it gave identical code different fingerprints at 4, 8 and 32 cores.
-    * hashpartitioning keys are sorted too: their order comes from
-    * attribute-set iteration (equivalent clustering either way). The
-    * arguments are split at balanced parens, so keys may nest calls. */
-  private def normalizePartitionings(s: String): String = {
-    val out = new StringBuilder
-    var from = 0
-    for (m <- "(hashpartitioning|rangepartitioning|RoundRobinPartitioning)\\(".r
-        .findAllMatchIn(s) if m.start >= from) {
-      var depth = 1
-      var j = m.end
-      while (j < s.length && depth > 0) {
-        if (s(j) == '(') depth += 1 else if (s(j) == ')') depth -= 1
-        j += 1
-      }
-      if (depth == 0) {
-        val args = splitTop(s.substring(m.end, j - 1)).map(_.trim)
-        val n = if (args.last.nonEmpty && args.last.forall(_.isDigit)) "N" else args.last
-        val keys = if (m.group(1) == "hashpartitioning") args.init.sorted else args.init
-        out ++= s.substring(from, m.start) ++= m.group(1) ++= (keys :+ n).mkString("(", ", ", ")")
-        from = j
-      }
+  /** A name without the session counters Spark writes into some names:
+    * the expression ids in an aggregate's result attribute, named after
+    * its function (`count(c#23L)`), and the number of a common
+    * subexpression (`_common_expr_7`). */
+  private def withoutIds(name: String): String = {
+    def drop(n: String, marker: String): String = n.indexOf(marker) match {
+      case -1 => n
+      case at =>
+        val (head, rest) = n.splitAt(at + marker.length)
+        head + drop(rest.dropWhile(_.isDigit), marker)
     }
-    out ++= s.substring(from)
-    out.toString
+    Seq("#", "_common_expr_").foldLeft(name)(drop)
   }
 
-  /** Short fingerprint of a query's PHYSICAL plan, stable across runs:
-    * expression/plan ids, file paths, RDD/closure identities, and size
-    * statistics are normalized away so the hash moves only when the
-    * plan SHAPE moves (a broadcast→SMJ flip, a lost pushdown, a new
-    * exchange) — the regressions wall-time noise hides. Per-query
-    * fingerprints land in BENCH_FULL.json ("plans"); both stdout lines
-    * carry the combined "plan_fp". Diff note: to locate a cross-round
-    * plan regression, compare the two rounds' BENCH_FULL.json "plans"
-    * maps key-by-key (`jq -r '.plans | to_entries[] | "\(.key)
-    * \(.value)"'` on each, then `diff`) and `.explain("formatted")`
-    * the changed queries; SPARK_GRAFT_DUMP_PLANS=<dir> dumps each
-    * query's NORMALIZED plan text for a direct diff. */
+  /** A value's class name without its package; a lambda's class name
+    * carries a per-session counter, so it prints as `closure`. */
+  private def className(v: Any): String = {
+    val c = v.getClass
+    if (c.isSynthetic) "closure"
+    else c.getName.substring(c.getName.lastIndexOf('.') + 1).stripSuffix("$")
+  }
+
+  /** Short fingerprint of a query's physical plan (the first four MD5
+    * bytes of [[planText]]): it moves when the plan's shape moves (a
+    * broadcast→SMJ flip, a lost pushdown, a new exchange), the
+    * regressions wall-time noise hides. Per-query fingerprints land in
+    * BENCH_FULL.json ("plans"), both stdout lines carry the combined
+    * "plan_fp", and SPARK_GRAFT_DUMP_PLANS=<dir> dumps each query's
+    * [[planText]] for a text diff. */
   private[graft] def fpOfNorm(norm: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(norm.getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
 
-  private[graft] def planFingerprint(df: org.apache.spark.sql.DataFrame): String =
-    fpOfNorm(normalizedPlan(df))
+  private[graft] def planFingerprint(df: DataFrame): String =
+    fpOfNorm(planText(df))
 
   /** Flat string→string map extracted from one of our own one-line
     * JSON artifacts. ONLY safe for maps whose values are bare numbers
@@ -323,13 +321,14 @@ object Bench {
     selected.foreach { case (name, fn) =>
       var times = Vector.empty[Double]
       var err: Option[String] = None
+      var last: DataFrame = null // the frame the last run built, fingerprinted below
       // noop DSv2 sink: executes the FULL physical plan (projections,
       // sorts, window functions) — `count()` would let Catalyst prune
       // unreferenced columns and eliminate sorts, timing less than the
       // query does.
       def runOnce(): Unit = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+        try { last = fn(spark, sfDir); last.write.format("noop").mode("overwrite").save() }
         catch { case e: Throwable =>
           err = Some(e.toString.takeWhile(_ != '\n').take(120)) }
         times :+= (System.nanoTime() - t0) / 1e9
@@ -377,22 +376,21 @@ object Bench {
         else medNow
       val spread = if (err.isDefined) 0.0 else spreadNow
       val nRuns = times.length
-      // plan fingerprint AFTER the timed runs (plan construction may
-      // eagerly materialize localCheckpoints — must not pre-warm run 1)
+      // fingerprint of the last run's frame, outside the timing: the
+      // walk reads the initial plan, which executing it leaves as it was
       val fp = if (err.isDefined) "ERR"
         else scala.util.Try {
-          val norm = normalizedPlan(fn(spark, sfDir))
-          // dev knob: dump the normalized plan text per query so a
-          // cross-sweep fp diff can be root-caused with a text diff
+          val text = planText(last)
+          // dev knob: dump the walk's text per query so a cross-sweep
+          // fp diff can be root-caused with a text diff
           sys.env.get("SPARK_GRAFT_DUMP_PLANS").foreach { d =>
             val dir = java.nio.file.Paths.get(d)
             java.nio.file.Files.createDirectories(dir)
             java.nio.file.Files.write(dir.resolve(s"$name.plan.txt"),
-              norm.getBytes("UTF-8"))
+              text.getBytes("UTF-8"))
           }
-          fpOfNorm(norm)
+          fpOfNorm(text)
         }.getOrElse("ERR")
-      dropLingering() // fp construction re-materialized checkpoints
       appendLedger(queryLedgerLine(name, med, spread, nRuns, fp,
         err.map(e => jsonEscape(e))))
     }

@@ -4,7 +4,7 @@ import graft.functions.HashFunctions._
 import graft.functions.ShingleFunctions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._

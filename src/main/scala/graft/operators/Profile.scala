@@ -95,7 +95,6 @@ object Profile {
   def kmvDistinctSketch(df: DataFrame, groupCol: String, hashCol: String,
       k: Int = 64): DataFrame = {
     require(k > 1, s"kmvDistinctSketch: k must be > 1, got $k")
-    import org.apache.spark.sql.expressions.Window
     val space = 1152921504606846976L // 2^60
     // enforce the hash-domain contract at execution: a full-range
     // signed hash (xxhash64) would sort negatives first and turn the

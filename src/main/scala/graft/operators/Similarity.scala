@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Scored, TopKScored, VectorKernels}
+import graft.functions.{TopKScored, VectorKernels}
 import graft.functions.VectorFunctions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -242,8 +242,6 @@ object Similarity {
       queries: DataFrame, k: Int, shortlist: Int = 50,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    val m = codebook.length
-    val sub = codebook(0)(0).length
     val qv = col(queryVec).cast("array<double>")
     // r18: the per-(row, query) ADC is one codegen kernel call
     // (VectorKernels.pqAdcMicro) instead of m interpreted
@@ -1215,7 +1213,6 @@ object Similarity {
       idCol: String, iters: Int, withEl: Boolean): CovPower = {
     require(iters >= 1 && iters <= 64,
       s"covarianceSpectrum: iters must be in [1, 64], got $iters")
-    val dec = "decimal(38,0)"
     // one kernel quantization per VECTOR (bit-identical to the SQL
     // round/cast tree — see VectorKernels.quantizeMicro), instead of
     // one SQL round per exploded cell: the dim² fan-out below made the

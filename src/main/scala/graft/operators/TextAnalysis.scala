@@ -733,7 +733,6 @@ object TextAnalysis {
       scales: Seq[(Int, Int)] = Seq((8, 4), (16, 8)),
       dfCap: Int = 50, minAnchors: Int = 2,
       minRunChars: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(scales.nonEmpty && scales.forall { case (k, w) => k > 0 && w > 0 },
       s"duplicatedSubstringRuns: scales must be positive, got $scales")
     require(scales.distinct.size == scales.size,
@@ -1470,7 +1469,6 @@ object TextAnalysis {
     * this is the exact-scoring one. */
   def lexicalTopNeighbor(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", ngram: Int = 3, maxDfPct: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tf = tokFrame(docs, idCol, textCol)
       .select(col("doc_id"),
         explode(graft.functions.ShingleFunctions.ngram_strings(
@@ -3592,7 +3590,6 @@ object TextAnalysis {
     require(chunkTokens > 0,
       s"chunkPackingAudit: chunkTokens must be positive, got $chunkTokens")
     import graft.functions.TextFunctions.words
-    import org.apache.spark.sql.expressions.Window
     val L = chunkTokens
     val toks = docs.select(col(sourceCol).as("source"), col(idCol).as("id"),
         size(words(col(textCol))).cast("long").as("t"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Materialize, Profile, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import CorpusHelpers._

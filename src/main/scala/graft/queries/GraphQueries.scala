@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions._
 import graft.operators.{Joins, Materialize}
 import graft.transform.CatalogTransforms
 import org.apache.spark.sql.{DataFrame, SparkSession}

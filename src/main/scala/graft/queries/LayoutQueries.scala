@@ -1,9 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions._
 import graft.operators.{Layout, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import CorpusHelpers._

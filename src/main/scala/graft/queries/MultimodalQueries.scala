@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.functions.TextFunctions._
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import CorpusHelpers._

@@ -1,12 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions._
-import graft.operators.Sequences
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import CorpusHelpers._
 
 /** Extension queries over [[graft.operators.Sequences]]: sessions,
   * funnels, paths and event time series.

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

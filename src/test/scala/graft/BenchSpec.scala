@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
-/** Pure-function coverage for the bench harness's normalizer and the
+import graft.testutil.Declared
+
+/** Coverage for the bench harness's plan fingerprint and the
   * contamination sentinel's artifact parser — the pieces whose silent
   * breakage would invalidate cross-round performance adjudication. */
 class BenchSpec extends SparkSpec {
@@ -19,44 +23,68 @@ class BenchSpec extends SparkSpec {
     assert(Bench.flatMapOf("not json at all", "queries") == Map.empty)
   }
 
-  test("normalizeText: the r14-churn variants — expression ids, lambda " +
-      "counters, gid assignment, aggregate-key order, hashpartitioning " +
-      "order, object identities — normalize to ONE text; a literal hex " +
-      "string survives (ADVICE r14)") {
-    // the same plan printed in two sessions: different exprIds, lambda
-    // counters, gid assignment, attribute iteration order, identities
-    val runA = "HashAggregate(keys=[b#12, a#7L], functions=[partial_count(x#3) " +
-      "FILTER (WHERE (gid#9 = 3))]) +- Exchange hashpartitioning(b#12, a#7L, 32), " +
-      "[plan_id=55] +- Project [lambdafunction(length(lambda x_111#2) > 0, " +
-      "lambda x_111#2, false)] +- Scan ExistingRDD[a#7L,b#12] LogicalRDD@1a2b3c4"
-    val runB = "HashAggregate(keys=[a#901L, b#955], functions=[partial_count(x#800) " +
-      "FILTER (WHERE (gid#990 = 7))]) +- Exchange hashpartitioning(a#901L, b#955, 32), " +
-      "[plan_id=812] +- Project [lambdafunction(length(lambda x_2724#801) > 0, " +
-      "lambda x_2724#801, false)] +- Scan ExistingRDD[b#955,a#901L] LogicalRDD@9f8e7d6"
-    assert(Bench.normalizeText(runA) == Bench.normalizeText(runB))
-    // a genuinely different plan (extra exchange) must NOT collapse
-    val runC = runA.replace("Exchange hashpartitioning", "Exchange rangepartitioning")
-    assert(Bench.normalizeText(runA) != Bench.normalizeText(runC))
-    // a literal hex string in a filter is NOT an object identity — the
-    // anchored rule must leave it alone (a real literal change flips
-    // the fp)
-    val litA = Bench.normalizeText("Filter (col#1 = @abcdef123456)")
-    val litB = Bench.normalizeText("Filter (col#1 = @fedcba654321)")
-    assert(litA != litB)
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n`. */
+  private def withPartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
   }
 
-  test("normalizeText: partition counts print as N, hash keys sort, " +
+  test("planFingerprint: expression ids, lambda counters, grouping ids, " +
+      "common-subexpression numbers and aggregate-key order do not move it; " +
+      "a changed column or literal hex string does") {
+    // two count-distincts make RewriteDistinctAggregates add an Expand
+    // with a gid column; transform/aggregate add named lambda variables;
+    // count_if shares its condition through a numbered _common_expr_
+    def frame(keys: Seq[String], hex: String = "@abcdef123456"): DataFrame =
+      spark.range(0, 40)
+        .selectExpr("id % 3 AS a", "id % 5 AS b", "id % 7 AS c",
+          "CAST(id AS STRING) AS s", "array(id, id + 1) AS xs")
+        .filter(col("s") =!= hex)
+        .select(col("a"), col("b"), col("c"), col("s"),
+          transform(col("xs"), x => x + 1).as("ys"))
+        .groupBy(keys.map(col): _*)
+        .agg(countDistinct("s"), countDistinct("c"), count_if(col("c") > 2),
+          sum(aggregate(col("ys"), lit(0L), (acc, y) => acc + y)))
+    val ab = frame(Seq("a", "b"))
+    val text = Bench.planText(ab)
+    assert(Seq("ExpandExec", "gid", "lambda x", "lambda y", "_common_expr_")
+      .forall(text.contains), text)
+    // built again, and with its keys swapped: new ids and lambda counters
+    val again = frame(Seq("a", "b"))
+    val ba = frame(Seq("b", "a"))
+    assert(ab.queryExecution.executedPlan.toString != again.queryExecution.executedPlan.toString)
+    assert(Bench.planFingerprint(again) == Bench.planFingerprint(ab),
+      s"$text\n${Bench.planText(again)}")
+    assert(Bench.planFingerprint(ba) == Bench.planFingerprint(ab),
+      s"$text\n${Bench.planText(ba)}")
+    // a different key column and a different literal hex string each move it
+    assert(Bench.planFingerprint(frame(Seq("a", "c"))) != Bench.planFingerprint(ab))
+    assert(Bench.planFingerprint(frame(Seq("a", "b"), "@fedcba654321")) !=
+      Bench.planFingerprint(ab))
+  }
+
+  test("planFingerprint: partition counts print as N, hash keys sort, " +
       "nested key calls parse") {
-    val at4 = "Exchange hashpartitioning(coalesce(b#1, 0), a#2, 4), ENSURE_REQUIREMENTS " +
-      "+- Exchange rangepartitioning(c#3 DESC NULLS LAST, 4) " +
-      "+- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM"
-    val at32 = "Exchange hashpartitioning(a#2, coalesce(b#1, 0), 32), ENSURE_REQUIREMENTS " +
-      "+- Exchange rangepartitioning(c#3 DESC NULLS LAST, 32) " +
-      "+- Exchange RoundRobinPartitioning(32), REPARTITION_BY_NUM"
-    assert(Bench.normalizeText(at4) == Bench.normalizeText(at32))
-    assert(Bench.normalizeText(at4).contains("hashpartitioning(a#, coalesce(b#, 0), N)"))
-    // a key change still moves the text
-    assert(Bench.normalizeText(at4) != Bench.normalizeText(at4.replace("a#2", "d#2")))
+    val df = spark.range(0, 40).selectExpr("id % 3 AS a", "id % 5 AS b", "id AS c")
+    def shuffled(n: Int, keys: Column*): DataFrame = withPartitions(n) {
+      val out = df.repartition(n, keys: _*).orderBy(col("c").desc).repartition(n)
+      out.queryExecution.executedPlan // planned while the conf holds n
+      out
+    }
+    val at4 = shuffled(4, coalesce(col("b"), lit(0)), col("a"))
+    val at32 = shuffled(32, col("a"), coalesce(col("b"), lit(0)))
+    val text = Bench.planText(at4)
+    assert(Seq("hashpartitioning(Coalesce([b, 0]), a, N)",
+      "rangepartitioning(SortOrder(c, Descending, NullsLast, []), N)",
+      "RoundRobinPartitioning")
+      .forall(text.contains), text)
+    assert(Bench.planFingerprint(at4) == Bench.planFingerprint(at32),
+      s"$text\n${Bench.planText(at32)}")
+    // a key change still moves it
+    assert(Bench.planFingerprint(shuffled(4, coalesce(col("b"), lit(0)), col("c"))) !=
+      Bench.planFingerprint(at4))
   }
 
   test("planFingerprint: one query planned at shuffle.partitions 4 and 32 " +
@@ -77,25 +105,81 @@ class BenchSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
-  test("normalizeText: one parquet query read from a short and from a long " +
-      "directory (its Location value cut at 100 characters) gives one text") {
+  test("planFingerprint: one parquet query read from a short and from a " +
+      "long directory (its Location value cut at 100 characters) gives one " +
+      "fingerprint") {
     val base = java.nio.file.Files.createTempDirectory("graft-loc").toFile
     try {
-      def planned(dir: java.io.File): String = {
+      def planned(dir: java.io.File): DataFrame = {
         val path = new java.io.File(dir, "t.parquet").getAbsolutePath
         spark.range(0, 20).toDF("id").write.mode("overwrite").parquet(path)
         spark.read.parquet(path).filter("id > 3").selectExpr("id * 2 AS v")
-          .queryExecution.executedPlan.toString
       }
       val short = planned(new java.io.File(base, "s"))
       val long = planned(new java.io.File(base, "l" * 120))
-      // the long value is cut and loses its closing ']'; the short one is not
-      def location(plan: String) = "Location: [^\\n]*".r.findFirstIn(plan).get
-      assert(!location(short).contains("...") && location(long).contains("..."),
-        s"$short\n$long")
-      assert(Bench.normalizeText(short) == Bench.normalizeText(long),
-        s"${Bench.normalizeText(short)}\n${Bench.normalizeText(long)}")
+      // Spark cuts the long Location value; the short one is whole
+      def location(df: DataFrame) =
+        "Location: [^\\n]*".r.findFirstIn(df.queryExecution.executedPlan.toString).get
+      assert(!location(short).contains("...") && location(long).contains("..."))
+      assert(Bench.planFingerprint(short) == Bench.planFingerprint(long),
+        s"${Bench.planText(short)}\n${Bench.planText(long)}")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+
+  test("planFingerprint: a frame gives one fingerprint before and after it " +
+      "is collected") {
+    // the final adaptive plan numbers its query stages and codegen stages
+    // in the order they finished; the walk reads the initial plan
+    val l = spark.range(0, 200).selectExpr("id % 17 AS k", "id AS v")
+    val r = spark.range(0, 50).selectExpr("id % 13 AS k", "id * 3 AS w")
+    val joined = l.join(r, Seq("k")).groupBy("k").agg(sum("v"), max("w")).orderBy("k")
+    for (df <- Seq(joined, Declared("q04")(spark, sf001))) {
+      val before = Bench.planFingerprint(df)
+      val text = Bench.planText(df)
+      df.collect()
+      assert(df.queryExecution.executedPlan.toString.contains("QueryStage"))
+      assert(Bench.planFingerprint(df) == before, s"$text\n${Bench.planText(df)}")
+      df.collect()
+      assert(Bench.planFingerprint(df) == before)
+    }
+  }
+
+  test("planFingerprint: two partition filters that differ only after their " +
+      "100th character give two fingerprints") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cut").toFile
+    try {
+      val path = new java.io.File(base, "t.parquet").getAbsolutePath
+      val stem = "p" * 110
+      spark.range(0, 20).selectExpr("id", s"IF(id % 2 = 0, '${stem}a', '${stem}b') AS part")
+        .write.partitionBy("part").mode("overwrite").parquet(path)
+      // a partition filter lives only in the scan: no Filter node prints it
+      def planned(last: String) = spark.read.parquet(path).filter(col("part") === stem + last)
+      val (a, b) = (planned("a"), planned("b"))
+      assert(a.queryExecution.executedPlan.toString.contains("PartitionFilters: ["))
+      assert(!a.queryExecution.executedPlan.toString.contains(stem + "a"))
+      assert(Bench.planFingerprint(a) != Bench.planFingerprint(b), Bench.planText(a))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+
+  test("planFingerprint: the join type and the join strategy each move it") {
+    val l = spark.range(0, 100).selectExpr("id % 10 AS k", "id AS v")
+    val r = spark.range(0, 10).selectExpr("id AS k", "id * 2 AS w")
+    val inner = Bench.planFingerprint(l.join(r, Seq("k")))
+    assert(Bench.planFingerprint(l.join(r, Seq("k"), "left_outer")) != inner)
+    val broadcastJoin = l.join(broadcast(r), Seq("k"))
+    val mergeJoin = l.join(r.hint("merge"), Seq("k"))
+    assert(Bench.planText(broadcastJoin).contains("BroadcastHashJoinExec Inner BuildRight"))
+    assert(Bench.planText(mergeJoin).contains("SortMergeJoinExec Inner"))
+    assert(Bench.planFingerprint(broadcastJoin) != Bench.planFingerprint(mergeJoin))
+  }
+
+  test("planFingerprint: x101 planned in two sessions gives one fingerprint") {
+    // its PQ codebook is an ObjectType literal, whose text is a JVM identity
+    val other = spark.newSession()
+    val a = Declared("x101")(spark, sf001)
+    val b = Declared("x101")(other, sf001)
+    assert(Bench.planFingerprint(a) == Bench.planFingerprint(b),
+      s"${Bench.planText(a)}\n${Bench.planText(b)}")
   }
 
   test("query ledger: round-trips ok and error records (incl. control chars " +
